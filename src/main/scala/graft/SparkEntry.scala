@@ -1,15 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-
-import graft.engine.Scale.MaterializeOps
-import graft.engine.Tables._
-import graft.functions.TextFunctions._
-import graft.functions.VectorFunctions
-import graft.multimodal.Multimodal
-import graft.operators.{Ann, Bpe, Chunking, Curation, Dedup, GraphOps, Indexing, Relational, Sketches, TextJobs}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §2 (operator inventory) and
   * §7 (build plan). Every entry in [[queries]] has a matching DuckDB
@@ -37,13 +28,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q64_curation_pipeline")(spark, "/root/testdata/sf0.001")
 
-  /** The full registry: per-family maps concatenated. Family files
-    * live in src/main/scala/graft/registry/ (round-12 split of the
-    * former 9.9k-line single file; entries are verbatim).
+  /** The full registry: per-family maps concatenated once. Family
+    * files live in src/main/scala/graft/registry/ (round-12 split of
+    * the former 9.9k-line single file; entries are verbatim).
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     QueriesRelational.queries ++ QueriesTextAnalysis.queries ++ QueriesDedupSim.queries ++ QueriesAnnVec.queries ++ QueriesMultimodal.queries ++ QueriesEventsStreams.queries ++ QueriesSketchesStats.queries ++ QueriesCurationPipeline.queries ++ QueriesGraphOps.queries
 
-  def oracleSql: Map[String, String] =
+  val oracleSql: Map[String, String] =
     QueriesRelational.oracleSql ++ QueriesTextAnalysis.oracleSql ++ QueriesDedupSim.oracleSql ++ QueriesAnnVec.oracleSql ++ QueriesMultimodal.oracleSql ++ QueriesEventsStreams.oracleSql ++ QueriesSketchesStats.oracleSql ++ QueriesCurationPipeline.oracleSql ++ QueriesGraphOps.oracleSql
 }

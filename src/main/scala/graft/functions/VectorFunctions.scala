@@ -90,4 +90,18 @@ object VectorFunctions {
       hyperplaneBit(v, p, dim).cast("long") * lit(1L << p)
     }.reduce(_ + _)
   }
+
+  /** Z-value (Morton code) of two non-negative integer columns: the low
+    * `bits` bits of x and y, bit-interleaved (x at even positions, y at
+    * odd). Pure codegen'd bit arithmetic — 2*bits shift/and/or terms,
+    * no UDF.
+    */
+  def zValue2(x: Column, y: Column, bits: Int): Column = {
+    require(bits >= 1 && bits <= 31, s"bits must be in [1, 31], got $bits")
+    val xl = x.cast("long"); val yl = y.cast("long")
+    (0 until bits).map { b =>
+      shiftleft(shiftright(xl, b).bitwiseAND(lit(1L)), 2 * b)
+        .bitwiseOR(shiftleft(shiftright(yl, b).bitwiseAND(lit(1L)), 2 * b + 1))
+    }.reduce(_ bitwiseOR _)
+  }
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Scale.MaterializeOps
+import graft.engine.Shape
+import graft.engine.Shape.MaterializeOps
 
 import graft.functions.VectorFunctions._
 
@@ -1050,35 +1051,23 @@ object Ann {
       }.toSeq.toDF("j", "cid", "cv")
   }
 
-  /** The m per-subspace [[kmeansCentroidsLocal]] builds, submitted from
-    * a small driver thread pool so their (independent, deterministic)
-    * Spark jobs overlap instead of running serially — the scheduler
-    * back-fills each build's straggler tail with the next build's tasks
-    * (optimization guide §2.6). Each subspace's build is the exact
-    * per-call computation the serial loop ran (same seed scan, same
-    * Lloyd iterations over its own slice), so the returned codebooks
-    * are bit-identical to the serial form's; only wall-clock changes.
-    * Results are collected back in subspace order.
+  /** The m per-subspace [[kmeansCentroidsLocal]] builds, overlapped on
+    * a min(m, 8)-thread [[Shape.inParallel]] pool. Each subspace's
+    * build is the exact per-call computation the serial loop ran (same
+    * seed scan, same Lloyd iterations over its own slice), so the
+    * returned codebooks are bit-identical to the serial form's, in
+    * subspace order.
     */
   private def parSubspaceBooks(corpus: DataFrame, idCol: String,
                                vecCol: String, m: Int, sub: Int,
                                codesPerSub: Int,
-                               iters: Int): Array[Array[(Long, Array[Double])]] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(m, 8))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try Await.result(
-      Future.sequence((0 until m).toSeq.map { j =>
-        Future {
-          kmeansCentroidsLocal(
-            corpus.select(col(idCol).as("sid2"),
-              slice(col(vecCol), j * sub + 1, sub).as("sv")),
-            "sid2", "sv", codesPerSub, iters)
-        }
-      }), Duration.Inf).toArray
-    finally pool.shutdown()
-  }
+                               iters: Int): Array[Array[(Long, Array[Double])]] =
+    Shape.inParallel(math.min(m, 8))((0 until m).map { j => () =>
+      kmeansCentroidsLocal(
+        corpus.select(col(idCol).as("sid2"),
+          slice(col(vecCol), j * sub + 1, sub).as("sv")),
+        "sid2", "sv", codesPerSub, iters)
+    }).toArray
 
   /** Collect a [[pqCodebooks]] frame to the driver, indexed by
     * subspace: bounded at m × codes × (dim/m) doubles by construction.

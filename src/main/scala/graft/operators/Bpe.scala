@@ -2,9 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-
-import graft.engine.Scale.MaterializeOps
 import org.apache.spark.sql.types._
+
+import graft.engine.Shape
+import graft.engine.Shape.MaterializeOps
 
 /** BPE vocabulary LEARNING — the iterative merge selection that q62's
   * BPE-style token counting presupposes. Each round picks the
@@ -24,8 +25,8 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: state is the DISTINCT-word table (vocabulary-bounded,
   * never the corpus — word frequencies are aggregated once up front).
-  * At or under [[Bpe.LocalVocabLimit]] words the whole merge loop runs
-  * ON THE DRIVER after that one aggregation (standard Sennrich
+  * At or under [[graft.engine.Shape.LocalRowLimit]] words the whole
+  * merge loop runs ON THE DRIVER after that one aggregation (standard Sennrich
   * practice; the alternative schedules ~2 tiny Spark jobs PER MERGE —
   * ~64K jobs for a 32K-merge production vocab, pure driver scheduling
   * overhead). Above the limit each round is one explode +
@@ -46,32 +47,32 @@ object Bpe {
     .filter(col("w").rlike("^[a-z]+$"))
     .groupBy("w").agg(count(lit(1)).as("freq"))
 
-  /** Vocabulary size under which the merge loop runs ON THE DRIVER: a
-    * production vocab build is tens of thousands of merge rounds, and
-    * the distributed loop pays one Spark job + checkpoint per round —
-    * a driver scheduling bottleneck (~64K tiny jobs at a 32K-merge
-    * vocab) over a table that is vocabulary-bounded and tiny. Sennrich
-    * practice is to aggregate word frequencies once and learn locally;
-    * 200K spaced words is a few tens of MB. The distributed loop
-    * remains the over-limit path and the two are equivalence-tested.
-    */
-  val LocalVocabLimit: Long = 200000L
-
   /** Run `iters` greedy merge rounds over a spaced-symbol table.
     * `syms0` must carry columns `s` (space-joined symbols) and `freq`;
     * any OTHER columns (e.g. the original word) ride through the
     * rewrites untouched. Returns the final symbol table and the merge
     * log (rank, pair, merged, weighted_count).
     *
-    * Dispatch: the word table is counted once (vocab-bounded — one
-    * cheap job); at or under `localLimit` the whole iteration runs on
-    * the driver ([[mergeRoundsLocal]]), else each round is one
-    * distributed explode + groupBy + top-1 collect + rewrite.
+    * Dispatch: one bounded fetch of the word table
+    * ([[Shape.localRows]]); at or under `localLimit` words the whole
+    * iteration runs on the driver over the fetched rows
+    * ([[mergeRoundsLocal]]), else each round is one distributed
+    * explode + groupBy + top-1 collect + rewrite.
     */
   private def mergeRounds(syms0: DataFrame, iters: Int, localLimit: Long)
       : (DataFrame, Seq[(Long, String, String, Long)]) = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    if (syms0.count() <= localLimit) return mergeRoundsLocal(syms0, iters)
+    Shape.localRows(syms0, localLimit) match {
+      case Some(rows) => mergeRoundsLocal(syms0, rows, iters)
+      case None => mergeRoundsDistributed(syms0, iters)
+    }
+  }
+
+  /** The over-limit path of [[mergeRounds]]: one distributed round per
+    * merge, the word table checkpointed per round.
+    */
+  private def mergeRoundsDistributed(syms0: DataFrame, iters: Int)
+      : (DataFrame, Seq[(Long, String, String, Long)]) = {
     var syms = syms0.materialized
     val merges = Seq.newBuilder[(Long, String, String, Long)]
     for (rank <- 1 to iters) {
@@ -104,20 +105,20 @@ object Bpe {
   }
 
   /** Driver-local twin of the distributed rounds, used under
-    * [[LocalVocabLimit]]: identical selection (weighted pair counts,
+    * [[Shape.LocalRowLimit]]: identical selection (weighted pair counts,
     * ties to the smallest pair string — symbols are ^[a-z]+$ so JVM
     * string order and Spark's UTF8 binary order agree) and identical
     * rewrite (Java String.replace is the same left-to-right
     * non-overlapping literal replacement as Spark's replace). One
     * collect in, one createDataFrame out, zero jobs per round.
     */
-  private def mergeRoundsLocal(syms0: DataFrame, iters: Int)
+  private def mergeRoundsLocal(syms0: DataFrame, fetched: Array[Row], iters: Int)
       : (DataFrame, Seq[(Long, String, String, Long)]) = {
     val spark = syms0.sparkSession
     val schema = syms0.schema
     val sIdx = schema.fieldIndex("s")
     val fIdx = schema.fieldIndex("freq")
-    val rows = syms0.collect().map(_.toSeq.toArray)
+    val rows = fetched.map(_.toSeq.toArray)
     val merges = Seq.newBuilder[(Long, String, String, Long)]
     for (rank <- 1 to iters) {
       val counts = new scala.collection.mutable.HashMap[String, Long]
@@ -151,7 +152,7 @@ object Bpe {
     * selection order.
     */
   def bpeMerges(docs: DataFrame, textCol: String, iters: Int,
-                localLimit: Long = LocalVocabLimit): DataFrame = {
+                localLimit: Long = Shape.LocalRowLimit): DataFrame = {
     val spark = docs.sparkSession
     val syms0 = wordTable(docs, textCol)
       .select(trim(regexp_replace(col("w"), "(.)", "$1 ")).as("s"), col("freq"))
@@ -174,7 +175,7 @@ object Bpe {
     * over the vocabulary-bounded word table, never the corpus.
     */
   def bpeEncode(docs: DataFrame, textCol: String, iters: Int,
-                localLimit: Long = LocalVocabLimit): DataFrame = {
+                localLimit: Long = Shape.LocalRowLimit): DataFrame = {
     val syms0 = wordTable(docs, textCol)
       .select(col("w"),
         trim(regexp_replace(col("w"), "(.)", "$1 ")).as("s"), col("freq"))

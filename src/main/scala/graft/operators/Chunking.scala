@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.Scale.MaterializeOps
+import graft.engine.Shape.MaterializeOps
 
 import graft.functions.TextFunctions.tokens
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Scale.MaterializeOps
+import graft.engine.Shape.MaterializeOps
 
 import graft.functions.TextFunctions.{tokenHash64, tokenHash64Jvm, tokens}
 

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Scale.MaterializeOps
+import graft.engine.Shape
+import graft.engine.Shape.MaterializeOps
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
@@ -196,9 +197,9 @@ object Dedup {
       if (toks == null) null
       else shingleList(toks, k).map(graft.functions.TextFunctions.tokenHash64Jvm)
     }.asNondeterministic()
-    // spreadNarrow: the shingle-hash UDF + explode otherwise ride the
-    // 1-3 task scan stage at bench scale (guide §2.5; no-op on wide scans)
-    val exploded = Relational.spreadNarrow(docs, col(idCol))
+    // [[Shape.spread]]: the shingle-hash UDF + explode otherwise ride
+    // the 1-3 task scan stage at bench scale
+    val exploded = Shape.spread(docs, col(idCol))
       .select(col(idCol).as("id"), hashUdf(tokens(col(textCol))).as("hs"))
       .select(col("id"), size(col("hs")).cast("long").as("n_sh"),
         explode(col("hs")).as("h"))
@@ -249,7 +250,7 @@ object Dedup {
     */
   def minHashSignature(docs: DataFrame, idCol: String, textCol: String,
                        k: Int, numHashes: Int): DataFrame = {
-    // NO spreadNarrow here (r16, measured): q31 0.53→0.70, q278
+    // NO Shape.spread here (r16, measured): q31 0.53→0.70, q278
     // 1.40→1.71 at sf0.1 — the spread exchange cost more than the
     // signature UDF's parallelism bought on every minhash caller
     val P = 2147483647L // 2^31-1, Mersenne prime
@@ -544,7 +545,7 @@ object Dedup {
       while (b < nBits) { if (votes(b) > 0) s |= 1L << b; b += 1 }
       s
     }
-    // NO spreadNarrow here (r16, measured): the hash/vote UDF is cheap
+    // NO Shape.spread here (r16, measured): the hash/vote UDF is cheap
     // enough that the spread exchange cost exceeded the parallelism win
     // on every simhash caller (q63 0.83→1.23, q84 0.52→0.93 at sf0.1)
     docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
@@ -874,9 +875,9 @@ object Dedup {
     // path); reliable=true writes to the sparkContext checkpoint dir and
     // survives executor loss — the cluster setting for long iterative
     // jobs (caller must setCheckpointDir).
-    def materialize(df: DataFrame): DataFrame =
+    def checkpointed(df: DataFrame): DataFrame =
       if (reliable) df.checkpoint(true) else df.materialized
-    val edges = materialize(
+    val edges = checkpointed(
       pairs.select(col(aCol).as("u"), col(bCol).as("v"))
         .unionAll(pairs.select(col(bCol).as("u"), col(aCol).as("v"))))
     var labels = edges.select(col("u").as("node")).distinct()
@@ -887,7 +888,7 @@ object Dedup {
       // checkpoint per iteration: labels is referenced twice (union +
       // join), so an unbroken lineage DOUBLES per iteration — 2^k
       // subplan copies by iteration k (measured 47 exchanges at k=4)
-      labels = materialize(
+      labels = checkpointed(
         labels.unionAll(viaNeighbor)
           .groupBy("node").agg(min("label").as("label")))
     }
@@ -910,17 +911,14 @@ object Dedup {
     * xxhash64 sum signature — one tiny driver row per round), at which
     * point the edges form stars rooted at each component's minimum id.
     * Per-round checkpoint truncates lineage exactly as in
-    * [[dupClusters]]; reliable=true writes to the sparkContext
-    * checkpoint dir for executor-loss-safe cluster runs. Output schema
+    * [[dupClusters]] ([[Shape.materialize]]: reliable when
+    * `spark.graft.checkpointDir` is set). Output schema
     * is [[dupClusters]]' (node, label), label = component min.
     */
   def dupClustersStar(pairs: DataFrame, aCol: String, bCol: String,
                       maxRounds: Int = 25,
-                      reliable: Boolean = false,
-                      localLimit: Long = 200000L): DataFrame = {
+                      localLimit: Long = Shape.LocalRowLimit): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.materialized
 
     def largeStar(e: DataFrame): DataFrame = {
       val bidir = e.unionAll(e.select(col("v").as("u"), col("u").as("v"))).distinct()
@@ -958,59 +956,42 @@ object Dedup {
     // throw away"; measured one full pair-gen job chain removed per
     // caller). `nodes` stays a lazy derivation: it is consumed exactly
     // once by the final star join, so its distinct runs once either way.
-    val m = materialize(
-      pairs.select(col(aCol).as("u"), col(bCol).as("v")))
+    val m = pairs.select(col(aCol).as("u"), col(bCol).as("v")).materialized
     val nodes = m.select(col("u").as("node"))
       .unionAll(m.select(col("v").as("node"))).distinct()
     val edges0 = m.filter(col("u") =!= col("v")).distinct()
-    // Bounded-threshold local path (the incrementalClusterLabels /
-    // BPE merge-selection doctrine, optimization guide §1.2 "the
-    // distributed algorithm"): the initial signature row already
-    // carries the DISTINCT edge count, and below `localLimit` edges a
-    // driver union-find is value-identical to the star fixpoint
-    // (component-min labels; equality spec'd in DedupSpec) while the
+    // Bounded local path ([[Shape.localRows]]): below `localLimit`
+    // edges a driver union-find is value-identical to the star fixpoint
+    // (component-min labels; equality spec'd in DedupAnnSpec) while the
     // distributed loop pays ~8 scheduler round-trips per round ×
     // O(log² n) rounds — measured 5-8 rounds / 50+ AQE jobs on the ER
     // name-chain graphs (q191/q201), ~60% of those queries' wall time
-    // at sf0.1. Above the limit the O(log² n) loop takes over
-    // unchanged, so 100 TB-scale graphs keep the distributed shape.
-    // The local labels re-enter the SAME star-forest final join below,
-    // so output schema and lineage shape are identical on both paths.
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val integralIds = edges0.schema.head.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    // ONE bounded action decides the path AND (when local) already
-    // holds the edges (r16): limit(localLimit+1).collect() replaces
-    // the separate edges checkpoint + signature count the gate used to
-    // pay — union-find is processing-order-insensitive (labels are the
-    // component min either way), so the fetched order is irrelevant. A
-    // short fetch IS the edge list; an over-limit fetch is discarded
-    // (one bounded collect wasted) and the distributed loop proceeds
-    // exactly as before over its own checkpoint.
+    // at sf0.1. Union-find is processing-order-insensitive, so the
+    // fetched order is irrelevant. The local labels re-enter the SAME
+    // star-forest final join below, so output schema and lineage shape
+    // are identical on both paths.
     val localRows =
-      if (integralIds) edges0.limit(localLimit.toInt + 1).collect() else null
-    var edges =
-      if (localRows != null && localRows.length <= localLimit) {
-        unionFindLocalRows(localRows, edges0.schema.head.dataType,
+      if (Shape.integralIds(edges0)) Shape.localRows(edges0, localLimit) else None
+    val edges = localRows match {
+      case Some(rows) =>
+        unionFindLocalRows(rows, edges0.schema.head.dataType,
             edges0.sparkSession)
           .filter(col("node") =!= col("label"))
           .select(col("node").as("u"), col("label").as("v"))
-      } else {
-        var e = materialize(edges0)
+      case None =>
+        var e = edges0.materialized
         var sig = signature(e)
         var round = 0
         var converged = false
         while (round < maxRounds && !converged) {
-          e = materialize(smallStar(largeStar(e)))
+          e = smallStar(largeStar(e)).materialized
           val next = signature(e)
           converged = next == sig
           sig = next
           round += 1
         }
         e
-      }
+    }
     // At the star fixpoint every non-root node has exactly the edge
     // (node, componentMin); roots (and isolated nodes) label themselves.
     nodes
@@ -1124,7 +1105,7 @@ object Dedup {
     */
   def editDistance1Join(df: DataFrame, idCol: String, strCol: String,
                         maxKeyFreq: Int = 1000): DataFrame = {
-    val sessionW = Relational.shufflePartitionsOf(df.sparkSession)
+    val sessionW = Shape.width(df.sparkSession)
     val keyed = deletionKeyed(df, idCol, strCol)
     // Explicit session-width partitioning on the posting exchange: the
     // levenshtein verify downstream is CPU-dense per ROW, so AQE's
@@ -1232,7 +1213,7 @@ object Dedup {
     * don't compute things twice).
     */
   def editDistance1SelfJoinPostings(postings: DataFrame): DataFrame = {
-    val sessionW = Relational.shufflePartitionsOf(postings.sparkSession)
+    val sessionW = Shape.width(postings.sparkSession)
     // session-width spread of the (typically checkpointed-narrow)
     // posting frame before the CPU-dense pair explode + verify — the
     // [[editDistance1Join]] pin, same rationale, no measurement job
@@ -1292,7 +1273,7 @@ object Dedup {
     */
   def incrementalClusterLabels(standing: DataFrame, newEdges: DataFrame,
                                aCol: String, bCol: String,
-                               localLimit: Long = 200000L): DataFrame = {
+                               localLimit: Long = Shape.LocalRowLimit): DataFrame = {
     val e = newEdges.select(col(aCol).as("u"), col(bCol).as("v"))
     val endpoints = e.select(col("u").as("node"))
       .unionAll(e.select(col("v").as("node"))).distinct()
@@ -1310,34 +1291,20 @@ object Dedup {
     // The update graph is batch-proportional (never the corpus), so a
     // typical ingest is SMALL: below localLimit edges the star loop's
     // multi-round exchange overhead dwarfs the work, and a driver
-    // union-find over the collected pairs is value-identical
-    // (component-min labels — the dupClustersStar contract; both paths
-    // equal by IncrementalErSpec). Above the limit — a huge batch or a
-    // batch touching huge components — the O(log² n) distributed loop
-    // takes over. The count is one scalar per ingest (the BPE
-    // merge-selection doctrine: bounded-threshold local path with a
-    // spec'd equivalence to the distributed one; measured q203
-    // 6.1 -> 2.6 s and q201 10.6 -> 8.6 s at sf0.1).
-    // The local path's LongMap union-find requires integral node ids;
-    // dupClustersStar handles any ordered id type (least/greatest), so
-    // string-keyed callers stay on the distributed path.
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    val integralIds = update.schema.head.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    // ONE bounded action decides the path AND (when local) already
-    // holds the update edges (r16, the dupClustersStar fusion): the
-    // previous shape paid an eager checkpoint + a count + a collect
-    // for the same decision. Over-limit fetches are discarded and the
-    // distributed star loop runs over its own checkpoint as before.
+    // union-find over the fetched pairs ([[Shape.localRows]]) is
+    // value-identical (component-min labels — the dupClustersStar
+    // contract; both paths equal by IncrementalErSpec; measured q203
+    // 6.1 -> 2.6 s and q201 10.6 -> 8.6 s at sf0.1). Above the limit —
+    // a huge batch or a batch touching huge components — the O(log² n)
+    // distributed loop takes over. String-keyed callers stay on the
+    // distributed path: dupClustersStar handles any ordered id type.
     val localRows =
-      if (integralIds) update.limit(localLimit.toInt + 1).collect() else null
-    val merged =
-      if (localRows != null && localRows.length <= localLimit)
-        unionFindLocalRows(localRows, update.schema.head.dataType,
-          update.sparkSession)
-      else dupClustersStar(update, "u", "v")
+      if (Shape.integralIds(update)) Shape.localRows(update, localLimit) else None
+    val merged = localRows match {
+      case Some(rows) =>
+        unionFindLocalRows(rows, update.schema.head.dataType, update.sparkSession)
+      case None => dupClustersStar(update, "u", "v", localLimit = localLimit)
+    }
     val untouched = standing.join(
       merged.select(col("node")), Seq("node"), "left_anti")
     untouched.select(col("node"), col("label"))
@@ -1586,12 +1553,10 @@ object Dedup {
       if (s == null || s.length < L) Array.empty[(Long, String)]
       else Array.tabulate(s.length - L + 1)(i => ((i + 1).toLong, s.substring(i, i + L)))
     }
-    // spreadNarrow: the per-CHAR gram loop + explode otherwise ride the
-    // 1-task scan stage (measured 0.7-0.8 s serial per specialized
-    // exchange copy at sf0.1); the spread exchange parallelizes each
-    // copy's map work and is itself deduped by ReuseExchange across
-    // the copies (guide §2.5; no-op on wide scans)
-    val grams = Relational.spreadNarrow(docs, col(idCol))
+    // [[Shape.spread]]: the per-CHAR gram loop + explode otherwise ride
+    // the 1-task scan stage (measured 0.7-0.8 s serial per specialized
+    // exchange copy at sf0.1)
+    val grams = Shape.spread(docs, col(idCol))
       .select(col(idCol).cast("long").as("id"),
         explode(gramUdf(col(textCol))).as("pg"))
       .select(col("id"), col("pg._1").as("pos"), col("pg._2").as("g"))
@@ -2082,7 +2047,7 @@ object Dedup {
       else (s +: Array.tabulate(s.length)(i =>
         s.substring(0, i) + s.substring(i + 1))).distinct
     }
-    // NO spreadNarrow here (r16, measured): q203 1.30→2.05, q121
+    // NO Shape.spread here (r16, measured): q203 1.30→2.05, q121
     // 1.05→1.22 at sf0.1 — the ER family is stage-count-bound (the r16
     // batch-1 lesson) and the extra exchange lost on every caller
     df.select(col(idCol).cast("long").as("id"), col(strCol).as("s"))
@@ -2166,12 +2131,10 @@ object Dedup {
                      tPpm: Long,
                      pinnedPartitions: Option[Int] = None): DataFrame = {
     require(tPpm > 0 && tPpm <= 1000000L, s"tPpm in (0, 1e6], got $tPpm")
-    // spreadNarrow: `sh` is consumed three times (dfreq agg, rank join,
-    // sets agg) and each consumer re-runs the tokenize+shingle UDF on
-    // the narrow scan stage; the spread exchange parallelizes the map
-    // work AND is deduped by ReuseExchange across the three consumers
-    // (guide §2.5; no-op on wide scans)
-    val sh = Relational.spreadNarrow(docs, col(idCol))
+    // [[Shape.spread]]: `sh` is consumed three times (dfreq agg, rank
+    // join, sets agg) and each consumer re-runs the tokenize+shingle
+    // UDF on the narrow scan stage
+    val sh = Shape.spread(docs, col(idCol))
       .select(col(idCol).cast("long").as("id"),
         explode(shingles(col(textCol), 3)).as("sh"))
     val dfreq = sh.groupBy("sh").agg(count(lit(1)).as("df"))

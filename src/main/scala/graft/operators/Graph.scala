@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.Scale.MaterializeOps
+import graft.engine.Shape
+import graft.engine.Shape.MaterializeOps
 
 /** Iterative whole-graph numeric propagation over a pair list — the
   * step past connected components (Dedup.dupClusters/dupClustersStar):
@@ -14,53 +15,10 @@ import graft.engine.Scale.MaterializeOps
   */
 object GraphOps {
 
-  /** Bounded-threshold local twins for the iterative graph loops (the
-    * Dedup.dupClustersStar / incrementalClusterLabels doctrine, r15):
-    * below this many rows of the EXPANDED (bidirectional) edge frame,
-    * a loop of per-round exchanges + checkpoints + driver scalars pays
-    * more in scheduler round-trips than the whole graph costs to
-    * traverse on the driver (measured: q184's peel ran 45 AQE jobs for
-    * ~1 MB of edges). Each local twin replays the distributed
-    * algorithm's EXACT semantics — synchronous rounds, same caps, same
-    * integer arithmetic, same tie rules — so results are value-
-    * identical (spec'd per operator in GraphOpsSpec); above the limit
-    * the distributed loop runs unchanged, keeping the 100 TB shape.
-    * Integral node ids only — non-integral ids stay distributed (the
-    * unionFindLocal rule).
-    */
-  private val LocalEdgeLimit = 200000L
-
-  private def integralIds(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    df.schema.head.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-  }
-
-  /** Collect an expanded (u, v[, w]) edge frame to long tuples. */
-  private def collectEdges(e: DataFrame): Array[(Long, Long)] =
-    e.collect().map(r => (r.get(0).asInstanceOf[Number].longValue,
-      r.get(1).asInstanceOf[Number].longValue))
-
+  /** Expanded (u, v[, w]) edge rows to long tuples. */
   private def rowsToEdges(rows: Array[org.apache.spark.sql.Row]): Array[(Long, Long)] =
     rows.map(r => (r.get(0).asInstanceOf[Number].longValue,
       r.get(1).asInstanceOf[Number].longValue))
-
-  /** ONE bounded action that both gates the local twin and (when it
-    * fires) already holds the expanded edges — the r16 fusion of the
-    * previous checkpoint + count + collect triple. Returns null when
-    * ids are non-integral or the fetch overflows `localLimit` (the
-    * distributed loop then materializes its own checkpoint as before;
-    * the wasted fetch is bounded by localLimit + 1 rows).
-    */
-  private def localEdgeRows(e0: DataFrame,
-                            localLimit: Long): Array[org.apache.spark.sql.Row] =
-    if (!integralIds(e0) || localLimit <= 0L) null
-    else {
-      val rows = e0.limit(localLimit.toInt + 1).collect()
-      if (rows.length <= localLimit) rows else null
-    }
 
   /** Driver-computed (id, d, r) rank rows matching [[pageRankInt]]'s
     * distributed output schema (id cast to `like`'s id type).
@@ -102,58 +60,60 @@ object GraphOps {
     */
   def pageRankInt(pairs: DataFrame, aCol: String, bCol: String,
                   iters: Int, scale: Long = 1000000000L,
-                  localLimit: Long = LocalEdgeLimit): DataFrame = {
+                  localLimit: Long = Shape.LocalRowLimit): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val e0 = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
       .unionByName(pairs.select(col(bCol).as("u"), col(aCol).as("v")))
-    // bounded local twin ([[LocalEdgeLimit]] doctrine, r16): the fixed
+    // bounded local twin ([[Shape.localRows]], r16): the fixed
     // iteration count and integral scaled-long arithmetic replay
     // exactly on the driver — every op below (div-by-degree, 85/100
     // damping, left-join coalesce to 0) is the same Long op the
     // distributed round computes, so ranks are bit-identical (spec'd
     // with localLimit = 0 forcing the distributed loop). Replaces
     // iters × (join + agg + checkpoint) actions with one bounded fetch.
-    val localRows = localEdgeRows(e0, localLimit)
-    if (localRows != null) {
-      val edges = rowsToEdges(localRows)
-      val deg = scala.collection.mutable.LongMap.empty[Long]
-      edges.foreach { case (u, _) => deg(u) = deg.getOrElse(u, 0L) + 1L }
-      val n = deg.size.toLong
-      val r0 = scale / n
-      val base = (15L * r0) / 100L
-      var r = scala.collection.mutable.LongMap.empty[Long]
-      deg.keysIterator.foreach(id => r(id) = r0)
-      for (_ <- 1 to iters) {
-        val sums = scala.collection.mutable.LongMap.empty[Long]
-        edges.foreach { case (u, v) =>
-          sums(v) = sums.getOrElse(v, 0L) + r(u) / deg(u)
+    val localRows =
+      if (Shape.integralIds(e0)) Shape.localRows(e0, localLimit) else None
+    localRows match {
+      case Some(rows) =>
+        val edges = rowsToEdges(rows)
+        val deg = scala.collection.mutable.LongMap.empty[Long]
+        edges.foreach { case (u, _) => deg(u) = deg.getOrElse(u, 0L) + 1L }
+        val n = deg.size.toLong
+        val r0 = scale / n
+        val base = (15L * r0) / 100L
+        var r = scala.collection.mutable.LongMap.empty[Long]
+        deg.keysIterator.foreach(id => r(id) = r0)
+        for (_ <- 1 to iters) {
+          val sums = scala.collection.mutable.LongMap.empty[Long]
+          edges.foreach { case (u, v) =>
+            sums(v) = sums.getOrElse(v, 0L) + r(u) / deg(u)
+          }
+          val next = scala.collection.mutable.LongMap.empty[Long]
+          deg.keysIterator.foreach { id =>
+            next(id) = base + (85L * sums.getOrElse(id, 0L)) / 100L
+          }
+          r = next
         }
-        val next = scala.collection.mutable.LongMap.empty[Long]
-        deg.keysIterator.foreach { id =>
-          next(id) = base + (85L * sums.getOrElse(id, 0L)) / 100L
-        }
-        r = next
-      }
-      localRankResult(e0, deg, r)
-    } else {
-      val e = e0.materialized
-      val deg = e.groupBy("u").agg(count(lit(1)).as("d"))
-        .select(col("u").as("id"), col("d"))
-        .materialized
-      val n = deg.count()
-      val r0 = scale / n
-      val base = (15L * r0) / 100L
-      var r = deg.select(col("id"), col("d"), lit(r0).as("r"))
-      for (_ <- 1 to iters) {
-        val contrib = r.select(col("id").as("cid"), expr("r div d").as("c"))
-        val sums = e.join(contrib, col("u") === col("cid"))
-          .groupBy("v").agg(sum("c").as("s"))
-        r = deg.join(sums, deg("id") === sums("v"), "left")
-          .select(deg("id"), deg("d"),
-            (lit(base) + expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("r"))
+        localRankResult(e0, deg, r)
+      case None =>
+        val e = e0.materialized
+        val deg = e.groupBy("u").agg(count(lit(1)).as("d"))
+          .select(col("u").as("id"), col("d"))
           .materialized
-      }
-      r
+        val n = deg.count()
+        val r0 = scale / n
+        val base = (15L * r0) / 100L
+        var r = deg.select(col("id"), col("d"), lit(r0).as("r"))
+        for (_ <- 1 to iters) {
+          val contrib = r.select(col("id").as("cid"), expr("r div d").as("c"))
+          val sums = e.join(contrib, col("u") === col("cid"))
+            .groupBy("v").agg(sum("c").as("s"))
+          r = deg.join(sums, deg("id") === sums("v"), "left")
+            .select(deg("id"), deg("d"),
+              (lit(base) + expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("r"))
+            .materialized
+        }
+        r
     }
   }
 
@@ -175,7 +135,7 @@ object GraphOps {
   def personalizedPageRankInt(pairs: DataFrame, aCol: String, bCol: String,
                               seeds: DataFrame, seedCol: String, iters: Int,
                               scale: Long = 1000000000L,
-                              localLimit: Long = LocalEdgeLimit): DataFrame = {
+                              localLimit: Long = Shape.LocalRowLimit): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val e0 = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
       .unionByName(pairs.select(col(bCol).as("u"), col(aCol).as("v")))
@@ -186,58 +146,60 @@ object GraphOps {
     // takes; everything else is the identical Long arithmetic. The
     // r>0 contributor filter is replayed verbatim so div-truncation
     // timing matches round for round.
-    val localRows = if (integralIds(sd)) localEdgeRows(e0, localLimit) else null
-    if (localRows != null) {
-      val edges = rowsToEdges(localRows)
-      val deg = scala.collection.mutable.LongMap.empty[Long]
-      edges.foreach { case (u, _) => deg(u) = deg.getOrElse(u, 0L) + 1L }
-      val seedIds = sd.collect()
-        .map(_.get(0).asInstanceOf[Number].longValue).toSet
-      val isSeed = (id: Long) => seedIds.contains(id)
-      val nSeeds = deg.keysIterator.count(isSeed).toLong
-      require(nSeeds > 0, "no seed node appears in the pair graph")
-      val r0 = scale / nSeeds
-      val base = (15L * r0) / 100L
-      var r = scala.collection.mutable.LongMap.empty[Long]
-      deg.keysIterator.foreach(id => r(id) = if (isSeed(id)) r0 else 0L)
-      for (_ <- 1 to iters) {
-        val sums = scala.collection.mutable.LongMap.empty[Long]
-        edges.foreach { case (u, v) =>
-          if (r(u) > 0L) sums(v) = sums.getOrElse(v, 0L) + r(u) / deg(u)
+    val localRows =
+      if (Shape.integralIds(e0, sd)) Shape.localRows(e0, localLimit) else None
+    localRows match {
+      case Some(rows) =>
+        val edges = rowsToEdges(rows)
+        val deg = scala.collection.mutable.LongMap.empty[Long]
+        edges.foreach { case (u, _) => deg(u) = deg.getOrElse(u, 0L) + 1L }
+        val seedIds = sd.collect()
+          .map(_.get(0).asInstanceOf[Number].longValue).toSet
+        val isSeed = (id: Long) => seedIds.contains(id)
+        val nSeeds = deg.keysIterator.count(isSeed).toLong
+        require(nSeeds > 0, "no seed node appears in the pair graph")
+        val r0 = scale / nSeeds
+        val base = (15L * r0) / 100L
+        var r = scala.collection.mutable.LongMap.empty[Long]
+        deg.keysIterator.foreach(id => r(id) = if (isSeed(id)) r0 else 0L)
+        for (_ <- 1 to iters) {
+          val sums = scala.collection.mutable.LongMap.empty[Long]
+          edges.foreach { case (u, v) =>
+            if (r(u) > 0L) sums(v) = sums.getOrElse(v, 0L) + r(u) / deg(u)
+          }
+          val next = scala.collection.mutable.LongMap.empty[Long]
+          deg.keysIterator.foreach { id =>
+            next(id) = (if (isSeed(id)) base else 0L) +
+              (85L * sums.getOrElse(id, 0L)) / 100L
+          }
+          r = next
         }
-        val next = scala.collection.mutable.LongMap.empty[Long]
-        deg.keysIterator.foreach { id =>
-          next(id) = (if (isSeed(id)) base else 0L) +
-            (85L * sums.getOrElse(id, 0L)) / 100L
-        }
-        r = next
-      }
-      localRankResult(e0, deg, r)
-    } else {
-      val e = e0.materialized
-      val deg = e.groupBy("u").agg(count(lit(1)).as("d"))
-        .select(col("u").as("id"), col("d"))
-      val nodes = deg.join(sd, deg("id") === sd("sid"), "left")
-        .select(col("id"), col("d"), col("sid").isNotNull.as("is_seed"))
-        .materialized
-      val nSeeds = nodes.filter(col("is_seed")).count()
-      require(nSeeds > 0, "no seed node appears in the pair graph")
-      val r0 = scale / nSeeds
-      val base = (15L * r0) / 100L
-      var r = nodes.select(col("id"), col("d"), col("is_seed"),
-        when(col("is_seed"), lit(r0)).otherwise(lit(0L)).as("r"))
-      for (_ <- 1 to iters) {
-        val contrib = r.filter(col("r") > 0)
-          .select(col("id").as("cid"), expr("r div d").as("c"))
-        val sums = e.join(contrib, col("u") === col("cid"))
-          .groupBy("v").agg(sum("c").as("s"))
-        r = nodes.join(sums, nodes("id") === sums("v"), "left")
-          .select(nodes("id"), nodes("d"), nodes("is_seed"),
-            (when(nodes("is_seed"), lit(base)).otherwise(lit(0L)) +
-              expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("r"))
+        localRankResult(e0, deg, r)
+      case None =>
+        val e = e0.materialized
+        val deg = e.groupBy("u").agg(count(lit(1)).as("d"))
+          .select(col("u").as("id"), col("d"))
+        val nodes = deg.join(sd, deg("id") === sd("sid"), "left")
+          .select(col("id"), col("d"), col("sid").isNotNull.as("is_seed"))
           .materialized
-      }
-      r.select("id", "d", "r")
+        val nSeeds = nodes.filter(col("is_seed")).count()
+        require(nSeeds > 0, "no seed node appears in the pair graph")
+        val r0 = scale / nSeeds
+        val base = (15L * r0) / 100L
+        var r = nodes.select(col("id"), col("d"), col("is_seed"),
+          when(col("is_seed"), lit(r0)).otherwise(lit(0L)).as("r"))
+        for (_ <- 1 to iters) {
+          val contrib = r.filter(col("r") > 0)
+            .select(col("id").as("cid"), expr("r div d").as("c"))
+          val sums = e.join(contrib, col("u") === col("cid"))
+            .groupBy("v").agg(sum("c").as("s"))
+          r = nodes.join(sums, nodes("id") === sums("v"), "left")
+            .select(nodes("id"), nodes("d"), nodes("is_seed"),
+              (when(nodes("is_seed"), lit(base)).otherwise(lit(0L)) +
+                expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("r"))
+            .materialized
+        }
+        r.select("id", "d", "r")
     }
   }
 
@@ -312,50 +274,54 @@ object GraphOps {
     */
   def bfsHops(pairs: DataFrame, aCol: String, bCol: String,
               seeds: DataFrame, seedCol: String, maxHops: Int,
-              localLimit: Long = LocalEdgeLimit): DataFrame = {
+              localLimit: Long = Shape.LocalRowLimit): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     val e = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
       .unionByName(pairs.select(col(bCol).as("u"), col(aCol).as("v")))
       .materialized
     var dist = seeds.select(col(seedCol).as("id")).distinct()
       .withColumn("hops", lit(0L)).materialized
-    // bounded local twin ([[LocalEdgeLimit]] doctrine): BFS layers ARE
+    // bounded local twin ([[Shape.localRows]]): BFS layers ARE
     // the min-hop distances, so a driver BFS over the collected edges
     // equals the per-hop join+min-agg loop exactly (same cap, seeds
-    // not in the graph still report 0). One count on the checkpointed
-    // edges replaces maxHops × (join + agg + checkpoint) actions.
-    if (integralIds(e) && integralIds(dist) && e.count() <= localLimit) {
-      val adj = scala.collection.mutable.LongMap.empty[List[Long]]
-      collectEdges(e).foreach { case (u, v) =>
-        adj(u) = v :: adj.getOrElse(u, Nil)
-      }
-      val hops = scala.collection.mutable.LongMap.empty[Long]
-      var frontier = dist.collect()
-        .map(_.get(0).asInstanceOf[Number].longValue).toSeq.distinct
-      frontier.foreach(s => hops(s) = 0L)
-      for (h <- 1 to maxHops) {
-        frontier = frontier.flatMap(f => adj.getOrElse(f, Nil))
-          .distinct.filterNot(hops.contains)
-        frontier.foreach(n => hops(n) = h.toLong)
-      }
-      localResult(dist, hops, "id", "hops")
-    } else {
-      for (h <- 1 to maxHops) {
-        val frontier = dist.filter(col("hops") === (h - 1).toLong)
-          .select(col("id").as("fid"))
-        val next = e.join(frontier, col("u") === col("fid"))
-          .select(col("v").as("id"), lit(h.toLong).as("hops"))
-        dist = dist.unionByName(next)
-          .groupBy("id").agg(min("hops").as("hops"))
-          .materialized
-      }
-      dist
+    // not in the graph still report 0). One bounded fetch of the
+    // checkpointed edges replaces maxHops × (join + agg + checkpoint)
+    // actions.
+    val localRows =
+      if (Shape.integralIds(e, dist)) Shape.localRows(e, localLimit) else None
+    localRows match {
+      case Some(rows) =>
+        val adj = scala.collection.mutable.LongMap.empty[List[Long]]
+        rowsToEdges(rows).foreach { case (u, v) =>
+          adj(u) = v :: adj.getOrElse(u, Nil)
+        }
+        val hops = scala.collection.mutable.LongMap.empty[Long]
+        var frontier = dist.collect()
+          .map(_.get(0).asInstanceOf[Number].longValue).toSeq.distinct
+        frontier.foreach(s => hops(s) = 0L)
+        for (h <- 1 to maxHops) {
+          frontier = frontier.flatMap(f => adj.getOrElse(f, Nil))
+            .distinct.filterNot(hops.contains)
+          frontier.foreach(n => hops(n) = h.toLong)
+        }
+        localResult(dist, hops, "id", "hops")
+      case None =>
+        for (h <- 1 to maxHops) {
+          val frontier = dist.filter(col("hops") === (h - 1).toLong)
+            .select(col("id").as("fid"))
+          val next = e.join(frontier, col("u") === col("fid"))
+            .select(col("v").as("id"), lit(h.toLong).as("hops"))
+          dist = dist.unionByName(next)
+            .groupBy("id").agg(min("hops").as("hops"))
+            .materialized
+        }
+        dist
     }
   }
 
   /** A driver-computed (id → value) map as a DataFrame matching the
     * distributed twin's schema: id cast back to `like`'s id column
-    * type, value as long, one partition (the [[LocalEdgeLimit]]
+    * type, value as long, one partition (the [[Shape.LocalRowLimit]]
     * results are bounded by construction).
     */
   private def localResult(like: DataFrame,
@@ -393,7 +359,7 @@ object GraphOps {
     */
   def ssspHops(edges: DataFrame, aCol: String, bCol: String, wCol: String,
                seeds: DataFrame, seedCol: String, maxHops: Int,
-               localLimit: Long = LocalEdgeLimit): DataFrame = {
+               localLimit: Long = Shape.LocalRowLimit): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     val e = edges.select(col(aCol).as("u"), col(bCol).as("v"),
         col(wCol).cast("long").as("w"))
@@ -403,53 +369,56 @@ object GraphOps {
     var dist = seeds.select(col(seedCol).as("id")).distinct()
       .withColumn("dist", lit(0L)).withColumn("improved", lit(true))
       .materialized
-    // bounded local twin ([[LocalEdgeLimit]] doctrine): the sparse
+    // bounded local twin ([[Shape.localRows]]): the sparse
     // Bellman-Ford's per-round state transition — relax only from
     // last round's improved set, nd = min(fd + w), improve iff unseen
     // or strictly lower — replayed verbatim on the driver over the
     // collected weighted edges. Integer min-of-sums, so the result is
     // bit-identical to the distributed rounds at the same cap.
-    if (integralIds(e) && integralIds(dist) && e.count() <= localLimit) {
-      val adj = scala.collection.mutable.LongMap.empty[List[(Long, Long)]]
-      e.collect().foreach { r =>
-        val u = r.get(0).asInstanceOf[Number].longValue
-        adj(u) = (r.get(1).asInstanceOf[Number].longValue,
-          r.getLong(2)) :: adj.getOrElse(u, Nil)
-      }
-      val d = scala.collection.mutable.LongMap.empty[Long]
-      var improved = dist.collect()
-        .map(_.get(0).asInstanceOf[Number].longValue).toSeq.distinct
-      improved.foreach(s => d(s) = 0L)
-      for (_ <- 1 to maxHops) {
-        val relaxed = scala.collection.mutable.LongMap.empty[Long]
-        improved.foreach { f =>
-          adj.getOrElse(f, Nil).foreach { case (v, w) =>
-            val nd = d(f) + w
-            if (!relaxed.contains(v) || nd < relaxed(v)) relaxed(v) = nd
-          }
+    val localRows =
+      if (Shape.integralIds(e, dist)) Shape.localRows(e, localLimit) else None
+    localRows match {
+      case Some(rows) =>
+        val adj = scala.collection.mutable.LongMap.empty[List[(Long, Long)]]
+        rows.foreach { r =>
+          val u = r.get(0).asInstanceOf[Number].longValue
+          adj(u) = (r.get(1).asInstanceOf[Number].longValue,
+            r.getLong(2)) :: adj.getOrElse(u, Nil)
         }
-        improved = relaxed.iterator.collect {
-          case (v, nd) if !d.contains(v) || nd < d(v) => v
-        }.toSeq
-        improved.foreach(v => d(v) = math.min(relaxed(v),
-          d.getOrElse(v, Long.MaxValue)))
-      }
-      localResult(dist, d, "id", "dist")
-    } else {
-      for (_ <- 1 to maxHops) {
-        val frontier = dist.filter(col("improved"))
-          .select(col("id").as("fid"), col("dist").as("fd"))
-        val relaxed = e.join(frontier, col("u") === col("fid"))
-          .groupBy(col("v").as("id"))
-          .agg(min(col("fd") + col("w")).as("nd"))
-        dist = dist.select("id", "dist").join(relaxed, Seq("id"), "full")
-          .select(col("id"),
-            least(col("dist"), col("nd")).as("dist"),
-            (col("dist").isNull || (col("nd").isNotNull && col("nd") < col("dist")))
-              .as("improved"))
-          .materialized
-      }
-      dist.select("id", "dist")
+        val d = scala.collection.mutable.LongMap.empty[Long]
+        var improved = dist.collect()
+          .map(_.get(0).asInstanceOf[Number].longValue).toSeq.distinct
+        improved.foreach(s => d(s) = 0L)
+        for (_ <- 1 to maxHops) {
+          val relaxed = scala.collection.mutable.LongMap.empty[Long]
+          improved.foreach { f =>
+            adj.getOrElse(f, Nil).foreach { case (v, w) =>
+              val nd = d(f) + w
+              if (!relaxed.contains(v) || nd < relaxed(v)) relaxed(v) = nd
+            }
+          }
+          improved = relaxed.iterator.collect {
+            case (v, nd) if !d.contains(v) || nd < d(v) => v
+          }.toSeq
+          improved.foreach(v => d(v) = math.min(relaxed(v),
+            d.getOrElse(v, Long.MaxValue)))
+        }
+        localResult(dist, d, "id", "dist")
+      case None =>
+        for (_ <- 1 to maxHops) {
+          val frontier = dist.filter(col("improved"))
+            .select(col("id").as("fid"), col("dist").as("fd"))
+          val relaxed = e.join(frontier, col("u") === col("fid"))
+            .groupBy(col("v").as("id"))
+            .agg(min(col("fd") + col("w")).as("nd"))
+          dist = dist.select("id", "dist").join(relaxed, Seq("id"), "full")
+            .select(col("id"),
+              least(col("dist"), col("nd")).as("dist"),
+              (col("dist").isNull || (col("nd").isNotNull && col("nd") < col("dist")))
+                .as("improved"))
+            .materialized
+        }
+        dist.select("id", "dist")
     }
   }
 
@@ -471,7 +440,7 @@ object GraphOps {
   def weightedPageRankInt(edges: DataFrame, aCol: String, bCol: String,
                           wCol: String, iters: Int,
                           scale: Long = 1000000000L,
-                          localLimit: Long = LocalEdgeLimit): DataFrame = {
+                          localLimit: Long = Shape.LocalRowLimit): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val e0 = edges.select(col(aCol).as("u"), col(bCol).as("v"),
         col(wCol).cast("long").as("w"))
@@ -481,58 +450,60 @@ object GraphOps {
     // contribution (r·w) div sw replayed per EDGE exactly as the
     // distributed round computes it — Long multiply, Long div — so
     // ranks are bit-identical (spec'd with localLimit = 0).
-    val localRows = localEdgeRows(e0, localLimit)
-    if (localRows != null) {
-      val wedges = localRows.map(r =>
-        (r.get(0).asInstanceOf[Number].longValue,
-          r.get(1).asInstanceOf[Number].longValue, r.getLong(2)))
-      val sw = scala.collection.mutable.LongMap.empty[Long]
-      wedges.foreach { case (u, _, w) => sw(u) = sw.getOrElse(u, 0L) + w }
-      val n = sw.size.toLong
-      val r0 = scale / n
-      val base = (15L * r0) / 100L
-      var r = scala.collection.mutable.LongMap.empty[Long]
-      sw.keysIterator.foreach(id => r(id) = r0)
-      for (_ <- 1 to iters) {
-        val sums = scala.collection.mutable.LongMap.empty[Long]
-        wedges.foreach { case (u, v, w) =>
-          sums(v) = sums.getOrElse(v, 0L) + (r(u) * w) / sw(u)
+    val localRows =
+      if (Shape.integralIds(e0)) Shape.localRows(e0, localLimit) else None
+    localRows match {
+      case Some(rows) =>
+        val wedges = rows.map(r =>
+          (r.get(0).asInstanceOf[Number].longValue,
+            r.get(1).asInstanceOf[Number].longValue, r.getLong(2)))
+        val sw = scala.collection.mutable.LongMap.empty[Long]
+        wedges.foreach { case (u, _, w) => sw(u) = sw.getOrElse(u, 0L) + w }
+        val n = sw.size.toLong
+        val r0 = scale / n
+        val base = (15L * r0) / 100L
+        var r = scala.collection.mutable.LongMap.empty[Long]
+        sw.keysIterator.foreach(id => r(id) = r0)
+        for (_ <- 1 to iters) {
+          val sums = scala.collection.mutable.LongMap.empty[Long]
+          wedges.foreach { case (u, v, w) =>
+            sums(v) = sums.getOrElse(v, 0L) + (r(u) * w) / sw(u)
+          }
+          val next = scala.collection.mutable.LongMap.empty[Long]
+          sw.keysIterator.foreach { id =>
+            next(id) = base + (85L * sums.getOrElse(id, 0L)) / 100L
+          }
+          r = next
         }
-        val next = scala.collection.mutable.LongMap.empty[Long]
-        sw.keysIterator.foreach { id =>
-          next(id) = base + (85L * sums.getOrElse(id, 0L)) / 100L
-        }
-        r = next
-      }
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val spark = edges.sparkSession
-      val outRows = sw.keys.toSeq.sorted.map(id =>
-        org.apache.spark.sql.Row(id, r(id)))
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(outRows, 1),
-          StructType(Seq(StructField("id", LongType, nullable = false),
-            StructField("r", LongType, nullable = false))))
-        .select(col("id").cast(e0.schema.head.dataType).as("id"), col("r"))
-    } else {
-      val e = e0.materialized
-      val sw = e.groupBy("u").agg(sum("w").as("swt"))
-        .select(col("u").as("id"), col("swt"))
-        .materialized
-      val n = sw.count()
-      val r0 = scale / n
-      val base = (15L * r0) / 100L
-      var r = sw.select(col("id"), col("swt"), lit(r0).as("r"))
-      for (_ <- 1 to iters) {
-        val contrib = r.select(col("id").as("cid"), col("r"), col("swt"))
-        val sums = e.join(contrib, col("u") === col("cid"))
-          .select(col("v"), expr("(r * w) div swt").as("c"))
-          .groupBy("v").agg(sum("c").as("s"))
-        r = sw.join(sums, sw("id") === sums("v"), "left")
-          .select(sw("id"), sw("swt"),
-            (lit(base) + expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("r"))
+        import org.apache.spark.sql.types.{LongType, StructField, StructType}
+        val spark = edges.sparkSession
+        val outRows = sw.keys.toSeq.sorted.map(id =>
+          org.apache.spark.sql.Row(id, r(id)))
+        spark.createDataFrame(
+            spark.sparkContext.parallelize(outRows, 1),
+            StructType(Seq(StructField("id", LongType, nullable = false),
+              StructField("r", LongType, nullable = false))))
+          .select(col("id").cast(e0.schema.head.dataType).as("id"), col("r"))
+      case None =>
+        val e = e0.materialized
+        val sw = e.groupBy("u").agg(sum("w").as("swt"))
+          .select(col("u").as("id"), col("swt"))
           .materialized
-      }
-      r.select(col("id"), col("r"))
+        val n = sw.count()
+        val r0 = scale / n
+        val base = (15L * r0) / 100L
+        var r = sw.select(col("id"), col("swt"), lit(r0).as("r"))
+        for (_ <- 1 to iters) {
+          val contrib = r.select(col("id").as("cid"), col("r"), col("swt"))
+          val sums = e.join(contrib, col("u") === col("cid"))
+            .select(col("v"), expr("(r * w) div swt").as("c"))
+            .groupBy("v").agg(sum("c").as("s"))
+          r = sw.join(sums, sw("id") === sums("v"), "left")
+            .select(sw("id"), sw("swt"),
+              (lit(base) + expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("r"))
+            .materialized
+        }
+        r.select(col("id"), col("r"))
     }
   }
 
@@ -558,62 +529,65 @@ object GraphOps {
     * per-round driver counts are scalars on checkpointed frames.
     */
   def kCore(pairs: DataFrame, aCol: String, bCol: String, k: Int,
-            maxRounds: Int, localLimit: Long = LocalEdgeLimit): DataFrame = {
+            maxRounds: Int, localLimit: Long = Shape.LocalRowLimit): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     var e = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
       .unionByName(pairs.select(col(bCol).as("u"), col(aCol).as("v")))
       .distinct()
       .materialized
-    // bounded local twin ([[LocalEdgeLimit]] doctrine): synchronous
+    // bounded local twin ([[Shape.localRows]]): synchronous
     // peel rounds over the collected (distinct, bidirectional) edges —
     // identical rounds, identical maxRounds contract (the require
     // throws with the same message at the same round count), and the
     // fixpoint is confluent (scaladoc), so survivors + in-core degrees
     // match the distributed peel exactly.
-    if (integralIds(e) && e.count() <= localLimit) {
-      var edgesL = collectEdges(e)
-      var rounds = 0
-      var stable = false
-      while (!stable) {
-        val deg = scala.collection.mutable.LongMap.empty[Long]
-        edgesL.foreach { case (u, _) => deg(u) = deg.getOrElse(u, 0L) + 1L }
-        if (deg.valuesIterator.forall(_ >= k)) stable = true
-        else {
-          rounds += 1
-          require(rounds <= maxRounds,
-            s"k-core not at fixpoint after $maxRounds peel rounds — " +
-              "raise maxRounds (and the oracle's unroll depth) together")
-          edgesL = edgesL.filter { case (u, v) =>
-            deg(u) >= k && deg.getOrElse(v, 0L) >= k }
+    val localRows =
+      if (Shape.integralIds(e)) Shape.localRows(e, localLimit) else None
+    localRows match {
+      case Some(rows) =>
+        var edgesL = rowsToEdges(rows)
+        var rounds = 0
+        var stable = false
+        while (!stable) {
+          val deg = scala.collection.mutable.LongMap.empty[Long]
+          edgesL.foreach { case (u, _) => deg(u) = deg.getOrElse(u, 0L) + 1L }
+          if (deg.valuesIterator.forall(_ >= k)) stable = true
+          else {
+            rounds += 1
+            require(rounds <= maxRounds,
+              s"k-core not at fixpoint after $maxRounds peel rounds — " +
+                "raise maxRounds (and the oracle's unroll depth) together")
+            edgesL = edgesL.filter { case (u, v) =>
+              deg(u) >= k && deg.getOrElse(v, 0L) >= k }
+          }
         }
-      }
-      val coreDeg = scala.collection.mutable.LongMap.empty[Long]
-      edgesL.foreach { case (u, _) => coreDeg(u) = coreDeg.getOrElse(u, 0L) + 1L }
-      localResult(e, coreDeg, "id", "core_deg")
-    } else {
-      var rounds = 0
-      var stable = false
-      while (!stable) {
-        val deg = e.groupBy("u").agg(count(lit(1)).as("d")).materialized
-        // ONE driver action per round: total and surviving node counts
-        // from the same (checkpointed) degree frame
-        val counts = deg.agg(count(lit(1)),
-          count(when(col("d") >= k, 1))).first()
-        if (counts.getLong(0) == counts.getLong(1)) stable = true
-        else {
-          rounds += 1
-          require(rounds <= maxRounds,
-            s"k-core not at fixpoint after $maxRounds peel rounds — " +
-              "raise maxRounds (and the oracle's unroll depth) together")
-          val keep = deg.filter(col("d") >= k).select(col("u").as("kid"))
-          e = e.join(keep, col("u") === col("kid"), "left_semi")
-            .join(keep, col("v") === col("kid"), "left_semi")
-            .materialized
+        val coreDeg = scala.collection.mutable.LongMap.empty[Long]
+        edgesL.foreach { case (u, _) => coreDeg(u) = coreDeg.getOrElse(u, 0L) + 1L }
+        localResult(e, coreDeg, "id", "core_deg")
+      case None =>
+        var rounds = 0
+        var stable = false
+        while (!stable) {
+          val deg = e.groupBy("u").agg(count(lit(1)).as("d")).materialized
+          // ONE driver action per round: total and surviving node counts
+          // from the same (checkpointed) degree frame
+          val counts = deg.agg(count(lit(1)),
+            count(when(col("d") >= k, 1))).first()
+          if (counts.getLong(0) == counts.getLong(1)) stable = true
+          else {
+            rounds += 1
+            require(rounds <= maxRounds,
+              s"k-core not at fixpoint after $maxRounds peel rounds — " +
+                "raise maxRounds (and the oracle's unroll depth) together")
+            val keep = deg.filter(col("d") >= k).select(col("u").as("kid"))
+            e = e.join(keep, col("u") === col("kid"), "left_semi")
+              .join(keep, col("v") === col("kid"), "left_semi")
+              .materialized
+          }
         }
-      }
-      e.groupBy("u").agg(count(lit(1)).as("core_deg"))
-        .select(col("u").as("id"), col("core_deg").cast("long").as("core_deg"))
+        e.groupBy("u").agg(count(lit(1)).as("core_deg"))
+          .select(col("u").as("id"), col("core_deg").cast("long").as("core_deg"))
     }
   }
 
@@ -632,14 +606,14 @@ object GraphOps {
     *
     * Scale: per round ONE equi-join of the edge list against the
     * |nodes|-row label frame + two map-side-combinable aggs keyed by
-    * node; rounds are checkpointed ([[graft.engine.Scale.materialize]])
+    * node; rounds are checkpointed ([[graft.engine.Shape.materialize]])
     * so lineage stays one round deep. Only edge-touched nodes appear
     * (isolated rows have no votes to cast or receive). Returns
     * (id, lbl).
     */
   def labelPropagation(pairs: DataFrame, aCol: String, bCol: String,
                        rounds: Int,
-                       localLimit: Long = LocalEdgeLimit): DataFrame = {
+                       localLimit: Long = Shape.LocalRowLimit): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val e0 = pairs.select(col(aCol).cast("long").as("u"),
         col(bCol).cast("long").as("v"))
@@ -651,46 +625,48 @@ object GraphOps {
     // collected edges; spec'd with localLimit = 0 forcing the
     // distributed loop (ids are cast long above, so the integral-id
     // gate always holds and only the size gate decides).
-    val localRows = localEdgeRows(e0, localLimit)
-    if (localRows != null) {
-      val edges = rowsToEdges(localRows)
-      var lab = scala.collection.mutable.LongMap.empty[Long]
-      edges.foreach { case (u, _) => lab(u) = u }
-      for (_ <- 1 to rounds) {
-        val votes = scala.collection.mutable.LongMap
-          .empty[scala.collection.mutable.LongMap[Long]]
-        edges.foreach { case (u, v) =>
-          val m = votes.getOrElseUpdate(u,
-            scala.collection.mutable.LongMap.empty[Long])
-          val l = lab(v)
-          m(l) = m.getOrElse(l, 0L) + 1L
-        }
-        val next = scala.collection.mutable.LongMap.empty[Long]
-        votes.foreach { case (u, m) =>
-          var bc = -1L
-          var bl = Long.MaxValue
-          m.foreach { case (l, c) =>
-            if (c > bc || (c == bc && l < bl)) { bc = c; bl = l }
+    val localRows =
+      if (Shape.integralIds(e0)) Shape.localRows(e0, localLimit) else None
+    localRows match {
+      case Some(rows) =>
+        val edges = rowsToEdges(rows)
+        var lab = scala.collection.mutable.LongMap.empty[Long]
+        edges.foreach { case (u, _) => lab(u) = u }
+        for (_ <- 1 to rounds) {
+          val votes = scala.collection.mutable.LongMap
+            .empty[scala.collection.mutable.LongMap[Long]]
+          edges.foreach { case (u, v) =>
+            val m = votes.getOrElseUpdate(u,
+              scala.collection.mutable.LongMap.empty[Long])
+            val l = lab(v)
+            m(l) = m.getOrElse(l, 0L) + 1L
           }
-          next(u) = bl
+          val next = scala.collection.mutable.LongMap.empty[Long]
+          votes.foreach { case (u, m) =>
+            var bc = -1L
+            var bl = Long.MaxValue
+            m.foreach { case (l, c) =>
+              if (c > bc || (c == bc && l < bl)) { bc = c; bl = l }
+            }
+            next(u) = bl
+          }
+          lab = next
         }
-        lab = next
-      }
-      localResult(e0, lab, "id", "lbl")
-    } else {
-      val e = e0.materialized
-      var lab = e.select(col("u").as("id")).distinct()
-        .withColumn("lbl", col("id"))
-      for (_ <- 1 to rounds) {
-        lab = e.join(lab.withColumnRenamed("id", "v"), Seq("v"))
-          .groupBy(col("u"), col("lbl"))
-          .agg(count(lit(1)).as("c"))
-          .groupBy("u")
-          .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
-          .select(col("u").as("id"), (-col("m.nl")).as("lbl"))
-          .materialized
-      }
-      lab
+        localResult(e0, lab, "id", "lbl")
+      case None =>
+        val e = e0.materialized
+        var lab = e.select(col("u").as("id")).distinct()
+          .withColumn("lbl", col("id"))
+        for (_ <- 1 to rounds) {
+          lab = e.join(lab.withColumnRenamed("id", "v"), Seq("v"))
+            .groupBy(col("u"), col("lbl"))
+            .agg(count(lit(1)).as("c"))
+            .groupBy("u")
+            .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
+            .select(col("u").as("id"), (-col("m.nl")).as("lbl"))
+            .materialized
+        }
+        lab
     }
   }
 
@@ -774,7 +750,7 @@ object GraphOps {
     * super-linearly even though the pair volume itself is exactly
     * linear (measured 8.7M/87.2M/872M rows at sf0.1/1/10,
     * 10.000×/decade; wall 13.9×/decade before this shape, 10.5× after
-    * — A/B in tools/ProfileQ282, sweep in SCALING_sweep_r12_newq.log).
+    * — A/B in SCALING_sweep_r12b.log, sweep in SCALING_sweep_r12_newq.log).
     * After the pair-key exchange each task aggregates a LOCAL slice
     * (~12M rows over ~1/parts of the key space), so the hash agg
     * never spills; the exchange itself streams narrow 3-long rows
@@ -801,7 +777,7 @@ object GraphOps {
       .filter(col("deg").between(2L, maxDeg.toLong))
       .agg(coalesce(sum(expr("deg * (deg - 1) div 2")), lit(0L)))
       .head().getLong(0)
-    val basePartitions = Relational.shufflePartitionsOf(inc.sparkSession)
+    val basePartitions = Shape.width(inc.sparkSession)
     val aggParts = math.min(4096L, math.max(basePartitions.toLong,
       pairVolume / 12000000L + 1L)).toInt
     // The PAIR-GENERATION stage (posexplode + slice below) reads this

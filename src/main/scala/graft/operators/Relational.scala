@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Scale.MaterializeOps
+import graft.engine.Shape
+import graft.engine.Shape.MaterializeOps
 
 /** Relational composites Spark has no single built-in operator for:
   * per-group top-k, as-of join, and batch sessionization. All are
@@ -21,48 +22,6 @@ object Relational {
     * it must quantize (dollars, buckets) or band (q271) first.
     */
   val HistMaxDistinct: Long = 4000000L
-
-  /** `spark.sql.shuffle.partitions` parsed defensively: some runtimes
-    * set it non-numeric (e.g. "auto" under vendor AQE builds), and a
-    * bare `.toInt` throws before the query even runs (ADVICE r13).
-    * Callers use the value only to PIN a by-num repartition width, so
-    * a sane fallback beats failing.
-    */
-  private[graft] def shufflePartitionsOf(
-      s: org.apache.spark.sql.SparkSession, default: Int = 32): Int =
-    try s.conf.get("spark.sql.shuffle.partitions").toInt
-    catch { case _: NumberFormatException => default }
-
-  /** Scale-adaptive spread of a NARROW input frame before CPU-dense
-    * map work (r16, guide §2.5 input-skew remedy). At bench scale a
-    * whole table is one parquet row group, so a per-row UDF + explode
-    * pipeline rides a 1-3 task scan stage while the other cores idle
-    * (measured: the gram/shingle/simhash map stages of the dedup
-    * family each ran 0.4-0.9 s single-task at sf0.1). When the frame's
-    * planned scan parallelism is below the session width, ONE
-    * round-robin exchange of the raw rows spreads the downstream map
-    * work; at cluster scale the scan is already wide and this returns
-    * the frame untouched — no exchange, no extra bytes (the gate is
-    * the measured split count, not a constant). Rows are unchanged
-    * (round-robin repartition is deterministic under
-    * sortBeforeRepartition), and when one operator derives several
-    * consumers from the spread frame the identical exchange subtrees
-    * are deduped by ReuseExchange, so the scan+shuffle runs once.
-    * Apply ONLY to scan-level frames: `.rdd` on a frame with upstream
-    * exchanges would force their execution just to read the width.
-    *
-    * Pass the frame's (unique) id columns as `keys` when available:
-    * a keyed spread hash-partitions WITHOUT the local input sort every
-    * keyless repartition pays (sortBeforeRepartition, guide §2.5 —
-    * measured ~0.5 s of the q225 spread map job); keyless falls back
-    * to round-robin.
-    */
-  private[graft] def spreadNarrow(df: DataFrame, keys: Column*): DataFrame = {
-    val w = shufflePartitionsOf(df.sparkSession)
-    if (df.rdd.getNumPartitions >= w) df
-    else if (keys.nonEmpty) df.repartition(w, keys: _*)
-    else df.repartition(w)
-  }
 
   /** Theta-pair fan-out guard (VERDICT r13: the [[mcnemarPpm]]
     * enforced-bound doctrine applied to C(n,2) self-joins): returns
@@ -399,11 +358,9 @@ object Relational {
         histogramPercentiles(dev, grpCol, "__dev2", Seq("mad2" -> 0.5)),
         Seq(grpCol))
       .select(col(grpCol), col("med"), (col("mad2") / 2.0).as("mad"))
-      // shield exchange (r16, the theilSenSlope rationale): callers
-      // sort this ≤|groups|-row result and RangePartitioning's
-      // sampling job re-executed the med⋈mad join stage (two
-      // identical 0.33 s jobs in the q124 profile)
-      .repartition(shufflePartitionsOf(df.sparkSession))
+      // [[Shape.shield]]: callers sort this result (q124: two identical
+      // 0.33 s med⋈mad join jobs without it)
+      .transform(Shape.shield)
   }
 
   /** Exact per-group two-sided trimmed mean (robust location): drop the
@@ -590,7 +547,7 @@ object Relational {
     *
     * Scale: the join is one shuffle per side on the snapshot key —
     * AQE-splittable; with both snapshots bucket-written on the key
-    * (engine.Scale bucketing) it degrades to a zero-shuffle sort-merge.
+    * (`bucketBy`) it degrades to a zero-shuffle sort-merge.
     * Payloads ride as single structs so the exchange carries each row
     * once, not once per compared column.
     */
@@ -1023,7 +980,6 @@ object Relational {
     // scanLeft chain would re-execute all k-1 upstream stages for
     // stage k's count (O(|stages|²) stage evaluations). Each frame is
     // one row per surviving user — cheap to hold, expensive to replay.
-    import graft.engine.Scale.MaterializeOps
     val first = events.filter(col(typeCol) === stages.head)
       .groupBy(col(userCol).as("u")).agg(min(col(tsCol)).as("t_prev"))
       .materialized
@@ -1077,7 +1033,6 @@ object Relational {
       unix_micros(col(tsCol)).as("t"), col(typeCol).as("tp"))
     // Same materialization rationale as funnelStages: each reachable
     // set feeds both its count action and the next stage's join.
-    import graft.engine.Scale.MaterializeOps
     val first = ev.filter(col("tp") === stages.head)
       .select("u", "t").distinct().materialized
     val reachable = stages.tail.scanLeft(first) { (prev, stage) =>
@@ -1404,7 +1359,6 @@ object Relational {
       // the whole loop twice per group (optimization guide §4.4;
       // measured in the q190 plan: two identical 2.07 s jobs)
     }.asNondeterministic()
-    val sessionW = shufflePartitionsOf(series.sparkSession)
     series
       // user-origin group-keyed exchange that IS the agg's shuffle
       // (r16, guide §2.5): AQE's byte-based coalescing merged the
@@ -1415,7 +1369,7 @@ object Relational {
       // same-key-same-width, so it must sit below the groupBy; the
       // partial-agg split this forfeits carried the same bytes —
       // collect_list concatenation has no map-side reduction.)
-      .repartition(sessionW, col(groupCol))
+      .repartition(Shape.width(series.sparkSession), col(groupCol))
       .groupBy(col(groupCol).as("grp"))
       .agg(collect_list(struct(col(xCol).cast("long").as("x"),
         col(yCol).cast("long").as("y"))).as("pts"))
@@ -1425,15 +1379,10 @@ object Relational {
       // pairless groups (single point / all equal x) have no slope —
       // drop them like the pair join would have
       .filter(col("n_pairs") > 0)
-      // shield exchange AFTER the UDF (r16): callers sort this tiny
-      // (≤|groups| rows) result, and RangePartitioning's sampling job
-      // re-executes the range exchange's child stage — without this
-      // boundary that child IS the UDF stage, so every pair loop ran
-      // TWICE (two measured ~1.1 s single-task jobs at sf0.1). With
-      // it, AQE materializes the UDF stage once and the sampler reads
-      // the shuffle files. Round-robin: a keyed repartition on grp
-      // would be elided as redundant over the agg's partitioning.
-      .repartition(sessionW)
+      // [[Shape.shield]] AFTER the UDF: callers sort this result, and
+      // without it every pair loop ran TWICE (two measured ~1.1 s
+      // single-task jobs at sf0.1)
+      .transform(Shape.shield)
   }
 
   /** Item-item co-occurrence recommendations ("customers who bought X
@@ -1992,7 +1941,7 @@ object Relational {
       // frame looks tiny to AQE (it would coalesce to one partition)
       // but the post-explode stage is the expensive one — the q295
       // bootstrap / q282 fan-out lesson
-      .repartition(shufflePartitionsOf(base.sparkSession), col("__id"))
+      .repartition(Shape.width(base.sparkSession), col("__id"))
       .select(col("grp"), col("__d"),
         posexplode(graft.functions.TextFunctions.signFlips(
           col("__id"), r, prefix)))

@@ -1,15 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Scale.MaterializeOps
 import graft.engine.Tables._
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
-import graft.multimodal.Multimodal
-import graft.operators.{Ann, Bpe, Chunking, Curation, Dedup, GraphOps, Indexing, Relational, Sketches, TextJobs}
+import graft.operators.{Curation, Dedup, Relational}
 
 import graft.QueryShared._
 
@@ -88,7 +85,7 @@ private[graft] object QueriesCurationPipeline {
           pmod(datediff(to_date(col("o_orderdate")), lit("1970-01-01").cast("date")),
             lit(1024)).cast("long").as("y"))
         .select(col("o_orderkey"), col("x"), col("y"),
-          graft.engine.Scale.zValue2(col("x"), col("y"), 10).as("zval"))
+          VectorFunctions.zValue2(col("x"), col("y"), 10).as("zval"))
         .orderBy("o_orderkey")
     }),
 
@@ -486,7 +483,7 @@ private[graft] object QueriesCurationPipeline {
 
     "q98_zorder" -> {
       // bit-interleave generated from the same (bit, position) pairs as
-      // Scale.zValue2(_, _, 10)
+      // VectorFunctions.zValue2(_, _, 10)
       val z = (0 until 10).flatMap(b => Seq(
         s"(((x >> $b) & 1) << ${2 * b})", s"(((y >> $b) & 1) << ${2 * b + 1})"))
         .mkString(" | ")

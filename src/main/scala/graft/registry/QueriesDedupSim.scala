@@ -1,15 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Scale.MaterializeOps
+import graft.engine.Shape.MaterializeOps
+import graft.engine.Shape
 import graft.engine.Tables._
 import graft.functions.TextFunctions._
-import graft.functions.VectorFunctions
-import graft.multimodal.Multimodal
-import graft.operators.{Ann, Bpe, Chunking, Curation, Dedup, GraphOps, Indexing, Relational, Sketches, TextJobs}
+import graft.operators.{Curation, Dedup, Relational}
 
 import graft.QueryShared._
 
@@ -397,7 +396,7 @@ private[graft] object QueriesDedupSim {
       // both candidate frames (r16, VERDICT #1) — blocking is a
       // per-pair filter, so union-then-block equals block-then-union
       // while halving the join count.
-      val (standing, newEdges) = inParallel(
+      val (standing, newEdges) = Shape.inParallel(
         erLabelsOfPairs(corpus,
             operators.Dedup.editDistance1SelfJoinPostings(postings))
           .withColumnRenamed("cust_id", "node")
@@ -735,21 +734,19 @@ private[graft] object QueriesDedupSim {
         // sample across the session's shuffle width before
         // materializing — bounded cost at any corpus scale, rows and
         // aggregates unchanged (guide §2.5 input-skew remedy).
-        .repartition(operators.Relational.shufflePartitionsOf(s),
-          col("doc_id"))
+        .repartition(Shape.width(s), col("doc_id"))
         .materialized // fixed-size; feeds BOTH pair frames
       // truth and cand are INDEPENDENT pipelines over the shared
       // materialized sample — their job chains overlap via the driver
       // pool (guide §2.6) instead of running serially; each half is
       // the exact computation the serial form ran
-      val (truth, cand) = inParallel(
+      val (truth, cand) = Shape.inParallel(
         // pinnedPartitions: the sample is FIXED-size by construction,
         // so a session-width pin on the PPJoin verify stages has no
         // scale exposure — AQE otherwise runs them on 3 tasks (r16)
         Dedup.ppJoinShingles(docs, "doc_id", "text",
             tPpm = DedupEvalTPpm,
-            pinnedPartitions =
-              Some(operators.Relational.shufflePartitionsOf(s)))
+            pinnedPartitions = Some(Shape.width(s)))
           .select("id_a", "id_b").materialized,
         Dedup.simHashDup(docs, "doc_id", "text", nBits = 16)
           .select("id_a", "id_b").materialized)

@@ -1,15 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Scale.MaterializeOps
+import graft.engine.Shape
 import graft.engine.Tables._
 import graft.functions.TextFunctions._
-import graft.functions.VectorFunctions
-import graft.multimodal.Multimodal
-import graft.operators.{Ann, Bpe, Chunking, Curation, Dedup, GraphOps, Indexing, Relational, Sketches, TextJobs}
+import graft.operators.Relational
 
 import graft.QueryShared._
 
@@ -614,9 +612,7 @@ private[graft] object QueriesEventsStreams {
         // explicit count pins the exchange (REPARTITION_BY_NUM is
         // exempt from coalescing). One tiny |events|-row exchange
         // buys a fully parallel 200× stage — the q282 fan-out lesson.
-        .repartition(
-          graft.operators.Relational.shufflePartitionsOf(s),
-          col("event_id"))
+        .repartition(Shape.width(s), col("event_id"))
         // all 200 weights in ONE tight JVM pass per event
         // (TextFunctions.bootstrapWeights: ⌈200∕32⌉ digests, 32 coins
         // each), then a single posexplode — the interpreted

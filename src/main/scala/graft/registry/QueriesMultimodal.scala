@@ -1,15 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Scale.MaterializeOps
+import graft.engine.Shape
 import graft.engine.Tables._
-import graft.functions.TextFunctions._
-import graft.functions.VectorFunctions
 import graft.multimodal.Multimodal
-import graft.operators.{Ann, Bpe, Chunking, Curation, Dedup, GraphOps, Indexing, Relational, Sketches, TextJobs}
+import graft.operators.Dedup
 
 import graft.QueryShared._
 
@@ -136,21 +133,20 @@ private[graft] object QueriesMultimodal {
       // (Multimodal.videoSceneCuts scaladoc). The fixture's windows are
       // piecewise-constant, so the oracle derives every cut position
       // analytically.
-      // spreadNarrow + shield (r16): the whole-corpus AVI decode rode
-      // the fixture's 1-task scan AND ran twice — the orderBy's range
-      // sampler re-executed the decode stage (two identical 0.6 s
-      // 1-task jobs in the profile). Spread stays QUERY-level: a
+      // Shape.spread + Shape.shield (r16): the whole-corpus AVI decode
+      // rode the fixture's 1-task scan AND ran twice (two identical
+      // 0.6 s 1-task jobs in the profile). Spread stays QUERY-level: a
       // fixture-wide spread regressed every cheap decode (see
       // mediaFixture's note)
       import s.implicits._
-      val media = Relational.spreadNarrow(
+      val media = Shape.spread(
           mediaFixture(s, d, "video_dup")(
             Multimodal.mediaWithDupVideo(s, documents(s, d))).toDF(),
           col("media_id"))
         .as[Multimodal.MediaRow]
       Multimodal.videoSceneCuts(media)
         .toDF()
-        .repartition(Relational.shufflePartitionsOf(s))
+        .transform(Shape.shield)
         .orderBy("media_id")
     }),
 
@@ -175,9 +171,8 @@ private[graft] object QueriesMultimodal {
       Multimodal.videoSceneCutsSampled(mediaFixture(s, d, "video_dup")(
           Multimodal.mediaWithDupVideo(s, documents(s, d))), every = 2)
         .toDF()
-        // shield (r16): the orderBy's range sampler re-executes its
-        // child stage, which here IS the decode (the q165 rationale)
-        .repartition(Relational.shufflePartitionsOf(s))
+        // Shape.shield: the sort's child stage here IS the decode
+        .transform(Shape.shield)
         .orderBy("media_id")),
 
     "q204_video_fp_dedup_sampled" -> ((s, d) => {

@@ -1,15 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Scale.MaterializeOps
+import graft.engine.Shape
 import graft.engine.Tables._
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 import graft.multimodal.Multimodal
-import graft.operators.{Ann, Bpe, Chunking, Curation, Dedup, GraphOps, Indexing, Relational, Sketches, TextJobs}
+import graft.operators.{Curation, Relational}
 
 import graft.QueryShared._
 
@@ -448,10 +447,9 @@ private[graft] object QueriesRelational {
             col("p50_exact_c") * 0.02).cast("long").as("p50_ok"),
           (abs(col("__a95") - col("p95_exact_c")) <=
             col("p95_exact_c") * 0.02).cast("long").as("p95_ok"))
-        // shield exchange (r16, the theilSenSlope rationale): the
-        // orderBy's range sampler re-executed the exact⋈approx join
-        // stage — two identical 0.5 s jobs in the profile
-        .repartition(operators.Relational.shufflePartitionsOf(s))
+        // Shape.shield: the sort re-executed the exact⋈approx join
+        // stage without it (two identical 0.5 s jobs in the profile)
+        .transform(Shape.shield)
         .orderBy("l_returnflag")
     }),
 
@@ -559,8 +557,9 @@ private[graft] object QueriesRelational {
     // Caveat: floor(x + 0.5) is NOT universally identical to half-up
     // rounding (x + 0.5 can round up in binary for x just below a .5
     // boundary, e.g. 0.49999999999999994); the equivalence here is
-    // empirical — the ProfileQ44 diff check found 0 diffs on this data
-    // distribution at sf0.1 — and the oracle SQL uses the same spelling.
+    // empirical — q44 passes the oracle's hash compare at sf0.1
+    // (CORRECTNESS_sf01_full.json) — and the oracle SQL uses the same
+    // spelling.
 
     "q44_math_fns" -> ((s, d) => {
       lineitem(s, d).groupBy("l_returnflag").agg(
@@ -952,12 +951,11 @@ private[graft] object QueriesRelational {
       // of one. Result is IDENTICAL to the plain join — the oracle IS
       // the plain join, so the green row proves the rewrite is a
       // result identity (Relational.skewSafeJoin scaladoc).
-      // spreadNarrow (r16, guide §2.5): the md5 salting expression +
-      // join + agg rode the 3-task lineitem scan (1.76 s of CPU on 3
-      // tasks in the profile); the spread carries only the 4 projected
-      // columns and is the identity on wide scans
+      // Shape.spread (r16): the md5 salting expression + join + agg
+      // rode the 3-task lineitem scan (1.76 s of CPU on 3 tasks in the
+      // profile); the spread carries only the 4 projected columns
       val joined = Relational.skewSafeJoin(
-        Relational.spreadNarrow(
+        Shape.spread(
           lineitem(s, d).select(col("l_suppkey"), col("l_orderkey"),
             col("l_linenumber"), cents(col("l_extendedprice")).as("price_c")),
           col("l_orderkey"), col("l_linenumber")),
@@ -1015,7 +1013,7 @@ private[graft] object QueriesRelational {
       // the predicate check a tiny literal cross join over it. The
       // expected shape IS the q98 thesis: the x-sort layout skips only
       // x-predicates, z-order skips on BOTH dimensions.
-      val zExpr = graft.engine.Scale.zValue2(col("x"), col("y"), 10)
+      val zExpr = VectorFunctions.zValue2(col("x"), col("y"), 10)
       val base = orders(s, d).select(
         pmod(col("o_custkey"), lit(1024L)).as("x"),
         pmod(datediff(to_date(col("o_orderdate")),
@@ -1090,11 +1088,11 @@ private[graft] object QueriesRelational {
       // function of each bucket's row multiset. ONE map-side-combined
       // agg, 3 longs of state per bucket at any size
       // (Relational.bucketFingerprints scaladoc).
-      // spreadNarrow (r16, guide §2.5): the two md5-based row hashes
-      // rode the 3-task scan (1.21 s of CPU on 3 tasks in the profile);
-      // the spread carries only the 4 projected columns
+      // Shape.spread (r16): the two md5-based row hashes rode the
+      // 3-task scan (1.21 s of CPU on 3 tasks in the profile); the
+      // spread carries only the 4 projected columns
       Relational.bucketFingerprints(
-          Relational.spreadNarrow(
+          Shape.spread(
             lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
               col("l_extendedprice"), col("l_returnflag")),
             col("l_orderkey"), col("l_linenumber")),
@@ -1117,7 +1115,7 @@ private[graft] object QueriesRelational {
       // Flagging is replayed by the oracle, so a (cryptographically
       // negligible) fingerprint collision would change both sides
       // identically.
-      // NO spreadNarrow on base (r16, measured 1.08→1.45): filter
+      // NO Shape.spread on base (r16, measured 1.08→1.45): filter
       // pushdown specializes each consumer's copy of the spread
       // exchange (v1/v2 filters land BELOW it), so instead of one
       // reused exchange the query paid four
@@ -1308,11 +1306,10 @@ private[graft] object QueriesRelational {
       // row, not strings: the first explode form shipped
       // "l_partkey|l_suppkey" concat keys and measured 40 s sf10,
       // WORSE than the two-scan 35 s it replaced
-      // spreadNarrow (r16, guide §2.5): the 2× Expand + partial
-      // countDistinct rode the 3-task lineitem scan (1.19 s of CPU on
-      // 3 tasks); the spread carries only the 5 projected columns and
-      // is the identity on wide scans
-      val liFds = fdRollup(Relational.spreadNarrow(
+      // Shape.spread (r16): the 2× Expand + partial countDistinct rode
+      // the 3-task lineitem scan (1.19 s of CPU on 3 tasks); the spread
+      // carries only the 5 projected columns
+      val liFds = fdRollup(Shape.spread(
           lineitem(s, d).select(col("l_orderkey"), col("l_partkey"),
             col("l_suppkey"), col("l_returnflag"), col("l_extendedprice"),
             col("l_quantity")),

@@ -1,15 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Scale.MaterializeOps
 import graft.engine.Tables._
 import graft.functions.TextFunctions._
-import graft.functions.VectorFunctions
-import graft.multimodal.Multimodal
-import graft.operators.{Ann, Bpe, Chunking, Curation, Dedup, GraphOps, Indexing, Relational, Sketches, TextJobs}
+import graft.operators.{Bpe, Chunking, Curation, Dedup, GraphOps, Indexing, Relational, TextJobs}
 
 import graft.QueryShared._
 

@@ -1,15 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.engine.Scale.MaterializeOps
 import graft.engine.Tables._
 import graft.functions.TextFunctions._
-import graft.functions.VectorFunctions
 import graft.multimodal.Multimodal
-import graft.operators.{Ann, Bpe, Chunking, Curation, Dedup, GraphOps, Indexing, Relational, Sketches, TextJobs}
+import graft.operators.{Dedup, Sketches}
 
 /** Shared constants, fixtures and DuckDB SQL fragments used by the
   * per-family query registries (split from SparkEntry round 12; the
@@ -23,25 +20,6 @@ private[graft] object QueryShared {
     * divergence from oracle comparison.
     */
   private[graft] def cents(c: Column): Column = round(c * 100).cast("long")
-
-  /** Run two INDEPENDENT eager builds (materialize/collect chains)
-    * concurrently from the driver, so the second chain's jobs back-fill
-    * the first's straggler tail (optimization guide §2.6). Each side is
-    * evaluated exactly once, on its own thread; use ONLY for sides with
-    * no data dependency on each other. Deterministic results stay
-    * deterministic — only wall-clock changes.
-    */
-  private[graft] def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val fa = Future(a)
-      val fb = Future(b)
-      (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
-    } finally pool.shutdown()
-  }
 
   private[graft] def fmtTs(c: Column): Column = date_format(c, "yyyy-MM-dd HH:mm:ss")
 
@@ -436,7 +414,7 @@ private[graft] object QueryShared {
       build.write.mode("overwrite").parquet(tmp)
     }
     import s.implicits._
-    // NO spreadNarrow here (r16, measured): a fixture-wide spread
+    // NO Shape.spread here (r16, measured): a fixture-wide spread
     // regressed every CHEAP decode (q117 0.24→0.58, q132 0.24→0.57,
     // q189 0.15→0.41, q238 0.28→0.69 at sf0.1) — only q165's full AVI
     // decode is heavy enough to pay for the exchange, and it spreads

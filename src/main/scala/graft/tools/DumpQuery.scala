@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump one registry query's result to parquet — the engine half of a
   * DECOMPOSED oracle (VERDICT r12 #1): when DuckDB cannot replay a
   * whole heavy query within timeout (q31's band self-join spills >80 GB
@@ -17,10 +15,8 @@ object DumpQuery {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: DumpQuery <name> <sfDir> <outDir>")
     val Array(name, d, out) = args
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config(graft.engine.Tables.NanosConf, "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession.builder()
+      .config(graft.engine.Tables.NanosConf, "true").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query $name"))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints condensed physical plans for representative queries — the
   * scale audit: PushedFilters reaching parquet, broadcast vs shuffle
   * joins, exchange counts, codegen coverage.
@@ -9,10 +7,8 @@ import org.apache.spark.sql.SparkSession
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config(graft.engine.Tables.NanosConf, "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession.builder()
+      .config(graft.engine.Tables.NanosConf, "true").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val interesting = args.headOption
       .map(_.split(",").toSeq)

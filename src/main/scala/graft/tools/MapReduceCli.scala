@@ -38,13 +38,7 @@ object MapReduceCli {
     val code = validate(args) match {
       case Some(c) => c // validation failures never start a session
       case None =>
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "*")
-        val spark = SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
+        val spark = LocalSession.builder().getOrCreate()
         spark.sparkContext.setLogLevel("WARN")
         try runJob(args, spark) finally spark.stop()
     }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-job attribution profiler (not part of the library surface): runs
   * one query (warm, noop sink) with a listener that records every job's
@@ -11,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   *
   *   sbt "runMain graft.tools.ProfileJobs q201_er_incremental"
   *
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_RUNS (default 2;
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (cores and
+  * shuffle width, default all), SPARK_GRAFT_RUNS (default 2;
   * the LAST run is the one attributed — earlier runs warm codegen/JIT).
   */
 object ProfileJobs {
@@ -20,10 +20,8 @@ object ProfileJobs {
       .split(",").toSeq.map(_.trim).filter(_.nonEmpty)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config(graft.engine.Tables.NanosConf, "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession.builder()
+      .config(graft.engine.Tables.NanosConf, "true").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.range(1000).write.format("noop").mode("overwrite").save()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling evidence: times representative queries at every available
   * scale factor and prints per-decade growth ratios. lineitem-backed
   * queries scale 6k→60k→600k→6M rows; documents/embeddings-backed ones
@@ -17,8 +15,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ScalingBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+    val spark = LocalSession.builder()
       .config(graft.engine.Tables.NanosConf, "true")
       // The derived fixtures are ONE parquet file per table (57 MB docs
       // at sf10), so the default 128 MB maxPartitionBytes turns every
@@ -27,8 +24,7 @@ object ScalingBench {
       // serialization. A real corpus at this tier presents hundreds of
       // splits; 4 MB splits restore that shape for the measurement
       // (scan tasks ~ size/4MB, still 1 task at the sub-4MB SFs).
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.sql.files.maxPartitionBytes", "4m").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.range(1000).write.format("noop").mode("overwrite").save()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Throughput measurement for the reference-parity text jobs on a corpus
   * large enough to amortize session startup — the apples-to-apples
   * comparison against the reference's single-process ~95-210 MB/s
@@ -11,12 +9,10 @@ object TextThroughput {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse("/tmp/graft-bigtext/big.txt")
     val bytes = new java.io.File(path).length()
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+    val spark = LocalSession.builder()
       // split the input finely enough to engage every core even on a
       // tens-of-MB corpus (default 128 MB = one task for the whole file)
-      .config("spark.sql.files.maxPartitionBytes", s"${1 << 20}")
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .config("spark.sql.files.maxPartitionBytes", s"${1 << 20}").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect()
     def time(name: String)(f: => Unit): Unit = {

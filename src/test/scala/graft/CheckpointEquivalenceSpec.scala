@@ -1,13 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
-import graft.engine.Scale
+import graft.engine.Shape
 import graft.operators.{Ann, Bpe, Dedup, GraphOps}
 
 /** The `spark.graft.checkpointDir` switch (VERDICT r07 #5): every
-  * iterative operator materializes per round through Scale.materialize,
+  * iterative operator materializes per round through Shape.materialize,
   * which is localCheckpoint(eager) by default and reliable checkpoint()
   * when the conf names a durable directory (the 1000-executor setting —
   * executor-local blocks die WITH an executor; reliable blocks don't).
@@ -20,10 +19,10 @@ class CheckpointEquivalenceSpec extends AnyFunSuite {
 
   private def withReliableDir[A](f: => A): A = {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.conf.set(Scale.CheckpointDirConf, dir)
+    spark.conf.set(Shape.CheckpointDirConf, dir)
     try f
     finally {
-      spark.conf.unset(Scale.CheckpointDirConf)
+      spark.conf.unset(Shape.CheckpointDirConf)
       // the sparkContext checkpoint dir cannot be unset; later local
       // runs are unaffected because materialize checks the CONF, and a
       // leftover sc dir only matters to forced checkpoint() calls
@@ -59,7 +58,7 @@ class CheckpointEquivalenceSpec extends AnyFunSuite {
   }
 
   // One representative per remaining loop family routed through
-  // Scale.materialize (VERDICT r08 #7): peel loop (k-core), fixed-iter
+  // Shape.materialize (VERDICT r08 #7): peel loop (k-core), fixed-iter
   // rank loop (PageRank), Lloyd build (k-means), merge-round learn
   // (BPE). The switch's blast radius is every iterative operator, so
   // each family gets its own local==reliable assertion.
@@ -114,12 +113,12 @@ class CheckpointEquivalenceSpec extends AnyFunSuite {
 
   test("reliable path actually writes checkpoint files") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-w")
-    spark.conf.set(Scale.CheckpointDirConf, dir.toString)
+    spark.conf.set(Shape.CheckpointDirConf, dir.toString)
     try {
       Dedup.dupClustersStar(Seq((1L, 2L)).toDF("a", "b"), "a", "b").collect()
       val wrote = java.nio.file.Files.walk(dir).count() > 1
       assert(wrote, s"no checkpoint data under $dir")
-    } finally spark.conf.unset(Scale.CheckpointDirConf)
+    } finally spark.conf.unset(Shape.CheckpointDirConf)
   }
 
   test("labelPropagation identical via local and reliable paths") {

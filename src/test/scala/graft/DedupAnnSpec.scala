@@ -743,17 +743,21 @@ class DedupAnnSpec extends AnyFunSuite {
     // via a driver union-find instead of the multi-round star loop.
     // Both paths must agree label-for-label on a graph that mixes a
     // long chain (high diameter), a clique, self-pairs and isolated
-    // self-loop nodes; localLimit = 0 forces the distributed loop.
+    // self-loop nodes; localLimit = 0 forces the distributed loop, on
+    // an empty graph too.
     val pairs = ((0L until 40L).map(i => (i, i + 1)) ++
       Seq((100L, 101L), (100L, 102L), (101L, 102L), (200L, 200L)) ++
       (0 until 8).map(i => (300L + i, 300L + (i * 3) % 8))).toDF("id_a", "id_b")
-    def labels(limit: Long) =
-      Dedup.dupClustersStar(pairs, "id_a", "id_b", localLimit = limit)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val local = labels(200000L)
-    val dist = labels(0L)
-    assert(local == dist, s"local != distributed: ${
-      (local.toSet diff dist.toSet).take(5)} / ${(dist.toSet diff local.toSet).take(5)}")
+    val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    for (g <- Seq(pairs, empty)) {
+      def labels(limit: Long) =
+        Dedup.dupClustersStar(g, "id_a", "id_b", localLimit = limit)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val local = labels(200000L)
+      val dist = labels(0L)
+      assert(local == dist, s"local != distributed: ${
+        (local.toSet diff dist.toSet).take(5)} / ${(dist.toSet diff local.toSet).take(5)}")
+    }
   }
 
   test("reliable-checkpoint cluster collapse equals the localCheckpoint path") {
@@ -1125,32 +1129,36 @@ class DedupAnnSpec extends AnyFunSuite {
 
   test("graph local twins equal the distributed loops (bfs/sssp/kCore)") {
     import spark.implicits._
-    // r15: below LocalEdgeLimit the iterative graph ops run a driver
-    // twin; localLimit = 0 forces the distributed loop on the same
-    // inputs — results must agree map-for-map on graphs that mix
-    // chains, branches, weights, islands and isolated seeds.
+    // r15: below Shape.LocalRowLimit the iterative graph ops run a
+    // driver twin; localLimit = 0 forces the distributed loop on the
+    // same inputs — results must agree map-for-map on graphs that mix
+    // chains, branches, weights, islands and isolated seeds, and on an
+    // empty graph.
     val pairs = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
       (3L, 30L), (7L, 8L)) ++ (0 until 10).map(i => (40L + i, 41L + i)))
       .toDF("id_a", "id_b")
+    val noPairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     val seeds = Seq(1L, 30L, 99L, 45L).toDF("doc_id")
     def mp(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(mp(GraphOps.bfsHops(pairs, "id_a", "id_b", seeds, "doc_id", 3)) ==
-      mp(GraphOps.bfsHops(pairs, "id_a", "id_b", seeds, "doc_id", 3,
-        localLimit = 0L)))
+    for (p <- Seq(pairs, noPairs))
+      assert(mp(GraphOps.bfsHops(p, "id_a", "id_b", seeds, "doc_id", 3)) ==
+        mp(GraphOps.bfsHops(p, "id_a", "id_b", seeds, "doc_id", 3,
+          localLimit = 0L)))
     val wedges = Seq((1L, 2L, 1L), (2L, 3L, 1L), (1L, 3L, 10L),
       (3L, 4L, 2L), (4L, 5L, 2L), (6L, 7L, 1L)).toDF("id_a", "id_b", "w")
+    val noWedges = Seq.empty[(Long, Long, Long)].toDF("id_a", "id_b", "w")
     val wseeds = Seq(1L).toDF("doc_id")
-    for (k <- Seq(1, 2, 4))
-      assert(mp(GraphOps.ssspHops(wedges, "id_a", "id_b", "w", wseeds,
+    for (w <- Seq(wedges, noWedges); k <- Seq(1, 2, 4))
+      assert(mp(GraphOps.ssspHops(w, "id_a", "id_b", "w", wseeds,
           "doc_id", k)) ==
-        mp(GraphOps.ssspHops(wedges, "id_a", "id_b", "w", wseeds,
+        mp(GraphOps.ssspHops(w, "id_a", "id_b", "w", wseeds,
           "doc_id", k, localLimit = 0L)), s"sssp maxHops=$k")
     val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L),
       (5L, 6L), (6L, 4L), (4L, 3L)).toDF("id_a", "id_b")
-    for (k <- Seq(1, 2, 3))
-      assert(mp(GraphOps.kCore(g, "id_a", "id_b", k, maxRounds = 10)) ==
-        mp(GraphOps.kCore(g, "id_a", "id_b", k, maxRounds = 10,
+    for (p <- Seq(g, noPairs); k <- Seq(1, 2, 3))
+      assert(mp(GraphOps.kCore(p, "id_a", "id_b", k, maxRounds = 10)) ==
+        mp(GraphOps.kCore(p, "id_a", "id_b", k, maxRounds = 10,
           localLimit = 0L)), s"kCore k=$k")
   }
 
@@ -1189,9 +1197,12 @@ class DedupAnnSpec extends AnyFunSuite {
       assert(m2(GraphOps.weightedPageRankInt(wedges, "id_a", "id_b", "w", it)) ==
         m2(GraphOps.weightedPageRankInt(wedges, "id_a", "id_b", "w", it,
           localLimit = 0L)), s"weightedPR iters=$it")
-    for (r <- Seq(0, 1, 3))
-      assert(m2(GraphOps.labelPropagation(pairs, "id_a", "id_b", r)) ==
-        m2(GraphOps.labelPropagation(pairs, "id_a", "id_b", r,
+    // the rank loops divide by the node count, so only LPA takes the
+    // empty graph
+    val noPairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    for (p <- Seq(pairs, noPairs); r <- Seq(0, 1, 3))
+      assert(m2(GraphOps.labelPropagation(p, "id_a", "id_b", r)) ==
+        m2(GraphOps.labelPropagation(p, "id_a", "id_b", r,
           localLimit = 0L)), s"LPA rounds=$r")
   }
 
@@ -1542,7 +1553,6 @@ class DedupAnnSpec extends AnyFunSuite {
   }
 
   test("ivfPqTopKProbe: probing ALL lists reduces to plain PQ; codebooks round-trip") {
-    import spark.implicits._
     val e = engine.Tables.embeddings(spark, SparkTestSession.sfDir)
     val queries = e.filter(col("vec_id") < 3)
     val (m, codes, nLists) = (8, 8, 4)

@@ -76,6 +76,11 @@ class IncrementalErSpec extends AnyFunSuite {
         localLimit = 0L))
     assert(local == dist)
     assert(local(20L) == 1L && local(23L) == 22L)
+    // an empty update graph must take the distributed path too
+    val none = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(labels(Dedup.incrementalClusterLabels(standing, none, "a", "b")) ==
+      labels(Dedup.incrementalClusterLabels(standing, none, "a", "b",
+        localLimit = 0L)))
   }
 
   test("string node ids take the distributed path and still label correctly") {

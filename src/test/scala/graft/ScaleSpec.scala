@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.Scale
+import graft.engine.Shape
+import graft.functions.VectorFunctions
 
-/** Scale-pattern tests: salting correctness, bucketed joins planning
-  * with zero exchanges, partition pruning reaching the scan.
+/** Scale-pattern tests: exchange widths, plan shapes that stay
+  * shuffle-bounded, runtime pruning reaching the scan, and the exact
+  * bounded-domain aggregates.
   */
 class ScaleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -91,68 +93,11 @@ class ScaleSpec extends AnyFunSuite {
     assert(QueryShared.semDedupNLists(2000000) == 3200)
   }
 
-  test("saltedEquiJoin returns exactly the plain join's rows under skew") {
-    // 90% of big rows share one hot key
-    val big = (1 to 2000).map(i => (if (i % 10 == 0) i.toLong % 7 else 42L, i))
-      .toDF("k", "v")
-    val small = Seq((42L, "hot"), (0L, "a"), (1L, "b"), (6L, "c")).toDF("sk", "name")
-    val plain = big.join(small, col("k") === col("sk"))
-      .select("k", "v", "name").collect().toSet
-    val salted = Scale.saltedEquiJoin(big, small, "k", "sk", saltFactor = 8)
-      .select("k", "v", "name").collect().toSet
-    assert(salted == plain)
-  }
-
-  test("saltedEquiJoin works with SAME-named key columns") {
-    val big = (1 to 200).map(i => (i.toLong % 5, i)).toDF("k", "v")
-    val small = Seq((0L, "a"), (3L, "b")).toDF("k", "name")
-    val got = Scale.saltedEquiJoin(big, small, "k", "k", 4)
-      .select(col("v"), col("name")).collect().toSet
-    val want = big.join(small.withColumnRenamed("k", "k2"), col("k") === col("k2"))
-      .select(col("v"), col("name")).collect().toSet
-    assert(got == want)
-  }
-
   test("exchangeCount counts shuffle exchanges, not broadcasts") {
     val df = spark.range(1000).toDF("id")
     val shuffled = df.groupBy(col("id") % 7).count()
-    assert(Scale.exchangeCount(shuffled) >= 1)
-    assert(Scale.exchangeCount(df.select(col("id") + 1)) == 0)
-  }
-
-  test("saltedSumAgg equals plain groupBy sum") {
-    val df = (1 to 5000).map(i => (if (i % 100 == 0) i.toLong else 1L, i.toLong))
-      .toDF("k", "v")
-    val plain = df.groupBy("k").agg(sum("v").as("sum_v"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val salted = Scale.saltedSumAgg(df, "k", "v", saltFactor = 16)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-  }
-
-  test("bucketed tables join with zero shuffle exchanges") {
-    val o = spark.read.parquet(s"${SparkTestSession.sfDir}/orders.parquet")
-      .select("o_orderkey", "o_custkey", "o_totalprice")
-    val l = spark.read.parquet(s"${SparkTestSession.sfDir}/lineitem.parquet")
-      .select("l_orderkey", "l_quantity")
-    Scale.writeBucketed(o, "b_orders", "o_orderkey", 4)
-    Scale.writeBucketed(l, "b_lineitem", "l_orderkey", 4)
-    val joined = spark.table("b_orders")
-      .join(spark.table("b_lineitem"),
-        col("o_orderkey") === col("l_orderkey"))
-      .groupBy("o_custkey").agg(sum("l_quantity").as("q"))
-    // one exchange for the groupBy (custkey), NONE for the join
-    val planStr = joined.queryExecution.executedPlan.toString
-    val joinSection = planStr.split("HashAggregate").last
-    assert(!joinSection.contains("Exchange hashpartitioning(o_orderkey") &&
-      !joinSection.contains("Exchange hashpartitioning(l_orderkey"),
-      s"join should be co-located:\n$planStr")
-    // and it still computes the right thing
-    val expect = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .groupBy("o_custkey").agg(sum("l_quantity").as("q"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val got = joined.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got == expect)
+    assert(Shape.exchangeCount(shuffled) >= 1)
+    assert(Shape.exchangeCount(df.select(col("id") + 1)) == 0)
   }
 
   test("posting-list dedup plans scan the corpus exactly once (regression guard)") {
@@ -221,31 +166,8 @@ class ScaleSpec extends AnyFunSuite {
   test("zValue2 interleaves bits (hand-computed morton code)") {
     // x=0b101, y=0b011 -> z bits (y2 x2 y1 x1 y0 x0) = 0b011011 = 27
     val z = Seq((5L, 3L)).toDF("x", "y")
-      .select(Scale.zValue2(col("x"), col("y"), 3)).as[Long].head()
+      .select(VectorFunctions.zValue2(col("x"), col("y"), 3)).as[Long].head()
     assert(z == 27L)
-  }
-
-  test("zOrderLayout gives locality on BOTH dimensions; x-sort on one") {
-    // 64x64 grid, 16 partitions of ~256 points each
-    val grid = spark.range(4096).select(
-      (col("id") % 64).as("x"), (col("id") / 64).cast("long").as("y"))
-    def ranges(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
-      df.withColumn("pid", spark_partition_id())
-        .groupBy("pid")
-        .agg((max("x") - min("x")).as("rx"), (max("y") - min("y")).as("ry"))
-        .select("rx", "ry").as[(Long, Long)].collect().toSeq
-    val zr = ranges(Scale.zOrderLayout(grid, "x", "y", 6, 16))
-    val xr = ranges(grid.repartitionByRange(16, col("x")).sortWithinPartitions("x"))
-    // x-sorted: x ranges are tiny but EVERY partition spans all of y
-    assert(xr.forall(_._2 == 63L))
-    // z-ordered: no partition spans either full dimension, and the mean
-    // combined span is far below the x-sort baseline (a z-range of ~256
-    // codes covers one or two 16x16 quadrants)
-    assert(zr.forall { case (rx, ry) => rx < 56 && ry < 56 })
-    val meanSpan = zr.map { case (rx, ry) => rx + ry }.sum.toDouble / zr.size
-    val xSortSpan = xr.map { case (rx, ry) => rx + ry }.sum.toDouble / xr.size
-    assert(meanSpan < xSortSpan * 0.75,
-      s"z-order mean span $meanSpan not better than x-sort $xSortSpan")
   }
 
   test("trailingRangeSum equals the naive per-row RANGE window") {
@@ -528,20 +450,6 @@ class ScaleSpec extends AnyFunSuite {
     }
   }
 
-  test("partitioned layout prunes partitions in the scan") {
-    val ev = engine.Tables.events(spark, SparkTestSession.sfDir)
-      .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-    val path = "/tmp/graft-test-partitioned"
-    Scale.writePartitioned(ev, path, "day")
-    val days = ev.select("day").distinct().as[String].collect().sorted
-    assume(days.length > 1)
-    val pruned = spark.read.parquet(path).filter(col("day") === days.head)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains(days.head))
-    assert(pruned.count() ==
-      ev.filter(col("day") === days.head).count())
-  }
-
   test("parquet schema evolution: mergeSchema unions old and new file schemas") {
     import spark.implicits._
     // a long-lived corpus accumulates files written under evolving
@@ -569,7 +477,7 @@ class ScaleSpec extends AnyFunSuite {
     val ev = engine.Tables.events(spark, SparkTestSession.sfDir)
       .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
     val path = "/tmp/graft-test-partitioned-dpp"
-    Scale.writePartitioned(ev, path, "day")
+    ev.write.mode("overwrite").partitionBy("day").parquet(path)
     val days = ev.select("day").distinct().as[String].collect().sorted
     assume(days.length > 1)
     val fact = spark.read.parquet(path)
@@ -630,7 +538,6 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("round-9 plan shapes: HRW map-only, skyline join-free, SCD2 one exchange") {
-    import graft.engine.Scale
     val dir = SparkTestSession.sfDir
     // q156: the double HRW assignment is map-only — the only shuffles
     // are the 16-key count agg and the 16-ROW final sort; the scan
@@ -652,7 +559,7 @@ class ScaleSpec extends AnyFunSuite {
     val scd = graft.operators.Relational.scd2History(
       graft.engine.Tables.events(spark, dir), "user_id", "ts", "event_type",
       "event_id")
-    assert(Scale.exchangeCount(scd) == 1,
+    assert(Shape.exchangeCount(scd) == 1,
       s"SCD2 should reuse one exchange:\n${scd.queryExecution.executedPlan}")
     // q164: mode is two hash aggregations, never a rank window over rows
     val mode = SparkEntry.queries("q164_group_mode")(spark, dir)
@@ -700,7 +607,7 @@ class ScaleSpec extends AnyFunSuite {
       tokenHash64(concat(lit("b_"), col("l_orderkey").cast("string"))),
       tokenHash64(col("l_returnflag")), nBuckets = 16)
     val fpPlan = fp.queryExecution.executedPlan.toString
-    assert(graft.engine.Scale.exchangeCount(fp) == 1, fpPlan.take(600))
+    assert(Shape.exchangeCount(fp) == 1, fpPlan.take(600))
     assert(!fpPlan.contains("Join"), fpPlan.take(600))
     // q241: the funnel is min-aggs + equi-joins — NO Window operator
     // (the collect_list/rank funnel would be the classic skew bug) and

@@ -59,7 +59,7 @@ WAIVERS = {
         "task, <=1.3x). Measured 12.3x/decade = linear 10x + single-"
         "box IO variance; DuckDB executing the SAME semantics at sf10 "
         "takes 172.8 s vs the engine's 78.8 s (2.2x ahead). "
-        "Attribution A/B in tools/ProfileQ282.",
+        "Attribution A/B in SCALING_sweep_r12b.log.",
     "q126_substring_removal":
         "THIRD-decade (sf10->sf100) disk-I/O floor, scoped to the r13 "
         "documents-only sf100 probe: the gram exchange is linear "
