@@ -270,8 +270,9 @@ private[graft] object QueriesAnnVec {
       // are assigned here; corpus lists come from the persisted
       // cid-partitioned fixture.
       val e = embeddings(s, d)
-      val (cents, lists) = ivfCorpusIndexFixture(s, d, e)
-      val batch = e.filter(pmod(col("vec_id"), lit(10L)) === 0L)
+      val (cents, lists) =
+        ivfIndexFixture(s, d, e.filter(isCorpus("vec_id")), "ivfc")
+      val batch = e.filter(isBatch("vec_id"))
       val bAssign = Ann.ivfListAssignments(batch, "vec_id", "embedding", cents)
         .select(col("cid").cast("long").as("cid"),
           col("neighbor_id").cast("long").as("vec_id"))

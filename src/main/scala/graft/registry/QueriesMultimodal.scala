@@ -216,7 +216,7 @@ private[graft] object QueriesMultimodal {
         Multimodal.mediaWithDupImages(s, documents(s, d)))
       val postings = imageFpPostingsFixture(s, d, media)
       val batch = Multimodal.imageAHash(
-        media.filter(pmod(col("media_id"), lit(10L)) === 0L)).toDF()
+        media.filter(isBatch("media_id"))).toDF()
       Dedup.hammingJoinPostings(batch, postings, "media_id", "ahash",
           nBits = 64, maxHamming = 2)
         .select(col("id_a").as("new_id"), col("id_b").as("corpus_id"),

@@ -338,7 +338,7 @@ private[graft] object QueriesTextAnalysis {
       // proves the frames bit-exact.
       val (postings, doclen, stats) = bm25IndexFixture(s, d)
       val batch = documents(s, d)
-        .filter(pmod(col("doc_id"), lit(10L)) === 0L)
+        .filter(isBatch("doc_id"))
         .withColumn("text", concat(col("text"), lit(Bm25UpsertSuffix)))
       val (p2, d2, s2) = Indexing.bm25IndexUpsert(postings, doclen, stats,
         batch, "doc_id", "text", buckets = Bm25IndexBuckets)
