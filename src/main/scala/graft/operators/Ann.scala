@@ -158,11 +158,11 @@ object Ann {
     */
   def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                       nLists: Int, iters: Int = 2,
-                      sampleOneIn: Int = 1, reliable: Boolean = false): DataFrame = {
+                      sampleOneIn: Int = 1): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    kmeansCentroidsLocal(corpus, idCol, vecCol, nLists, iters, sampleOneIn,
-      reliable).toSeq.toDF("cid", "cv")
+    kmeansCentroidsLocal(corpus, idCol, vecCol, nLists, iters, sampleOneIn)
+      .toSeq.toDF("cid", "cv")
   }
 
   /** [[kmeansCentroids]] returning the centroid table as driver data —
@@ -173,7 +173,7 @@ object Ann {
   private[graft] def kmeansCentroidsLocal(
       corpus: DataFrame, idCol: String, vecCol: String,
       nLists: Int, iters: Int = 2,
-      sampleOneIn: Int = 1, reliable: Boolean = false): Array[(Long, Array[Double])] = {
+      sampleOneIn: Int = 1): Array[(Long, Array[Double])] = {
     require(nLists >= 1 && iters >= 0 && sampleOneIn >= 1,
       s"need nLists >= 1, iters >= 0, sampleOneIn >= 1; got $nLists/$iters/$sampleOneIn")
     import graft.functions.TextFunctions.tokenHash64
@@ -182,16 +182,11 @@ object Ann {
     // materialized once (checkpoint truncates lineage): the seed scan
     // plus every Lloyd iteration references this frame — without
     // truncation each reference re-plans the corpus scan + hash
-    // projection. reliable=false → localCheckpoint (executor-local
-    // blocks, fast single-node path); reliable=true → sparkContext
-    // checkpoint dir, survives executor loss mid-build on a real
-    // cluster (caller must setCheckpointDir) — same switch as
-    // Dedup.dupClusters.
-    val build = {
-      val b = if (sampleOneIn <= 1) keyed
-        else keyed.filter(pmod(col("h"), lit(sampleOneIn.toLong)) === 0)
-      if (reliable) b.checkpoint(true) else b.materialized
-    }
+    // projection ([[Shape.materialize]]: reliable when
+    // `spark.graft.checkpointDir` is set).
+    val build = (if (sampleOneIn <= 1) keyed
+      else keyed.filter(pmod(col("h"), lit(sampleOneIn.toLong)) === 0))
+      .materialized
     val spark = corpus.sparkSession
     import spark.implicits._
     // seed: the nLists smallest (h, sid) rows, cid = 1..nLists in that

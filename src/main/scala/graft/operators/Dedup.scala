@@ -866,20 +866,15 @@ object Dedup {
     * converged (asserted against a driver-side union-find in tests).
     */
   def dupClusters(pairs: DataFrame, aCol: String, bCol: String,
-                  iterations: Int, reliable: Boolean = false): DataFrame = {
+                  iterations: Int): DataFrame = {
     // Materialize the edge list once (checkpoint truncates the lineage):
     // every iteration references edges, and without this the final plan
     // re-runs the whole upstream pair generation per iteration (measured
-    // 4× the pair-gen cost at iterations=4). reliable=false uses
-    // localCheckpoint (executor-local blocks — fine single-node / fast
-    // path); reliable=true writes to the sparkContext checkpoint dir and
-    // survives executor loss — the cluster setting for long iterative
-    // jobs (caller must setCheckpointDir).
-    def checkpointed(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.materialized
-    val edges = checkpointed(
-      pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-        .unionAll(pairs.select(col(bCol).as("u"), col(aCol).as("v"))))
+    // 4× the pair-gen cost at iterations=4). [[Shape.materialize]] makes
+    // it a reliable checkpoint when `spark.graft.checkpointDir` is set.
+    val edges = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
+      .unionAll(pairs.select(col(bCol).as("u"), col(aCol).as("v")))
+      .materialized
     var labels = edges.select(col("u").as("node")).distinct()
       .withColumn("label", col("node"))
     for (_ <- 1 to iterations) {
@@ -888,9 +883,9 @@ object Dedup {
       // checkpoint per iteration: labels is referenced twice (union +
       // join), so an unbroken lineage DOUBLES per iteration — 2^k
       // subplan copies by iteration k (measured 47 exchanges at k=4)
-      labels = checkpointed(
-        labels.unionAll(viaNeighbor)
-          .groupBy("node").agg(min("label").as("label")))
+      labels = labels.unionAll(viaNeighbor)
+        .groupBy("node").agg(min("label").as("label"))
+        .materialized
     }
     labels
   }

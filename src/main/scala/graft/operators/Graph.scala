@@ -15,157 +15,121 @@ import graft.engine.Shape.MaterializeOps
   */
 object GraphOps {
 
+  /** Column `i` of a collected row as a long (ids may be any integral type). */
+  private def longAt(r: org.apache.spark.sql.Row, i: Int): Long =
+    r.get(i).asInstanceOf[Number].longValue
+
   /** Expanded (u, v[, w]) edge rows to long tuples. */
   private def rowsToEdges(rows: Array[org.apache.spark.sql.Row]): Array[(Long, Long)] =
-    rows.map(r => (r.get(0).asInstanceOf[Number].longValue,
-      r.get(1).asInstanceOf[Number].longValue))
+    rows.map(r => (longAt(r, 0), longAt(r, 1)))
 
-  /** Driver-computed (id, d, r) rank rows matching [[pageRankInt]]'s
-    * distributed output schema (id cast to `like`'s id type).
+  /** Driver-computed per-node long columns as a DataFrame matching the
+    * distributed twin's schema: (id, name1, name2, ...) with the ids of
+    * the first map, id cast back to `like`'s id column type, one
+    * partition (the [[Shape.LocalRowLimit]] results are bounded by
+    * construction).
     */
-  private def localRankResult(like: DataFrame,
-                              deg: scala.collection.mutable.LongMap[Long],
-                              r: scala.collection.mutable.LongMap[Long]): DataFrame = {
+  private def localResult(like: DataFrame,
+                          cols: (String, scala.collection.mutable.LongMap[Long])*): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val spark = like.sparkSession
-    val rows = deg.keys.toSeq.sorted.map(id =>
-      org.apache.spark.sql.Row(id, deg(id), r(id)))
+    val rows = cols.head._2.keys.toSeq.sorted.map(id =>
+      org.apache.spark.sql.Row.fromSeq(id +: cols.map(_._2(id))))
     spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1),
-        StructType(Seq(StructField("id", LongType, nullable = false),
-          StructField("d", LongType, nullable = false),
-          StructField("r", LongType, nullable = false))))
-      .select(col("id").cast(like.schema.head.dataType).as("id"),
-        col("d"), col("r"))
+        StructType(("id" +: cols.map(_._1)).map(StructField(_, LongType, nullable = false))))
+      .select(col("id").cast(like.schema.head.dataType).as("id") +:
+        cols.map(c => col(c._1)): _*)
   }
 
-  /** PageRank with INTEGER arithmetic (ranks are longs scaled by
-    * `scale`; every division is integral `div`), fixed iteration count,
-    * over the undirected graph of `pairs`. Float PageRank is not
-    * cross-engine comparable — double sums are addition-order-dependent
-    * — but scaled-long ranks with integral division are bit-identical
-    * on any engine and any partitioning, which makes a distributed run
+  /** The scaled-long rank mass [[pageRankInt]] spreads over its seeds. */
+  private val RankScale = 1000000000L
+
+  /** PageRank with INTEGER arithmetic (ranks are longs scaled by 10⁹;
+    * every division is integral `div`), fixed iteration count, over the
+    * undirected graph of `edges`. Float PageRank is not cross-engine
+    * comparable — double sums are addition-order-dependent — but
+    * scaled-long ranks with integral division are bit-identical on any
+    * engine and any partitioning, which makes a distributed run
     * oracle-checkable against unrolled SQL (q105). Damping is the
     * classic 0.85, applied as `(85 * x) div 100`.
     *
-    * Scale shape: edges and degrees materialize once (checkpointed —
-    * they are reused every iteration; an unbroken lineage would recompute
-    * the signature pipeline per iteration). Each iteration is one
-    * equi-join keyed on the edge source + one groupBy on the destination
-    * — both map-side-combinable shuffles proportional to |E|. The node
-    * count is the one driver-side scalar (same justification as the
-    * k-means centroid collect: O(1), never the data). Isolated docs
-    * (no duplicate edges) are out of scope: rank is only defined over
-    * the pair graph's nodes.
+    * Each round: every node u sends (r·w) div d(u) along each incident
+    * edge, d(u) = its incident weight sum; a node's new rank is its
+    * teleport share + (85·Σ) div 100. Two optional forms share the loop:
+    *  - `weightCol`: rank flows to neighbors proportionally to edge
+    *    weight — the TextRank formulation (Mihalcea & Tarau 2004). On a
+    *    near-complete graph (small shared vocabulary) unweighted ranks
+    *    collapse to uniform; the weights are what differentiate nodes.
+    *    Without it every weight is 1, d is the degree and the
+    *    contribution is the classic r div d. Overflow: r·w ≤ 10⁹ · max
+    *    weight — fine while weights stay below ~9·10⁹ (rescale first
+    *    otherwise).
+    *  - `seeds`: personalized PageRank — the teleport mass starts at and
+    *    returns ONLY to the seed nodes, so rank measures proximity to
+    *    the seed set rather than global centrality (TrustRank, Gyöngyi
+    *    et al. 2004; the smooth counterpart of [[ssspHops]]' hard
+    *    radius). Seeds outside the graph carry no edges and are out of
+    *    scope; no seed inside it is an error. Without seeds every node
+    *    is a seed, which is the uniform teleport.
+    * The start rank is r0 = 10⁹ div (seed count) on each seed and 0
+    * elsewhere, the per-round teleport 15·r0 div 100 on each seed.
+    * Returns (id, d, r) over the graph's nodes; isolated docs (no
+    * edges) are out of scope, and an empty edge list gives no rows.
+    *
+    * Scale shape: edges and the node table materialize once (they are
+    * reused every iteration; an unbroken lineage would recompute the
+    * signature pipeline per iteration). Each iteration is one equi-join
+    * keyed on the edge source + one groupBy on the destination — both
+    * map-side-combinable shuffles proportional to |E| — and a
+    * per-round checkpoint. The seed count is the one driver-side scalar
+    * (same justification as the k-means centroid collect: O(1), never
+    * the data).
     */
-  def pageRankInt(pairs: DataFrame, aCol: String, bCol: String,
-                  iters: Int, scale: Long = 1000000000L,
+  def pageRankInt(edges: DataFrame, aCol: String, bCol: String, iters: Int,
+                  weightCol: Option[String] = None,
+                  seeds: Option[(DataFrame, String)] = None,
                   localLimit: Long = Shape.LocalRowLimit): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e0 = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-      .unionByName(pairs.select(col(bCol).as("u"), col(aCol).as("v")))
+    val w = weightCol.fold(lit(1L))(c => col(c).cast("long"))
+    val e0 = edges.select(col(aCol).as("u"), col(bCol).as("v"), w.as("w"))
+      .unionByName(edges.select(col(bCol).as("u"), col(aCol).as("v"), w.as("w")))
+    val sd = seeds.map { case (s, c) => s.select(col(c).as("sid")).distinct() }
+    def checkSeeds(nSeeds: Long): Unit =
+      require(sd.isEmpty || nSeeds > 0, "no seed node appears in the pair graph")
+    // (r0, teleport base); no seeds at all only on an empty graph
+    def start(nSeeds: Long): (Long, Long) = {
+      val r0 = if (nSeeds == 0L) 0L else RankScale / nSeeds
+      (r0, (15L * r0) / 100L)
+    }
     // bounded local twin ([[Shape.localRows]], r16): the fixed
     // iteration count and integral scaled-long arithmetic replay
-    // exactly on the driver — every op below (div-by-degree, 85/100
-    // damping, left-join coalesce to 0) is the same Long op the
-    // distributed round computes, so ranks are bit-identical (spec'd
-    // with localLimit = 0 forcing the distributed loop). Replaces
-    // iters × (join + agg + checkpoint) actions with one bounded fetch.
+    // exactly on the driver — every op below ((r·w) div d per edge,
+    // 85/100 damping, seed-only teleport, missing sums as 0) is the
+    // same Long op the distributed round computes, so ranks are
+    // bit-identical (spec'd with localLimit = 0 forcing the distributed
+    // loop). The distinct-seed collect is the only other driver step.
+    // Replaces iters × (join + agg + checkpoint) actions with one
+    // bounded fetch.
     val localRows =
-      if (Shape.integralIds(e0)) Shape.localRows(e0, localLimit) else None
+      if (Shape.integralIds(e0 +: sd.toSeq: _*)) Shape.localRows(e0, localLimit) else None
     localRows match {
       case Some(rows) =>
-        val edges = rowsToEdges(rows)
+        val es = rows.map(r => (longAt(r, 0), longAt(r, 1), r.getLong(2)))
         val deg = scala.collection.mutable.LongMap.empty[Long]
-        edges.foreach { case (u, _) => deg(u) = deg.getOrElse(u, 0L) + 1L }
-        val n = deg.size.toLong
-        val r0 = scale / n
-        val base = (15L * r0) / 100L
-        var r = scala.collection.mutable.LongMap.empty[Long]
-        deg.keysIterator.foreach(id => r(id) = r0)
-        for (_ <- 1 to iters) {
-          val sums = scala.collection.mutable.LongMap.empty[Long]
-          edges.foreach { case (u, v) =>
-            sums(v) = sums.getOrElse(v, 0L) + r(u) / deg(u)
-          }
-          val next = scala.collection.mutable.LongMap.empty[Long]
-          deg.keysIterator.foreach { id =>
-            next(id) = base + (85L * sums.getOrElse(id, 0L)) / 100L
-          }
-          r = next
+        es.foreach { case (u, _, w) => deg(u) = deg.getOrElse(u, 0L) + w }
+        val isSeed: Long => Boolean = sd.fold((_: Long) => true) { s =>
+          s.collect().map(longAt(_, 0)).toSet.contains
         }
-        localRankResult(e0, deg, r)
-      case None =>
-        val e = e0.materialized
-        val deg = e.groupBy("u").agg(count(lit(1)).as("d"))
-          .select(col("u").as("id"), col("d"))
-          .materialized
-        val n = deg.count()
-        val r0 = scale / n
-        val base = (15L * r0) / 100L
-        var r = deg.select(col("id"), col("d"), lit(r0).as("r"))
-        for (_ <- 1 to iters) {
-          val contrib = r.select(col("id").as("cid"), expr("r div d").as("c"))
-          val sums = e.join(contrib, col("u") === col("cid"))
-            .groupBy("v").agg(sum("c").as("s"))
-          r = deg.join(sums, deg("id") === sums("v"), "left")
-            .select(deg("id"), deg("d"),
-              (lit(base) + expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("r"))
-            .materialized
-        }
-        r
-    }
-  }
-
-  /** Personalized PageRank ([[pageRankInt]] with the teleport
-    * restricted to a seed set): every iteration returns the 15%
-    * teleport mass ONLY to seeds, so rank measures proximity to the
-    * seed set rather than global centrality — the "trust/spam
-    * propagation from a labeled set" query (TrustRank, Gyöngyi et al.
-    * 2004), and the smooth counterpart of [[bfsHops]]' hard radius.
-    * Same scaled-long integer arithmetic, so ranks are bit-identical
-    * across engines and partitionings. Seeds outside the pair graph
-    * carry no edges and are out of scope (rank is defined over graph
-    * nodes); the seed count within the graph is the one driver-side
-    * scalar.
-    *
-    * Scale shape: identical to [[pageRankInt]] — one |E|-keyed join +
-    * one destination agg per iteration, nodes/edges checkpointed once.
-    */
-  def personalizedPageRankInt(pairs: DataFrame, aCol: String, bCol: String,
-                              seeds: DataFrame, seedCol: String, iters: Int,
-                              scale: Long = 1000000000L,
-                              localLimit: Long = Shape.LocalRowLimit): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e0 = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-      .unionByName(pairs.select(col(bCol).as("u"), col(aCol).as("v")))
-    val sd = seeds.select(col(seedCol).as("sid")).distinct()
-    // bounded local twin (the [[pageRankInt]] shape with the teleport
-    // restricted to seeds): the distinct-seed collect is the same
-    // driver-side step the distributed twin's bfsHops sibling already
-    // takes; everything else is the identical Long arithmetic. The
-    // r>0 contributor filter is replayed verbatim so div-truncation
-    // timing matches round for round.
-    val localRows =
-      if (Shape.integralIds(e0, sd)) Shape.localRows(e0, localLimit) else None
-    localRows match {
-      case Some(rows) =>
-        val edges = rowsToEdges(rows)
-        val deg = scala.collection.mutable.LongMap.empty[Long]
-        edges.foreach { case (u, _) => deg(u) = deg.getOrElse(u, 0L) + 1L }
-        val seedIds = sd.collect()
-          .map(_.get(0).asInstanceOf[Number].longValue).toSet
-        val isSeed = (id: Long) => seedIds.contains(id)
         val nSeeds = deg.keysIterator.count(isSeed).toLong
-        require(nSeeds > 0, "no seed node appears in the pair graph")
-        val r0 = scale / nSeeds
-        val base = (15L * r0) / 100L
+        checkSeeds(nSeeds)
+        val (r0, base) = start(nSeeds)
         var r = scala.collection.mutable.LongMap.empty[Long]
         deg.keysIterator.foreach(id => r(id) = if (isSeed(id)) r0 else 0L)
         for (_ <- 1 to iters) {
           val sums = scala.collection.mutable.LongMap.empty[Long]
-          edges.foreach { case (u, v) =>
-            if (r(u) > 0L) sums(v) = sums.getOrElse(v, 0L) + r(u) / deg(u)
+          es.foreach { case (u, v, w) =>
+            sums(v) = sums.getOrElse(v, 0L) + (r(u) * w) / deg(u)
           }
           val next = scala.collection.mutable.LongMap.empty[Long]
           deg.keysIterator.foreach { id =>
@@ -174,32 +138,33 @@ object GraphOps {
           }
           r = next
         }
-        localRankResult(e0, deg, r)
+        localResult(e0, "d" -> deg, "r" -> r)
       case None =>
         val e = e0.materialized
-        val deg = e.groupBy("u").agg(count(lit(1)).as("d"))
+        val deg = e.groupBy("u").agg(sum("w").as("d"))
           .select(col("u").as("id"), col("d"))
-        val nodes = deg.join(sd, deg("id") === sd("sid"), "left")
-          .select(col("id"), col("d"), col("sid").isNotNull.as("is_seed"))
+        val nodes = sd.fold(deg.withColumn("seed", lit(true))) { s =>
+            deg.join(s, deg("id") === s("sid"), "left")
+              .select(col("id"), col("d"), col("sid").isNotNull.as("seed"))
+          }
           .materialized
-        val nSeeds = nodes.filter(col("is_seed")).count()
-        require(nSeeds > 0, "no seed node appears in the pair graph")
-        val r0 = scale / nSeeds
-        val base = (15L * r0) / 100L
-        var r = nodes.select(col("id"), col("d"), col("is_seed"),
-          when(col("is_seed"), lit(r0)).otherwise(lit(0L)).as("r"))
+        val nSeeds = nodes.filter(col("seed")).count()
+        checkSeeds(nSeeds)
+        val (r0, base) = start(nSeeds)
+        var r = nodes.select(col("id"), col("d"),
+          when(col("seed"), lit(r0)).otherwise(lit(0L)).as("r"))
         for (_ <- 1 to iters) {
-          val contrib = r.filter(col("r") > 0)
-            .select(col("id").as("cid"), expr("r div d").as("c"))
+          val contrib = r.select(col("id").as("cid"), col("d").as("cd"),
+            col("r").as("cr"))
           val sums = e.join(contrib, col("u") === col("cid"))
-            .groupBy("v").agg(sum("c").as("s"))
+            .groupBy("v").agg(sum(expr("(cr * w) div cd")).as("s"))
           r = nodes.join(sums, nodes("id") === sums("v"), "left")
-            .select(nodes("id"), nodes("d"), nodes("is_seed"),
-              (when(nodes("is_seed"), lit(base)).otherwise(lit(0L)) +
+            .select(nodes("id"), nodes("d"),
+              (when(nodes("seed"), lit(base)).otherwise(lit(0L)) +
                 expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("r"))
             .materialized
         }
-        r.select("id", "d", "r")
+        r
     }
   }
 
@@ -254,97 +219,17 @@ object GraphOps {
           .otherwise(lit(0.0)).as("closure"))
   }
 
-  /** Multi-source BFS hop distance over an undirected pair list, capped
-    * at `maxHops`: returns (id, hops) for every node within `maxHops`
-    * of ANY seed — min over seeds, the "blast radius" query a dedup
-    * pipeline runs from a known-bad set (spam cluster, contaminated
-    * shard) to find everything transitively near it. Seeds not in the
-    * graph report hops 0 (distance to themselves).
-    *
-    * Scale shape: per hop, ONLY the newest frontier (nodes first
-    * reached the previous hop) joins the edge list — re-expanding
-    * settled nodes would redo every earlier hop's work — then one
-    * min-agg merges discoveries into the settled set. Both are |E|- or
-    * |frontier|-bounded equi-key shuffles; per-iteration
-    * localCheckpoint stops lineage growth (reliable checkpoint on a
-    * cluster), the same doctrine as [[pageRankInt]]. The cap bounds
-    * the round count — BFS depth, unlike the q84 star rounds, is NOT
-    * log-compressed, so an uncapped high-diameter chain would mean
-    * diameter rounds.
-    */
-  def bfsHops(pairs: DataFrame, aCol: String, bCol: String,
-              seeds: DataFrame, seedCol: String, maxHops: Int,
-              localLimit: Long = Shape.LocalRowLimit): DataFrame = {
-    require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val e = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-      .unionByName(pairs.select(col(bCol).as("u"), col(aCol).as("v")))
-      .materialized
-    var dist = seeds.select(col(seedCol).as("id")).distinct()
-      .withColumn("hops", lit(0L)).materialized
-    // bounded local twin ([[Shape.localRows]]): BFS layers ARE
-    // the min-hop distances, so a driver BFS over the collected edges
-    // equals the per-hop join+min-agg loop exactly (same cap, seeds
-    // not in the graph still report 0). One bounded fetch of the
-    // checkpointed edges replaces maxHops × (join + agg + checkpoint)
-    // actions.
-    val localRows =
-      if (Shape.integralIds(e, dist)) Shape.localRows(e, localLimit) else None
-    localRows match {
-      case Some(rows) =>
-        val adj = scala.collection.mutable.LongMap.empty[List[Long]]
-        rowsToEdges(rows).foreach { case (u, v) =>
-          adj(u) = v :: adj.getOrElse(u, Nil)
-        }
-        val hops = scala.collection.mutable.LongMap.empty[Long]
-        var frontier = dist.collect()
-          .map(_.get(0).asInstanceOf[Number].longValue).toSeq.distinct
-        frontier.foreach(s => hops(s) = 0L)
-        for (h <- 1 to maxHops) {
-          frontier = frontier.flatMap(f => adj.getOrElse(f, Nil))
-            .distinct.filterNot(hops.contains)
-          frontier.foreach(n => hops(n) = h.toLong)
-        }
-        localResult(dist, hops, "id", "hops")
-      case None =>
-        for (h <- 1 to maxHops) {
-          val frontier = dist.filter(col("hops") === (h - 1).toLong)
-            .select(col("id").as("fid"))
-          val next = e.join(frontier, col("u") === col("fid"))
-            .select(col("v").as("id"), lit(h.toLong).as("hops"))
-          dist = dist.unionByName(next)
-            .groupBy("id").agg(min("hops").as("hops"))
-            .materialized
-        }
-        dist
-    }
-  }
-
-  /** A driver-computed (id → value) map as a DataFrame matching the
-    * distributed twin's schema: id cast back to `like`'s id column
-    * type, value as long, one partition (the [[Shape.LocalRowLimit]]
-    * results are bounded by construction).
-    */
-  private def localResult(like: DataFrame,
-                          m: scala.collection.mutable.LongMap[Long],
-                          idName: String, valName: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val spark = like.sparkSession
-    val rows = m.toSeq.sortBy(_._1).map { case (n, v) =>
-      org.apache.spark.sql.Row(n, v) }
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        StructType(Seq(StructField(idName, LongType, nullable = false),
-          StructField(valName, LongType, nullable = false))))
-      .select(col(idName).cast(like.schema.head.dataType).as(idName),
-        col(valName))
-  }
-
   /** Weighted multi-source shortest paths (Bellman-Ford, `maxHops`
     * relaxation rounds) over an undirected weighted pair list: returns
     * (id, dist) = the minimum total edge weight from ANY seed over
-    * paths of at most `maxHops` edges — [[bfsHops]] with a cost model,
-    * the "cheapest contamination route" form of the blast-radius query.
-    * Integer weights, so min-of-sums is engine-exact.
+    * paths of at most `maxHops` edges — the "blast radius" query a
+    * dedup pipeline runs from a known-bad set (spam cluster,
+    * contaminated shard) to find everything transitively near it, with
+    * a cost model ("cheapest contamination route"). Seeds not in the
+    * graph report dist 0 (distance to themselves). Integer weights, so
+    * min-of-sums is engine-exact. At unit weight it is multi-source
+    * BFS: a node is first reached in the round equal to its hop
+    * distance, and no later round can lower it, so dist = hops (q161).
     *
     * Scale shape: the sparse Bellman-Ford — per round only nodes whose
     * distance IMPROVED last round (the frontier) join the edge list,
@@ -355,7 +240,9 @@ object GraphOps {
     * [[pageRankInt]]. `maxHops` bounds rounds — with negative-free
     * integer weights each round only lowers distances, so the result
     * after k rounds is exactly min-cost over ≤k-edge paths (what the
-    * oracle's bounded recursive CTE enumerates).
+    * oracle's bounded recursive CTE enumerates). Depth, unlike the q84
+    * star rounds, is NOT log-compressed, so an uncapped high-diameter
+    * chain would mean diameter rounds.
     */
   def ssspHops(edges: DataFrame, aCol: String, bCol: String, wCol: String,
                seeds: DataFrame, seedCol: String, maxHops: Int,
@@ -381,13 +268,11 @@ object GraphOps {
       case Some(rows) =>
         val adj = scala.collection.mutable.LongMap.empty[List[(Long, Long)]]
         rows.foreach { r =>
-          val u = r.get(0).asInstanceOf[Number].longValue
-          adj(u) = (r.get(1).asInstanceOf[Number].longValue,
-            r.getLong(2)) :: adj.getOrElse(u, Nil)
+          val u = longAt(r, 0)
+          adj(u) = (longAt(r, 1), r.getLong(2)) :: adj.getOrElse(u, Nil)
         }
         val d = scala.collection.mutable.LongMap.empty[Long]
-        var improved = dist.collect()
-          .map(_.get(0).asInstanceOf[Number].longValue).toSeq.distinct
+        var improved = dist.collect().map(longAt(_, 0)).toSeq.distinct
         improved.foreach(s => d(s) = 0L)
         for (_ <- 1 to maxHops) {
           val relaxed = scala.collection.mutable.LongMap.empty[Long]
@@ -403,7 +288,7 @@ object GraphOps {
           improved.foreach(v => d(v) = math.min(relaxed(v),
             d.getOrElse(v, Long.MaxValue)))
         }
-        localResult(dist, d, "id", "dist")
+        localResult(dist, "dist" -> d)
       case None =>
         for (_ <- 1 to maxHops) {
           val frontier = dist.filter(col("improved"))
@@ -419,91 +304,6 @@ object GraphOps {
             .materialized
         }
         dist.select("id", "dist")
-    }
-  }
-
-  /** WEIGHTED PageRank ([[pageRankInt]] with per-edge weights — the
-    * TextRank formulation, Mihalcea & Tarau 2004): each node's rank
-    * flows to neighbors proportionally to edge weight, contribution =
-    * (r·w) div sw in exact scaled-long arithmetic (sw = the node's
-    * total incident weight), damping (85·Σ) div 100 + the uniform 15%
-    * base. On a near-complete graph (small shared vocabulary) the
-    * UNWEIGHTED ranks collapse to uniform — the weights are what
-    * differentiate nodes, which is why TextRank prescribes them.
-    *
-    * Scale shape identical to [[pageRankInt]]: edges and weight sums
-    * materialize once, each iteration is one |E| equi-join + one
-    * map-side-combinable sum, per-round localCheckpoint. Overflow:
-    * r·w ≤ scale · max weight — fine while co-occurrence counts stay
-    * below ~9·10⁹/scale (rescale first otherwise).
-    */
-  def weightedPageRankInt(edges: DataFrame, aCol: String, bCol: String,
-                          wCol: String, iters: Int,
-                          scale: Long = 1000000000L,
-                          localLimit: Long = Shape.LocalRowLimit): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e0 = edges.select(col(aCol).as("u"), col(bCol).as("v"),
-        col(wCol).cast("long").as("w"))
-      .unionByName(edges.select(col(bCol).as("u"), col(aCol).as("v"),
-        col(wCol).cast("long").as("w")))
-    // bounded local twin ([[pageRankInt]] shape with per-edge weights):
-    // contribution (r·w) div sw replayed per EDGE exactly as the
-    // distributed round computes it — Long multiply, Long div — so
-    // ranks are bit-identical (spec'd with localLimit = 0).
-    val localRows =
-      if (Shape.integralIds(e0)) Shape.localRows(e0, localLimit) else None
-    localRows match {
-      case Some(rows) =>
-        val wedges = rows.map(r =>
-          (r.get(0).asInstanceOf[Number].longValue,
-            r.get(1).asInstanceOf[Number].longValue, r.getLong(2)))
-        val sw = scala.collection.mutable.LongMap.empty[Long]
-        wedges.foreach { case (u, _, w) => sw(u) = sw.getOrElse(u, 0L) + w }
-        val n = sw.size.toLong
-        val r0 = scale / n
-        val base = (15L * r0) / 100L
-        var r = scala.collection.mutable.LongMap.empty[Long]
-        sw.keysIterator.foreach(id => r(id) = r0)
-        for (_ <- 1 to iters) {
-          val sums = scala.collection.mutable.LongMap.empty[Long]
-          wedges.foreach { case (u, v, w) =>
-            sums(v) = sums.getOrElse(v, 0L) + (r(u) * w) / sw(u)
-          }
-          val next = scala.collection.mutable.LongMap.empty[Long]
-          sw.keysIterator.foreach { id =>
-            next(id) = base + (85L * sums.getOrElse(id, 0L)) / 100L
-          }
-          r = next
-        }
-        import org.apache.spark.sql.types.{LongType, StructField, StructType}
-        val spark = edges.sparkSession
-        val outRows = sw.keys.toSeq.sorted.map(id =>
-          org.apache.spark.sql.Row(id, r(id)))
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(outRows, 1),
-            StructType(Seq(StructField("id", LongType, nullable = false),
-              StructField("r", LongType, nullable = false))))
-          .select(col("id").cast(e0.schema.head.dataType).as("id"), col("r"))
-      case None =>
-        val e = e0.materialized
-        val sw = e.groupBy("u").agg(sum("w").as("swt"))
-          .select(col("u").as("id"), col("swt"))
-          .materialized
-        val n = sw.count()
-        val r0 = scale / n
-        val base = (15L * r0) / 100L
-        var r = sw.select(col("id"), col("swt"), lit(r0).as("r"))
-        for (_ <- 1 to iters) {
-          val contrib = r.select(col("id").as("cid"), col("r"), col("swt"))
-          val sums = e.join(contrib, col("u") === col("cid"))
-            .select(col("v"), expr("(r * w) div swt").as("c"))
-            .groupBy("v").agg(sum("c").as("s"))
-          r = sw.join(sums, sw("id") === sums("v"), "left")
-            .select(sw("id"), sw("swt"),
-              (lit(base) + expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")).as("r"))
-            .materialized
-        }
-        r.select(col("id"), col("r"))
     }
   }
 
@@ -564,7 +364,7 @@ object GraphOps {
         }
         val coreDeg = scala.collection.mutable.LongMap.empty[Long]
         edgesL.foreach { case (u, _) => coreDeg(u) = coreDeg.getOrElse(u, 0L) + 1L }
-        localResult(e, coreDeg, "id", "core_deg")
+        localResult(e, "core_deg" -> coreDeg)
       case None =>
         var rounds = 0
         var stable = false
@@ -652,7 +452,7 @@ object GraphOps {
           }
           lab = next
         }
-        localResult(e0, lab, "id", "lbl")
+        localResult(e0, "lbl" -> lab)
       case None =>
         val e = e0.materialized
         var lab = e.select(col("u").as("id")).distinct()

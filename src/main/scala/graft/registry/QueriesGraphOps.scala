@@ -44,15 +44,16 @@ private[graft] object QueriesGraphOps {
     "q161_bfs_hops" -> ((s, d) =>
       // Blast-radius query: multi-source BFS (4 hops) over the q105
       // simhash dup graph from the doc_id % 50 == 0 seed set — which
-      // docs are transitively near a flagged set (GraphOps.bfsHops
-      // scaladoc). The oracle is a DuckDB recursive CTE over the
-      // identical edge list.
-      GraphOps.bfsHops(
-          Dedup.simHashDup(documents(s, d), "doc_id", "text", nBits = 16),
-          "id_a", "id_b",
+      // docs are transitively near a flagged set. BFS is ssspHops at
+      // unit weight (GraphOps.ssspHops scaladoc). The oracle is a
+      // DuckDB recursive CTE over the identical edge list.
+      GraphOps.ssspHops(
+          Dedup.simHashDup(documents(s, d), "doc_id", "text", nBits = 16)
+            .withColumn("w", lit(1L)),
+          "id_a", "id_b", "w",
           documents(s, d).filter(pmod(col("doc_id"), lit(50L)) === 0),
           "doc_id", maxHops = BfsMaxHops)
-        .select(col("id").as("doc_id"), col("hops"))
+        .select(col("id").as("doc_id"), col("dist").as("hops"))
         .orderBy("doc_id")),
 
     "q174_sssp_cheapest" -> ((s, d) => {
@@ -78,12 +79,12 @@ private[graft] object QueriesGraphOps {
       // Personalized PageRank (3 iterations) over the dup graph,
       // teleporting only to the q161 seed set — TrustRank-style
       // proximity in the same scaled-long integer arithmetic as q105
-      // (GraphOps.personalizedPageRankInt scaladoc).
-      GraphOps.personalizedPageRankInt(
+      // (GraphOps.pageRankInt scaladoc, `seeds`).
+      GraphOps.pageRankInt(
           Dedup.simHashDup(documents(s, d), "doc_id", "text", nBits = 16),
-          "id_a", "id_b",
-          documents(s, d).filter(pmod(col("doc_id"), lit(50L)) === 0),
-          "doc_id", iters = 3)
+          "id_a", "id_b", iters = 3,
+          seeds = Some((documents(s, d)
+            .filter(pmod(col("doc_id"), lit(50L)) === 0), "doc_id")))
         .select(col("id").as("doc_id"), col("r").as("rank_scaled"),
           col("d").as("degree"))
         .orderBy("doc_id")),

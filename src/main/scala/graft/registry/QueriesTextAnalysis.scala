@@ -298,15 +298,15 @@ private[graft] object QueriesTextAnalysis {
       // exchange — no position self-join) weighted by corpus count,
       // WEIGHTED integer PageRank, top-20. Unweighted ranks collapse
       // to uniform on this near-complete vocabulary graph — the
-      // weights carry all the signal (GraphOps.weightedPageRankInt
-      // scaladoc).
+      // weights carry all the signal (GraphOps.pageRankInt scaladoc,
+      // `weightCol`).
       val edges = documents(s, d)
         .select(explode(cooccurPairsUdf(2)(tokens(col("text")))).as("pr"))
         .groupBy(col("pr._1").as("u"), col("pr._2").as("v"))
         .agg(count(lit(1)).as("w"))
         .filter(col("w") >= TextRankMinCount)
-      GraphOps.weightedPageRankInt(edges, "u", "v", "w",
-          iters = TextRankIters)
+      GraphOps.pageRankInt(edges, "u", "v", iters = TextRankIters,
+          weightCol = Some("w"))
         .orderBy(col("r").desc, col("id").asc)
         .limit(TextRankTopK)
         .select(col("id").as("word"), col("r").as("rank_i"))

@@ -45,11 +45,18 @@ class CheckpointEquivalenceSpec extends AnyFunSuite {
     assert(local(4L) == 1L && local(12L) == 10L && local(34L) == 30L)
   }
 
-  test("bfsHops identical via local and reliable paths") {
+  test("dupClusters labels identical via local and reliable paths") {
+    val docs = engine.Tables.documents(spark, SparkTestSession.sfDir)
+    def run() = labelsOf(Dedup.dupClusters(
+      Dedup.simHashDup(docs, "doc_id", "text", 16), "id_a", "id_b", 4))
+    assert(run() == withReliableDir(run()))
+  }
+
+  test("ssspHops at unit weight identical via local and reliable paths") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (9L, 1L))
-      .toDF("a", "b")
+      .toDF("a", "b").withColumn("w", org.apache.spark.sql.functions.lit(1L))
     val seeds = Seq(1L).toDF("s")
-    def run() = GraphOps.bfsHops(edges, "a", "b", seeds, "s", maxHops = 4)
+    def run() = GraphOps.ssspHops(edges, "a", "b", "w", seeds, "s", maxHops = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = run()
     val reliable = withReliableDir(run())

@@ -760,31 +760,6 @@ class DedupAnnSpec extends AnyFunSuite {
     }
   }
 
-  test("reliable-checkpoint cluster collapse equals the localCheckpoint path") {
-    val dir = "/tmp/graft-test-reliable-ckpt"
-    spark.sparkContext.setCheckpointDir(dir)
-    val docs = engine.Tables.documents(spark, SparkTestSession.sfDir)
-    def run(reliable: Boolean) = Dedup.dupClusters(
-        Dedup.simHashDup(docs, "doc_id", "text", 16), "id_a", "id_b", 4,
-        reliable = reliable)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(run(reliable = true) == run(reliable = false))
-  }
-
-  test("reliable-checkpoint kmeansCentroids equals the localCheckpoint path") {
-    // the reliable=true branch (sparkContext checkpoint dir, survives
-    // executor loss on a real cluster) must be value-identical to the
-    // fast executor-local default — added round 5, untested until now
-    spark.sparkContext.setCheckpointDir("/tmp/graft-test-reliable-ckpt")
-    val e = engine.Tables.embeddings(spark, SparkTestSession.sfDir)
-    def run(reliable: Boolean) =
-      Ann.kmeansCentroids(e, "vec_id", "embedding", 8, iters = 2,
-          reliable = reliable)
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-        .sortBy(_._1).toSeq
-    assert(run(reliable = true) == run(reliable = false))
-  }
-
   test("IVF ANN: probing all lists recovers brute-force exactly; fewer lists approximates") {
     val e = engine.Tables.embeddings(spark, SparkTestSession.sfDir)
     val q = e.filter(col("vec_id") < 3)
@@ -1105,25 +1080,26 @@ class DedupAnnSpec extends AnyFunSuite {
     got.foreach { case (id, r) => assert(rank(id) == r, s"node $id") }
   }
 
-  test("bfsHops: hand graph — min over seeds, hop cap, isolated seed") {
+  test("ssspHops at unit weight: hand graph — min over seeds, hop cap, isolated seed") {
     import spark.implicits._
     // chain 1-2-3-4-5-6, branch 3-30; seeds {1, 30}; node 99 isolated
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (3L, 30L))
       .toDF("id_a", "id_b")
     val seeds = Seq(1L, 30L, 99L).toDF("doc_id")
-    val got = GraphOps.bfsHops(pairs, "id_a", "id_b", seeds, "doc_id", maxHops = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def hops(p: org.apache.spark.sql.DataFrame, s: org.apache.spark.sql.DataFrame,
+             k: Int) =
+      GraphOps.ssspHops(p.withColumn("w", lit(1L)), "id_a", "id_b", "w",
+          s, "doc_id", maxHops = k)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = hops(pairs, seeds, 3)
     // node 4: via 3 (min(seed1: 1-2-3-4 = 3, seed30: 30-3-4 = 2)) = 2
     assert(got == Map(1L -> 0L, 30L -> 0L, 99L -> 0L,
       2L -> 1L, 3L -> 1L, 4L -> 2L, 5L -> 3L, 6L -> 4L).filter(_._2 <= 3))
     // cap respected: 6 (distance 4) absent above; maxHops=5 reaches it
-    val full = GraphOps.bfsHops(pairs, "id_a", "id_b", seeds, "doc_id", maxHops = 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val full = hops(pairs, seeds, 5)
     assert(full(6L) == 4L)
     // partition-invariance of the iterative min-agg
-    val rep = GraphOps.bfsHops(pairs.repartition(5), "id_a", "id_b",
-        seeds.repartition(2), "doc_id", maxHops = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rep = hops(pairs.repartition(5), seeds.repartition(2), 3)
     assert(rep == got)
   }
 
@@ -1141,9 +1117,9 @@ class DedupAnnSpec extends AnyFunSuite {
     val seeds = Seq(1L, 30L, 99L, 45L).toDF("doc_id")
     def mp(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    for (p <- Seq(pairs, noPairs))
-      assert(mp(GraphOps.bfsHops(p, "id_a", "id_b", seeds, "doc_id", 3)) ==
-        mp(GraphOps.bfsHops(p, "id_a", "id_b", seeds, "doc_id", 3,
+    for (p <- Seq(pairs, noPairs); unit = p.withColumn("w", lit(1L)))
+      assert(mp(GraphOps.ssspHops(unit, "id_a", "id_b", "w", seeds, "doc_id", 3)) ==
+        mp(GraphOps.ssspHops(unit, "id_a", "id_b", "w", seeds, "doc_id", 3,
           localLimit = 0L)))
     val wedges = Seq((1L, 2L, 1L), (2L, 3L, 1L), (1L, 3L, 10L),
       (3L, 4L, 2L), (4L, 5L, 2L), (6L, 7L, 1L)).toDF("id_a", "id_b", "w")
@@ -1162,6 +1138,16 @@ class DedupAnnSpec extends AnyFunSuite {
           localLimit = 0L)), s"kCore k=$k")
   }
 
+  /** A pair graph mixing chains, cliques, bridges and isolated islands. */
+  private val mixedEdges: Seq[(Long, Long)] =
+    Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
+      (3L, 30L), (7L, 8L), (1L, 3L), (2L, 4L)) ++
+      (0 until 10).map(i => (40L + i, 41L + i)) ++
+      Seq((60L, 61L), (61L, 62L), (62L, 60L))
+
+  private def m3(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+
   test("fixed-round graph local twins equal the distributed loops " +
       "(pageRank/pPR/weightedPR/LPA)") {
     import spark.implicits._
@@ -1170,12 +1156,7 @@ class DedupAnnSpec extends AnyFunSuite {
     // scaled-long ranks and vote labels must agree BIT-identically
     // (the arithmetic is integral, so there is no tolerance) on graphs
     // mixing chains, cliques, bridges and isolated islands.
-    val pairs = (Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
-      (3L, 30L), (7L, 8L), (1L, 3L), (2L, 4L)) ++
-      (0 until 10).map(i => (40L + i, 41L + i)) ++
-      Seq((60L, 61L), (61L, 62L), (62L, 60L))).toDF("id_a", "id_b")
-    def m3(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val pairs = mixedEdges.toDF("id_a", "id_b")
     def m2(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     for (it <- Seq(1, 3))
@@ -1183,27 +1164,76 @@ class DedupAnnSpec extends AnyFunSuite {
           .select("id", "d", "r")) ==
         m3(GraphOps.pageRankInt(pairs, "id_a", "id_b", it, localLimit = 0L)
           .select("id", "d", "r")), s"pageRank iters=$it")
-    val seeds = Seq(1L, 30L, 99L, 45L).toDF("doc_id")
+    val seeds = Some((Seq(1L, 30L, 99L, 45L).toDF("doc_id"), "doc_id"))
     for (it <- Seq(1, 3))
-      assert(m3(GraphOps.personalizedPageRankInt(pairs, "id_a", "id_b",
-          seeds, "doc_id", it).select("id", "d", "r")) ==
-        m3(GraphOps.personalizedPageRankInt(pairs, "id_a", "id_b",
-          seeds, "doc_id", it, localLimit = 0L).select("id", "d", "r")),
+      assert(m3(GraphOps.pageRankInt(pairs, "id_a", "id_b", it,
+          seeds = seeds).select("id", "d", "r")) ==
+        m3(GraphOps.pageRankInt(pairs, "id_a", "id_b", it,
+          seeds = seeds, localLimit = 0L).select("id", "d", "r")),
         s"pPR iters=$it")
     val wedges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (1L, 3L, 10L),
       (3L, 4L, 2L), (4L, 5L, 2L), (6L, 7L, 1L), (5L, 6L, 4L))
       .toDF("id_a", "id_b", "w")
     for (it <- Seq(1, 3))
-      assert(m2(GraphOps.weightedPageRankInt(wedges, "id_a", "id_b", "w", it)) ==
-        m2(GraphOps.weightedPageRankInt(wedges, "id_a", "id_b", "w", it,
-          localLimit = 0L)), s"weightedPR iters=$it")
-    // the rank loops divide by the node count, so only LPA takes the
-    // empty graph
+      assert(m3(GraphOps.pageRankInt(wedges, "id_a", "id_b", it,
+          weightCol = Some("w"))) ==
+        m3(GraphOps.pageRankInt(wedges, "id_a", "id_b", it,
+          weightCol = Some("w"), localLimit = 0L)), s"weightedPR iters=$it")
+    // the empty graph: no rows from the rank loop on either path; with
+    // seeds there is no seed in the graph, which is an error on both
     val noPairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    for (limit <- Seq(engine.Shape.LocalRowLimit, 0L)) {
+      assert(GraphOps.pageRankInt(noPairs, "id_a", "id_b", 3,
+        localLimit = limit).collect().isEmpty, s"empty PR localLimit=$limit")
+      val err = intercept[IllegalArgumentException](GraphOps.pageRankInt(
+        noPairs, "id_a", "id_b", 3, seeds = seeds, localLimit = limit))
+      assert(err.getMessage.contains("no seed node appears in the pair graph"))
+    }
     for (p <- Seq(pairs, noPairs); r <- Seq(0, 1, 3))
       assert(m2(GraphOps.labelPropagation(p, "id_a", "id_b", r)) ==
         m2(GraphOps.labelPropagation(p, "id_a", "id_b", r,
           localLimit = 0L)), s"LPA rounds=$r")
+  }
+
+  test("rank and hop special cases equal their general forms on both paths") {
+    // unweighted PageRank is weight 1, uniform teleport is "every node
+    // is a seed", and BFS is ssspHops at unit weight — each checked on
+    // the mixed graph with the local twin and the distributed loop
+    val pairs = mixedEdges.toDF("id_a", "id_b")
+    val unit = pairs.withColumn("w", lit(1L))
+    val nodes = mixedEdges.flatMap { case (a, b) => Seq(a, b) }.distinct
+    val everyNode = Some((nodes.toDF("n"), "n"))
+    val seeds = Seq(1L, 30L, 99L, 45L)
+    val adj = mixedEdges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
+    def driverBfs(k: Int): Map[Long, Long] = {
+      var dist = seeds.map(_ -> 0L).toMap
+      var frontier = seeds
+      for (h <- 1 to k) {
+        frontier = frontier.flatMap(adj.getOrElse(_, Nil)).distinct
+          .filterNot(dist.contains)
+        dist ++= frontier.map(_ -> h.toLong)
+      }
+      dist
+    }
+    for (limit <- Seq(engine.Shape.LocalRowLimit, 0L)) {
+      for (it <- Seq(1, 3)) {
+        val plain = m3(GraphOps.pageRankInt(pairs, "id_a", "id_b", it,
+          localLimit = limit))
+        assert(plain.keySet == nodes.toSet)
+        assert(m3(GraphOps.pageRankInt(unit, "id_a", "id_b", it,
+          weightCol = Some("w"), localLimit = limit)) == plain,
+          s"all-1 weights, iters=$it localLimit=$limit")
+        assert(m3(GraphOps.pageRankInt(pairs, "id_a", "id_b", it,
+          seeds = everyNode, localLimit = limit)) == plain,
+          s"every node a seed, iters=$it localLimit=$limit")
+      }
+      for (k <- Seq(0, 1, 2, 4, 12))
+        assert(GraphOps.ssspHops(unit, "id_a", "id_b", "w",
+            seeds.toDF("doc_id"), "doc_id", k, localLimit = limit)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+          driverBfs(k), s"unit-weight sssp, maxHops=$k localLimit=$limit")
+    }
   }
 
   test("ppJoinShingles equals the brute-force model at several thresholds") {
@@ -1238,7 +1268,7 @@ class DedupAnnSpec extends AnyFunSuite {
     }
   }
 
-  test("personalizedPageRankInt: hand path graph, teleport only to the seed") {
+  test("pageRankInt with seeds: hand path graph, teleport only to the seed") {
     import spark.implicits._
     // path 1-2-3, seed {1}, scale 1e9, 2 iterations — hand-unrolled:
     // r0 = [1e9, 0, 0]; deg = [1, 2, 1]; base = 15e7 (seed only)
@@ -1247,8 +1277,8 @@ class DedupAnnSpec extends AnyFunSuite {
     //   r2 = [15e7 + 361250000, 127500000, 361250000]
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
     val seeds = Seq(1L).toDF("doc_id")
-    val got = GraphOps.personalizedPageRankInt(pairs, "id_a", "id_b",
-        seeds, "doc_id", iters = 2)
+    val got = GraphOps.pageRankInt(pairs, "id_a", "id_b", iters = 2,
+        seeds = Some((seeds, "doc_id")))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got == Map(1L -> 511250000L, 2L -> 127500000L, 3L -> 361250000L),
       got.toString)
@@ -1424,7 +1454,7 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(got2(1L) == (("core", 1L)))
   }
 
-  test("weightedPageRankInt: hand triangle, weights steer the flow") {
+  test("pageRankInt with weights: hand triangle, weights steer the flow") {
     import spark.implicits._
     // edges 1-2 (w3), 2-3 (w1); undirected. swt: 1->3, 2->4, 3->1.
     // scale 1e9, n=3, r0=333333333, base=49999999 (15% of r0).
@@ -1432,8 +1462,12 @@ class DedupAnnSpec extends AnyFunSuite {
     //      node2 gets (r0*3) div 3 + (r0*1) div 1 = 333333333+333333333
     //      node3 gets (r0*1) div 4 = 83333333
     val e = Seq((1L, 2L, 3L), (2L, 3L, 1L)).toDF("u", "v", "w")
-    val got = GraphOps.weightedPageRankInt(e, "u", "v", "w", iters = 1)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rows = GraphOps.pageRankInt(e, "u", "v", iters = 1,
+        weightCol = Some("w")).collect()
+    val got = rows.map(r => r.getLong(0) -> r.getLong(2)).toMap
+    // d is the incident weight sum
+    assert(rows.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 3L, 2L -> 4L, 3L -> 1L))
     val r0 = 1000000000L / 3
     val base = (15L * r0) / 100
     assert(got(1L) == base + (85L * ((r0 * 3) / 4)) / 100)

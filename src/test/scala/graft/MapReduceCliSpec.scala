@@ -8,8 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.MapReduceCli
 
 /** CLI parity with the reference test driver (main.c:54-149): argument
-  * and file validation semantics, mr.rst output for both jobs on
-  * alice30 (golden vectors from FIXTURES.md), and the result block.
+  * and file validation semantics, mr.rst output for both jobs on a
+  * generated corpus (naive-fold and grep models, [[TextCorpus]]) and on
+  * alice30 (golden vectors from FIXTURES.md, cancelled without the
+  * reference corpora), and the result block.
   */
 class MapReduceCliSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -43,39 +45,57 @@ class MapReduceCliSpec extends AnyFunSuite {
     // a directory is not a regular file (is_regular_file, main.c:37-52)
     val (c2, o2) = captured(MapReduceCli.run(Array("counter", "/tmp", "4"), spark))
     assert(c2 == 0 && o2.contains("Regular file /tmp does not exist."))
-    val (c3, o3) = captured(MapReduceCli.run(Array("counter", alice30, "4x"), spark))
+    val file = TextCorpus.small.toString
+    val (c3, o3) = captured(MapReduceCli.run(Array("counter", file, "4x"), spark))
     assert(c3 == 0 && o3.contains("4x is not a valide split size."))
-    val (c4, o4) = captured(MapReduceCli.run(Array("counter", alice30, "-4"), spark))
+    val (c4, o4) = captured(MapReduceCli.run(Array("counter", file, "-4"), spark))
     assert(c4 == 0 && o4.contains("is not a valide split size."))
   }
 
-  test("counter CLI writes dense A..Z mr.rst matching the alice30 golden") {
-    val (code, out) = captured(MapReduceCli.run(Array("counter", alice30, "4"), spark))
-    assert(code == 0)
-    val lines = mrRst()
-    assert(lines.length == 26)
-    val golden = new TextJobsSpec().aliceGolden
-    assert(lines == ('A' to 'Z').map(l => s"$l ${golden(l.toString)}"))
-    assert(out.contains("***** RESULT ***** "))
-    assert(out.contains("Result file: mr.rst"))
-    assert("Map worker pids: (\\d+ )+".r.findFirstIn(out).isDefined, out)
-    assert("Reduce worker pid: \\d+".r.findFirstIn(out).isDefined, out)
-    assert("Processing time \\(us\\): \\d+".r.findFirstIn(out).isDefined, out)
+  test("counter CLI writes dense A..Z mr.rst matching the naive fold at every split count") {
+    val fold = TextCorpus.letterFold(TextCorpus.small)
+    for (n <- TextCorpus.SplitCounts) {
+      val (code, out) = captured(MapReduceCli.run(
+        Array("counter", TextCorpus.small.toString, n.toString), spark))
+      assert(code == 0)
+      assert(mrRst() == ('A' to 'Z').map(l => s"$l ${fold(l.toString)}"), s"n=$n")
+      assert(out.contains("***** RESULT ***** "))
+      assert(out.contains("Result file: mr.rst"))
+      assert("Map worker pids: (\\d+ )+".r.findFirstIn(out).isDefined, out)
+      assert("Reduce worker pid: \\d+".r.findFirstIn(out).isDefined, out)
+      assert("Processing time \\(us\\): \\d+".r.findFirstIn(out).isDefined, out)
+    }
   }
 
   test("finder CLI writes matching lines in input order; split-count invariant") {
-    val (code, _) = captured(MapReduceCli.run(Array("finder", alice30, "3", "Alice"), spark))
+    // the grep model's lines, in input order, at every split count
+    // (mapreduce.c:56-93 parity)
+    val expected = TextCorpus.grepLines(TextCorpus.small, TextCorpus.Word)
+    assert(expected.nonEmpty)
+    for (n <- TextCorpus.SplitCounts) {
+      val (code, _) = captured(MapReduceCli.run(Array("finder",
+        TextCorpus.small.toString, n.toString, TextCorpus.Word), spark))
+      assert(code == 0)
+      assert(mrRst() == expected, s"n=$n")
+    }
+  }
+
+  test("counter CLI writes dense A..Z mr.rst matching the alice30 golden") {
+    assume(new java.io.File(alice30).isFile)
+    val (code, _) = captured(MapReduceCli.run(Array("counter", alice30, "4"), spark))
     assert(code == 0)
-    val got = mrRst()
-    // 392 whole-word 'Alice' lines (TextJobsSpec), in input order
-    val expected = Files.readAllLines(Paths.get(alice30))
-      .toArray(Array.empty[String]).toSeq
-      .filter(_.matches(".*(?<![0-9A-Za-z])Alice(?![0-9A-Za-z]).*"))
-    assert(got.length == 392)
-    assert(got == expected)
-    // different split count, byte-identical result (mapreduce.c:56-93 parity)
-    val (code2, _) = captured(MapReduceCli.run(Array("finder", alice30, "9", "Alice"), spark))
-    assert(code2 == 0)
-    assert(mrRst() == expected)
+    val golden = new TextJobsSpec().aliceGolden
+    assert(mrRst() == ('A' to 'Z').map(l => s"$l ${golden(l.toString)}"))
+  }
+
+  test("finder CLI writes the 392 alice30 'Alice' lines at 3 and 9 splits") {
+    assume(new java.io.File(alice30).isFile)
+    val expected = TextCorpus.grepLines(Paths.get(alice30), "Alice")
+    assert(expected.length == 392)
+    for (n <- Seq("3", "9")) {
+      val (code, _) = captured(MapReduceCli.run(Array("finder", alice30, n, "Alice"), spark))
+      assert(code == 0)
+      assert(mrRst() == expected, s"n=$n")
+    }
   }
 }
