@@ -1,6 +1,11 @@
 package graft.engine
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (/root/repo/TESTDATA.md).
   *
@@ -13,7 +18,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")
@@ -60,4 +65,59 @@ object Tables {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").map(n => n -> table(s, d, n)) :+
       ("events" -> events(s, d))
+
+  /** The session confs that change the types parquet schema inference
+    * yields for the same files.
+    */
+  private val TypeConfs = Seq(NanosConf, "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  /** A schema inferred from exactly these leaf files under these confs. */
+  private final case class Entry(confs: Seq[Option[String]],
+                                 files: Seq[(String, Long, Long)],
+                                 schema: StructType)
+
+  /** One entry per qualified path: a changed file replaces it. */
+  private val schemas = new ConcurrentHashMap[String, Entry]()
+
+  /** The engine's one parquet read, for dataset tables and fixtures alike.
+    *
+    * Schema inference reads a parquet footer in a Spark job (73 ms a call
+    * on `light`'s tables, 4 vCPUs), and it used to run on every table read
+    * of every query. Here it runs once per path: later reads pass the
+    * cached schema (`read.schema(s).parquet`), which submits no job. A hit
+    * is checked against the listing Spark's file index makes for the read
+    * anyway — every leaf file's (path, length, mtime) — and against
+    * [[TypeConfs]], so a rewritten or appended file, or a session that
+    * infers other types, re-infers instead of reading with a stale schema.
+    * The check is driver-side metadata; this is what a metastore or table
+    * log gives a warehouse: footers are not re-read per query.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val key = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p).toString
+    val confs = TypeConfs.map(spark.conf.getOption)
+    val hit = Option(schemas.get(key)).filter(_.confs == confs)
+      .map(e => (spark.read.schema(e.schema).parquet(path), e.files))
+      .collect { case (df, files) if leafFiles(df).contains(files) => df }
+    hit.getOrElse {
+      val df = spark.read.parquet(path)
+      leafFiles(df).foreach(files => schemas.put(key, Entry(confs, files, df.schema)))
+      df
+    }
+  }
+
+  /** The (path, length, mtime) of every leaf file the read's file index
+    * listed, or None for a relation that is not a listed file scan.
+    */
+  private def leafFiles(df: DataFrame): Option[Seq[(String, Long, Long)]] =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case h: HadoopFsRelation => h.location }
+      .collect { case i: PartitioningAwareFileIndex =>
+        i.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+          .sorted
+      }
 }

@@ -954,52 +954,62 @@ object Relational {
     * (stage k's event must carry ts strictly after the ts CHOSEN for
     * stage k-1). Returns one row per stage with the users reaching at
     * least that stage and the conversion from the previous stage in
-    * exact ppm.
+    * exact ppm (0 after a stage no user reached).
     *
     * Greedy-earliest is lossless: taking the MINIMUM qualifying ts at
     * every stage can only enlarge the set of qualifying events for
     * the next stage (any subsequence witness has a pointwise-earlier
     * greedy witness), so min-per-stage decides reachability exactly.
-    * That makes the distributed shape one hash aggregation per stage —
-    * filter the stage's events, join to the previous stage's chosen
-    * ts (both sides hash-partitioned on the user key, so after the
-    * first exchange the join and the min-agg reuse the partitioning),
-    * keep strictly-later events, take min(ts). No per-user event list
-    * is ever buffered (a power user with 10⁹ events costs only its
-    * share of |stages| filtered scans), unlike the collect_list/UDF
-    * funnel that dies on skew. Stage frames shrink monotonically;
-    * the final per-stage counts are one agg row each.
+    *
+    * One lazy plan, no job until the caller's action: c0 = min(ts) per
+    * user over stage 0's events; stage k LEFT-joins that frame to stage
+    * k's events on the user key with `ts > c(k-1)` and takes min(ts) per
+    * user as c(k) (null once the user stops); one global agg counts
+    * c0 … c(k-1), and the k rows are exploded from it. Every hash
+    * exchange is on the user key: stage 0's agg, and each later stage's
+    * events when its join is sort-merge (a broadcast join ships them
+    * instead). The joins and aggs keep the frame's partitioning, so a
+    * sort-merge plan has k hash exchanges; the global count adds one
+    * single-partition exchange of per-task partial counts. No Window,
+    * no nested-loop join, and no per-user event list is buffered (a
+    * power user with 10⁹ events costs only its share of |stages|
+    * filtered scans), unlike the collect_list/UDF funnel that dies on
+    * skew.
     */
   def funnelStages(events: DataFrame, userCol: String, tsCol: String,
                    typeCol: String, stages: Seq[String]): DataFrame = {
     require(stages.nonEmpty, "funnelStages needs at least one stage")
-    val spark = events.sparkSession
-    import spark.implicits._
-    // Materialize each stage frame: the count action below and the
-    // next stage's join both consume it, and an unmaterialized
-    // scanLeft chain would re-execute all k-1 upstream stages for
-    // stage k's count (O(|stages|²) stage evaluations). Each frame is
-    // one row per surviving user — cheap to hold, expensive to replay.
-    val first = events.filter(col(typeCol) === stages.head)
-      .groupBy(col(userCol).as("u")).agg(min(col(tsCol)).as("t_prev"))
-      .materialized
-    val reachedPerStage = stages.tail.scanLeft(first) { (prev, stage) =>
-      events.filter(col(typeCol) === stage)
-        .select(col(userCol).as("u"), col(tsCol).as("t_cur"))
-        .join(prev, "u")
-        .filter(col("t_cur") > col("t_prev"))
-        .groupBy("u").agg(min(col("t_cur")).as("t_prev"))
-        .materialized
+    val c = stages.indices.map(i => s"c$i")
+    def stageEvents(i: Int, u: String, t: String) =
+      events.filter(col(typeCol) === stages(i)).select(col(userCol).as(u), col(tsCol).as(t))
+    val first = stageEvents(0, "u", "t").groupBy("u").agg(min(col("t")).as(c(0)))
+    val reached = stages.indices.tail.foldLeft(first) { (prev, k) =>
+      val carried = c.take(k).map(ci => min(col(ci)).as(ci))
+      prev.join(stageEvents(k, "u_k", "t_k"),
+          col("u") === col("u_k") && col("t_k") > col(c(k - 1)), "left")
+        .groupBy("u").agg(carried.head, carried.tail :+ min(col("t_k")).as(c(k)): _*)
     }
-    val counts = reachedPerStage.map(_.select(count(lit(1)).as("n")).head().getLong(0))
-    val rows = stages.zip(counts).zipWithIndex.map { case ((stage, n), i) =>
+    // every row entered stage 0, even one whose stage-0 events carry no ts
+    funnelRows(reached, stages, i => if (i == 0) count(lit(1)) else count(col(c(i))))
+  }
+
+  /** The funnels' result rows from one global agg over `reached`:
+    * `(stage_idx, stage, n_users, conv_ppm)` per stage, with `users(i)`
+    * the count of users reaching stage i and conv_ppm the exact integer
+    * ratio to the previous stage (0 when that stage has no user).
+    */
+  private def funnelRows(reached: DataFrame, stages: Seq[String],
+                         users: Int => Column): DataFrame = {
+    val counts = stages.indices.map(i => users(i).as(s"n$i"))
+    val rows = stages.indices.map { i =>
       val convPpm =
-        if (i == 0) 1000000L
-        else if (counts(i - 1) > 0) n * 1000000L / counts(i - 1)
-        else 0L
-      (i + 1, stage, n, convPpm)
+        if (i == 0) lit(1000000L)
+        else expr(s"CASE WHEN n${i - 1} > 0 THEN n$i * 1000000 div n${i - 1} ELSE 0 END")
+      struct(lit(i + 1).as("stage_idx"), lit(stages(i)).as("stage"),
+        col(s"n$i").as("n_users"), convPpm.as("conv_ppm"))
     }
-    rows.toDF("stage_idx", "stage", "n_users", "conv_ppm")
+    reached.agg(counts.head, counts.tail: _*)
+      .select(explode(array(rows: _*)).as("r")).select("r.*")
   }
 
   /** Windowed funnel: stage k must fall STRICTLY AFTER the stage-(k-1)
@@ -1011,48 +1021,47 @@ object Relational {
     * spec carries the counterexample), so each stage keeps the FULL
     * set of reachable event timestamps — the exact forward closure.
     *
-    * Distributed shape: per stage, one user-key equi-join between the
-    * stage's events and the previous stage's reachable set, with the
-    * (strictly-after, within-window) band predicate evaluated inside
-    * the hash join, then DISTINCT — all exchanges on the user key, so
-    * the partitioning is reused stage to stage. Per-user cost is
-    * |candidates| × |stage events| pair checks before the distinct —
-    * bounded by per-(user, stage) event volume, never the corpus;
-    * interval-merging the candidate set (windows of overlapping
-    * candidates collapse) is the documented refinement if per-user
-    * stage volumes ever explode.
+    * One lazy plan whose stages each run once: the frame holds rows
+    * (user, t, depth) — t one reachable timestamp of the current stage,
+    * or null on the one row of a user whose closure ended after `depth`
+    * stages. Stage k LEFT-joins the frame to stage k's events on the
+    * user key, with the (strictly-after, within-window) band predicate
+    * inside the hash join, and groups by (user, matched t) keeping the
+    * deepest depth. The frame is consumed only by the next stage, so no
+    * subtree is evaluated twice; per user, the final depth is the
+    * deepest stage reached, and one global agg counts users per depth.
+    * Hash exchanges are keyed on the user or on (user, t): with
+    * sort-merge joins, stage 0's distinct on (user, t), then the user
+    * key for the frame once and for each stage's events, which the
+    * groupings reuse; with a broadcast join each grouping exchanges on
+    * (user, t) instead. One single-partition exchange carries the
+    * partial counts. Per-user cost is |candidates| × |stage events|
+    * pair checks before the grouping — bounded by per-(user, stage)
+    * event volume, never the corpus; interval-merging the candidate set
+    * (windows of overlapping candidates collapse) is the documented
+    * refinement if per-user stage volumes ever explode.
     */
   def funnelStagesWindowed(events: DataFrame, userCol: String, tsCol: String,
                            typeCol: String, stages: Seq[String],
                            windowUs: Long): DataFrame = {
     require(stages.nonEmpty, "funnelStagesWindowed needs at least one stage")
     require(windowUs > 0, s"windowUs must be positive, got $windowUs")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val ev = events.select(col(userCol).as("u"),
+    // users are counted by key, so a null user reaches no stage
+    val ev = events.filter(col(userCol).isNotNull).select(col(userCol).as("u"),
       unix_micros(col(tsCol)).as("t"), col(typeCol).as("tp"))
-    // Same materialization rationale as funnelStages: each reachable
-    // set feeds both its count action and the next stage's join.
     val first = ev.filter(col("tp") === stages.head)
-      .select("u", "t").distinct().materialized
-    val reachable = stages.tail.scanLeft(first) { (prev, stage) =>
-      ev.filter(col("tp") === stage)
-        .select(col("u"), col("t").as("t2"))
-        .join(prev, "u")
-        .filter(col("t2") > col("t") && col("t2") <= col("t") + windowUs)
-        .select(col("u"), col("t2").as("t")).distinct()
-        .materialized
+      .select("u", "t").distinct().withColumn("depth", lit(1))
+    val closure = stages.indices.tail.foldLeft(first) { (prev, k) =>
+      val cur = ev.filter(col("tp") === stages(k))
+        .select(col("u").as("u_k"), col("t").as("t_k"))
+      prev.join(cur, col("u") === col("u_k") && col("t_k") > col("t") &&
+          col("t_k") <= col("t") + windowUs, "left")
+        .groupBy(col("u"), col("t_k").as("t"))
+        .agg(max(when(col("t_k").isNotNull, lit(k + 1)).otherwise(col("depth")))
+          .as("depth"))
     }
-    val counts = reachable.map(
-      _.select(countDistinct(col("u")).as("n")).head().getLong(0))
-    val rows = stages.zip(counts).zipWithIndex.map { case ((stage, n), i) =>
-      val convPpm =
-        if (i == 0) 1000000L
-        else if (counts(i - 1) > 0) n * 1000000L / counts(i - 1)
-        else 0L
-      (i + 1, stage, n, convPpm)
-    }
-    rows.toDF("stage_idx", "stage", "n_users", "conv_ppm")
+    val depth = closure.groupBy("u").agg(max(col("depth")).as("depth"))
+    funnelRows(depth, stages, i => count(when(col("depth") > i, true)))
   }
 
   /** Daily gap-fill with last-observation-carried-forward (LOCF) — the

@@ -716,7 +716,7 @@ private[graft] object QueriesDedupSim {
       // ground-truth cost never grows with the corpus (the unsampled
       // form measured 13.3×/decade into sf10). One semi-join over two
       // pair frames; counts are three bounded driver actions — the
-      // pair frames MATERIALIZE first (the funnelStages doctrine):
+      // pair frames MATERIALIZE first (Shape.materialize):
       // truth and cand share the sampled-docs lineage, and three
       // actions over live lineage would re-run the whole PPJoin truth
       // pipeline per action.

@@ -400,7 +400,7 @@ private[graft] object QueryShared {
         deleteRecursively(tmp)
       }
     }
-    val read = s.read.parquet(path)
+    val read = engine.Tables.parquet(s, path)
     partitionBy.fold(read)(k => read.withColumn(k, col(k).cast("long")))
   }
 

@@ -628,11 +628,10 @@ class ChunkingCurationSpec extends AnyFunSuite {
     import graft.operators.Relational
     val stages = Seq("a", "b", "c")
     def ts(us: Long) = new java.sql.Timestamp(us / 1000)
+    def frame(rows: Seq[(Long, Long, String)]) =
+      rows.map { case (u, t, tp) => (u, ts(t), tp) }.toDF("user_id", "ts", "event_type")
     def run(rows: Seq[(Long, Long, String)], wUs: Long) =
-      Relational.funnelStagesWindowed(
-          rows.map { case (u, t, tp) => (u, ts(t), tp) }
-            .toDF("user_id", "ts", "event_type"),
-          "user_id", "ts", "event_type", stages, wUs)
+      Relational.funnelStagesWindowed(frame(rows), "user_id", "ts", "event_type", stages, wUs)
         .orderBy("stage_idx").collect().map(_.getLong(2)).toSeq
     // THE counterexample: greedy-earliest picks a@0,b@3 and misses
     // c@14000000 (deadline 13000000); the closure survives via a@5,b@12
@@ -666,12 +665,15 @@ class ChunkingCurationSpec extends AnyFunSuite {
     }
     // an unbounded window reduces to the strict-funnel semantics
     val unbounded = run(rows, Long.MaxValue / 4)
-    val strict = Relational.funnelStages(
-        rows.map { case (u, t, tp) => (u, ts(t), tp) }
-          .toDF("user_id", "ts", "event_type"),
-        "user_id", "ts", "event_type", stages)
+    val strict = Relational.funnelStages(frame(rows), "user_id", "ts", "event_type", stages)
       .orderBy("stage_idx").collect().map(_.getLong(2)).toSeq
     assert(unbounded == strict)
+    // empty input: k rows of 0 users
+    assert(run(Nil, 9000000L) == Seq(0L, 0L, 0L))
+    // building the funnel is one lazy plan: no job until an action
+    val (_, jobs) = SparkTestSession.jobsDuring(Relational.funnelStagesWindowed(
+      frame(rows), "user_id", "ts", "event_type", stages, 9000000L))
+    assert(jobs == 0)
   }
 
   test("gapFillLocf: dense per-key grid, LOCF across gaps, null closes skipped") {
@@ -747,5 +749,17 @@ class ChunkingCurationSpec extends AnyFunSuite {
       Seq("a", "b", "c")).orderBy("stage_idx").collect()
     assert(gotNone.map(_.getLong(2)).toSeq == Seq(1L, 0L, 0L))
     assert(gotNone.map(_.getLong(3)).toSeq == Seq(1000000L, 0L, 0L))
+    // empty input: every stage counts 0 users; only stage 1 keeps 100%
+    val empty = Seq.empty[(Long, Long, String)].toDF("user_id", "ts", "event_type")
+    val gotEmpty = Relational.funnelStages(empty, "user_id", "ts", "event_type",
+      Seq("a", "b", "c")).orderBy("stage_idx").collect()
+    assert(gotEmpty.map(r => (r.getInt(0), r.getString(1))).toSeq ==
+      Seq((1, "a"), (2, "b"), (3, "c")))
+    assert(gotEmpty.map(_.getLong(2)).toSeq == Seq(0L, 0L, 0L))
+    assert(gotEmpty.map(_.getLong(3)).toSeq == Seq(1000000L, 0L, 0L))
+    // building the funnel is one lazy plan: no job until an action
+    val (_, jobs) = SparkTestSession.jobsDuring(Relational.funnelStages(
+      events.toDF("user_id", "ts", "event_type"), "user_id", "ts", "event_type", stages))
+    assert(jobs == 0)
   }
 }

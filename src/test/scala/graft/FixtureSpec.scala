@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.QueryShared.{deleteRecursively, fixturePath, persisted}
+import graft.SparkTestSession.jobsDuring
 
 /** The standing-index store: [[QueryShared.persisted]] builds a fixture
   * once per dataset, publishes it atomically and reads it back.
@@ -36,8 +37,28 @@ class FixtureSpec extends AnyFunSuite {
       var builds = 0
       def build = { builds += 1; spark.range(0, 10).toDF("id") }
       assert(ids(persisted(spark, d, "t.parquet")(build)) == (0L until 10L))
-      assert(ids(persisted(spark, d, "t.parquet")(build)) == (0L until 10L))
+      // the read-back infers no schema again: no job until an action
+      val (again, jobs) = jobsDuring(persisted(spark, d, "t.parquet")(build))
+      assert(jobs == 0)
+      assert(ids(again) == (0L until 10L))
       assert(builds == 1)
+    }
+  }
+
+  test("a fixture rebuilt with a changed column type reads back the new type") {
+    withDataset { d =>
+      val first = persisted(spark, d, "t.parquet") {
+        spark.range(0, 10).select(col("id"), col("id").cast("int").as("v"))
+      }
+      assert(first.schema("v").dataType == IntegerType)
+      // a cleared fixture store, as a changed builder requires
+      deleteRecursively(new java.io.File(fixturePath(d, "t.parquet")))
+      val rebuilt = persisted(spark, d, "t.parquet") {
+        spark.range(0, 10)
+          .select(col("id"), concat(lit("v"), col("id").cast("string")).as("v"))
+      }
+      assert(rebuilt.schema("v").dataType == StringType)
+      assert(rebuilt.filter(col("id") === 4L).head().getString(1) == "v4")
     }
   }
 
@@ -78,6 +99,12 @@ class FixtureSpec extends AnyFunSuite {
       assert(spark.read.parquet(path).schema("k").dataType == IntegerType)
       assert(df.schema("k").dataType == LongType)
       assert(df.filter(col("k") === 3L).count() == 5)
+      // the second read, with the cached schema, restores it the same way
+      val again = persisted(spark, d, "p.parquet", partitionBy = Some("k")) {
+        sys.error("a published fixture is not rebuilt")
+      }
+      assert(again.schema("k").dataType == LongType)
+      assert(again.filter(col("k") === 3L).count() == 5)
     }
   }
 
