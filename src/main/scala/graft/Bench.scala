@@ -191,97 +191,63 @@ object Bench {
           probes += t / ctlBest(name)
         }
       }
-    case class SuiteRun(results: Seq[QRes], midFactor: Double,
-                        endFactor: Double, probes: Seq[Double],
-                        attempt: Int) {
-      def polluted: Boolean =
-        midFactor > ctlThreshold || endFactor > ctlThreshold
-    }
-    def runSuite(attempt: Int): SuiteRun = {
-      probes.clear()
-      val results = selected.toSeq.zipWithIndex.map { case ((name, fn), qi) =>
-        if (qi % probeEvery == 0) probe(qi)
-        // noop sink materializes every output column; count() would let
-        // Catalyst prune projection-only queries down to a row count.
-        // Best of 3 runs: the first pays one-shot codegen + JIT (measured
-        // ~2-5s on plans with distinct-agg/join codegen) and a second run
-        // can still catch JIT/GC tails — r03 recorded q31 at 3.6s when its
-        // steady state is 1.2s because BOTH of 2 runs were cold/noisy.
-        // The max-min spread is RECORDED per query so a loaded-machine run
-        // is detectable in the artifact (r04's recorded file manufactured
-        // three phantom 4-6x regressions that a spread column would have
-        // flagged on sight). A failure is RECORDED, never swallowed: a
-        // query that throws instantly would otherwise report a fast fake
-        // time and a regression could masquerade as a speedup.
-        var err: Option[String] = None
-        var tasksBefore = 0L
-        val times = (1 to 3).map { i =>
-          if (i == 3) tasksBefore = drainedTaskCount() // steady-state run
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-          catch { case e: Throwable =>
-            err = Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-          }
-          (System.nanoTime() - t0) / 1e9
+    val results = selected.toSeq.zipWithIndex.map { case ((name, fn), qi) =>
+      if (qi % probeEvery == 0) probe(qi)
+      // noop sink materializes every output column; count() would let
+      // Catalyst prune projection-only queries down to a row count.
+      // Best of 3 runs: the first pays one-shot codegen + JIT (measured
+      // ~2-5s on plans with distinct-agg/join codegen) and a second run
+      // can still catch JIT/GC tails — r03 recorded q31 at 3.6s when its
+      // steady state is 1.2s because BOTH of 2 runs were cold/noisy.
+      // The max-min spread is RECORDED per query so a loaded-machine run
+      // is detectable in the artifact (r04's recorded file manufactured
+      // three phantom 4-6x regressions that a spread column would have
+      // flagged on sight). A failure is RECORDED, never swallowed: a
+      // query that throws instantly would otherwise report a fast fake
+      // time and a regression could masquerade as a speedup.
+      var err: Option[String] = None
+      var tasksBefore = 0L
+      val times = (1 to 3).map { i =>
+        if (i == 3) tasksBefore = drainedTaskCount() // steady-state run
+        val t0 = System.nanoTime()
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
+        catch { case e: Throwable =>
+          err = Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
         }
-        QRes(name, times, drainedTaskCount() - tasksBefore, err)
-      }.toSeq
-      // post-suite control re-check: contention that STARTED mid-run is
-      // invisible to the start calibration
-      val endFactor =
-        if (ctlBest.nonEmpty && sfDir.contains("sf0.1")) controlFactor() else 1.0
-      // mid_factor — the median of the interleaved probes — is the
-      // pollution authority: it is measured warm (no cold-start bias) at
-      // the moments the suite's times were taken. endFactor still gates
-      // (contention in the final stretch after the last probe).
-      val midFactor =
-        if (probes.isEmpty) 1.0 else probes.sorted.apply(probes.size / 2)
-      SuiteRun(results, midFactor, endFactor, probes.toSeq, attempt)
-    }
-    // Refuse-and-retry (VERDICT r11 #3): a polluted suite must not
-    // become the round's recorded artifact when a clean one is a retry
-    // away. Re-run the whole suite while the control probes say the
-    // box was contended, up to SPARK_GRAFT_BENCH_RETRIES extra
-    // attempts (default 2 — ~3 min each at sf0.1), with a settling
-    // pause so a transient co-tenant (a test run, a compaction) can
-    // drain. Keep the attempt with the LOWEST mid-factor: if every
-    // attempt was polluted the least-contended one is recorded, still
-    // stamped polluted so it can never silently gate.
-    val maxRetries =
-      sys.env.get("SPARK_GRAFT_BENCH_RETRIES").map(_.toInt).getOrElse(2)
-    var best = runSuite(1)
-    var attempt = 1
-    while (best.polluted && attempt <= maxRetries) {
-      attempt += 1
-      System.err.println(
-        f"[bench] POLLUTED attempt ${attempt - 1} (mid ${best.midFactor}%.2f, end ${best.endFactor}%.2f > $ctlThreshold) — settling 15s, re-running suite (attempt $attempt/${maxRetries + 1})")
-      Thread.sleep(15000)
-      val next = runSuite(attempt)
-      if (next.midFactor < best.midFactor) best = next.copy(attempt = attempt)
-      else best = best.copy(attempt = attempt)
-    }
-    val results = best.results
-    val midFactor = best.midFactor
-    val endFactor = best.endFactor
-    val polluted = best.polluted
-    val probesJson = best.probes.map(p => f"$p%.2f").mkString("[", ",", "]")
+        (System.nanoTime() - t0) / 1e9
+      }
+      QRes(name, times, drainedTaskCount() - tasksBefore, err)
+    }.toSeq
+    // post-suite control re-check: contention that STARTED mid-run is
+    // invisible to the start calibration
+    val endFactor =
+      if (ctlBest.nonEmpty && sfDir.contains("sf0.1")) controlFactor() else 1.0
+    // mid_factor — the median of the interleaved probes — is the
+    // pollution authority: it is measured warm (no cold-start bias) at
+    // the moments the suite's times were taken. endFactor still gates
+    // (contention in the final stretch after the last probe). A polluted
+    // run is stamped, never re-run: the suite runs once, and the stamp
+    // keeps it out of the gate baselines (tools/bench_gate.py).
+    val midFactor =
+      if (probes.isEmpty) 1.0 else probes.sorted.apply(probes.size / 2)
+    val polluted = midFactor > ctlThreshold || endFactor > ctlThreshold
+    val probesJson = probes.map(p => f"$p%.2f").mkString("[", ",", "]")
     val ctlJson =
-      f"""{"start_factor":$startFactor%.3f,"mid_factor":$midFactor%.3f,"end_factor":$endFactor%.3f,"probes":$probesJson,"attempts":$ctlAttempts,"suite_attempts":${best.attempt},"threshold":$ctlThreshold,"polluted":$polluted,"warm_mb":$warmMb%.0f,"warm_sec":$warmSec%.1f,"warm_truncated":$warmTrunc}"""
+      f"""{"start_factor":$startFactor%.3f,"mid_factor":$midFactor%.3f,"end_factor":$endFactor%.3f,"probes":$probesJson,"attempts":$ctlAttempts,"suite_attempts":1,"threshold":$ctlThreshold,"polluted":$polluted,"warm_mb":$warmMb%.0f,"warm_sec":$warmSec%.1f,"warm_truncated":$warmTrunc}"""
     if (polluted)
-      System.err.println(s"[bench] POLLUTED RUN (all attempts): controls $ctlJson — do not use as a gate baseline")
+      System.err.println(s"[bench] POLLUTED RUN: controls $ctlJson — do not use as a gate baseline")
 
     val errs = results.collect { case r if r.err.isDefined =>
       s"\"" + r.name + "\":" + Verify.jsonString(r.err.get)
     }.mkString("{", ",", "}")
     val total = results.map(_.min).sum
     // Reference-parity throughput, recorded so the speed claim is
-    // regression-guarded (VERDICT r02 #6): letter counter + word finder
-    // MB/s on a warpeace-derived ~133 MB corpus (large enough to
-    // amortize startup; the reference's same-job ceiling is ~95 MB/s,
-    // BASELINE.md). Failure degrades to an empty object, never kills
-    // the query bench.
+    // regression-guarded: letter counter + word finder MB/s on a ~133 MB
+    // seeded corpus ([[TextCorpus]], large enough to amortize startup;
+    // the reference's same-job ceiling is ~95 MB/s, BASELINE.md).
+    // Failure degrades to an empty object, never kills the query bench.
     val thr = try {
-      val corpus = throughputCorpus()
+      val corpus = TextCorpus.write("bench", ThroughputBytes, seed = 1L).toString
       val bytes = new java.io.File(corpus).length().toDouble
       // best-of-3: the whole-file scan is page-cache/CPU-contention
       // sensitive (observed 150-970 MB/s spread on a loaded container
@@ -344,7 +310,7 @@ object Bench {
         .mkString("{", ",", "}")
       val errPart = if (results.exists(_.err.isDefined)) s""","errors":$errs""" else ""
       val ctlPart =
-        f""","ctl":[${math.round(startFactor * 100)},${math.round(midFactor * 100)},${math.round(endFactor * 100)}],"suite_attempts":${best.attempt},"polluted":$polluted"""
+        f""","ctl":[${math.round(startFactor * 100)},${math.round(midFactor * 100)},${math.round(endFactor * 100)}],"suite_attempts":1,"polluted":$polluted"""
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"queries":$slowest,"queries_are":"slowest $n of ${results.size}; all in BENCH_full.json","full":"BENCH_full.json"$errPart$ctlPart,"throughput_mb_s":$thr,"sf":${Verify.jsonString(sfDir)}}"""
     }
     // Tail budget: 2000 chars minus sbt's "[info] " prefix and trailing
@@ -358,30 +324,8 @@ object Bench {
     if (results.exists(_.err.isDefined)) sys.exit(1)
   }
 
-  /** ~133 MB deterministic text corpus: the reference's own
-    * input-warpeace.txt (4.4 MB, extracted from the read-only zip)
-    * replicated 30x. Cached across runs by exact size.
+  /** Size of the throughput corpus: the reference's war-and-peace input
+    * replicated 30 times was 133 MB.
     */
-  private def throughputCorpus(): String = {
-    val warpeace = new java.io.File("/tmp/graft-bench-warpeace.txt")
-    if (!warpeace.exists() || warpeace.length() != 4434670L) {
-      val zf = new java.util.zip.ZipFile("/root/reference/proj_2_base.zip")
-      try {
-        val in = zf.getInputStream(zf.getEntry("proj_2_base/input-warpeace.txt"))
-        java.nio.file.Files.copy(in, warpeace.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        in.close()
-      } finally zf.close()
-    }
-    val big = new java.io.File("/tmp/graft-bench-corpus.txt")
-    val copies = 30
-    if (!big.exists() || big.length() != warpeace.length() * copies) {
-      val out = new java.io.FileOutputStream(big)
-      try {
-        val bytes = java.nio.file.Files.readAllBytes(warpeace.toPath)
-        (1 to copies).foreach(_ => out.write(bytes))
-      } finally out.close()
-    }
-    big.getPath
-  }
+  private val ThroughputBytes = 133000000
 }

@@ -5,10 +5,10 @@ import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
-/** Deterministic generated corpora for the text-job specs, with the
-  * models their expected values come from: a naive byte fold for the
-  * letter counter and a line-scan grep for the word finder. Each
-  * corpus mixes LF and CRLF line endings, empty lines, non-ASCII text
+/** Deterministic generated text corpora — the text-job specs' inputs
+  * and `graft.Bench`'s throughput corpus — with the models the specs'
+  * expected values come from: a naive byte fold for the letter counter
+  * and a line-scan grep for the word finder. Each corpus mixes LF and CRLF line endings, empty lines, non-ASCII text
   * and `_`-joined words, and plants [[Word]] across every split
   * boundary that the [[SplitCounts]] produce, so a job that mishandles
   * a line cut by a split shows up as a wrong count.
@@ -49,34 +49,38 @@ object TextCorpus {
     (1 to n).map(_ * s).filter(b => (size - b + s).toDouble / s > 1.1)
   }
 
-  /** Writes exactly `size` bytes of seeded random lines; whenever the
-    * next split boundary would fall inside the next line, a line that
-    * puts [[Word]] across the boundary is written instead.
+  /** Writes exactly `size` bytes of seeded random lines to a temporary
+    * file (deleted when the JVM exits); whenever the next split boundary
+    * would fall inside the next line, a line that puts [[Word]] across
+    * the boundary is written instead. The file is streamed, so a large
+    * corpus (`graft.Bench`'s throughput input) needs no heap.
     */
-  private def write(name: String, size: Int, seed: Long): Path = {
+  def write(name: String, size: Int, seed: Long): Path = {
     val rnd = new scala.util.Random(seed)
     var cuts = SplitCounts.flatMap(splitStarts(size.toLong, _)).distinct.sorted
-    val out = new java.io.ByteArrayOutputStream(size)
-    def eol(): String = if (rnd.nextInt(3) == 0) "\r\n" else "\n"
-    while (out.size < size) {
-      val line =
-        if (rnd.nextInt(8) == 0) ""
-        else Seq.fill(1 + rnd.nextInt(10))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
-      val bytes = (line + eol()).getBytes(UTF_8)
-      val pos = out.size
-      cuts match {
-        case c +: rest if pos + bytes.length + 3 >= c =>
-          // Word starts 2 bytes before the cut: bytes on both sides
-          out.write(("z" * (c - pos - 3).toInt + " " + Word + " across\n")
-            .getBytes(UTF_8))
-          cuts = rest
-        case _ if pos + bytes.length < size => out.write(bytes)
-        case _ => out.write(("y" * (size - pos - 1) + "\n").getBytes(UTF_8))
-      }
-    }
     val path = Files.createTempFile(s"graft-corpus-$name-", ".txt")
     path.toFile.deleteOnExit()
-    Files.write(path, out.toByteArray)
+    val out = new java.io.BufferedOutputStream(Files.newOutputStream(path), 1 << 16)
+    var pos = 0L
+    def emit(b: Array[Byte]): Unit = { out.write(b); pos += b.length }
+    def eol(): String = if (rnd.nextInt(3) == 0) "\r\n" else "\n"
+    try {
+      while (pos < size) {
+        val line =
+          if (rnd.nextInt(8) == 0) ""
+          else Seq.fill(1 + rnd.nextInt(10))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+        val bytes = (line + eol()).getBytes(UTF_8)
+        cuts match {
+          case c +: rest if pos + bytes.length + 3 >= c =>
+            // Word starts 2 bytes before the cut: bytes on both sides
+            emit(("z" * (c - pos - 3).toInt + " " + Word + " across\n").getBytes(UTF_8))
+            cuts = rest
+          case _ if pos + bytes.length < size => emit(bytes)
+          case _ => emit(("y" * (size - pos - 1).toInt + "\n").getBytes(UTF_8))
+        }
+      }
+    } finally out.close()
+    path
   }
 
   /** Letter counts by a plain single-threaded fold over the raw bytes:

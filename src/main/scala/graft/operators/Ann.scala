@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Shape
 import graft.engine.Shape.MaterializeOps
 
 import graft.functions.VectorFunctions._
@@ -144,17 +143,21 @@ object Ann {
     * `nLists` vectors with the smallest md5-derived key (an order-free
     * deterministic "shuffle"; no RNG, so the DuckDB oracle rebuilds the
     * identical centroids), then `iters` Lloyd iterations: assign every
-    * vector to its nearest centroid (broadcast cross term + map-side
-    * argmin, same shape as the probe path) and recompute per-dimension
-    * means. Means are rounded to 6 decimals so cross-engine summation-
-    * order ulp drift cannot flip a later argmin; distances are rounded
-    * before the argmin for the same reason. Empty clusters drop out
-    * (identically on both engines).
+    * vector to its nearest centroid (map-side argmin UDF over the
+    * driver-held centroids) and recompute per-dimension means. Means
+    * are rounded to 6 decimals so cross-engine summation-order ulp
+    * drift cannot flip a later argmin; distances are rounded before the
+    * argmin for the same reason. Empty clusters drop out (identically
+    * on both engines).
     *
     * `sampleOneIn` keeps only ids whose md5-key ≡ 0 (mod sampleOneIn)
     * for the BUILD — at 100 TB the centroid estimate needs only a
     * sample, not the corpus; the final assignment in [[ivfTopKWith]]
     * still covers every vector.
+    *
+    * This is the one-book case of [[kmeansBooksLocal]]: the same Lloyd
+    * pass trains every codebook a caller needs (IVF-PQ's coarse book
+    * and its m subspace books) over one corpus scan per round.
     */
   def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                       nLists: Int, iters: Int = 2,
@@ -173,52 +176,102 @@ object Ann {
   private[graft] def kmeansCentroidsLocal(
       corpus: DataFrame, idCol: String, vecCol: String,
       nLists: Int, iters: Int = 2,
-      sampleOneIn: Int = 1): Array[(Long, Array[Double])] = {
-    require(nLists >= 1 && iters >= 0 && sampleOneIn >= 1,
-      s"need nLists >= 1, iters >= 0, sampleOneIn >= 1; got $nLists/$iters/$sampleOneIn")
+      sampleOneIn: Int = 1): Array[(Long, Array[Double])] =
+    kmeansBooksLocal(corpus, idCol, vecCol, Seq((1, nLists)), iters,
+      sampleOneIn).head
+
+  /** One codebook: (cid, centroid) pairs in cid order. */
+  private[graft] type Book = Array[(Long, Array[Double])]
+
+  /** Several k-means codebooks over slices of one vector column,
+    * trained together. Each `(parts, k)` in `splits` cuts the vector
+    * into `parts` equal subspaces and trains a `k`-centroid book on
+    * each; the books come back in split order, subspaces in vector
+    * order — `(1, nLists)` is [[kmeansCentroids]], `(m, codes)` the PQ
+    * codebooks, and IVF-PQ asks for both at once.
+    *
+    * Every book gets exactly the computation a separate
+    * [[kmeansCentroidsLocal]] over its `slice`d column would run, so
+    * the results are bit-identical to that, but the corpus is read
+    * once per round for all of them:
+    *  - the keyed `(sid, v, h)` frame is materialized once (the seed
+    *    scan and every round read it;
+    *    [[graft.engine.Shape.materialize]], reliable when
+    *    `spark.graft.checkpointDir` is set);
+    *  - the seeds are collected once: every book's seeds are a prefix
+    *    of the same `ivf_` md5 `(h, sid)` order, sliced on the driver
+    *    (the float→double widening commutes with the slice), and the
+    *    dimension is the first seed vector's length;
+    *  - each round is one map-only pass assigning every book on its
+    *    slice ([[assignCidUdf]]) feeding one `(book, cid, pos)` mean
+    *    aggregation, whose per-key rows arrive in the same partition
+    *    order as a one-book build's; the centroids are collected to the
+    *    driver between rounds (MLlib-style Lloyd — without it every
+    *    round's lineage re-scans the corpus once per prior round).
+    *
+    * An empty (or fully sampled-out) corpus yields empty books.
+    */
+  private[graft] def kmeansBooksLocal(
+      corpus: DataFrame, idCol: String, vecCol: String,
+      splits: Seq[(Int, Int)], iters: Int = 2,
+      sampleOneIn: Int = 1): Array[Book] = {
+    require(splits.nonEmpty && splits.forall { case (p, k) => p >= 1 && k >= 1 } &&
+      iters >= 0 && sampleOneIn >= 1,
+      s"need parts, k >= 1 per split, iters >= 0, sampleOneIn >= 1; " +
+        s"got ${splits.mkString(",")}/$iters/$sampleOneIn")
     import graft.functions.TextFunctions.tokenHash64
     val keyed = corpus.select(col(idCol).cast("long").as("sid"), col(vecCol).as("v"))
       .withColumn("h", tokenHash64(concat(lit("ivf_"), col("sid").cast("string"))))
-    // materialized once (checkpoint truncates lineage): the seed scan
-    // plus every Lloyd iteration references this frame — without
-    // truncation each reference re-plans the corpus scan + hash
-    // projection ([[Shape.materialize]]: reliable when
-    // `spark.graft.checkpointDir` is set).
     val build = (if (sampleOneIn <= 1) keyed
       else keyed.filter(pmod(col("h"), lit(sampleOneIn.toLong)) === 0))
       .materialized
     val spark = corpus.sparkSession
     import spark.implicits._
-    // seed: the nLists smallest (h, sid) rows, cid = 1..nLists in that
-    // order — the previous row_number window over the <= nLists-row
-    // seed frame is now a driver-side sort of the collected seeds
-    // (value-identical: same (h, sid) order, same float→double cast)
-    var cents: Array[(Long, Array[Double])] = build.orderBy("h", "sid")
-      .limit(nLists)
+    val seeds: Array[Array[Double]] = build.orderBy("h", "sid")
+      .limit(splits.map(_._2).max)
       .select(col("h"), col("sid"),
         transform(col("v"), x => x.cast("double")).as("cv"))
       .as[(Long, Long, Array[Double])].collect()
-      .sortBy(t => (t._1, t._2)).zipWithIndex
-      .map { case ((_, _, cv), i) => ((i + 1).toLong, cv) }
+      .sortBy(t => (t._1, t._2)).map(_._3)
+    if (seeds.isEmpty)
+      return Array.fill(splits.map(_._1).sum)(Array.empty[(Long, Array[Double])])
+    val dim = seeds.head.length
+    // (from, len, k) per book, in output order
+    val books = splits.flatMap { case (parts, k) =>
+      require(dim % parts == 0, s"dim $dim must split into $parts subspaces")
+      val len = dim / parts
+      (0 until parts).map(j => (j * len, len, k))
+    }.toArray
+    val cents: Array[Book] = books.map { case (from, len, k) =>
+      seeds.take(k).zipWithIndex.map { case (cv, i) =>
+        ((i + 1).toLong, cv.slice(from, from + len))
+      }
+    }
     val vecType = build.schema("v").dataType
-    for (_ <- 1 to iters if cents.nonEmpty) {
-      // per-row argmin against the driver-side centroid array
-      // ([[assignCidUdf]]) — O(n) map-only rows, vs the previous
-      // crossJoin(broadcast) + groupBy(min(struct)) argmin whose
-      // n × nLists intermediate rows (each carrying the full vector)
-      // grow QUADRATICALLY once nLists scales with the corpus: q119's
-      // sf10 profile put 112 s of 188 s in the two Lloyd passes alone;
-      // the UDF assigns in one corpus scan
-      val assigned = build
-        .select(assignCidUdf(vecType, cents)(col("v")).as("cid"), col("v"))
-      // Materialize the (tiny: nLists × dim doubles) centroid table on
-      // the driver between iterations — MLlib-style Lloyd. Without this
-      // the lineage RE-SCANS the corpus once per prior iteration inside
-      // every later stage (measured: the q54 plan read embeddings 6×);
-      // collect + re-literal is value-identity, so oracle parity holds.
-      cents = meanPool(assigned, "cid", "v")
-        .withColumnRenamed("centroid", "cv")
-        .as[(Long, Array[Double])].collect().sortBy(_._1)
+    for (_ <- 1 to iters) {
+      // a book whose vectors all lack its slice has no means left and
+      // stops training, as its own build would
+      val live = books.indices.filter(b => cents(b).nonEmpty)
+      if (live.nonEmpty) {
+        val assigned = live.map { b =>
+          val (from, len, _) = books(b)
+          val sv = slice(col("v"), from + 1, len)
+          struct(lit(b).as("b"), assignCidUdf(vecType, cents(b))(sv).as("cid"),
+            sv.as("sv"))
+        }
+        val byBook = build.select(explode(array(assigned: _*)).as("e"))
+          .select(col("e.b"), col("e.cid"),
+            posexplode(col("e.sv")).as(Seq("pos", "x")))
+          .groupBy("b", "cid", "pos")
+          .agg(round(avg(col("x").cast("double")), 6).as("m"))
+          .as[(Int, Long, Int, Double)].collect()
+          .groupBy(_._1)
+        live.foreach { b =>
+          cents(b) = byBook.getOrElse(b, Array.empty[(Int, Long, Int, Double)])
+            .groupBy(_._2).toArray.sortBy(_._1)
+            .map { case (cid, rs) => (cid, rs.sortBy(_._3).map(_._4)) }
+        }
+      }
     }
     cents
   }
@@ -942,16 +995,17 @@ object Ann {
 
   /** Product-quantization ANN (Jégou et al. TPAMI 2011) — the
     * compressed-corpus scale path: vectors split into `m` subvectors,
-    * each subspace k-means-coded ([[kmeansCentroidsLocal]], so the
-    * codebook build reuses q54's audited Lloyd semantics per
-    * subspace), the corpus stored as m SMALL CODES per vector (m bytes
-    * at 256 codes — a 256× compression of a float[64]), and queries
-    * scored by Asymmetric Distance Computation: per query one
-    * m × codes lookup table of exact subspace distances, approx
-    * distance = the FIXED-ORDER sum of table entries — left-to-right
-    * over subspaces, each entry HALF_UP-6-rounded, so the ranking is
-    * engine-exact and the oracle can replay it as a generated
-    * expression chain (never an order-free SUM aggregate).
+    * each subspace k-means-coded (the m books trained together by
+    * [[kmeansBooksLocal]], q54's audited Lloyd semantics per subspace,
+    * one corpus pass per round for all of them), the corpus stored as
+    * m SMALL CODES per vector (m bytes at 256 codes — a 256×
+    * compression of a float[64]; [[pqEncodeWith]]'s argmin pass), and
+    * queries scored by Asymmetric Distance Computation ([[adcScorer]]):
+    * per query one m × codes lookup table of exact subspace distances,
+    * approx distance = the FIXED-ORDER sum of table entries —
+    * left-to-right over subspaces, each entry HALF_UP-6-rounded, so the
+    * ranking is engine-exact and the oracle can replay it as a
+    * generated expression chain (never an order-free SUM aggregate).
     *
     * Scale: the codebooks are driver-bounded (m × codes × dim/m
     * doubles); encoding is ONE map-only corpus pass (m argmin UDFs
@@ -967,108 +1021,51 @@ object Ann {
     import spark.implicits._
     require(m >= 1 && codesPerSub >= 1 && k >= 1,
       s"need m, codesPerSub, k >= 1; got $m/$codesPerSub/$k")
-    val dim = corpus.select(size(col(vecCol))).as[Int].head()
-    require(dim % m == 0, s"dim $dim must split into $m subspaces")
-    val sub = dim / m
-    val books: Array[Array[(Long, Array[Double])]] =
-      parSubspaceBooks(corpus, idCol, vecCol, m, sub, codesPerSub, iters)
-    val vecType = corpus.schema(vecCol).dataType
-    var enc = corpus.select(col(idCol).cast("long").as("neighbor_id"),
-      col(vecCol).as("v"))
-    for (j <- 0 until m)
-      enc = enc.withColumn(s"c$j",
-        assignCidUdf(vecType, books(j))(slice(col("v"), j * sub + 1, sub)))
-    val encoded = enc.select(col("neighbor_id") +:
-      (0 until m).map(j => col(s"c$j")): _*)
-    // query-side LUTs on the driver: |queries| × m × codes rounded
-    // subspace distances (queries are a probe batch, small by contract)
-    val qRows = queries.select(col(idCol).cast("long").as("qid"), col(vecCol))
-      .collect()
-    val lut: Map[(Long, Int, Long), Double] = qRows.flatMap { r =>
-      val qid = r.getLong(0)
-      val qv = r.getSeq[Number](1).map(_.doubleValue()).toArray
-      (0 until m).flatMap { j =>
-        val q = qv.slice(j * sub, (j + 1) * sub)
-        var qq = 0.0
-        var i = 0
-        while (i < sub) { qq += q(i) * q(i); i += 1 }
-        books(j).map { case (cid, cv) =>
-          var dot = 0.0; var cc = 0.0
-          i = 0
-          while (i < sub) { dot += q(i) * cv(i); cc += cv(i) * cv(i); i += 1 }
-          val d = java.math.BigDecimal.valueOf(qq - 2.0 * dot + cc)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-          ((qid, j, cid), d)
-        }
-      }
-    }.toMap
-    val adistUdf = udf { (qid: Long, codes: Seq[Long]) =>
-      var s = 0.0
-      var j = 0
-      while (j < codes.length) { s += lut((qid, j, codes(j))); j += 1 }
-      s
-    }
-    val qids = qRows.map(_.getLong(0)).toSeq.toDF("query_id")
+    val books = kmeansBooksLocal(corpus, idCol, vecCol, Seq((m, codesPerSub)), iters)
+    val (qids, adist) = adcScorer(queries, idCol, vecCol, books)
     val w = Window.partitionBy("query_id")
       .orderBy(col("adist").asc, col("neighbor_id").asc)
-    encoded
-      .crossJoin(broadcast(qids))
+    corpus.select(col(idCol).cast("long").as("neighbor_id"),
+        pqCodes(corpus.schema(vecCol).dataType, books, col(vecCol)).as("codes"))
+      .crossJoin(broadcast(qids.toSeq.toDF("query_id")))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adist", round(adistUdf(col("query_id"),
-        array((0 until m).map(j => col(s"c$j")): _*)), 6))
+      .withColumn("adist", round(adist(col("query_id"), col("codes")), 6))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("adist"),
         col("rank").cast("long").as("rank"))
   }
 
-  /** The PQ codebooks as a persistable frame (j, cid, cv): per
-    * subspace j, [[kmeansCentroidsLocal]] over the sliced corpus —
-    * q192's audited per-subspace build (shared 'ivf_' seed ordering).
-    * The centroid values are round-6dp Lloyd means (exact doubles), so
-    * a parquet round-trip is LOSSLESS and a probe-side LUT rebuilt
-    * from the persisted table is value-identical to the build-time
-    * one — the property that makes the codebook a standing index
-    * component rather than a per-query recomputation.
+  /** The PQ codebooks as a persistable frame (j, cid, cv): the m
+    * subspace books of [[pqTopK]], trained together by
+    * [[kmeansBooksLocal]] (shared 'ivf_' seed ordering, one Lloyd pass
+    * per round for every book). The centroid values are round-6dp
+    * Lloyd means (exact doubles), so a parquet round-trip is LOSSLESS
+    * and a probe-side LUT rebuilt from the persisted table is
+    * value-identical to the build-time one — the property that makes
+    * the codebook a standing index component rather than a per-query
+    * recomputation.
     */
   def pqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
                   m: Int, codesPerSub: Int, iters: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     require(m >= 1 && codesPerSub >= 1, s"need m, codes >= 1; got $m/$codesPerSub")
-    val dim = corpus.select(size(col(vecCol))).as[Int].head()
-    require(dim % m == 0, s"dim $dim must split into $m subspaces")
-    val sub = dim / m
-    parSubspaceBooks(corpus, idCol, vecCol, m, sub, codesPerSub, iters)
-      .zipWithIndex
-      .flatMap { case (book, j) =>
-        book.map { case (cid, cv) => (j.toLong, cid, cv) }
-      }.toSeq.toDF("j", "cid", "cv")
+    codebooksFrame(corpus.sparkSession,
+      kmeansBooksLocal(corpus, idCol, vecCol, Seq((m, codesPerSub)), iters))
   }
 
-  /** The m per-subspace [[kmeansCentroidsLocal]] builds, overlapped on
-    * a min(m, 8)-thread [[Shape.inParallel]] pool. Each subspace's
-    * build is the exact per-call computation the serial loop ran (same
-    * seed scan, same Lloyd iterations over its own slice), so the
-    * returned codebooks are bit-identical to the serial form's, in
-    * subspace order.
-    */
-  private def parSubspaceBooks(corpus: DataFrame, idCol: String,
-                               vecCol: String, m: Int, sub: Int,
-                               codesPerSub: Int,
-                               iters: Int): Array[Array[(Long, Array[Double])]] =
-    Shape.inParallel(math.min(m, 8))((0 until m).map { j => () =>
-      kmeansCentroidsLocal(
-        corpus.select(col(idCol).as("sid2"),
-          slice(col(vecCol), j * sub + 1, sub).as("sv")),
-        "sid2", "sv", codesPerSub, iters)
-    }).toArray
+  /** Driver-held subspace books as a [[pqCodebooks]] frame. */
+  private[graft] def codebooksFrame(spark: org.apache.spark.sql.SparkSession,
+                                    books: Seq[Book]): DataFrame = {
+    import spark.implicits._
+    books.zipWithIndex.flatMap { case (book, j) =>
+      book.map { case (cid, cv) => (j.toLong, cid, cv) }
+    }.toDF("j", "cid", "cv")
+  }
 
   /** Collect a [[pqCodebooks]] frame to the driver, indexed by
     * subspace: bounded at m × codes × (dim/m) doubles by construction.
     */
-  private def collectBooks(codebooks: DataFrame,
-                           m: Int): Array[Array[(Long, Array[Double])]] = {
+  private def collectBooks(codebooks: DataFrame, m: Int): Array[Book] = {
     val spark = codebooks.sparkSession
     import spark.implicits._
     val rows = codebooks.select(col("j").cast("long"), col("cid").cast("long"),
@@ -1078,71 +1075,62 @@ object Ann {
       rows.filter(_._1 == j).map(t => (t._2, t._3)).sortBy(_._1)).toArray
   }
 
-  /** Encode a corpus to PQ codes against PERSISTED codebooks: ONE
-    * map-only pass, m argmin UDFs over sliced columns ([[assignCidUdf]]
-    * — q192's exact HALF_UP-6 tie semantics). Returns
-    * (neighbor_id, codes array&lt;long&gt;) — m small codes per vector,
-    * the compressed representation the float corpus collapses to.
+  /** The PQ code array of `v`: code j is the [[assignCidUdf]] argmin of
+    * the j-th `dim/m` slice against book j (q192's exact HALF_UP-6 tie
+    * semantics) — m map-side UDF calls, no shuffle.
     */
-  def pqEncodeWith(corpus: DataFrame, idCol: String, vecCol: String,
-                   codebooks: DataFrame, m: Int): DataFrame = {
-    val books = collectBooks(codebooks, m)
-    require(books.forall(_.nonEmpty), "every subspace needs a codebook")
+  private def pqCodes(vecType: org.apache.spark.sql.types.DataType,
+                      books: Array[Book], v: Column): Column = {
+    require(books.nonEmpty && books.forall(_.nonEmpty),
+      "every subspace needs a codebook")
     val sub = books(0)(0)._2.length
-    val vecType = corpus.schema(vecCol).dataType
-    var enc = corpus.select(col(idCol).cast("long").as("neighbor_id"),
-      col(vecCol).as("v"))
-    for (j <- 0 until m)
-      enc = enc.withColumn(s"c$j",
-        assignCidUdf(vecType, books(j))(slice(col("v"), j * sub + 1, sub)))
-    enc.select(col("neighbor_id"),
-      array((0 until m).map(j => col(s"c$j")): _*).as("codes"))
+    array(books.indices.map(j =>
+      assignCidUdf(vecType, books(j))(slice(v, j * sub + 1, sub))): _*)
   }
 
-  /** IVF-PQ probe — the IVFADC system of Jégou et al. TPAMI 2011 §IV
-    * (without residual encoding): the coarse quantizer selects nProbe
-    * inverted lists per query (q207's probe argmin over the persisted
-    * centroid table), candidates come back as PQ CODES from the
-    * cid-partitioned coded lists (so a probe reads only its lists'
-    * files — dynamic partition pruning, and the lists hold m codes per
-    * vector, not floats), and scoring is q192's Asymmetric Distance
-    * Computation: per-query LUTs from the PERSISTED codebooks, approx
-    * distance = the FIXED-ORDER subspace sum, each entry HALF_UP-6 —
-    * engine-exact, oracle-replayable. The float corpus is touched by
-    * NO part of the probe: this is the compressed-corpus + pruned-scan
-    * composition production vector stores ship as their default
-    * (FAISS IVFPQ). Returns (query_id, neighbor_id, adist, rank).
-    *
-    * CONTRACT — bounded query set: the QUERIES frame is collected to
-    * the driver and its per-query LUTs (|queries| × m × codes doubles)
-    * ship inside the scoring UDF closure — the standard ADC shape; at
-    * any scale the query batch stays small (a probe batch, not a
-    * corpus). The coded lists MUST have been encoded with these same
-    * codebooks and m ([[pqEncodeWith]]); a mismatched code fails fast
-    * with an explicit message rather than an opaque lookup error.
+  /** Encode a corpus to PQ codes against PERSISTED codebooks: ONE
+    * map-only pass ([[pqCodes]]). Returns (neighbor_id, codes
+    * array&lt;long&gt;) — m small codes per vector, the compressed
+    * representation the float corpus collapses to.
     */
-  def ivfPqTopKProbe(queries: DataFrame, centroids: DataFrame,
-                     codedLists: DataFrame, codebooks: DataFrame,
-                     idCol: String, vecCol: String, k: Int, nProbe: Int,
-                     m: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val local = collectCentroids(centroids)
-    val cents = local.toSeq.toDF("cid", "cv")
-      .withColumn("cc", dot(col("cv"), col("cv")))
-    def cdist = round(col("vv") - lit(2.0) * dot(col("v"), col("cv")) + col("cc"), 6)
-    val w0 = Window.partitionBy("query_id").orderBy(col("d"), col("cid"))
-    val probes = queries
-      .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("v"))
-      .withColumn("vv", dot(col("v"), col("v")))
-      .crossJoin(broadcast(cents))
-      .withColumn("d", cdist)
-      .withColumn("rn", row_number().over(w0))
-      .filter(col("rn") <= nProbe)
-      .select(col("query_id"), col("cid"))
+  def pqEncodeWith(corpus: DataFrame, idCol: String, vecCol: String,
+                   codebooks: DataFrame, m: Int): DataFrame =
+    corpus.select(col(idCol).cast("long").as("neighbor_id"),
+      pqCodes(corpus.schema(vecCol).dataType, collectBooks(codebooks, m),
+        col(vecCol)).as("codes"))
 
-    val books = collectBooks(codebooks, m)
-    require(books.forall(_.nonEmpty), "every subspace needs a codebook")
+  /** The standing half of [[ivfPqTopKProbe]] as a buildable frame: every
+    * corpus vector filed on its nearest coarse centroid's list WITH its
+    * m PQ codes — (cid, neighbor_id, codes). One map-only corpus pass:
+    * the [[ivfListAssignments]] argmin and the [[pqEncodeWith]] codes
+    * are columns of the same projection, so the coded lists equal
+    * `ivfListAssignments ⋈ pqEncodeWith` on neighbor_id without
+    * building either. Persist it PARTITIONED BY cid (q230).
+    */
+  def ivfPqListAssignments(corpus: DataFrame, idCol: String, vecCol: String,
+                           centroids: DataFrame, codebooks: DataFrame,
+                           m: Int): DataFrame = {
+    val vecType = corpus.schema(vecCol).dataType
+    corpus.select(
+      assignCidUdf(vecType, collectCentroids(centroids))(col(vecCol)).as("cid"),
+      col(idCol).cast("long").as("neighbor_id"),
+      pqCodes(vecType, collectBooks(codebooks, m), col(vecCol)).as("codes"))
+  }
+
+  /** Asymmetric Distance Computation against driver-held PQ `books`:
+    * collects the QUERIES (a bounded probe batch), builds each query's
+    * m × codes table of HALF_UP-6-rounded exact subspace distances, and
+    * returns the query ids with a (query_id, codes) → distance UDF that
+    * sums the table entries left to right over subspaces — the fixed
+    * order the oracle replays as an addition chain. A code row whose
+    * arity or code ids do not match the books fails with an explicit
+    * message rather than an opaque lookup error.
+    */
+  private def adcScorer(queries: DataFrame, idCol: String, vecCol: String,
+                        books: Array[Book]): (Array[Long], UserDefinedFunction) = {
+    require(books.nonEmpty && books.forall(_.nonEmpty),
+      "every subspace needs a codebook")
+    val m = books.length
     val sub = books(0)(0)._2.length
     val qRows = queries.select(col(idCol).cast("long").as("qid"), col(vecCol))
       .collect()
@@ -1164,23 +1152,70 @@ object Ann {
         }
       }
     }.toMap
-    val adistUdf = udf { (qid: Long, codes: Seq[Long]) =>
+    val score = udf { (qid: Long, codes: Seq[Long]) =>
       if (codes.length != m)
         throw new IllegalArgumentException(
-          s"ivfPqTopKProbe: coded list row has ${codes.length} codes but " +
+          s"PQ scoring: code row has ${codes.length} codes but " +
             s"m=$m — codes do not match the supplied codebooks")
       var sacc = 0.0
       var j = 0
       while (j < codes.length) {
         sacc += lut.getOrElse((qid, j, codes(j)),
           throw new IllegalArgumentException(
-            s"ivfPqTopKProbe: code ${codes(j)} in subspace $j is absent " +
+            s"PQ scoring: code ${codes(j)} in subspace $j is absent " +
               "from the supplied codebooks — codes do not match the " +
               "codebooks they were encoded with"))
         j += 1
       }
       sacc
     }
+    (qRows.map(_.getLong(0)), score)
+  }
+
+  /** IVF-PQ probe — the IVFADC system of Jégou et al. TPAMI 2011 §IV
+    * (without residual encoding): the coarse quantizer selects nProbe
+    * inverted lists per query (q207's probe argmin over the persisted
+    * centroid table), candidates come back as PQ CODES from the
+    * cid-partitioned coded lists (so a probe reads only its lists'
+    * files — dynamic partition pruning, and the lists hold m codes per
+    * vector, not floats), and scoring is q192's Asymmetric Distance
+    * Computation ([[adcScorer]]): per-query LUTs from the PERSISTED
+    * codebooks, approx distance = the FIXED-ORDER subspace sum, each
+    * entry HALF_UP-6 — engine-exact, oracle-replayable. The float
+    * corpus is touched by NO part of the probe: this is the
+    * compressed-corpus + pruned-scan composition production vector
+    * stores ship as their default (FAISS IVFPQ). Returns
+    * (query_id, neighbor_id, adist, rank).
+    *
+    * CONTRACT — bounded query set: the QUERIES frame is collected to
+    * the driver and its per-query LUTs (|queries| × m × codes doubles)
+    * ship inside the scoring UDF closure — the standard ADC shape; at
+    * any scale the query batch stays small (a probe batch, not a
+    * corpus). The coded lists MUST have been encoded with these same
+    * codebooks and m ([[ivfPqListAssignments]], [[pqEncodeWith]]); a
+    * mismatched code fails fast with an explicit message rather than
+    * an opaque lookup error.
+    */
+  def ivfPqTopKProbe(queries: DataFrame, centroids: DataFrame,
+                     codedLists: DataFrame, codebooks: DataFrame,
+                     idCol: String, vecCol: String, k: Int, nProbe: Int,
+                     m: Int): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val local = collectCentroids(centroids)
+    val cents = local.toSeq.toDF("cid", "cv")
+      .withColumn("cc", dot(col("cv"), col("cv")))
+    def cdist = round(col("vv") - lit(2.0) * dot(col("v"), col("cv")) + col("cc"), 6)
+    val w0 = Window.partitionBy("query_id").orderBy(col("d"), col("cid"))
+    val probes = queries
+      .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("v"))
+      .withColumn("vv", dot(col("v"), col("v")))
+      .crossJoin(broadcast(cents))
+      .withColumn("d", cdist)
+      .withColumn("rn", row_number().over(w0))
+      .filter(col("rn") <= nProbe)
+      .select(col("query_id"), col("cid"))
+    val (_, adist) = adcScorer(queries, idCol, vecCol, collectBooks(codebooks, m))
     val w = Window.partitionBy("query_id")
       .orderBy(col("adist").asc, col("neighbor_id").asc)
     codedLists
@@ -1188,7 +1223,7 @@ object Ann {
         col("neighbor_id").cast("long").as("neighbor_id"), col("codes"))
       .join(broadcast(probes), Seq("cid"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adist", round(adistUdf(col("query_id"), col("codes")), 6))
+      .withColumn("adist", round(adist(col("query_id"), col("codes")), 6))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("adist"),

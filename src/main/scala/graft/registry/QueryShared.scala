@@ -277,6 +277,13 @@ private[graft] object QueryShared {
   private[graft] val PqQueryMax = 5L
   private[graft] val PqK = 5
 
+  /** The standing IVF index geometry of q207, q222 and q230: 8 coarse
+    * lists, and 2 Lloyd rounds for the coarse book and q230's PQ books
+    * alike (they train together, [[ivfPqIndexFixture]]).
+    */
+  private[graft] val IvfLists = 8
+  private[graft] val IvfIters = 2
+
   /** q193's sorted-neighborhood window and q194's join-size salt —
     * shared with the oracle SQL (q194 reuses the q138 CMS geometry).
     */
@@ -890,32 +897,42 @@ private[graft] object QueryShared {
                               e: DataFrame, tag: String = "ivf"): (DataFrame, DataFrame) = {
     val cents = persisted(s, d, s"${tag}_centroids.parquet") {
       operators.Ann.kmeansCentroids(e, "vec_id", "embedding",
-        nLists = 8, iters = 2)
+        nLists = IvfLists, iters = IvfIters)
     }
     (cents, persisted(s, d, s"${tag}_lists.parquet", Some("cid")) {
       operators.Ann.ivfListAssignments(e, "vec_id", "embedding", cents)
     })
   }
 
-  /** q230's IVF-PQ index: the q207 coarse index extended with q192's
-    * per-subspace PQ codebooks and the coded (cid, neighbor_id, codes)
-    * lists, partitioned by cid — a probe reads only its nProbe lists,
-    * m codes per vector instead of floats. Returns
+  /** q230's IVF-PQ index: q207's coarse centroids, q192's per-subspace
+    * PQ codebooks and the coded (cid, neighbor_id, codes) lists,
+    * partitioned by cid — a probe reads only its nProbe lists, m codes
+    * per vector instead of floats. Returns
     * (centroids, codebooks, codedLists).
+    *
+    * One Lloyd pass per round trains the coarse book and the m PQ books
+    * together ([[operators.Ann.kmeansBooksLocal]]); that one lazy value
+    * feeds whichever of `ivf_centroids` and `ivfpq_books` is missing, and
+    * the coarse book is bit-identical to q207's one-book build, so the
+    * shared `ivf_centroids` fixture is the same whichever query builds it
+    * first. The coded lists are one map-only pass over `e` against the
+    * persisted centroids and books ([[operators.Ann.ivfPqListAssignments]]);
+    * q207's `ivf_lists` is not built.
     */
   private[graft] def ivfPqIndexFixture(s: SparkSession, d: String,
                                 e: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val (cents, lists) = ivfIndexFixture(s, d, e)
+    import s.implicits._
+    lazy val trained = operators.Ann.kmeansBooksLocal(e, "vec_id", "embedding",
+      Seq((1, IvfLists), (PqM, PqCodes)), iters = IvfIters)
+    val cents = persisted(s, d, "ivf_centroids.parquet") {
+      trained.head.toSeq.toDF("cid", "cv")
+    }
     val books = persisted(s, d, "ivfpq_books.parquet") {
-      operators.Ann.pqCodebooks(e, "vec_id", "embedding", PqM, PqCodes)
+      operators.Ann.codebooksFrame(s, trained.tail)
     }
     (cents, books, persisted(s, d, "ivfpq_lists.parquet", Some("cid")) {
-      val codes = operators.Ann.pqEncodeWith(e, "vec_id", "embedding",
+      operators.Ann.ivfPqListAssignments(e, "vec_id", "embedding", cents,
         books, PqM)
-      lists.select(col("cid"),
-          col("neighbor_id").cast("long").as("neighbor_id"))
-        .join(codes, Seq("neighbor_id"))
-        .select("cid", "neighbor_id", "codes")
     })
   }
 
