@@ -221,18 +221,10 @@ object Shape {
     * deterministic — only wall-clock changes. An exception from either
     * side propagates.
     */
-  def inParallel[A, B](a: => A, b: => B): (A, B) =
-    onPool(2) { implicit ec => Future(a).zip(Future(b)) }
-
-  /** [[inParallel]] over any number of independent tasks on a pool of
-    * `threads` driver threads; results come back in argument order.
-    */
-  def inParallel[A](threads: Int)(tasks: Seq[() => A]): Seq[A] =
-    onPool(threads) { implicit ec => Future.traverse(tasks)(t => Future(t())) }
-
-  private def onPool[T](threads: Int)(run: ExecutionContext => Future[T]): T = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    try Await.result(run(ExecutionContext.fromExecutor(pool)), Duration.Inf)
+  def inParallel[A, B](a: => A, b: => B): (A, B) = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try Await.result(Future(a).zip(Future(b)), Duration.Inf)
     finally pool.shutdown()
   }
 

@@ -141,6 +141,50 @@ object Dedup {
       .select(col("a"), explode(slice(col("lst"), col("i") + lit(2), size(col("lst")))).as("b"))
       .filter(col("a.id") =!= col("b.id"))
 
+  /** The one posting-list build of every candidate generator: `keyed`
+    * grouped by `keys` into `lst`, the sorted array of `members` structs
+    * whose first member is the doc id ([[postingPairs]] and
+    * [[probePostings]] read it as `id`). `minSize` 2 is the self-join
+    * floor (a singleton list pairs with nothing); 1 keeps every list, as
+    * a standing index must, since a singleton corpus bucket still
+    * matches an arriving batch doc. `cap` is the skew guard: a list of m
+    * members emits m(m-1)/2 self-join pairs, so longer lists drop, a
+    * free filter on list size; `Int.MaxValue` disables it.
+    */
+  private def postingLists(keyed: DataFrame, keys: Seq[String], members: Seq[String],
+                           minSize: Int, cap: Int): DataFrame = {
+    val lists = keyed.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_list(struct(members.map(col): _*))).as("lst"))
+    val n = size(col("lst"))
+    val floor = if (minSize > 1) Some(n >= minSize) else None
+    val ceiling = if (cap < Int.MaxValue) Some(n <= cap) else None
+    (floor ++ ceiling).reduceOption(_ && _).fold(lists)(lists.filter)
+  }
+
+  /** A batch probing a standing [[postingLists]] index: `keyed` rows
+    * (id, payload..., keys...) equi-join the postings on `keys`, each
+    * matched list explodes to one row per corpus member `c`, and
+    * same-id pairs drop (a batch row re-using a corpus id is an upsert,
+    * not a duplicate). Returns keyed's non-key columns plus `c`; only
+    * the batch side shuffles, and the family verifies and dedups its
+    * own pairs (one pair can meet in several buckets).
+    */
+  private def probePostings(keyed: DataFrame, postings: DataFrame,
+                            keys: Seq[String]): DataFrame =
+    keyed.join(postings, keys)
+      .select(keyed.columns.filterNot(keys.contains).map(col) :+
+        explode(col("lst")).as("c"): _*)
+      .filter(col("id") =!= col("c.id"))
+
+  /** `df`'s columns plus one row per entry of `entries`, a struct per
+    * candidate key whose fields become columns — the map-side key
+    * explode of every banded family ([[bandKeyed]], [[hammingKeyed]],
+    * [[multiIndexKeyed]]).
+    */
+  private def explodeKeys(df: DataFrame, entries: Seq[Column]): DataFrame =
+    df.select(df.columns.map(col) :+ explode(array(entries: _*)).as("e"): _*)
+      .select(df.columns.map(col) :+ col("e.*"): _*)
+
   /** Candidate pairs sharing >= 1 shingle, with exact Jaccard similarity
     * over distinct k-shingles. Inverted-index shape: ONE shuffle keyed by
     * the shingle hash builds the posting lists, so shuffle volume is
@@ -209,50 +253,31 @@ object Dedup {
     // engines), so any collision is seen identically — results match by
     // construction, not by luck.
     //
-    // Scale guard (ON by default, maxDocFreq=10000): a shingle shared by
-    // f docs yields f(f-1)/2 candidate pairs — at corpus scale,
-    // ubiquitous "stop shingles" ("in the", "of the") dominate
-    // quadratically while carrying no near-dup signal. In posting-list
-    // form the guard is a FREE filter on list size (= doc frequency):
-    // no second aggregation, no anti-join. n_common then undercounts by
-    // at most the dropped shingles, so reported Jaccard is a lower
-    // bound. 10⁴ keeps any genuine duplicate cluster smaller than 10⁴
-    // docs fully intact while capping the worst key at ~5·10⁷ pairs
-    // (one AQE-splittable task). Pass Int.MaxValue to disable.
-    val posting = exploded
-      .groupBy("h")
-      .agg(sort_array(collect_list(struct(col("id"), col("n_sh")))).as("lst"))
-      .filter(size(col("lst")) >= 2 &&
-        (if (maxDocFreq == Int.MaxValue) lit(true) else size(col("lst")) <= maxDocFreq))
-    postingPairs(posting)
+    // Scale guard (ON by default, maxDocFreq=10000): ubiquitous "stop
+    // shingles" ("in the", "of the") dominate the pair count
+    // quadratically while carrying no near-dup signal. n_common then
+    // undercounts by at most the dropped shingles, so reported Jaccard
+    // is a lower bound. 10⁴ keeps any genuine duplicate cluster smaller
+    // than 10⁴ docs fully intact while capping the worst key at ~5·10⁷
+    // pairs (one AQE-splittable task).
+    postingPairs(postingLists(exploded, Seq("h"), Seq("id", "n_sh"), 2, maxDocFreq))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("n_common"),
         max(col("a.n_sh")).as("n_a"), max(col("b.n_sh")).as("n_b"))
   }
 
-  /** MinHash signature: `numHashes` permutations h_i(x) = (a_i*x + b_i)
-    * mod p over shingle hashes, min per permutation — exploded to one
-    * row per (id, hash_idx, min_hash) from [[minHashSignature]]'s
-    * per-row array (zero-shuffle map work; only numHashes rows per doc
-    * leave the stage).
-    */
-  def minHashes(docs: DataFrame, idCol: String, textCol: String,
-                k: Int, numHashes: Int): DataFrame =
-    minHashSignature(docs, idCol, textCol, k, numHashes)
-      .select(col("id"), posexplode(col("sig")).as(Seq("hash_idx", "min_hash")))
-
-  /** Per-doc MinHash signature as ONE array column `sig` (element i =
-    * min-hash of permutation i) — pure map work, nothing leaves the
-    * stage. 28-bit shingle hashes + small affine coefficients keep
+  /** Per-doc MinHash signature as ONE array column `sig`: element i is
+    * permutation i's min-hash, h_i(x) = (a_i*x + b_i) mod p over the
+    * shingle hashes — pure map work, nothing leaves the stage. 28-bit shingle hashes + small affine coefficients keep
     * (a*h+b) far below 2^63: the JVM would silently wrap but DuckDB
     * raises on BIGINT overflow, so oracle parity requires staying in
     * range.
     */
   def minHashSignature(docs: DataFrame, idCol: String, textCol: String,
                        k: Int, numHashes: Int): DataFrame = {
-    // NO Shape.spread here (r16, measured): q31 0.53→0.70, q278
-    // 1.40→1.71 at sf0.1 — the spread exchange cost more than the
-    // signature UDF's parallelism bought on every minhash caller
+    // NO Shape.spread: the spread exchange costs more than the
+    // signature UDF's parallelism buys on every minhash caller
+    // (measured with it at sf0.1: q31 0.53→0.70 s, q278 1.40→1.71 s)
     val P = 2147483647L // 2^31-1, Mersenne prime
     // Single UDF pass: shingle → 28-bit md5 hash → numHashes mins. The
     // hash values are identical to the tokenHash32/pmod expression form
@@ -291,21 +316,17 @@ object Dedup {
 
   /** One row per (id, sig, band, band_key): the signature array split
     * into `bands` map-side band fingerprints (md5 of the band's
-    * in-order min-hashes). Shared by the self-join ([[minHashLsh]]) and
-    * cross-batch ([[minHashLshAgainst]]) candidate generators.
+    * in-order min-hashes). Shared by the self-join ([[minHashLsh]]),
+    * the index build ([[minHashBandPostings]], its upsert) and the
+    * probe ([[minHashLshJoinPostings]]).
     */
-  private def bandKeyed(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    val bandEntries = (0 until bands).map { b =>
+  private def bandKeyed(sig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
+    explodeKeys(sig, (0 until bands).map { b =>
       struct(lit(b).as("band"),
         md5(concat_ws(",",
           slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)
             .cast("array<string>"))).as("band_key"))
-    }
-    sig.select(col("id"), col("sig"),
-        explode(array(bandEntries: _*)).as("e"))
-      .select(col("id"), col("sig"),
-        col("e.band").as("band"), col("e.band_key").as("band_key"))
-  }
+    })
 
   /** MinHash + LSH banding: signatures are split into `bands` bands of
     * `rowsPerBand` hashes; docs agreeing on ALL hashes of any band become
@@ -327,41 +348,34 @@ object Dedup {
     val sig = minHashSignature(docs, idCol, textCol, k, numHashes)
 
     // band fingerprint = md5 of the in-order min-hashes of the band's
-    // slice of the signature array — map-side (the former exploded
-    // groupBy(id, band) + collect_list exchange is gone entirely). The
-    // full signature rides along through the band join so the verify
-    // step needs NO further joins, and the two join sides are the same
-    // subplan, so the signature stage is computed once (ReuseExchange).
+    // slice of the signature array, computed map-side; the full
+    // signature rides along in the posting lists, so the verify step
+    // needs NO further joins
     val bandKeys = bandKeyed(sig, bands, rowsPerBand)
 
-    // Posting-list candidate generation (see postingPairs): ONE shuffle
-    // on (band, band_key) builds the bucket lists and the signature UDF
-    // runs once — the former self-equi-join planned the whole signature
-    // stage per side. Scale guard (ON by default, maxBucketSize=10000):
-    // a band bucket of m docs emits m(m-1)/2 candidates — a viral
-    // duplicate cluster makes one bucket quadratic. The guard is a free
-    // filter on bucket-list size; the cluster's pairs are usually still
-    // found via its other (smaller) band buckets, but recall is no
-    // longer guaranteed above the cap. Pass Int.MaxValue to disable.
-    val posting = bandKeys
-      .groupBy("band", "band_key")
-      .agg(sort_array(collect_list(struct(col("id"), col("sig")))).as("lst"))
-      .filter(size(col("lst")) >= 2 &&
-        (if (maxBucketSize == Int.MaxValue) lit(true) else size(col("lst")) <= maxBucketSize))
-    // Pairs colliding in >=1 band, deduped by the pair groupBy (first()
-    // is safe: a doc's signature is identical on every matching row).
-    // Estimated Jaccard = fraction of agreeing signature positions,
-    // a per-row zip_with fold over the two carried sig arrays.
-    postingPairs(posting)
+    // Posting-list candidate generation: ONE shuffle on (band,
+    // band_key) and the signature UDF runs once. Above the bucket cap
+    // (a viral duplicate cluster) the cluster's pairs are usually still
+    // found via its other, smaller band buckets, but recall is no
+    // longer guaranteed. Pairs colliding in >=1 band are deduped by the
+    // pair groupBy (first() is safe: a doc's signature is identical on
+    // every matching row); estimated Jaccard = fraction of agreeing
+    // signature positions, a per-row zip_with fold.
+    postingPairs(postingLists(bandKeys, Seq("band", "band_key"), Seq("id", "sig"), 2,
+        maxBucketSize))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(first(col("a.sig")).as("sig_a"), first(col("b.sig")).as("sig_b"))
       .select(col("id_a"), col("id_b"),
-        round(aggregate(
-          zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => when(x === y, 1.0).otherwise(0.0)),
-          lit(0.0), (acc, v) => acc + v) / numHashes, 4).as("est_jaccard"))
+        sigAgreement(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"))
       .filter(col("est_jaccard") >= minEstJaccard)
   }
+
+  /** Estimated Jaccard of two MinHash signatures: the fraction of
+    * agreeing positions (a per-row zip_with fold), rounded to 4 places.
+    */
+  private def sigAgreement(a: Column, b: Column, numHashes: Int): Column =
+    round(aggregate(zip_with(a, b, (x, y) => when(x === y, 1.0).otherwise(0.0)),
+      lit(0.0), (acc, v) => acc + v) / numHashes, 4)
 
   /** INCREMENTAL near-dup: today's batch against the standing corpus —
     * the daily-ingest shape every production dedup runs, where
@@ -402,13 +416,10 @@ object Dedup {
     require(bands >= 1 && rowsPerBand >= 1,
       s"bands/rowsPerBand must be >= 1, got $bands/$rowsPerBand")
     require(maxBucketSize >= 1, s"maxBucketSize must be >= 1, got $maxBucketSize")
-    bandKeyed(
-        minHashSignature(corpus, idCol, textCol, k, bands * rowsPerBand),
-        bands, rowsPerBand)
-      .groupBy("band", "band_key")
-      .agg(sort_array(collect_list(struct(col("id"), col("sig")))).as("lst"))
-      .filter(if (maxBucketSize == Int.MaxValue) lit(true)
-              else size(col("lst")) <= maxBucketSize)
+    postingLists(
+      bandKeyed(minHashSignature(corpus, idCol, textCol, k, bands * rowsPerBand),
+        bands, rowsPerBand),
+      Seq("band", "band_key"), Seq("id", "sig"), 1, maxBucketSize)
   }
 
   /** Index MAINTENANCE for the LSH band index: merge a batch INTO a
@@ -431,11 +442,11 @@ object Dedup {
                                 k: Int, bands: Int, rowsPerBand: Int): DataFrame = {
     require(bands >= 1 && rowsPerBand >= 1,
       s"bands/rowsPerBand must be >= 1, got $bands/$rowsPerBand")
-    val nb = bandKeyed(
-      minHashSignature(batch, idCol, textCol, k, bands * rowsPerBand),
-      bands, rowsPerBand)
-    val batchLists = nb.groupBy("band", "band_key")
-      .agg(sort_array(collect_list(struct(col("id"), col("sig")))).as("new_lst"))
+    val batchLists = postingLists(
+        bandKeyed(minHashSignature(batch, idCol, textCol, k, bands * rowsPerBand),
+          bands, rowsPerBand),
+        Seq("band", "band_key"), Seq("id", "sig"), 1, Int.MaxValue)
+      .withColumnRenamed("lst", "new_lst")
     // Two joins instead of one right-outer: Spark cannot broadcast the
     // RIGHT side of a right outer join (build-left only — the hint is
     // ignored and the INDEX side would shuffle), but a broadcast LEFT
@@ -501,19 +512,13 @@ object Dedup {
     val numHashes = bands * rowsPerBand
     val nb = bandKeyed(
       minHashSignature(newDocs, idCol, textCol, k, numHashes), bands, rowsPerBand)
-    val cand = nb.join(postings, Seq("band", "band_key"))
+    probePostings(nb, postings, Seq("band", "band_key"))
       .select(col("id").as("new_id"), col("sig").as("sig_n"),
-        explode(col("lst")).as("c"))
-      .select(col("new_id"), col("sig_n"),
         col("c.id").as("corpus_id"), col("c.sig").as("sig_c"))
-      .filter(col("new_id") =!= col("corpus_id"))
-    cand.groupBy("new_id", "corpus_id")
+      .groupBy("new_id", "corpus_id")
       .agg(first(col("sig_n")).as("sig_n"), first(col("sig_c")).as("sig_c"))
       .select(col("new_id"), col("corpus_id"),
-        round(aggregate(
-          zip_with(col("sig_n"), col("sig_c"),
-            (x, y) => when(x === y, 1.0).otherwise(0.0)),
-          lit(0.0), (acc, v) => acc + v) / numHashes, 4).as("est_jaccard"))
+        sigAgreement(col("sig_n"), col("sig_c"), numHashes).as("est_jaccard"))
       .filter(col("est_jaccard") >= minEstJaccard)
   }
 
@@ -545,9 +550,10 @@ object Dedup {
       while (b < nBits) { if (votes(b) > 0) s |= 1L << b; b += 1 }
       s
     }
-    // NO Shape.spread here (r16, measured): the hash/vote UDF is cheap
-    // enough that the spread exchange cost exceeded the parallelism win
-    // on every simhash caller (q63 0.83→1.23, q84 0.52→0.93 at sf0.1)
+    // NO Shape.spread: the hash/vote UDF is cheap enough that the
+    // spread exchange costs more than its parallelism buys on every
+    // simhash caller (measured with it at sf0.1: q63 0.83→1.23 s, q84
+    // 0.52→0.93 s)
     docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) > 0)
       .select(col("id"), f(col("toks")).as("simhash"))
@@ -557,15 +563,10 @@ object Dedup {
     * Hamming-0 case, one equi-join). For Hamming<=d at scale, use
     * [[simHashNearDup]] — same join shape, d+1 band keys.
     */
-  def simHashDup(docs: DataFrame, idCol: String, textCol: String, nBits: Int = 16): DataFrame = {
-    val shs = simHash(docs, idCol, textCol, nBits)
-    // posting-list form (one simhash pass, one shuffle; see postingPairs)
-    val posting = shs.groupBy("simhash")
-      .agg(sort_array(collect_list(struct(col("id"), col("simhash")))).as("lst"))
-      .filter(size(col("lst")) >= 2)
-    postingPairs(posting)
+  def simHashDup(docs: DataFrame, idCol: String, textCol: String, nBits: Int = 16): DataFrame =
+    postingPairs(postingLists(simHash(docs, idCol, textCol, nBits), Seq("simhash"),
+        Seq("id", "simhash"), 2, Int.MaxValue))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("a.simhash").as("simhash"))
-  }
 
   /** Bit-band boundaries for Hamming<=d banding: maxHamming+1 chunks
     * covering nBits, the first (nBits % chunks) chunks one bit wider.
@@ -614,27 +615,9 @@ object Dedup {
                      nBits: Int, maxHamming: Int,
                      maxBucketSize: Int = 10000): DataFrame = {
     require(maxBucketSize >= 1, s"maxBucketSize must be >= 1, got $maxBucketSize")
-    val shs = hashed.select(col(idCol).as("id"), col(hashCol).as("simhash"))
-    val bandCols = simHashBands(nBits, maxHamming).map { case (i, start, len) =>
-      struct(lit(i).as("chunk"),
-        shiftright(col("simhash"), start).bitwiseAND(lit((1L << len) - 1)).as("key"))
-    }
-    val banded = shs.select(col("id"), col("simhash"),
-        explode(array(bandCols: _*)).as("e"))
-      .select(col("id"), col("simhash"),
-        col("e.chunk").as("chunk"), col("e.key").as("key"))
-    // posting-list form: simhash UDF runs once; bucket cap = size filter
-    val posting = banded
-      .groupBy("chunk", "key")
-      .agg(sort_array(collect_list(struct(col("id"), col("simhash")))).as("lst"))
-      .filter(size(col("lst")) >= 2 &&
-        (if (maxBucketSize == Int.MaxValue) lit(true) else size(col("lst")) <= maxBucketSize))
-    postingPairs(posting)
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(first(col("a.simhash")).as("ha"), first(col("b.simhash")).as("hb"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    postingPairs(postingLists(hammingKeyed(hashed, idCol, hashCol, nBits, maxHamming),
+        Seq("chunk", "key"), Seq("id", "simhash"), 2, maxBucketSize))
+      .transform(hammingVerify(maxHamming))
   }
 
   /** The standing half of [[hammingNearDup]] as a persistable index:
@@ -647,19 +630,9 @@ object Dedup {
     * [[hammingJoinPostings]].
     */
   def hammingBandPostings(hashed: DataFrame, idCol: String, hashCol: String,
-                          nBits: Int, maxHamming: Int): DataFrame = {
-    val shs = hashed.select(col(idCol).as("id"), col(hashCol).as("simhash"))
-    val bandCols = simHashBands(nBits, maxHamming).map { case (i, start, len) =>
-      struct(lit(i).as("chunk"),
-        shiftright(col("simhash"), start).bitwiseAND(lit((1L << len) - 1)).as("key"))
-    }
-    shs.select(col("id"), col("simhash"),
-        explode(array(bandCols: _*)).as("e"))
-      .select(col("id"), col("simhash"),
-        col("e.chunk").as("chunk"), col("e.key").as("key"))
-      .groupBy("chunk", "key")
-      .agg(sort_array(collect_list(struct(col("id"), col("simhash")))).as("lst"))
-  }
+                          nBits: Int, maxHamming: Int): DataFrame =
+    postingLists(hammingKeyed(hashed, idCol, hashCol, nBits, maxHamming),
+      Seq("chunk", "key"), Seq("id", "simhash"), 1, Int.MaxValue)
 
   /** Batch-vs-corpus Hamming ≤ d near-dup against a PERSISTED
     * [[hammingBandPostings]] index: only the BATCH side bands and
@@ -674,24 +647,37 @@ object Dedup {
     */
   def hammingJoinPostings(batchHashed: DataFrame, postings: DataFrame,
                           idCol: String, hashCol: String,
-                          nBits: Int, maxHamming: Int): DataFrame = {
-    val shs = batchHashed.select(col(idCol).as("bid"), col(hashCol).as("bh"))
-    val bandCols = simHashBands(nBits, maxHamming).map { case (i, start, len) =>
-      struct(lit(i).as("chunk"),
-        shiftright(col("bh"), start).bitwiseAND(lit((1L << len) - 1)).as("key"))
-    }
-    shs.select(col("bid"), col("bh"), explode(array(bandCols: _*)).as("e"))
-      .select(col("bid"), col("bh"),
-        col("e.chunk").as("chunk"), col("e.key").as("key"))
-      .join(postings, Seq("chunk", "key"))
-      .select(col("bid"), col("bh"), explode(col("lst")).as("m"))
-      .filter(col("bid") =!= col("m.id"))
-      .groupBy(col("bid").as("id_a"), col("m.id").as("id_b"))
-      .agg(first(col("bh")).as("ha"), first(col("m.simhash")).as("hb"))
+                          nBits: Int, maxHamming: Int): DataFrame =
+    probePostings(hammingKeyed(batchHashed, idCol, hashCol, nBits, maxHamming),
+        postings, Seq("chunk", "key"))
+      .groupBy(col("id").as("id_a"), col("c.id").as("id_b"))
+      .agg(first(col("simhash")).as("ha"), first(col("c.simhash")).as("hb"))
       .select(col("id_a"), col("id_b"),
         bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-  }
+
+  /** The exact verify of the Hamming self-joins: posting pairs (a, b)
+    * of (id, simhash) members become (id_a, id_b, hamming), each pair
+    * once however many buckets it met in, within `maxHamming`.
+    */
+  private def hammingVerify(maxHamming: Int)(pairs: DataFrame): DataFrame =
+    pairs.groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .agg(first(col("a.simhash")).as("ha"), first(col("b.simhash")).as("hb"))
+      .select(col("id_a"), col("id_b"),
+        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long").as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+
+  /** (id, simhash, chunk, key): each `hashCol` fingerprint keyed d+1
+    * ways on its [[simHashBands]] chunks — the map-side explode of the
+    * Hamming self-join, index build and probe.
+    */
+  private def hammingKeyed(hashed: DataFrame, idCol: String, hashCol: String,
+                           nBits: Int, maxHamming: Int): DataFrame =
+    explodeKeys(hashed.select(col(idCol).as("id"), col(hashCol).as("simhash")),
+      simHashBands(nBits, maxHamming).map { case (i, start, len) =>
+        struct(lit(i).as("chunk"),
+          shiftright(col("simhash"), start).bitwiseAND(lit((1L << len) - 1)).as("key"))
+      })
 
   /** Multi-index tables for Hamming<=d banding (the generalization of
     * [[simHashBands]] that keeps keys WIDE as d grows — the approach of
@@ -753,17 +739,9 @@ object Dedup {
                           maxBucketSize: Int = 10000): DataFrame = {
     val keyed = multiIndexKeyed(simHash(docs, idCol, textCol, nBits),
       nBits, maxHamming, nBlocks)
-    val posting = keyed
-      .groupBy("tbl", "key")
-      .agg(sort_array(collect_list(struct(col("id"), col("simhash")))).as("lst"))
-      .filter(size(col("lst")) >= 2 &&
-        (if (maxBucketSize == Int.MaxValue) lit(true) else size(col("lst")) <= maxBucketSize))
-    postingPairs(posting)
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(first(col("a.simhash")).as("ha"), first(col("b.simhash")).as("hb"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    postingPairs(postingLists(keyed, Seq("tbl", "key"), Seq("id", "simhash"), 2,
+        maxBucketSize))
+      .transform(hammingVerify(maxHamming))
   }
 
   /** Each (id, simhash) row keyed C(nBlocks, maxHamming) ways on its
@@ -772,43 +750,21 @@ object Dedup {
     * batch-vs-corpus forms below.
     */
   private def multiIndexKeyed(shs: DataFrame, nBits: Int,
-                              maxHamming: Int, nBlocks: Int): DataFrame = {
-    val tableCols = simHashMultiTables(nBits, nBlocks, maxHamming).map {
+                              maxHamming: Int, nBlocks: Int): DataFrame =
+    explodeKeys(shs, simHashMultiTables(nBits, nBlocks, maxHamming).map {
       case (t, blocks) =>
         struct(lit(t).as("tbl"), multiTableKey(col("simhash"), blocks).as("key"))
-    }
-    shs.select(col("id"), col("simhash"),
-        explode(array(tableCols: _*)).as("e"))
-      .select(col("id"), col("simhash"),
-        col("e.tbl").as("tbl"), col("e.key").as("key"))
-  }
+    })
 
-  /** Incremental SimHash near-dup: a new batch against a standing
-    * corpus (the [[minHashLshAgainst]] pattern applied to the
-    * multi-index SimHash family) — the corpus is keyed into capped
-    * (tbl, key, postings) lists and only the BATCH side is exploded
-    * against them, so ingest shuffles the batch plus the matched
-    * postings, never the corpus against itself. Exact-recall guarantee
-    * is [[simHashNearDupMulti]]'s, per bucket cap.
-    */
-  def simHashNearDupAgainst(batch: DataFrame, corpus: DataFrame,
-                            idCol: String, textCol: String,
-                            nBits: Int = 63, maxHamming: Int = 3,
-                            nBlocks: Int = 6,
-                            maxBucketSize: Int = 10000): DataFrame =
-    simHashJoinPostings(batch,
-      simHashMultiIndexPostings(corpus, idCol, textCol, nBits, maxHamming,
-        nBlocks, maxBucketSize),
-      idCol, textCol, nBits, maxHamming, nBlocks)
-
-  /** The corpus side of [[simHashNearDupAgainst]] as a standalone
-    * buildable frame — (tbl, key, lst: array<struct<id, simhash>>)
-    * capped multi-index postings. In an ingest pipeline this IS the
-    * persisted standing SimHash index (write it once, parquet it, and
-    * each batch pays only its own hashing + the key equi-join — q208);
-    * the inline form rebuilds it per call. Unlike the self-join form
-    * there is no size>=2 floor: a singleton corpus bucket still
-    * matches a batch doc.
+  /** The standing SimHash index for incremental near-dup (the
+    * [[minHashBandPostings]] pattern applied to the multi-index family)
+    * — (tbl, key, lst: array<struct<id, simhash>>) capped multi-index
+    * postings, probed per batch by [[simHashJoinPostings]], so ingest
+    * shuffles the batch plus the matched postings, never the corpus
+    * against itself (q208 persists it). Unlike the self-join form there
+    * is no size>=2 floor: a singleton corpus bucket still matches a
+    * batch doc. Exact recall is [[simHashNearDupMulti]]'s, per bucket
+    * cap.
     */
   def simHashMultiIndexPostings(corpus: DataFrame, idCol: String,
                                 textCol: String,
@@ -816,15 +772,12 @@ object Dedup {
                                 nBlocks: Int = 6,
                                 maxBucketSize: Int = 10000): DataFrame = {
     require(maxBucketSize >= 1, s"maxBucketSize must be >= 1, got $maxBucketSize")
-    multiIndexKeyed(simHash(corpus, idCol, textCol, nBits),
-        nBits, maxHamming, nBlocks)
-      .groupBy("tbl", "key")
-      .agg(sort_array(collect_list(struct(col("id"), col("simhash")))).as("lst"))
-      .filter(if (maxBucketSize == Int.MaxValue) lit(true)
-              else size(col("lst")) <= maxBucketSize)
+    postingLists(multiIndexKeyed(simHash(corpus, idCol, textCol, nBits),
+        nBits, maxHamming, nBlocks),
+      Seq("tbl", "key"), Seq("id", "simhash"), 1, maxBucketSize)
   }
 
-  /** [[simHashNearDupAgainst]] against a prebuilt (possibly
+  /** A batch against a prebuilt (possibly
     * parquet-persisted) [[simHashMultiIndexPostings]] frame. The
     * nBits/maxHamming/nBlocks parameters MUST match the ones the
     * postings were built with (the table keys are a pure per-doc
@@ -839,12 +792,9 @@ object Dedup {
                           nBlocks: Int): DataFrame = {
     val keyed = multiIndexKeyed(simHash(batch, idCol, textCol, nBits),
       nBits, maxHamming, nBlocks)
-    keyed.join(postings, Seq("tbl", "key"))
+    probePostings(keyed, postings, Seq("tbl", "key"))
       .select(col("id").as("new_id"), col("simhash").as("hn"),
-        explode(col("lst")).as("c"))
-      .select(col("new_id"), col("hn"),
         col("c.id").as("corpus_id"), col("c.simhash").as("hc"))
-      .filter(col("new_id") =!= col("corpus_id"))
       .groupBy("new_id", "corpus_id")
       .agg(first(col("hn")).as("hn"), first(col("hc")).as("hc"))
       .select(col("new_id"), col("corpus_id"),
@@ -944,13 +894,12 @@ object Dedup {
         coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).first()
 
     // Checkpoint the PAIR PROJECTION once and derive nodes and edges
-    // from it: nodes and edges were two separate eager checkpoints, so
-    // the upstream pair generation (a simhash/SymSpell candidate
-    // pipeline for every caller) executed TWICE — separate actions get
-    // no exchange reuse (r16, guide §1.2 "don't compute things you
-    // throw away"; measured one full pair-gen job chain removed per
-    // caller). `nodes` stays a lazy derivation: it is consumed exactly
-    // once by the final star join, so its distinct runs once either way.
+    // from it, so the upstream pair generation (a simhash/SymSpell
+    // candidate pipeline for every caller) runs once: two separate
+    // eager checkpoints get no exchange reuse and cost one full
+    // pair-gen job chain more per caller. `nodes` stays a lazy
+    // derivation: it is consumed exactly once by the final star join,
+    // so its distinct runs once either way.
     val m = pairs.select(col(aCol).as("u"), col(bCol).as("v")).materialized
     val nodes = m.select(col("u").as("node"))
       .unionAll(m.select(col("v").as("node"))).distinct()
@@ -1034,12 +983,8 @@ object Dedup {
                     maxDocFreq: Int = 10000): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     require(maxDocFreq >= 1, s"maxDocFreq must be >= 1, got $maxDocFreq")
-    val posting = winnowFingerprints(docs, idCol, textCol, k, w)
-      .groupBy("fp")
-      .agg(sort_array(collect_list(struct(col("id")))).as("lst"))
-      .filter(size(col("lst")) >= 2 &&
-        (if (maxDocFreq == Int.MaxValue) lit(true) else size(col("lst")) <= maxDocFreq))
-    postingPairs(posting)
+    postingPairs(postingLists(winnowFingerprints(docs, idCol, textCol, k, w),
+        Seq("fp"), Seq("id"), 2, maxDocFreq))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
@@ -1061,12 +1006,8 @@ object Dedup {
       col(idCol).as("id"), col(vecCol).as("v"),
       VectorFunctions.lshBucket(col(vecCol), nBits, dim).as("bucket"),
       VectorFunctions.norm(col(vecCol)).as("nrm"))
-    val posting = bucketed
-      .groupBy("bucket")
-      .agg(sort_array(collect_list(struct(col("id"), col("v"), col("nrm")))).as("lst"))
-      .filter(size(col("lst")) >= 2)
     val nprod = col("a.nrm") * col("b.nrm")
-    postingPairs(posting)
+    postingPairs(postingLists(bucketed, Seq("bucket"), Seq("id", "v", "nrm"), 2, Int.MaxValue))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         round(when(nprod > 0,
           VectorFunctions.dot(col("a.v"), col("b.v")) / nprod).otherwise(lit(0.0)), 4).as("cos"))
@@ -1101,45 +1042,43 @@ object Dedup {
   def editDistance1Join(df: DataFrame, idCol: String, strCol: String,
                         maxKeyFreq: Int = 1000): DataFrame = {
     val sessionW = Shape.width(df.sparkSession)
-    val keyed = deletionKeyed(df, idCol, strCol)
     // Explicit session-width partitioning on the posting exchange: the
     // levenshtein verify downstream is CPU-dense per ROW, so AQE's
-    // byte-based coalescing starves it (4 tasks on 32 cores at sf0.1;
-    // the global minPartitionSize floor that would fix it regressed
-    // every iterative loop at sf1 and was reverted in r15 — this pin
-    // touches only this operator's exchange). HashPartitioning(k, n)
-    // satisfies the groupBy's distribution, so the repartition IS the
-    // posting agg's exchange (no extra shuffle, no extra job) and the
-    // pair explode + verify inherit its width. A measured-pair-volume
-    // width (the gramExchangePartitions doctrine) was tried first and
-    // MEASURED SLOWER at sf0.1 (q191 2.32→3.13, q203 1.92→4.04): the
-    // count-only histogram job cost more wall than the spread bought —
-    // at this tier the ER family is stage-count-bound, not
+    // byte-based coalescing starves it (4 tasks on 32 cores at sf0.1; a
+    // global minPartitionSize floor regressed every iterative loop at
+    // sf1, so the pin touches only this operator's exchange).
+    // HashPartitioning(k, n) satisfies the groupBy's distribution, so
+    // the repartition IS the posting agg's exchange (no extra shuffle,
+    // no extra job) and the pair explode + verify inherit its width. A
+    // measured-pair-volume width (the gramExchangePartitions rule)
+    // measured slower at sf0.1 (q191 2.32→3.13 s, q203 1.92→4.04 s):
+    // its count-only histogram job costs more wall than the spread
+    // buys, because the ER family is stage-count-bound, not
     // verify-CPU-bound. The session width is the deployment's scale
-    // knob (the bench driver sets it to the core count; a cluster run
-    // sizes it to the cluster), so the pin stays scale-adaptive.
-    val posting = keyed
-      .repartition(sessionW, col("k"))
-      .groupBy("k")
-      .agg(sort_array(collect_list(struct(col("id"), col("s")))).as("lst"))
-      .filter(size(col("lst")).between(2, maxKeyFreq))
-    // The exact verify runs BEFORE the pair `distinct`, so the distinct
-    // exchange carries (id_a, id_b, dist) — 24 fixed bytes — instead of
-    // both full string payloads, and distance-2 key collisions are gone
-    // before the shuffle, not after (VERDICT r05 #5). A pair sharing
-    // several deletion keys re-evaluates levenshtein once per key; that
-    // per-row CPU is the cheap side of the trade against shuffle bytes.
-    // THRESHOLD form (r16, guide §4 expression choice): the 3-arg
-    // builtin runs the banded O(len·threshold) DP and returns -1 past
-    // the bound, so `levenshtein(a, b, 1) >= 0` keeps exactly the
-    // dist<=1 pairs with identical dist values at a fraction of the
-    // full O(len²) DP the 2-arg form pays per candidate.
-    postingPairs(posting)
+    // knob, so the pin stays scale-adaptive.
+    editDistance1Verify(postingPairs(postingLists(
+      deletionKeyed(df, idCol, strCol).repartition(sessionW, col("k")),
+      Seq("k"), Seq("id", "s"), 2, maxKeyFreq)))
+  }
+
+  /** The exact verify of every edit-distance-1 self-join: candidate
+    * pairs (a, b) of (id, s) members become (id_a, id_b, dist) with
+    * dist <= 1, each pair once. The verify runs BEFORE the pair
+    * `distinct`, so the distinct exchange carries 24 fixed bytes per
+    * pair instead of both strings, and distance-2 key collisions are
+    * gone before the shuffle; a pair sharing several deletion keys
+    * re-evaluates levenshtein once per key, the cheap side of that
+    * trade. The 3-arg threshold form runs the banded O(len·threshold)
+    * DP and returns -1 past the bound, so `>= 0` keeps exactly the
+    * dist <= 1 pairs with the 2-arg form's dist values at a fraction of
+    * its O(len²) cost.
+    */
+  private def editDistance1Verify(pairs: DataFrame): DataFrame =
+    pairs
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         levenshtein(col("a.s"), col("b.s"), 1).cast("long").as("dist"))
       .filter(col("dist") >= 0)
       .distinct() // dist is a function of the pair: distinct == pair-distinct
-  }
 
 
   /** Diagnostic companion to [[editDistance1Join]]: the deletion keys the
@@ -1154,45 +1093,16 @@ object Dedup {
       .filter(col("freq") > maxKeyFreq)
       .orderBy(col("freq").desc, col("k"))
 
-  /** Cross-batch edit-distance ≤ 1 join: a NEW batch of strings against
-    * a STANDING corpus — the ingest-time shape of [[editDistance1Join]]
-    * (the [[minHashLshAgainst]] pattern applied to SymSpell deletion
-    * keys). The corpus's deletion-key postings are the reusable index;
-    * the batch generates its own (few) keys and equi-joins them, so a
-    * per-batch ingest shuffles the BATCH keys plus only the matched
-    * postings — the standing corpus is scanned for its postings but
-    * never pairwise re-joined against itself. Same `maxKeyFreq` cap and
-    * exact levenshtein verify as the self-join form (a capped key can
-    * only drop candidates the self-join would also drop). Returns
-    * (batch_id, corpus_id, dist), deduped.
-    *
-    * PRECONDITION: batch and corpus id spaces must be DISJOINT — a
-    * candidate with batch_id == corpus_id is dropped as a self-pair
-    * (the ingest contract: a batch row re-using a standing id is an
-    * upsert, not a new entity), so an ingest that recycles corpus ids
-    * for different strings would silently lose those cross pairs
-    * (ADVICE r08). q201/q203 satisfy this by construction (md5-coin
-    * partition of one key space).
-    */
-  def editDistance1JoinAgainst(batch: DataFrame, corpus: DataFrame,
-                               idCol: String, strCol: String,
-                               maxKeyFreq: Int = 1000): DataFrame =
-    editDistance1JoinPostings(batch,
-      deletionKeyPostings(corpus, idCol, strCol, maxKeyFreq), idCol, strCol)
-
-  /** The corpus side of [[editDistance1JoinAgainst]] as a standalone
-    * buildable frame — (k, lst: array<struct<id, s>>) capped deletion-key
-    * postings. In an ingest pipeline this IS the persisted standing
-    * index (write it once, parquet it next to the standing labels, and
-    * each batch pays only its own keys — q203); the inline form rebuilds
-    * it per call, which is one corpus scan + one groupBy.
+  /** The standing deletion-key index of the ingest-time
+    * [[editDistance1Join]] — (k, lst: array<struct<id, s>>) capped
+    * postings, one corpus scan + one groupBy (q203 persists it next to
+    * the standing labels). [[editDistance1JoinPostings]] probes it with
+    * a batch, [[editDistance1SelfJoinPostings]] self-joins it.
     */
   def deletionKeyPostings(corpus: DataFrame, idCol: String, strCol: String,
                           maxKeyFreq: Int = 1000): DataFrame =
-    deletionKeyed(corpus, idCol, strCol)
-      .groupBy("k")
-      .agg(sort_array(collect_list(struct(col("id"), col("s")))).as("lst"))
-      .filter(size(col("lst")) <= maxKeyFreq)
+    postingLists(deletionKeyed(corpus, idCol, strCol), Seq("k"), Seq("id", "s"), 1,
+      maxKeyFreq)
 
   /** The SELF-join half of [[editDistance1Join]] over a prebuilt
     * [[deletionKeyPostings]] frame — value-identical to
@@ -1204,47 +1114,46 @@ object Dedup {
     * same distinct). Callers that need BOTH the self-join and a
     * batch-vs-corpus join (q201's incremental ER) build the postings
     * once and feed both, instead of paying the corpus deletion-key
-    * explode + posting aggregation twice (optimization guide §1.2:
-    * don't compute things twice).
+    * explode + posting aggregation twice.
     */
-  def editDistance1SelfJoinPostings(postings: DataFrame): DataFrame = {
-    val sessionW = Shape.width(postings.sparkSession)
+  def editDistance1SelfJoinPostings(postings: DataFrame): DataFrame =
     // session-width spread of the (typically checkpointed-narrow)
     // posting frame before the CPU-dense pair explode + verify — the
     // [[editDistance1Join]] pin, same rationale, no measurement job
-    postingPairs(postings.filter(size(col("lst")) >= 2)
-        .repartition(sessionW, col("k")))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        levenshtein(col("a.s"), col("b.s"), 1).cast("long").as("dist"))
-      .filter(col("dist") >= 0)
-      .distinct()
-  }
+    editDistance1Verify(postingPairs(postings.filter(size(col("lst")) >= 2)
+      .repartition(Shape.width(postings.sparkSession), col("k"))))
 
-  /** [[editDistance1JoinAgainst]] against a prebuilt (possibly
-    * parquet-persisted) [[deletionKeyPostings]] frame. Same disjoint-id
-    * precondition and recall contract as the inline form.
+  /** Cross-batch edit-distance ≤ 1 join: a NEW batch of strings against
+    * a prebuilt (possibly parquet-persisted) [[deletionKeyPostings]]
+    * index — the ingest-time shape of [[editDistance1Join]]. The batch
+    * generates its own (few) keys and equi-joins them, so an ingest
+    * shuffles the BATCH keys plus only the matched postings; the
+    * standing corpus is never pairwise re-joined against itself. Same
+    * `maxKeyFreq` recall contract and exact levenshtein verify as the
+    * self-join form (a capped key can only drop candidates the
+    * self-join would also drop). Returns (batch_id, corpus_id, dist),
+    * deduped.
+    *
+    * PRECONDITION: batch and corpus id spaces must be DISJOINT — a
+    * candidate with batch_id == corpus_id is dropped as a self-pair
+    * (the ingest contract: a batch row re-using a standing id is an
+    * upsert, not a new entity), so an ingest that recycles corpus ids
+    * for different strings would silently lose those cross pairs.
+    * q201/q203 satisfy this by construction (md5-coin partition of one
+    * key space).
     */
   def editDistance1JoinPostings(batch: DataFrame, postings: DataFrame,
-                                idCol: String, strCol: String): DataFrame = {
-    val keyedB = deletionKeyed(batch, idCol, strCol)
-    // NO width pin on this join (r16, measured): both a matched-volume
-    // pre-join and a session-width repartition of the batch keys were
-    // tried to spread the explode + levenshtein stage and BOTH lost —
-    // the batch side is small enough that the forced exchange costs
+                                idCol: String, strCol: String): DataFrame =
+    // NO width pin on this join: a matched-volume pre-join and a
+    // session-width repartition of the batch keys both measured slower
+    // — the batch side is small enough that the forced exchange costs
     // more than the narrow verify (q203 1.99 s without the pin vs
-    // 2.76 s with it); the broadcast/AQE-chosen join shape stands.
-    keyedB
-      .join(postings, Seq("k"))
-      .select(col("id").as("batch_id"), col("s").as("s_b"),
-        explode(col("lst")).as("c"))
-      .select(col("batch_id"), col("s_b"),
-        col("c.id").as("corpus_id"), col("c.s").as("s_c"))
-      .filter(col("batch_id") =!= col("corpus_id"))
-      .select(col("batch_id"), col("corpus_id"),
-        levenshtein(col("s_b"), col("s_c"), 1).cast("long").as("dist"))
+    // 2.76 s with it at sf0.1)
+    probePostings(deletionKeyed(batch, idCol, strCol), postings, Seq("k"))
+      .select(col("id").as("batch_id"), col("c.id").as("corpus_id"),
+        levenshtein(col("s"), col("c.s"), 1).cast("long").as("dist"))
       .filter(col("dist") >= 0)
       .distinct()
-  }
 
   /** Incremental connected-component label maintenance: merge a batch
     * of `newEdges` into a STANDING (node, label) clustering WITHOUT
@@ -1306,18 +1215,11 @@ object Dedup {
       .unionAll(merged.select(col("node"), col("label")))
   }
 
-  /** Driver union-find over a bounded (u, v) edge frame: component-min
-    * labels, the exact [[dupClustersStar]] contract. Output column
-    * types follow the input's u column so the caller's unions resolve
-    * without widening surprises.
-    */
-  private def unionFindLocal(edges: DataFrame): DataFrame =
-    unionFindLocalRows(edges.collect(), edges.schema.head.dataType,
-      edges.sparkSession)
-
-  /** [[unionFindLocal]] over already-collected rows — the fused
-    * gate+fetch path (one bounded limit-collect) hands its rows
-    * straight here without a second action.
+  /** Driver union-find over the bounded (u, v) edge rows that the
+    * fused gate+fetch ([[Shape.localRows]], one bounded limit-collect)
+    * already holds: component-min labels, the exact [[dupClustersStar]]
+    * contract. Output column types are `dt`, the input's u column type,
+    * so the caller's unions resolve without widening surprises.
     */
   private def unionFindLocalRows(rows: Array[org.apache.spark.sql.Row],
                                  dt: org.apache.spark.sql.types.DataType,
@@ -1637,12 +1539,12 @@ object Dedup {
     val shuffleBytesPerRow = if (hashGrams) 24 else 24 + L
     val nPart = gramExchangePartitions(gramRowCount, shuffleBytesPerRow,
       docs.sparkSession.sessionState.conf.numShufflePartitions)
-    // r15 note: Catalyst's column pruning SPECIALIZES each consumer's
-    // copy of this exchange ((g,id,pos) / (g,id) / (g) in q130's
-    // plan), so the three copies are not canonically equal and the
-    // gram UDF re-runs per consumer. A size-gated localCheckpoint of
-    // the exchange was tried (one explode, shared blocks) and MEASURED
-    // SLOWER at sf0.1 — q125 1.43 s → 2.15 s, q130 2.49 → 2.69 — the
+    // Catalyst's column pruning SPECIALIZES each consumer's copy of
+    // this exchange ((g,id,pos) / (g,id) / (g) in q130's plan), so the
+    // three copies are not canonically equal and the gram UDF re-runs
+    // per consumer. A size-gated localCheckpoint of the exchange (one
+    // explode, shared blocks) measured SLOWER at sf0.1 — q125
+    // 1.43 s → 2.15 s, q130 2.49 → 2.69 — the
     // checkpoint round-trip of deserialized full-width rows costs more
     // than the repeated explode reading narrow pruned exchanges, and
     // at corpus scale pinning the postings is the adamicAdarTopK
@@ -1704,15 +1606,14 @@ object Dedup {
         }
         out.result()
       }
-      // ONE pass over the g-exchange (r16): the per-gram frequency and
-      // the per-(g, id) repeat count come from two whole-partition
-      // window counts that share the exchange's hash(g) distribution
-      // and one (g, id) sort (the outer g-window's sort is a satisfied
-      // prefix), and the surviving rows flow straight into the
-      // position collect — the previous two-agg + eligible-join +
-      // re-fetch-join shape consumed the exchange THREE times, and
-      // Catalyst's column pruning specialized each copy so the gram
-      // explode re-ran per consumer (the r15 note below). Same groups,
+      // ONE pass over the g-exchange: the per-gram frequency and the
+      // per-(g, id) repeat count come from two whole-partition window
+      // counts that share the exchange's hash(g) distribution and one
+      // (g, id) sort (the outer g-window's sort is a satisfied prefix),
+      // and the surviving rows flow straight into the position collect
+      // — a two-agg + eligible-join + re-fetch-join shape would consume
+      // the exchange THREE times, each a pruning-specialized copy that
+      // re-runs the gram explode (gramPostings' note). Same groups,
       // same position multisets: window count == grouped count, and
       // sort_array normalizes the collect order either way.
       import org.apache.spark.sql.expressions.Window
@@ -1748,8 +1649,7 @@ object Dedup {
   }
 
   /** Index MAINTENANCE for the standing substring gram index — the
-    * q219 fold-in doctrine applied to the Lee et al. family (round 15,
-    * closing the last create/probe-only standing index): the rows an
+    * q219 fold-in rule applied to the Lee et al. family: the rows an
     * accepted `batch` contributes to a persisted [[substringGramIndex]].
     * Batch ids must be new to the index (append semantics; a re-ingest
     * is a tombstone + append). Returns
@@ -1776,7 +1676,7 @@ object Dedup {
                                idCol: String, textCol: String,
                                minLen: Int): (DataFrame, DataFrame) = {
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
-    // materialize the batch postings ONCE (r16, guide §1.2): the per-CHAR
+    // materialize the batch postings ONCE: the per-CHAR
     // gram UDF + explode otherwise re-runs for EVERY consumer — the df
     // agg here, the touched semi-join, and each caller-side reference of
     // the returned frames (q306 profiles showed the identical 32-task
@@ -1847,7 +1747,7 @@ object Dedup {
     // batchPostings: a caller that already computed the batch's gram
     // postings — q306 folds them in via [[substringGramIndexUpsert]]
     // right before probing — passes them here instead of paying the
-    // per-CHAR gram UDF a second time (r16; same function, same flags,
+    // per-CHAR gram UDF a second time (same function, same flags,
     // value-identical by per-doc purity)
     val bg = batchPostings.getOrElse(gramPostings(batch, idCol, textCol,
       minLen, hashGrams = true, bloomPrune = false))
@@ -2042,9 +1942,9 @@ object Dedup {
       else (s +: Array.tabulate(s.length)(i =>
         s.substring(0, i) + s.substring(i + 1))).distinct
     }
-    // NO Shape.spread here (r16, measured): q203 1.30→2.05, q121
-    // 1.05→1.22 at sf0.1 — the ER family is stage-count-bound (the r16
-    // batch-1 lesson) and the extra exchange lost on every caller
+    // NO Shape.spread: the ER family is stage-count-bound and the extra
+    // exchange loses on every caller (measured with it at sf0.1: q203
+    // 1.30→2.05 s, q121 1.05→1.22 s)
     df.select(col(idCol).cast("long").as("id"), col(strCol).as("s"))
       .select(col("id"), col("s"), explode(delUdf(col("s"))).as("k"))
   }
@@ -2074,29 +1974,56 @@ object Dedup {
     * integer-exact in ppm (α computed by ceiling division over the
     * 1e6-scaled threshold).
     */
-  private def positionalFilter(collisions: DataFrame, tPpm: Long): DataFrame =
-    positionalFlagged(collisions, tPpm)
-      .filter(col("__pos_ok"))
-      .select("id_a", "id_b")
-
-  /** [[positionalFilter]] with the prune decision exposed as a flag
-    * instead of applied — the pair-level frame (one row per candidate,
-    * `__pos_ok` = survives the positional bound). [[ppJoinStats]] uses
-    * it to count candidates before AND after the positional prune in
-    * ONE pass over the collision join (the r13 filter's measured
-    * attribution, VERDICT r13 #1) — the filter itself stays a thin
-    * `.filter` over this frame so the two can never drift.
-    */
-  private[graft] def positionalFlagged(collisions: DataFrame,
-                                       tPpm: Long): DataFrame = {
+  private def positionalFilter(collisions: DataFrame, tPpm: Long): DataFrame = {
     val denom = 1000000L + tPpm
     collisions
       .groupBy("id_a", "id_b", "sz_a", "sz_b")
       .agg(min(col("pos_a")).as("pa"), min(col("pos_b")).as("pb"))
-      .withColumn("__pos_ok", lit(1L) +
+      .filter(lit(1L) +
         least(col("sz_a") - col("pa"), col("sz_b") - col("pb")) >=
         expr(s"(($tPpm * (sz_a + sz_b)) + ${denom - 1}) div $denom"))
+      .select("id_a", "id_b")
   }
+
+  /** (id, sh): one row per distinct word 3-shingle of each doc — the
+    * input of every PPJoin form.
+    */
+  private def ppShingles(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).cast("long").as("id"),
+      explode(shingles(col(textCol), 3)).as("sh"))
+
+  /** (id, sh, pos, sz): each doc's PREFIX shingles under the rare-first
+    * total order (df asc, sh asc) keyed by `dfreq` — pos is the
+    * shingle's 1-based rank in that order, sz the doc's set size, and
+    * the prefix is pos ≤ sz − ⌈t·sz⌉ + 1. A corpus build ranks under its
+    * own dfreq (inner join: every shingle has a df); a `frozen` ranking
+    * is a batch's under a standing index's dfreq, where a shingle the
+    * corpus never saw takes df = 0 and sorts first. Every PPJoin form
+    * ranks here, so the prefixes of a build, a fold-in and a probe can
+    * never drift apart.
+    */
+  private def prefixPostings(sh: DataFrame, dfreq: DataFrame, tPpm: Long,
+                             frozen: Boolean): DataFrame = {
+    val ranked =
+      if (frozen) sh.join(dfreq, Seq("sh"), "left")
+        .select(col("id"), col("sh"), coalesce(col("df"), lit(0L)).as("df"))
+      else sh.join(dfreq, Seq("sh"))
+    ranked
+      .select(col("id"), col("sh"),
+        row_number().over(Window.partitionBy("id")
+          .orderBy(col("df").asc, col("sh").asc)).as("pos"),
+        count(lit(1)).over(Window.partitionBy("id")).as("sz"))
+      .filter(col("pos") <= col("sz") -
+        expr(s"(($tPpm * sz) + 999999) div 1000000") + 1)
+      .select("id", "sh", "pos", "sz")
+  }
+
+  /** (id, sset, n): each doc's sorted full shingle set and its size —
+    * the exact verify's input, joined for candidate ids only.
+    */
+  private def shingleSets(sh: DataFrame): DataFrame =
+    sh.groupBy("id")
+      .agg(sort_array(collect_list("sh")).as("sset"), count(lit(1)).as("n"))
 
   /** EXACT set-similarity self-join via prefix filtering (PPJoin-lite,
     * Bayardo et al. WWW'07 / Xiao et al. WWW'08): every pair of
@@ -2129,28 +2056,17 @@ object Dedup {
     // [[Shape.spread]]: `sh` is consumed three times (dfreq agg, rank
     // join, sets agg) and each consumer re-runs the tokenize+shingle
     // UDF on the narrow scan stage
-    val sh = Shape.spread(docs, col(idCol))
-      .select(col(idCol).cast("long").as("id"),
-        explode(shingles(col(textCol), 3)).as("sh"))
-    val dfreq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-    val wRank = Window.partitionBy("id").orderBy(col("df").asc, col("sh").asc)
-    val wSz = Window.partitionBy("id")
-    val pos = sh.join(dfreq, Seq("sh"))
-      .select(col("id"), col("sh"),
-        row_number().over(wRank).as("pos"),
-        count(lit(1)).over(wSz).as("sz"))
-    val prefix0 = pos
-      .filter(col("pos") <= col("sz") -
-        expr(s"(($tPpm * sz) + 999999) div 1000000") + 1)
-      .select("id", "sh", "pos", "sz")
-    // pinnedPartitions (r16): a caller whose input is BOUNDED by
-    // construction (q240's fixed-size eval sample) pins the prefix
-    // self-join and the verify join at a fixed width — AQE's
-    // byte-based coalescing runs those CPU-dense stages on 3-4 tasks
-    // (2.4 s of measured verify CPU at sf0.1). Corpus-scale callers
-    // (q182/q218 and the index maintenance probes) keep the default
-    // None: their sf10-proven AQE shape stands untouched, because a
-    // fixed pin would SHRINK the exchange AQE widens at that scale.
+    val sh = ppShingles(Shape.spread(docs, col(idCol)), idCol, textCol)
+    val prefix0 = prefixPostings(sh, sh.groupBy("sh").agg(count(lit(1)).as("df")),
+      tPpm, frozen = false)
+    // pinnedPartitions: a caller whose input is BOUNDED by construction
+    // (q240's fixed-size eval sample) pins the prefix self-join and the
+    // verify join at a fixed width — AQE's byte-based coalescing runs
+    // those CPU-dense stages on 3-4 tasks (2.4 s of measured verify CPU
+    // at sf0.1). Corpus-scale callers (q182/q218 and the index
+    // maintenance probes) keep the default None and AQE's sf10-proven
+    // shape, because a fixed pin would SHRINK the exchange AQE widens
+    // at that scale.
     val prefix = pinnedPartitions match {
       case Some(n) => prefix0.repartition(n, col("sh"))
       case None => prefix0
@@ -2172,8 +2088,7 @@ object Dedup {
       case Some(n) => cand0.repartition(n, col("id_a"))
       case None => cand0
     }
-    val sets = sh.groupBy("id")
-      .agg(sort_array(collect_list("sh")).as("sset"), count(lit(1)).as("n"))
+    val sets = shingleSets(sh)
     cand
       .join(sets.select(col("id").as("id_a"), col("sset").as("sa"),
         col("n").as("na")), Seq("id_a"))
@@ -2183,56 +2098,6 @@ object Dedup {
       .withColumn("jac_ppm", expr("inter * 1000000 div (na + nb - inter)"))
       .filter(col("jac_ppm") >= tPpm)
       .select(col("id_a"), col("id_b"), col("inter"), col("jac_ppm"))
-  }
-
-  /** Growth-attribution instrumentation for [[ppJoinShingles]] (the
-    * SCALING gate's q182 watch row): one row with the volumes of each
-    * pipeline stage — docs, raw shingle postings, prefix postings (the
-    * join side), candidate pairs surviving prefix+size filters BEFORE
-    * the positional prune (n_cand_raw) and after it (n_cand_pairs —
-    * the verify-stage input, so raw/pairs is exactly what the r13
-    * positional filter bought), truth pairs (J ≥ t), and the hottest
-    * prefix-posting list length. Lets a per-SF sweep decide whether
-    * super-linear time growth is candidate physics (cand growing
-    * faster than docs) or output volume (truth_pairs) — the q100
-    * playbook applied to PPJoin.
-    */
-  def ppJoinStats(docs: DataFrame, idCol: String, textCol: String,
-                  tPpm: Long): DataFrame = {
-    require(tPpm > 0 && tPpm <= 1000000L, s"tPpm in (0, 1e6], got $tPpm")
-    val sh = docs.select(col(idCol).cast("long").as("id"),
-      explode(shingles(col(textCol), 3)).as("sh"))
-    val dfreq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-    val wRank = Window.partitionBy("id").orderBy(col("df").asc, col("sh").asc)
-    val wSz = Window.partitionBy("id")
-    val prefix = sh.join(dfreq, Seq("sh"))
-      .select(col("id"), col("sh"),
-        row_number().over(wRank).as("pos"),
-        count(lit(1)).over(wSz).as("sz"))
-      .filter(col("pos") <= col("sz") -
-        expr(s"(($tPpm * sz) + 999999) div 1000000") + 1)
-      .select("id", "sh", "pos", "sz")
-    val flagged = positionalFlagged(
-      prefix.as("a")
-        .join(prefix.as("b"),
-          col("a.sh") === col("b.sh") && col("a.id") < col("b.id") &&
-            col("a.sz") * 1000000L >= lit(tPpm) * col("b.sz") &&
-            col("b.sz") * 1000000L >= lit(tPpm) * col("a.sz"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          col("a.pos").as("pos_a"), col("b.pos").as("pos_b"),
-          col("a.sz").as("sz_a"), col("b.sz").as("sz_b")),
-      tPpm)
-    val truth = ppJoinShingles(docs, idCol, textCol, tPpm)
-    val hot = prefix.groupBy("sh").agg(count(lit(1)).as("plen"))
-      .agg(max("plen").as("max_plen"), sum("plen").as("n_prefix"))
-    docs.agg(count(lit(1)).as("n_docs"))
-      .crossJoin(sh.agg(count(lit(1)).as("n_shingle_rows")))
-      .crossJoin(hot)
-      // candidates before vs after the positional prune, ONE pass over
-      // the collision join: the r13 filter's measured reduction
-      .crossJoin(flagged.agg(count(lit(1)).as("n_cand_raw"),
-        sum(when(col("__pos_ok"), 1L).otherwise(0L)).as("n_cand_pairs")))
-      .crossJoin(truth.agg(count(lit(1)).as("n_truth_pairs")))
   }
 
   /** The STANDING half of [[ppJoinShingles]] split for ingest-time
@@ -2252,30 +2117,20 @@ object Dedup {
   def ppJoinIndex(corpus: DataFrame, idCol: String, textCol: String,
                   tPpm: Long): (DataFrame, DataFrame, DataFrame) = {
     require(tPpm > 0 && tPpm <= 1000000L, s"tPpm in (0, 1e6], got $tPpm")
-    val sh = corpus.select(col(idCol).cast("long").as("id"),
-      explode(shingles(col(textCol), 3)).as("sh"))
+    val sh = ppShingles(corpus, idCol, textCol)
     val dfreq = sh.groupBy("sh").agg(count(lit(1)).as("df"))
-    val wRank = Window.partitionBy("id").orderBy(col("df").asc, col("sh").asc)
-    val wSz = Window.partitionBy("id")
-    val postings = sh.join(dfreq, Seq("sh"))
-      .select(col("id"), col("sh"),
-        row_number().over(wRank).as("pos"),
-        count(lit(1)).over(wSz).as("sz"))
-      .filter(col("pos") <= col("sz") -
-        expr(s"(($tPpm * sz) + 999999) div 1000000") + 1)
-      .select("sh", "id", "pos", "sz")
-    val sets = sh.groupBy("id")
-      .agg(sort_array(collect_list("sh")).as("sset"), count(lit(1)).as("n"))
-    (dfreq, postings, sets)
+    (dfreq, prefixPostings(sh, dfreq, tPpm, frozen = false).select("sh", "id", "pos", "sz"),
+      shingleSets(sh))
   }
 
-  /** Index MAINTENANCE for the standing PPJoin index (the q219
-    * doctrine applied to exact set similarity — VERDICT r14 #7): the
-    * rows an accepted `batch` APPENDS to a persisted [[ppJoinIndex]] —
-    * its prefix postings and its full shingle sets, both computed
-    * under the index's FROZEN (df asc, sh asc) total order. Batch ids
-    * must be new to the index (append semantics, q219's shape; a
-    * re-ingest of an existing id is a tombstone + append).
+  /** Index MAINTENANCE for the standing PPJoin index: the rows an
+    * accepted `batch` APPENDS to a persisted [[ppJoinIndex]] — its
+    * prefix postings and its full shingle sets, both computed under the
+    * index's FROZEN (df asc, sh asc) total order. Batch ids must be new
+    * to the index (append semantics, q219's shape; a re-ingest of an
+    * existing id is a tombstone + append). Upserting the corpus itself
+    * under its own dfreq reproduces [[ppJoinIndex]]'s postings and sets
+    * bit-exactly (both rank in [[prefixPostings]]).
     *
     * Why frozen-order fold-in stays EXACT: the prefix theorem
     * (Chaudhuri/Bayardo — a qualifying pair must collide within the
@@ -2299,9 +2154,9 @@ object Dedup {
     * posting list grows — candidate volume creeps up while results
     * stay exact. The REBUILD-THRESHOLD contract: re-rank (rebuild the
     * index, refreshing dfreq to true dfs) once folded volume exceeds
-    * ~10-20% of the indexed corpus, or earlier if the q182-style
-    * candidate-attribution row (ppJoinStats' n_cand_raw vs n_docs)
-    * shows super-linear candidate growth. A standing index that is
+    * ~10-20% of the indexed corpus, or earlier if the probe's
+    * prefix-collision rows per indexed doc (the [[positionalFilter]]
+    * input) grow faster than the corpus does. A standing index that is
     * mostly folds is an index whose order describes a corpus it no
     * longer contains.
     *
@@ -2315,22 +2170,9 @@ object Dedup {
                         idCol: String, textCol: String,
                         tPpm: Long): (DataFrame, DataFrame) = {
     require(tPpm > 0 && tPpm <= 1000000L, s"tPpm in (0, 1e6], got $tPpm")
-    val sh = batch.select(col(idCol).cast("long").as("id"),
-      explode(shingles(col(textCol), 3)).as("sh"))
-    val ranked = sh.join(dfreq, Seq("sh"), "left")
-      .select(col("id"), col("sh"), coalesce(col("df"), lit(0L)).as("df"))
-    val wRank = Window.partitionBy("id").orderBy(col("df").asc, col("sh").asc)
-    val wSz = Window.partitionBy("id")
-    val postings = ranked
-      .select(col("id"), col("sh"),
-        row_number().over(wRank).as("pos"),
-        count(lit(1)).over(wSz).as("sz"))
-      .filter(col("pos") <= col("sz") -
-        expr(s"(($tPpm * sz) + 999999) div 1000000") + 1)
-      .select("sh", "id", "pos", "sz")
-    val sets = sh.groupBy("id")
-      .agg(sort_array(collect_list("sh")).as("sset"), count(lit(1)).as("n"))
-    (postings, sets)
+    val sh = ppShingles(batch, idCol, textCol)
+    (prefixPostings(sh, dfreq, tPpm, frozen = true).select("sh", "id", "pos", "sz"),
+      shingleSets(sh))
   }
 
   /** Batch-vs-standing-corpus EXACT set-similarity join — the ingest
@@ -2352,18 +2194,8 @@ object Dedup {
                             idCol: String, textCol: String,
                             tPpm: Long): DataFrame = {
     require(tPpm > 0 && tPpm <= 1000000L, s"tPpm in (0, 1e6], got $tPpm")
-    val sh = batch.select(col(idCol).cast("long").as("id"),
-      explode(shingles(col(textCol), 3)).as("sh"))
-    val ranked = sh.join(dfreq, Seq("sh"), "left")
-      .select(col("id"), col("sh"), coalesce(col("df"), lit(0L)).as("df"))
-    val wRank = Window.partitionBy("id").orderBy(col("df").asc, col("sh").asc)
-    val wSz = Window.partitionBy("id")
-    val prefix = ranked
-      .select(col("id"), col("sh"),
-        row_number().over(wRank).as("pos"),
-        count(lit(1)).over(wSz).as("sz"))
-      .filter(col("pos") <= col("sz") -
-        expr(s"(($tPpm * sz) + 999999) div 1000000") + 1)
+    val sh = ppShingles(batch, idCol, textCol)
+    val prefix = prefixPostings(sh, dfreq, tPpm, frozen = true)
       .select(col("id").as("new_id"), col("sh"),
         col("pos").as("pos_a"), col("sz").as("sza"))
     // positional filter holds across batch × corpus too: both sides
@@ -2383,11 +2215,9 @@ object Dedup {
           col("sza").as("sz_a"), col("szb").as("sz_b")),
       tPpm)
       .select(col("id_a").as("new_id"), col("id_b").as("corpus_id"))
-    val batchSets = sh.groupBy("id")
-      .agg(sort_array(collect_list("sh")).as("sa"), count(lit(1)).as("na"))
-      .withColumnRenamed("id", "new_id")
     cand
-      .join(batchSets, Seq("new_id"))
+      .join(shingleSets(sh).select(col("id").as("new_id"), col("sset").as("sa"),
+        col("n").as("na")), Seq("new_id"))
       .join(corpusSets.select(col("id").as("corpus_id"),
         col("sset").as("sb"), col("n").as("nb")), Seq("corpus_id"))
       .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))

@@ -365,7 +365,7 @@ private[graft] object QueriesDedupSim {
       // the q191 pipeline; the remaining 20% arrives as an ingest
       // batch whose candidate pairs are the batch-internal SymSpell
       // join PLUS the batch-vs-standing posting join
-      // (Dedup.editDistance1JoinAgainst) — the standing corpus is
+      // (Dedup.editDistance1JoinPostings) — the standing corpus is
       // never self-re-joined — and Dedup.incrementalClusterLabels
       // merges them touching only affected components. The oracle is
       // the FULL recompute over all customers (q191's SQL verbatim):

@@ -346,16 +346,17 @@ class DedupAnnSpec extends AnyFunSuite {
     // brute-force cross join verifies at Hamming<=3 (block pigeonhole:
     // <=3 differing bits hit <=3 of 6 blocks, so some 3-block table
     // keys both docs identically); (2) the parquet-persisted postings
-    // drive simHashJoinPostings to the inline simHashNearDupAgainst
-    // rows (table keys are a pure per-doc function of the parameters)
+    // drive simHashJoinPostings to the inline-postings rows (table keys
+    // are a pure per-doc function of the parameters)
     val docs = engine.Tables.documents(spark, SparkTestSession.sfDir)
     val batch = docs.filter(pmod(col("doc_id"), lit(10L)) === 0L)
     val corpus = docs.filter(pmod(col("doc_id"), lit(10L)) =!= 0L)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val inline = rows(Dedup.simHashNearDupAgainst(batch, corpus,
-      "doc_id", "text", nBits = 32, maxHamming = 3, nBlocks = 6,
-      maxBucketSize = Int.MaxValue))
+    val inline = rows(Dedup.simHashJoinPostings(batch,
+      Dedup.simHashMultiIndexPostings(corpus, "doc_id", "text",
+        nBits = 32, maxHamming = 3, nBlocks = 6, maxBucketSize = Int.MaxValue),
+      "doc_id", "text", nBits = 32, maxHamming = 3, nBlocks = 6))
     val brute = rows(
       Dedup.simHash(batch, "doc_id", "text", 32)
         .select(col("id").as("new_id"), col("simhash").as("hn"))
@@ -1038,6 +1039,26 @@ class DedupAnnSpec extends AnyFunSuite {
     // at an adequate cap nothing is dropped and the join is exhaustive
     assert(Dedup.editDistance1DroppedKeys(df, "id", "name").count() == 0)
     assert(Dedup.editDistance1Join(df, "id", "name").count() == 3)
+  }
+
+  test("editDistance1SelfJoinPostings over deletionKeyPostings == editDistance1Join") {
+    // the index form keeps singleton lists (size <= cap only) and the
+    // self-join restores the >= 2 floor; at cap 2 the "" key (3 members)
+    // drops on both paths while the size-2 "a", "b" and "ab" keys of
+    // the extended fixture survive
+    val abc = Seq(1L -> "a", 2L -> "b", 3L -> "c")
+    val extended = abc ++ Seq(4L -> "ab", 5L -> "abc", 6L -> "xyz")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    for (fixture <- Seq(abc, extended); cap <- Seq(1000, 2)) {
+      val df = fixture.toDF("id", "name")
+      val inline = rows(Dedup.editDistance1Join(df, "id", "name", maxKeyFreq = cap))
+      val viaIndex = rows(Dedup.editDistance1SelfJoinPostings(
+        Dedup.deletionKeyPostings(df, "id", "name", maxKeyFreq = cap)))
+      assert(viaIndex == inline, s"n=${fixture.size} cap=$cap")
+    }
+    assert(rows(Dedup.editDistance1Join(extended.toDF("id", "name"), "id", "name",
+      maxKeyFreq = 2)) == Set((1L, 4L, 1L), (2L, 4L, 1L), (4L, 5L, 1L)))
   }
 
   test("triangleStats: hand graph with one triangle, a pendant, and a path") {

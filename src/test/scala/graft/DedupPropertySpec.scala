@@ -336,6 +336,25 @@ class DedupPropertySpec extends AnyFunSuite {
     assert(rs(s1.unionByName(s2)) == rs(su), "sets fold-order")
   }
 
+  test("ppJoinIndexUpsert of the corpus under its own dfreq == ppJoinIndex") {
+    // build and fold-in rank in one place: upserting the corpus itself
+    // under the index's dfreq must return the index's own postings and
+    // sets, schema and rows bit-equal
+    val corpus = docs.toDF("doc_id", "text")
+    for (t <- Seq(200000L, 800000L)) {
+      val (dfreq, postings, sets) = Dedup.ppJoinIndex(corpus, "doc_id", "text", t)
+      val (up, us) = Dedup.ppJoinIndexUpsert(dfreq, corpus, "doc_id", "text", t)
+      def rs(d: org.apache.spark.sql.DataFrame) =
+        d.collect().map(_.toSeq.map {
+          case a: scala.collection.Seq[_] => a.toList
+          case v => v
+        }).toSeq.sortBy(_.toString)
+      assert(up.schema == postings.schema && us.schema == sets.schema, s"t=$t")
+      assert(rs(up) == rs(postings), s"postings t=$t")
+      assert(rs(us) == rs(sets), s"sets t=$t")
+    }
+  }
+
   test("ppJoinIndexDelete: probe over the tombstoned index equals brute force over the survivors") {
     // q307's contract: dfreq stays FROZEN (prefixes are per-doc
     // functions of the frozen order), the deleted ids' rows vanish, and

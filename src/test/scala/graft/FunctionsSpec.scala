@@ -134,14 +134,17 @@ class FunctionsSpec extends AnyFunSuite {
     assert(df.select(l2sq(col("a"), col("b"))).as[Double].head() == 9.0 + 16.0)
   }
 
-  test("minHashes explodes the signature with positional hash_idx") {
+  test("minHashSignature: element i is permutation i's shingle min") {
     val docs = Seq((1L, "one two three four")).toDF("doc_id", "text")
-    val rows = graft.operators.Dedup.minHashes(docs, "doc_id", "text", 2, 4)
-      .collect().map(r => (r.getInt(1), r.getLong(2)))
-    assert(rows.map(_._1).toSeq == Seq(0, 1, 2, 3))
     val sig = graft.operators.Dedup.minHashSignature(docs, "doc_id", "text", 2, 4)
       .collect().head.getSeq[Long](1)
-    assert(rows.map(_._2).toSeq == sig)
+    // h_i(x) = (x·a_i + b_i) mod (2^31 - 1) over the 28-bit md5 hashes
+    // of the distinct 2-shingles
+    val p = 2147483647L
+    val hs = Seq("one two", "two three", "three four").map(tokenHash32Jvm)
+    assert(sig == (0 until 4).map { i =>
+      hs.map(h => (h * ((i * 2654435761L) % p + 1L) + i * 40503L + 7L) % p).min
+    })
   }
 
   test("textStats struct equals the individual stat functions") {

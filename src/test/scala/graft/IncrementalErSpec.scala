@@ -17,22 +17,27 @@ class IncrementalErSpec extends AnyFunSuite {
   private def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  test("editDistance1JoinAgainst finds exactly the cross ed<=1 pairs") {
+  private def joinPostings(batch: org.apache.spark.sql.DataFrame,
+                           corpus: org.apache.spark.sql.DataFrame) =
+    Dedup.editDistance1JoinPostings(batch,
+      Dedup.deletionKeyPostings(corpus, "id", "s"), "id", "s")
+
+  test("editDistance1JoinPostings finds exactly the cross ed<=1 pairs") {
     val corpus = Seq((1L, "smith"), (2L, "jones"), (3L, "brown"))
       .toDF("id", "s")
     val batch = Seq((10L, "smyth"), (11L, "jones"), (12L, "zzzzz"),
       (13L, "brwn")).toDF("id", "s")
-    val got = Dedup.editDistance1JoinAgainst(batch, corpus, "id", "s")
+    val got = joinPostings(batch, corpus)
       .select("batch_id", "corpus_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // smyth~smith ed=1, jones==jones ed=0, brwn~brown ed=1, zzzzz none
     assert(got == Set((10L, 1L), (11L, 2L), (13L, 3L)))
   }
 
-  test("editDistance1JoinAgainst never pairs within the batch or corpus") {
+  test("editDistance1JoinPostings never pairs within the batch or corpus") {
     val corpus = Seq((1L, "aaa"), (2L, "aab")).toDF("id", "s")
     val batch = Seq((10L, "aac"), (11L, "aad")).toDF("id", "s")
-    val got = Dedup.editDistance1JoinAgainst(batch, corpus, "id", "s")
+    val got = joinPostings(batch, corpus)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((10L, 1L), (10L, 2L), (11L, 1L), (11L, 2L)))
   }

@@ -80,11 +80,14 @@ package graft {
 
     test("inParallel: results in argument order, a failing task propagates") {
       assert(Shape.inParallel("a", 1) == ("a", 1))
-      val got = Shape.inParallel(3)((1 to 10).map { i => () =>
-        Thread.sleep((10 - i) * 5L); i })
-      assert(got == (1 to 10))
+      // the first side finishes last, and nested pairs still come back
+      // in argument order
+      val got = Shape.inParallel(
+        Shape.inParallel({ Thread.sleep(50L); 1 }, { Thread.sleep(25L); 2 }),
+        Shape.inParallel({ Thread.sleep(10L); 3 }, 4))
+      assert(got == ((1, 2), (3, 4)))
       intercept[IllegalStateException] {
-        Shape.inParallel(2)(Seq(() => 1, () => throw new IllegalStateException("boom")))
+        Shape.inParallel(1, throw new IllegalStateException("boom"))
       }
       intercept[IllegalStateException] {
         Shape.inParallel(throw new IllegalStateException("boom"), 2)

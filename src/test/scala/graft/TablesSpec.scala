@@ -95,8 +95,11 @@ class TablesSpec extends AnyFunSuite {
     withDir { d =>
       spark.range(0, 20).select(col("id"), col("id").cast("int").as("v"))
         .write.parquet(s"$d/t.parquet")
-      val schemas = Shape.inParallel(4)(
-        Seq.fill(8)(() => Tables.table(spark, d, "t").schema))
+      def read = Tables.table(spark, d, "t").schema
+      // nested pairs: four concurrent reads
+      val ((s1, s2), (s3, s4)) =
+        Shape.inParallel(Shape.inParallel(read, read), Shape.inParallel(read, read))
+      val schemas = Seq(s1, s2, s3, s4)
       assert(schemas.distinct.size == 1)
       assert(schemas.head == Tables.table(spark, d, "t").schema)
     }
