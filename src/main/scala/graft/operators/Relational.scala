@@ -95,49 +95,20 @@ object Relational {
     * join rows). This form never builds pairs: both sides are tagged and
     * unioned, one exchange on the key, one sort by (time, side,
     * tieBreak), and a cumulative last(right payload, ignoreNulls) hands
-    * each left row its latest preceding right row. Rights sort before
-    * lefts at equal time, so the match is inclusive (rightTime <=
-    * leftTime), and the max tieBreak wins among equal times — exactly
-    * [[asOfJoin]]'s pick. Inner semantics: lefts with no preceding right
+    * each left row its nearest right row.
+    *
+    * forward=false: the LATEST right at-or-before each left — rights
+    * sort before lefts at equal time, so the match is inclusive
+    * (rightTime <= leftTime), and the max tieBreak wins among equal
+    * times: exactly [[asOfJoin]]'s pick. forward=true: the EARLIEST
+    * right at-or-after each left (min tieBreak at equal times) — the
+    * scan order is simply reversed. toleranceSeconds >= 0 additionally
+    * requires |rightTime - leftTime| <= tolerance; the comparison is
+    * exact integer MICROseconds (unix_micros), because epoch-seconds
+    * doubles can round across the boundary differently per engine.
+    * Inner semantics: lefts with no match (or none within tolerance)
     * are dropped. Output = left columns ++ right columns (both inputs
     * must carry distinct names).
-    */
-  def asOfJoinMerge(left: DataFrame, right: DataFrame,
-                    leftKey: String, rightKey: String,
-                    leftTime: String, rightTime: String,
-                    rightTieBreak: String): DataFrame = {
-    import org.apache.spark.sql.types.StructType
-    val lCols = left.columns.toSeq
-    val rCols = right.columns.toSeq
-    val lPart = left.select(col(leftKey).as("__k"), col(leftTime).as("__t"),
-      lit(1).as("__side"),
-      lit(null).cast(right.schema(rightTieBreak).dataType).as("__tb"),
-      struct(lCols.map(col): _*).as("__l"),
-      lit(null).cast(StructType(right.schema.fields)).as("__r"))
-    val rPart = right.select(col(rightKey).as("__k"), col(rightTime).as("__t"),
-      lit(0).as("__side"),
-      col(rightTieBreak).as("__tb"),
-      lit(null).cast(StructType(left.schema.fields)).as("__l"),
-      struct(rCols.map(col): _*).as("__r"))
-    val w = Window.partitionBy("__k")
-      .orderBy(col("__t").asc, col("__side").asc, col("__tb").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    lPart.unionAll(rPart)
-      .withColumn("__m", last(col("__r"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1 && col("__m").isNotNull)
-      .select(lCols.map(c => col(s"__l.$c")) ++ rCols.map(c => col(s"__m.$c")): _*)
-  }
-
-  /** [[asOfJoinMerge]] generalized with direction and tolerance — still
-    * the no-pair-fan-out single-exchange merge shape. forward=false:
-    * latest right at-or-before each left (max tieBreak at equal times,
-    * exactly [[asOfJoinMerge]]). forward=true: EARLIEST right
-    * at-or-after each left (min tieBreak at equal times) — the scan
-    * order is simply reversed. toleranceSeconds >= 0 additionally
-    * requires |rightTime - leftTime| <= tolerance (matches outside it
-    * are dropped — inner semantics); the comparison is exact integer
-    * MICROseconds (unix_micros), because epoch-seconds doubles can
-    * round across the boundary differently per engine.
     */
   def asOfJoinMergeDirected(left: DataFrame, right: DataFrame,
                             leftKey: String, rightKey: String,

@@ -10,12 +10,14 @@ import graft.operators.Dedup
 
 import graft.QueryShared._
 
-/** Multimodal query registry — binary media decode, fingerprints, scenes/silence, sampled twins.
-  * Split verbatim from SparkEntry (round 12): every entry is the
-  * original closure/SQL, unchanged; SparkEntry concatenates the
-  * family maps back into the driver contract.
+/** Multimodal query registry — binary media decode, fingerprints,
+  * scenes/silence, every-Nth-frame video decode. Each entry reads its
+  * media from a persisted fixture ([[QueryShared.mediaFixture]], one per
+  * [[Multimodal.MediaKind]]); SparkEntry concatenates the family maps
+  * into the driver contract.
   */
 private[graft] object QueriesMultimodal {
+  import Multimodal.MediaKind._
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -32,9 +34,7 @@ private[graft] object QueriesMultimodal {
       // REAL decode → nearest-neighbor resample → re-encode → decode →
       // stats; oracle computes the same sums from the pattern formula
       // through the same index mapping
-      Multimodal.imageStats(
-          Multimodal.resizeImages(mediaFixture(s, d, "img_real")(
-            Multimodal.mediaWithRealImages(s, documents(s, d))), 10, 8))
+      Multimodal.imageStats(Multimodal.resizeImages(mediaFixture(s, d, ImgReal), 10, 8))
         .toDF()
         .orderBy("media_id")
     }),
@@ -44,20 +44,18 @@ private[graft] object QueriesMultimodal {
       // computes the same pixel sums analytically from the pattern
       // formula (PNG is lossless), so a hash match proves the
       // encode→decode roundtrip bit-exact.
-      Multimodal.imageStats(mediaFixture(s, d, "img_real")(
-          Multimodal.mediaWithRealImages(s, documents(s, d))))
+      Multimodal.imageStats(mediaFixture(s, d, ImgReal))
         .toDF()
         .orderBy("media_id")
     }),
 
     "q81_audio_decode" -> ((s, d) => {
-      // REAL javax.sound.sampled decode of generated 16-bit PCM WAV
-      // fixtures; the oracle computes the same sample sums analytically
-      // from the pattern formula (PCM WAV is lossless), so a hash match
-      // proves the encode→decode roundtrip bit-exact — the audio twin
-      // of q55.
-      Multimodal.audioStats(mediaFixture(s, d, "audio_real")(
-          Multimodal.mediaWithRealAudio(s, documents(s, d))))
+      // REAL decode of generated 16-bit PCM WAV fixtures by the
+      // hand-rolled RIFF walk (AudioCodec.decodeStats); the oracle
+      // computes the same sample sums analytically from the pattern
+      // formula (PCM WAV is lossless), so a hash match proves the
+      // encode→decode roundtrip bit-exact — the audio twin of q55.
+      Multimodal.audioStats(mediaFixture(s, d, AudioReal))
         .toDF()
         .orderBy("media_id")
     }),
@@ -70,9 +68,7 @@ private[graft] object QueriesMultimodal {
       // byte-exact dedup cannot pair. Oracle recomputes the aHash
       // ANALYTICALLY from the cell formula (never decodes a PNG) and
       // verifies pairs by exact per-cell comparison.
-      val media = mediaFixture(s, d, "img_dup")(
-        Multimodal.mediaWithDupImages(s, documents(s, d)))
-      Dedup.hammingNearDup(Multimodal.imageAHash(media).toDF(),
+      Dedup.hammingNearDup(Multimodal.imageAHash(mediaFixture(s, d, ImgDup)).toDF(),
           "media_id", "ahash", nBits = 64, maxHamming = 2)
         .orderBy("id_a", "id_b")
     }),
@@ -85,8 +81,7 @@ private[graft] object QueriesMultimodal {
       // identical path, exercised structurally in tests). One media row
       // fans out to nFrames fixed-width stat rows on the executors; the
       // blob never survives the stage.
-      Multimodal.videoFrameStats(mediaFixture(s, d, "video_real")(
-          Multimodal.mediaWithRealVideo(s, documents(s, d))))
+      Multimodal.videoFrameStats(mediaFixture(s, d, VideoReal))
         .toDF()
         .orderBy("media_id", "frame_idx"))
 ,
@@ -101,9 +96,7 @@ private[graft] object QueriesMultimodal {
       // ANALYTICALLY from the amplitude formula — never decodes a WAV —
       // so a hash match proves the decode->window->threshold roundtrip
       // (Multimodal.audioFingerprint scaladoc).
-      val media = mediaFixture(s, d, "audio_dup")(
-        Multimodal.mediaWithDupAudio(s, documents(s, d)))
-      Dedup.hammingNearDup(Multimodal.audioFingerprints(media).toDF(),
+      Dedup.hammingNearDup(Multimodal.audioFingerprints(mediaFixture(s, d, AudioDup)).toDF(),
           "media_id", "fhash", nBits = 64, maxHamming = 2)
         .orderBy("id_a", "id_b")
     }),
@@ -119,9 +112,7 @@ private[graft] object QueriesMultimodal {
       // gray formula — never parses a container — so a hash match
       // proves the parse->decode->window->threshold roundtrip
       // (Multimodal.videoFingerprint scaladoc).
-      val media = mediaFixture(s, d, "video_dup")(
-        Multimodal.mediaWithDupVideo(s, documents(s, d)))
-      Dedup.hammingNearDup(Multimodal.videoFingerprints(media).toDF(),
+      Dedup.hammingNearDup(Multimodal.videoFingerprints(mediaFixture(s, d, VideoDup)).toDF(),
           "media_id", "fhash", nBits = 64, maxHamming = 2)
         .orderBy("id_a", "id_b")
     }),
@@ -133,16 +124,13 @@ private[graft] object QueriesMultimodal {
       // (Multimodal.videoSceneCuts scaladoc). The fixture's windows are
       // piecewise-constant, so the oracle derives every cut position
       // analytically.
-      // Shape.spread + Shape.shield (r16): the whole-corpus AVI decode
-      // rode the fixture's 1-task scan AND ran twice (two identical
-      // 0.6 s 1-task jobs in the profile). Spread stays QUERY-level: a
-      // fixture-wide spread regressed every cheap decode (see
-      // mediaFixture's note)
+      // Shape.spread + Shape.shield: unspread, the whole-corpus AVI
+      // decode rides the fixture's 1-task scan, and unshielded it runs
+      // twice (two identical 0.6 s 1-task jobs in one profile: the
+      // range sort's sampling job re-runs its child stage). The spread
+      // is query-level, not fixture-wide (mediaFixture's note)
       import s.implicits._
-      val media = Shape.spread(
-          mediaFixture(s, d, "video_dup")(
-            Multimodal.mediaWithDupVideo(s, documents(s, d))).toDF(),
-          col("media_id"))
+      val media = Shape.spread(mediaFixture(s, d, VideoDup).toDF(), col("media_id"))
         .as[Multimodal.MediaRow]
       Multimodal.videoSceneCuts(media)
         .toDF()
@@ -156,49 +144,45 @@ private[graft] object QueriesMultimodal {
       // oracle derives silent windows from the fixture amplitude
       // formula, no WAV decoded (Multimodal.audioSilenceSegments
       // scaladoc).
-      Multimodal.audioSilenceSegments(mediaFixture(s, d, "audio_dup")(
-          Multimodal.mediaWithDupAudio(s, documents(s, d)))).toDF()
+      Multimodal.audioSilenceSegments(mediaFixture(s, d, AudioDup)).toDF()
         .orderBy("media_id", "seg")),
 
     "q202_video_scenes_sampled" -> ((s, d) =>
-      // Every-2nd-frame scene-cut detection (VERDICT r07 #6): the
-      // keyframe-pipeline tuning of q165 — RIFF chunking still walks
-      // every frame, PNG decode (the 7-8x/decade cost) runs on half of
-      // them. first_cut is the ORIGINAL frame index of the sample that
-      // saw the change; the oracle derives every sampled comparison
+      // q165 at every-2nd-frame decode, the keyframe-pipeline tuning:
+      // the RIFF walk still indexes every frame, the PNG decode (the
+      // family's cost, 7-8x per scale decade) runs on half of them.
+      // first_cut is the container index of the sample that saw the
+      // change; the oracle derives every sampled comparison
       // analytically from the fixture's window-gray formula
-      // (Multimodal.videoSceneCutsSampled scaladoc).
-      Multimodal.videoSceneCutsSampled(mediaFixture(s, d, "video_dup")(
-          Multimodal.mediaWithDupVideo(s, documents(s, d))), every = 2)
+      // (Multimodal.videoSceneCuts scaladoc). n_frames counts the
+      // decoded samples, reported as n_sampled.
+      Multimodal.videoSceneCuts(mediaFixture(s, d, VideoDup), every = 2)
         .toDF()
+        .withColumnRenamed("n_frames", "n_sampled")
         // Shape.shield: the sort's child stage here IS the decode
         .transform(Shape.shield)
         .orderBy("media_id")),
 
     "q204_video_fp_dedup_sampled" -> ((s, d) => {
-      // q134's fingerprint-dedup with every-2nd-frame DECODE (VERDICT
-      // r08 #4): the dup-video fixture's windows are 2 frames wide and
+      // q134's fingerprint-dedup at every-2nd-frame decode: the
+      // dup-video fixture's windows are 2 frames wide and
       // piecewise-constant, so the sampled 64-window fingerprint
-      // EQUALS the dense one exactly (videoFingerprintSampled
-      // scaladoc) and the oracle is q134's analytic formula verbatim —
-      // a hash match proves the sampled decode path reproduces the
-      // full fingerprint at half the decode cost.
-      val media = mediaFixture(s, d, "video_dup")(
-        Multimodal.mediaWithDupVideo(s, documents(s, d)))
+      // EQUALS the every-frame one exactly (videoFingerprint scaladoc)
+      // and the oracle is q134's analytic formula verbatim — a hash
+      // match proves the sampled decode reproduces the full
+      // fingerprint at half the decode cost.
       Dedup.hammingNearDup(
-          Multimodal.videoFingerprintsSampled(media, every = 2).toDF(),
+          Multimodal.videoFingerprints(mediaFixture(s, d, VideoDup), every = 2).toDF(),
           "media_id", "fhash", nBits = 64, maxHamming = 2)
         .orderBy("id_a", "id_b")
     }),
 
     "q205_video_frames_sampled" -> ((s, d) =>
-      // q118's per-frame decode stats at every-2nd-frame DECODE
-      // (VERDICT r08 #4): frame_idx keeps the ORIGINAL container
-      // index, so the oracle is q118's analytic formula restricted to
-      // even frames — decode work halves, the schema and sums stay
-      // exact.
-      Multimodal.videoFrameStatsSampled(mediaFixture(s, d, "video_real")(
-          Multimodal.mediaWithRealVideo(s, documents(s, d))), every = 2)
+      // q118's per-frame decode stats at every-2nd-frame decode:
+      // frame_idx is the container index, so the oracle is q118's
+      // analytic formula restricted to even frames — decode work
+      // halves, the schema and sums stay exact.
+      Multimodal.videoFrameStats(mediaFixture(s, d, VideoReal), every = 2)
         .toDF()
         .orderBy("media_id", "frame_idx")),
 
@@ -212,8 +196,7 @@ private[graft] object QueriesMultimodal {
       // runs on touched buckets only (Dedup.hammingJoinPostings
       // scaladoc). Oracle recomputes both sides' aHashes analytically
       // from the q117 cell formula — no PNG decoded oracle-side.
-      val media = mediaFixture(s, d, "img_dup")(
-        Multimodal.mediaWithDupImages(s, documents(s, d)))
+      val media = mediaFixture(s, d, ImgDup)
       val postings = imageFpPostingsFixture(s, d, media)
       val batch = Multimodal.imageAHash(
         media.filter(isBatch("media_id"))).toDF()
@@ -277,7 +260,7 @@ private[graft] object QueriesMultimodal {
         |   / strlen(text), 4) AS byte_mean
         |FROM documents ORDER BY media_id""".stripMargin,
 
-    // The aHash recomputed analytically from mediaWithDupImages' cell
+    // The aHash recomputed analytically from ImageCodec.encodeDup's cell
     // formula (cell-constant gray, so no PNG decode is needed): per-cell
     // integer sums/counts, threshold by cross-multiplication, candidates
     // by 3-chunk pigeonhole over the ordered bit string, exact per-cell

@@ -273,10 +273,12 @@ private[graft] object QueriesRelational {
       val errors = ev.filter(col("event_type") === "error")
         .select(col("event_id").as("err_event_id"),
           col("user_id").as("err_user_id"), col("ts").as("err_ts"))
-      // merge form: no per-pair fan-out before the dedup (asOfJoinMerge
-      // scaladoc); equivalence with the join+window form is tested
-      Relational.asOfJoinMerge(purchases, errors,
-          "user_id", "err_user_id", "ts", "err_ts", "err_event_id")
+      // merge form: no per-pair fan-out before the dedup
+      // (asOfJoinMergeDirected scaladoc); equivalence with the
+      // join+window form is tested
+      Relational.asOfJoinMergeDirected(purchases, errors,
+          "user_id", "err_user_id", "ts", "err_ts", "err_event_id",
+          forward = false)
         .select(col("event_id"), col("err_event_id"))
         .orderBy("event_id")
     }),

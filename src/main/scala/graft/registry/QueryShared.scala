@@ -450,18 +450,19 @@ private[graft] object QueryShared {
     * inside the measured query; the deterministic PNG/WAV/AVI
     * generators are test scaffolding. Reading each media table back
     * makes every multimodal query measure scan + decode — where a
-    * production job starts — instead of encode + decode.
+    * production job starts — instead of encode + decode. One fixture
+    * per [[Multimodal.MediaKind]], named after it, built by
+    * [[Multimodal.media]] over the dataset's documents.
     */
-  private[graft] def mediaFixture(s: SparkSession, d: String, name: String)
-                          (build: => org.apache.spark.sql.Dataset[Multimodal.MediaRow])
+  private[graft] def mediaFixture(s: SparkSession, d: String, kind: Multimodal.MediaKind)
       : org.apache.spark.sql.Dataset[Multimodal.MediaRow] = {
     import s.implicits._
-    // NO Shape.spread here (r16, measured): a fixture-wide spread
-    // regressed every CHEAP decode (q117 0.24→0.58, q132 0.24→0.57,
-    // q189 0.15→0.41, q238 0.28→0.69 at sf0.1) — only q165's full AVI
-    // decode is heavy enough to pay for the exchange, and it spreads
-    // at the query site
-    persisted(s, d, s"media_$name.parquet")(build.toDF()).as[Multimodal.MediaRow]
+    // The read is NOT spread: a fixture-wide Shape.spread costs every
+    // cheap decode an exchange it cannot repay (measured at sf0.1: q117
+    // 0.24→0.58 s, q132 0.24→0.57, q189 0.15→0.41, q238 0.28→0.69);
+    // only q165's full AVI decode pays for one, at its query site
+    persisted(s, d, s"media_${kind.name}.parquet")(
+      Multimodal.media(documents(s, d), kind).toDF()).as[Multimodal.MediaRow]
   }
 
   /** q238's image-fingerprint band index: the corpus media's aHashes

@@ -178,14 +178,30 @@ class EntrySpec extends AnyFunSuite {
     val flatVid = MediaRow(2L, "video", avi(Seq(77, 77, 77)), 6, 5)
     // non-video rows drop
     val junk = MediaRow(3L, "audio", Array[Byte](1, 2, 3), 0, 0)
-    val ds = spark.createDataset(Seq(cutsVid, flatVid, junk))(
+    // container frame 2 is an undecodable '00dc' chunk between decodable
+    // gray frames 10 | 10 | junk | 200 | 200
+    val gray = (g: Int) => PngCodec.encodeGray(6, 5, g)
+    val corrupt = MediaRow(4L, "video", VideoCodec.buildAvi(6, 5,
+      Seq(gray(10), gray(10), "not a frame".getBytes("UTF-8"), gray(200), gray(200)),
+      "MPNG"), 6, 5)
+    val ds = spark.createDataset(Seq(cutsVid, flatVid, junk, corrupt))(
       org.apache.spark.sql.Encoders.product[MediaRow])
-    val got = Multimodal.videoSceneCuts(ds).collect()
+    def cuts(every: Int) = Multimodal.videoSceneCuts(ds, every).collect()
       .map(r => r.media_id -> ((r.n_frames, r.n_cuts, r.first_cut))).toMap
-    assert(got == Map(1L -> ((6L, 2L, 2L)), 2L -> ((3L, 0L, -1L))))
+    def frameIdx(every: Int) = Multimodal.videoFrameStats(ds, every).collect()
+      .filter(_.media_id == 4L).map(_.frame_idx).sorted.toSeq
+    // n_frames counts decoded frames; first_cut and frame_idx are
+    // container indices (decode order would put the cut at 2)
+    assert(cuts(1) == Map(1L -> ((6L, 2L, 2L)), 2L -> ((3L, 0L, -1L)),
+      4L -> ((4L, 1L, 3L))))
+    assert(frameIdx(1) == Seq(0L, 1L, 3L, 4L))
+    // every=2 samples container frames 0, 2, 4; the junk sample drops and
+    // the comparison continues with the next decodable sample
+    assert(cuts(2)(4L) == ((2L, 1L, 4L)))
+    assert(frameIdx(2) == Seq(0L, 4L))
   }
 
-  test("videoSceneCutsSampled: every=1 == videoSceneCuts; every=2 samples correctly") {
+  test("videoSceneCuts every=2: cuts between samples, a gap-hidden cut cancels") {
     import graft.multimodal.Multimodal
     import graft.multimodal.Multimodal.{MediaRow, PngCodec, VideoCodec}
     def avi(grays: Seq[Int], w: Int = 6, h: Int = 5) =
@@ -197,50 +213,43 @@ class EntrySpec extends AnyFunSuite {
     val hidden = MediaRow(3L, "video", avi(Seq(5, 90, 5, 5)), 6, 5)
     val ds = spark.createDataset(Seq(cutsVid, flatVid, hidden))(
       org.apache.spark.sql.Encoders.product[MediaRow])
-    // every=1 reproduces the unsampled operator bit-for-bit
-    val full = Multimodal.videoSceneCuts(ds).collect()
-      .map(r => r.media_id -> ((r.n_frames, r.n_cuts, r.first_cut))).toMap
-    val s1 = Multimodal.videoSceneCutsSampled(ds, every = 1).collect()
-      .map(r => r.media_id -> ((r.n_sampled, r.n_cuts, r.first_cut))).toMap
-    assert(s1 == full)
     // every=2: vid1 samples frames 0,2,4 (grays 10,200,200) => one cut
-    // seen at ORIGINAL frame 2; vid3's gap-hidden cut cancels
-    val s2 = Multimodal.videoSceneCutsSampled(ds, every = 2).collect()
-      .map(r => r.media_id -> ((r.n_sampled, r.n_cuts, r.first_cut))).toMap
+    // seen at container frame 2; vid3's gap-hidden cut cancels
+    val s2 = Multimodal.videoSceneCuts(ds, every = 2).collect()
+      .map(r => r.media_id -> ((r.n_frames, r.n_cuts, r.first_cut))).toMap
     assert(s2 == Map(1L -> ((3L, 1L, 2L)), 2L -> ((2L, 0L, -1L)),
       3L -> ((2L, 0L, -1L))))
+    assert(intercept[IllegalArgumentException](
+      Multimodal.videoSceneCuts(ds, every = 0)).getMessage.contains("every"))
   }
 
-  test("videoFrameStatsSampled: every=1 == videoFrameStats; every=2 keeps original indices") {
+  test("videoFrameStats every=2: the even-indexed frames at container indices") {
     import graft.multimodal.Multimodal
-    val media = Multimodal.mediaWithRealVideo(spark,
-      Seq(1L, 3L, 5L).toDF("doc_id"))
+    val media = Multimodal.media(Seq(1L, 3L, 5L).toDF("doc_id"),
+      Multimodal.MediaKind.VideoReal)
     def key(r: Multimodal.VideoFrameStats) =
       (r.media_id, r.frame_idx) -> ((r.width, r.height, r.sum_r, r.sum_g, r.sum_b))
     val full = Multimodal.videoFrameStats(media).collect().map(key).toMap
-    val s1 = Multimodal.videoFrameStatsSampled(media, every = 1)
+    val s2 = Multimodal.videoFrameStats(media, every = 2)
       .collect().map(key).toMap
-    assert(s1 == full)
-    val s2 = Multimodal.videoFrameStatsSampled(media, every = 2)
-      .collect().map(key).toMap
-    // exactly the even-indexed subset of the dense scan, original indices
+    // exactly the even-indexed subset of the every-frame scan
     assert(s2 == full.filter { case ((_, fi), _) => fi % 2 == 0 })
     assert(s2.nonEmpty && s2.size < full.size)
   }
 
-  test("videoFingerprintSampled: every=1 == videoFingerprint; every=2 equals dense on window-constant fixture") {
+  test("videoFingerprint every=2 equals every=1 on the window-constant fixture") {
     import graft.multimodal.Multimodal
-    val media = Multimodal.mediaWithDupVideo(spark,
-      Seq(11L, 13L, 21L).toDF("doc_id")).collect()
+    val media = Multimodal.media(Seq(11L, 13L, 21L).toDF("doc_id"),
+      Multimodal.MediaKind.VideoDup).collect()
     media.foreach { r =>
       val dense = Multimodal.videoFingerprint(r.content)
-      assert(Multimodal.videoFingerprintSampled(r.content, every = 1) == dense)
+      assert(dense.isDefined)
       // dup fixture: 128 frames, 64 two-frame constant windows — one
-      // sampled frame per window reproduces the dense fingerprint
-      assert(Multimodal.videoFingerprintSampled(r.content, every = 2) == dense)
+      // sampled frame per window reproduces the every-frame fingerprint
+      assert(Multimodal.videoFingerprint(r.content, every = 2) == dense)
     }
     // too few sampled frames => None, not a wrong hash
-    assert(Multimodal.videoFingerprintSampled(media.head.content, every = 4).isEmpty)
+    assert(Multimodal.videoFingerprint(media.head.content, every = 4).isEmpty)
   }
 
   test("multimodal: stub decoder features match a manual computation") {
@@ -270,7 +279,7 @@ class EntrySpec extends AnyFunSuite {
     assert(ImageCodec.decodeSums("not a png".getBytes("UTF-8")).isEmpty)
     // distributed path: imageStats over generated media matches per-row
     val docs = Seq((0L, "x"), (1L, "y"), (2L, "z"), (4L, "w")).toDF("doc_id", "text")
-    val stats = Multimodal.imageStats(Multimodal.mediaWithRealImages(spark, docs))
+    val stats = Multimodal.imageStats(Multimodal.media(docs, Multimodal.MediaKind.ImgReal))
       .collect().map(s => s.media_id -> s).toMap
     assert(stats.keySet == Set(0L, 2L, 4L)) // odd ids are not images
     for ((mid, s) <- stats) {
@@ -299,7 +308,7 @@ class EntrySpec extends AnyFunSuite {
     assert(AudioCodec.decodeStats("not a wav".getBytes("UTF-8")).isEmpty)
     // distributed path: audioStats over generated media matches per-row
     val docs = Seq((1L, "x"), (2L, "y"), (3L, "z"), (401L, "w")).toDF("doc_id", "text")
-    val stats = Multimodal.audioStats(Multimodal.mediaWithRealAudio(spark, docs))
+    val stats = Multimodal.audioStats(Multimodal.media(docs, Multimodal.MediaKind.AudioReal))
       .collect().map(s => s.media_id -> s).toMap
     assert(stats.keySet == Set(1L, 3L, 401L)) // even ids are not audio
     for ((mid, s) <- stats) {
@@ -334,7 +343,7 @@ class EntrySpec extends AnyFunSuite {
     // flipped windows (distinct per member), so every same-gid pair is
     // Hamming exactly 2 — durations differ, so WAV bytes never equal
     val docs = (10L to 20L).map(i => (i, "t")).toDF("doc_id", "text")
-    val media = Multimodal.mediaWithDupAudio(spark, docs)
+    val media = Multimodal.media(docs, Multimodal.MediaKind.AudioDup)
     val pairs = graft.operators.Dedup.hammingNearDup(
         Multimodal.audioFingerprints(media).toDF(), "media_id", "fhash",
         nBits = 64, maxHamming = 2)
@@ -489,7 +498,7 @@ class EntrySpec extends AnyFunSuite {
     // flipped windows — durations and frame dims differ, so neither the
     // AVI bytes nor any frame PNG can byte-match across members
     val docs = (10L to 20L).map(i => (i, "t")).toDF("doc_id", "text")
-    val media = Multimodal.mediaWithDupVideo(spark, docs)
+    val media = Multimodal.media(docs, Multimodal.MediaKind.VideoDup)
     val pairs = graft.operators.Dedup.hammingNearDup(
         Multimodal.videoFingerprints(media).toDF(), "media_id", "fhash",
         nBits = 64, maxHamming = 2)
@@ -510,7 +519,8 @@ class EntrySpec extends AnyFunSuite {
     // container structure: RIFF/'AVI ' outer, frame chunks in order
     assert(new String(avi, 0, 4, "US-ASCII") == "RIFF")
     assert(new String(avi, 8, 4, "US-ASCII") == "AVI ")
-    val frames = VideoCodec.decodeFrames(avi)
+    def decodeFrames(b: Array[Byte]) = VideoCodec.frameChunks(b).flatMap(ImageCodec.read)
+    val frames = decodeFrames(avi)
     assert(frames.size == VideoCodec.nFrames(id))
     for ((img, f) <- frames.zipWithIndex) {
       assert(img.getWidth == w && img.getHeight == h)
@@ -532,16 +542,16 @@ class EntrySpec extends AnyFunSuite {
       bos.toByteArray
     }
     val mjpg = VideoCodec.buildAvi(16, 12, jpegFrames, "MJPG")
-    val decodedJpeg = VideoCodec.decodeFrames(mjpg)
+    val decodedJpeg = decodeFrames(mjpg)
     assert(decodedJpeg.size == 3)
     assert(decodedJpeg.forall(i => i.getWidth == 16 && i.getHeight == 12))
     // corrupt / non-AVI blobs yield no frames, never a throw
-    assert(VideoCodec.decodeFrames("not an avi".getBytes("UTF-8")).isEmpty)
-    assert(VideoCodec.decodeFrames(avi.take(20).toArray).isEmpty)
+    assert(decodeFrames("not an avi".getBytes("UTF-8")).isEmpty)
+    assert(decodeFrames(avi.take(20).toArray).isEmpty)
     // distributed path: videoFrameStats fans one media row out to
     // nFrames fixed-width rows with analytic channel sums
     val docs = Seq((1L, "x"), (2L, "y"), (7L, "z")).toDF("doc_id", "text")
-    val stats = Multimodal.videoFrameStats(Multimodal.mediaWithRealVideo(spark, docs))
+    val stats = Multimodal.videoFrameStats(Multimodal.media(docs, Multimodal.MediaKind.VideoReal))
       .collect().groupBy(_.media_id)
     assert(stats.keySet == Set(1L, 7L)) // even ids are not videos
     for ((mid, rows) <- stats) {
@@ -651,14 +661,11 @@ class EntrySpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val viaJoin = pairs(Relational.asOfJoin(purchases, errors,
       "user_id", "err_user_id", "ts", "err_ts", "event_id", "err_event_id"))
-    val viaMerge = pairs(Relational.asOfJoinMerge(purchases, errors,
-      "user_id", "err_user_id", "ts", "err_ts", "err_event_id"))
-    assert(viaMerge == viaJoin && viaMerge.nonEmpty)
-    // directed form, backward, no tolerance == the original merge form
-    val viaDirected = pairs(Relational.asOfJoinMergeDirected(purchases, errors,
+    // merge form, backward, no tolerance: the latest right at-or-before
+    val viaMerge = pairs(Relational.asOfJoinMergeDirected(purchases, errors,
       "user_id", "err_user_id", "ts", "err_ts", "err_event_id",
       forward = false))
-    assert(viaDirected == viaMerge)
+    assert(viaMerge == viaJoin && viaMerge.nonEmpty)
     // forward matches are at-or-after, and a 0-second tolerance only
     // keeps exact-timestamp coincidences (a subset of the untolerated)
     val fwd = Relational.asOfJoinMergeDirected(purchases, errors,
@@ -720,7 +727,8 @@ class EntrySpec extends AnyFunSuite {
     // (distinct gids = distinct md5 cell patterns, at any corpus size)
     val docs = Seq(10L, 12L, 14L, 30L).toDF("doc_id")
       .withColumn("text", lit("x"))
-    val media = multimodal.Multimodal.mediaWithDupImages(spark, docs)
+    val media = multimodal.Multimodal.media(docs,
+      multimodal.Multimodal.MediaKind.ImgDup)
     // four DISTINCT blobs — exact byte-level dedup pairs nothing
     assert(media.collect().map(_.content.toSeq).distinct.length == 4)
     val pairs = operators.Dedup.hammingNearDup(
