@@ -99,7 +99,7 @@ object Curation {
     * uniform sample whose size is exact, not Bernoulli-approximate like
     * [[sourceMix]]. Scale-safe selection without ranking whole groups:
     * the sample key lives in a bounded 1e6 domain, so a per-(group, key)
-    * histogram + cumulative count (bounded by the key domain, never
+    * [[Relational.valueRanks]] table (bounded by the key domain, never
     * |rows|) yields each group's boundary key `k*`; rows below `k*` are
     * a map-side filter against the broadcast thresholds, and only the
     * handful of rows AT `k*` (expected |group|/1e6) are ranked by id to
@@ -111,24 +111,13 @@ object Curation {
                        frac: Double): DataFrame = {
     require(frac > 0 && frac <= 1, s"frac in (0,1], got $frac")
     val keyed = docs.withColumn("__k", hashKey("strat_", idCol))
-    val hist = keyed.groupBy(groupCol, "__k").agg(count(lit(1)).as("__cnt"))
-    val byK = Window.partitionBy(groupCol).orderBy(col("__k").asc)
-    // quotas from an aggregate + broadcast join rather than a second
-    // unordered window over the histogram (which would buffer each whole
-    // partition per task)
-    val quotas = hist.groupBy(groupCol)
-      .agg(ceil(lit(frac) * sum("__cnt")).cast("long").as("__quota"))
-    val cum = hist
-      .withColumn("__ccnt", sum("__cnt").over(byK))
-      .join(broadcast(quotas), Seq(groupCol))
-    // boundary row = the smallest key whose cumulative count reaches the
-    // quota; struct-min carries (k*, count strictly below it, quota)
-    val thr = cum.filter(col("__ccnt") >= col("__quota"))
-      .groupBy(groupCol)
-      .agg(min(struct(col("__k").as("k"), (col("__ccnt") - col("__cnt")).as("below"),
-        col("__quota").as("quota"))).as("t"))
-      .select(col(groupCol), col("t.k").as("__kstar"),
-        col("t.below").as("__below"), col("t.quota").as("__quota"))
+    // boundary row = the key whose rank interval holds the quota;
+    // `below` counts the rows strictly under it
+    val thr = Relational.valueRanks(keyed, Seq(groupCol), "__k")
+      .withColumn("__quota", ceil(lit(frac) * col("n")).cast("long"))
+      .filter(Relational.valueAtRank(col("__quota")))
+      .select(col(groupCol), col("__k").as("__kstar"),
+        col("below").as("__below"), col("__quota"))
     val joined = keyed.join(broadcast(thr), Seq(groupCol))
     val wB = Window.partitionBy(groupCol).orderBy(col(idCol).asc)
     val boundary = joined.filter(col("__k") === col("__kstar"))
@@ -382,27 +371,6 @@ object Curation {
       .drop("__rn")
   }
 
-  /** Token-budget corpus selection — the data-selection step of a
-    * training build: rank documents by a score (descending, doc id
-    * breaks ties) and keep the maximal prefix whose INCLUSIVE running
-    * token total fits `budget`. Because the running total is monotone,
-    * `cum_tokens <= budget` IS that prefix — no driver-side cursor, no
-    * iterative trimming. Scores should be integers (the q114 linear
-    * model is): integer comparison makes the order — and therefore the
-    * selected set — bit-reproducible across engines, which is what lets
-    * a DuckDB window cumsum oracle-check the result exactly.
-    *
-    * The global running sum is a DISTRIBUTED prefix sum, not a
-    * single-partition window: rows range-partition by (score desc, id),
-    * each partition computes its local running total in one pass, the
-    * driver collects ONE ROW PER PARTITION (the bounded-collect class —
-    * Chunking.orderedOffsets' precedent) to turn partition totals into
-    * base offsets, and a broadcast join adds them back. A naive
-    * `Window.orderBy(...)` with no partitionBy funnels the corpus
-    * through one task — the shape that cannot survive scale-up.
-    *
-    * Returns (id, score, n_tokens, cum_tokens) for selected documents.
-    */
   /** Probability-proportional-to-size Bernoulli sampling with
     * Horvitz-Thompson weights — the survey-sampling primitive behind
     * "sample big documents more often but reweight so corpus statistics
@@ -467,6 +435,27 @@ object Curation {
       .select(col("rank").cast("long"), col(idCol), col("weight"), col("pkey"))
   }
 
+  /** Token-budget corpus selection — the data-selection step of a
+    * training build: rank documents by a score (descending, doc id
+    * breaks ties) and keep the maximal prefix whose INCLUSIVE running
+    * token total fits `budget`. Because the running total is monotone,
+    * `cum_tokens <= budget` IS that prefix — no driver-side cursor, no
+    * iterative trimming. Scores should be integers (the q114 linear
+    * model is): integer comparison makes the order — and therefore the
+    * selected set — bit-reproducible across engines, which is what lets
+    * a DuckDB window cumsum oracle-check the result exactly.
+    *
+    * The global running sum is a DISTRIBUTED prefix sum, not a
+    * single-partition window: rows range-partition by (score desc, id),
+    * each partition computes its local running total in one pass, the
+    * driver collects ONE ROW PER PARTITION (the bounded-collect class —
+    * Chunking.orderedOffsets' precedent) to turn partition totals into
+    * base offsets, and a broadcast join adds them back. A naive
+    * `Window.orderBy(...)` with no partitionBy funnels the corpus
+    * through one task — the shape that cannot survive scale-up.
+    *
+    * Returns (id, score, n_tokens, cum_tokens) for selected documents.
+    */
   def budgetSelect(scored: DataFrame, idCol: String, scoreCol: String,
                    tokensCol: String, budget: Long,
                    numPartitions: Int = 32): DataFrame = {
@@ -723,10 +712,11 @@ object Curation {
     * corpus build.
     *
     * Tercile thresholds are the integer bits_per_1k values at ranks
-    * ceil(n/3) and ceil(2n/3): computed from the VALUE-DOMAIN histogram
-    * (cumsum over a bounded ordered window, the q145 shape), collected
-    * as TWO integers, and applied as a broadcast when-chain — no global
-    * sort of the corpus anywhere. Returns
+    * ceil(n/3) and ceil(2n/3): selected from the VALUE-DOMAIN
+    * [[Relational.valueRanks]] table into a 1-row frame and applied as
+    * a broadcast when-chain, so building the plan runs only the
+    * `scored` checkpoint and no global sort of the corpus happens
+    * anywhere. Returns
     * (src, bucket, n_docs, mean_bits_milli) ordered by (src, bucket).
     */
   def perplexityBuckets(docs: DataFrame, idCol: String, textCol: String,
@@ -734,19 +724,16 @@ object Curation {
     val scored = unigramSurprisal(docs, idCol, textCol)
       .select(col("id"), col("bits_per_1k"))
       .materialized // read by the threshold scan AND the output agg
-    val hist = scored.groupBy("bits_per_1k").agg(count(lit(1)).as("cnt"))
-    val w = Window.orderBy("bits_per_1k")
-    val cum = hist.withColumn("cum", sum("cnt").over(w))
-    val n = scored.count()
-    def valueAtRank(rank: Long): Long =
-      cum.filter(col("cum") >= rank).orderBy("bits_per_1k")
-        .select("bits_per_1k").head().getLong(0)
-    val t1 = valueAtRank((n + 2) / 3)
-    val t2 = valueAtRank((2 * n + 2) / 3)
-    val bucket = when(col("bits_per_1k") <= t1, "head")
-      .when(col("bits_per_1k") <= t2, "middle")
+    def atRank(rank: String, out: String) = max(when(
+      Relational.valueAtRank(expr(rank)), col("bits_per_1k"))).as(out)
+    val thresholds = Relational.valueRanks(scored, Nil, "bits_per_1k",
+        guard = Some(Relational.RankGuard("perplexityBuckets",
+          "coarsen bits_per_1k to a bounded domain first")))
+      .agg(atRank("(n + 2) div 3", "__t1"), atRank("(2 * n + 2) div 3", "__t2"))
+    val bucket = when(col("bits_per_1k") <= col("__t1"), "head")
+      .when(col("bits_per_1k") <= col("__t2"), "middle")
       .otherwise("tail")
-    scored
+    scored.crossJoin(broadcast(thresholds))
       .join(docs.select(col(idCol).as("id"), col(groupCol).as("src")), Seq("id"))
       .select(col("src"), bucket.as("bucket"), col("bits_per_1k"))
       .groupBy("src", "bucket")
@@ -763,8 +750,9 @@ object Curation {
     * / (n·Σx) with xᵢ ascending: within a block of TIED values the
     * rank-set is fixed, so Σ i·xᵢ per block = v·(m·cum_prev +
     * m(m+1)/2) — no tie-ordering decision exists, which is what makes
-    * the statistic hash-comparable. State: a (count-value, multiplicity)
-    * histogram per source, cumulated in one bounded ordered window.
+    * the statistic hash-comparable. State: the per-source
+    * [[Relational.valueRanks]] table of token counts (cnt = m,
+    * below = cum_prev), one bounded ordered window.
     * Returns (src, n_tokens, n_vocab, gini_ppm) — 0 = uniform,
     * →1e6 = one token dominates.
     */
@@ -773,16 +761,14 @@ object Curation {
     val counts = docs
       .select(col(groupCol).as("src"), explode(tokens(col(textCol))).as("w"))
       .groupBy("src", "w").agg(count(lit(1)).as("c"))
-    val hist = counts.groupBy("src", "c").agg(count(lit(1)).as("m"))
-    val w = Window.partitionBy("src").orderBy("c")
-    val s = hist
-      .withColumn("__cumm", sum("m").over(w))
-      .withColumn("__prev", col("__cumm") - col("m"))
+    // per count value c: cnt = its multiplicity m, below = the tokens
+    // with a smaller count
+    val s = Relational.valueRanks(counts, Seq("src"), "c")
       .groupBy("src")
-      .agg(sum(col("c") * col("m")).as("n_tokens"),
-        sum(col("m")).as("n_vocab"),
-        sum(col("c") * (col("m") * col("__prev")
-          + expr("(m * (m + 1)) div 2"))).as("__ranksum"))
+      .agg(sum(col("c") * col("cnt")).as("n_tokens"),
+        sum(col("cnt")).as("n_vocab"),
+        sum(col("c") * (col("cnt") * col("below")
+          + expr("(cnt * (cnt + 1)) div 2"))).as("__ranksum"))
     s.select(col("src"), col("n_tokens"), col("n_vocab"),
       expr("((2 * __ranksum - (n_vocab + 1) * n_tokens) * 1000000)" +
         " div (n_vocab * n_tokens)").as("gini_ppm"))

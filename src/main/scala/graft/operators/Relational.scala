@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Shape
@@ -14,17 +14,91 @@ import graft.engine.Shape.MaterializeOps
   */
 object Relational {
 
-  /** Ceiling on the distinct-value domain the single-partition
-    * value-histogram windows ([[spearmanRho]], [[ksTwoSample]]) will
-    * accept before raising — the "bounded value domain" contract those
-    * scaladocs state, machine-checked (VERDICT r12 hygiene #1). 4M
-    * rows sort comfortably in one task; a corpus whose metric exceeds
-    * it must quantize (dollars, buckets) or band (q271) first.
+  /** Ceiling on the distinct values an unkeyed value-histogram window
+    * (single-partition by construction: [[valueRanks]] with no keys,
+    * [[ksTwoSample]]) accepts before it raises with its caller's
+    * remedy. 4M histogram rows sort comfortably in one task; a metric
+    * past it must be quantized (dollars, buckets) or banded (q271)
+    * first.
     */
   val HistMaxDistinct: Long = 4000000L
 
-  /** Theta-pair fan-out guard (VERDICT r13: the [[mcnemarPpm]]
-    * enforced-bound doctrine applied to C(n,2) self-joins): returns
+  /** The caller an unkeyed value-histogram window raises for past
+    * `maxDistinct` distinct values, and the remedy its message names.
+    */
+  final case class RankGuard(caller: String, remedy: String,
+                             maxDistinct: Long = HistMaxDistinct)
+
+  /** The NULL rule of every value rank: a row with a NULL in any of
+    * `cs` (its value, its weight, the other value of a pair) carries no
+    * rank and counts toward no total, as SQL aggregates ignore NULL —
+    * the median of (NULL, NULL, 1, 2, 3) is 2, as `percentile_cont`
+    * gives.
+    */
+  private[graft] def rankedRows(df: DataFrame, cs: Column*): DataFrame =
+    df.filter(cs.map(_.isNotNull).reduce(_ && _))
+
+  /** `c`, raising when the single partition of the unkeyed spec `byV`
+    * holds more than `g.maxDistinct` rows. The count is a full frame of
+    * the same spec, so it rides the window's one sort. WindowBoundsSpec
+    * proves every unpartitioned window sits above a bounded frame, so
+    * Spark's per-execution "No Partition Defined" WARN is benign and
+    * is silenced here, once per JVM.
+    */
+  private[graft] def histGuard(c: Column, byV: WindowSpec, g: RankGuard): Column = {
+    quietUnpartitionedWindowWarn
+    val nv = count(lit(1)).over(
+      byV.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    when(nv > g.maxDistinct, raise_error(concat(
+      lit(s"${g.caller}: > ${g.maxDistinct} distinct values — ${g.remedy}, got "),
+      nv.cast("string"))))
+      .otherwise(c)
+  }
+
+  private lazy val quietUnpartitionedWindowWarn: Unit =
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+
+  /** The value-rank kernel every histogram rank, percentile and
+    * quantile operator reads. For each (keys…, v) it returns `cnt`
+    * (the weight at v), `below` (the weight strictly ahead of v in the
+    * order, within keys) and `n` (the weight in keys), so the rows of
+    * value v hold ranks [below+1, below+cnt]. Rows with a NULL value or
+    * weight carry no rank ([[rankedRows]]).
+    *
+    * Scale shape: one (keys, v) aggregate, so the window runs over the
+    * value DOMAIN, never |rows|. `n` is a full frame of the same spec:
+    * `WindowExec` buffers each partition whatever the frame, so the
+    * total costs no pass, and no aggregate or join. With no keys the
+    * window is single-partition; it then needs a [[RankGuard]] and
+    * raises past its bound ([[histGuard]]).
+    */
+  def valueRanks(df: DataFrame, keys: Seq[String], v: String,
+                 weight: Column = lit(1L), descending: Boolean = false,
+                 guard: Option[RankGuard] = None): DataFrame = {
+    require(keys.nonEmpty || guard.nonEmpty,
+      "valueRanks: an unkeyed rank window is single-partition and needs a RankGuard")
+    val byV = Window.partitionBy(keys.map(col): _*)
+      .orderBy(if (descending) col(v).desc else col(v).asc)
+    val below = sum("cnt").over(byV) - col("cnt")
+    rankedRows(df, col(v), weight)
+      .groupBy((keys :+ v).map(col): _*).agg(sum(weight).as("cnt"))
+      .withColumn("below", guard.fold(below)(histGuard(below, byV, _)))
+      .withColumn("n", sum("cnt").over(
+        byV.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+  }
+
+  /** Selects the one [[valueRanks]] row per key whose rank interval
+    * [below+1, below+cnt] holds `rank` (1 ≤ rank ≤ n): filter by it, or
+    * aggregate `max(when(valueAtRank(r), v))`. The same rule serves
+    * ascending and descending tables.
+    */
+  def valueAtRank(rank: Column): Column =
+    col("below") < rank && rank <= col("below") + col("cnt")
+
+  /** Theta-pair fan-out guard (the [[mcnemarPpm]] enforced-bound
+    * contract applied to C(n,2) self-joins): returns
     * `df` with `guardCol` rewritten to RAISE when the frame holds more
     * than `bound` rows. The guard is woven INTO the kept column — a
     * dropped side column would be erased by column pruning — and the
@@ -32,7 +106,7 @@ object Relational {
     * over-bound domain fails fast with the remedy named instead of
     * silently costing C(n,2) pair evaluations downstream.
     *
-    * Cost note (ADVICE r14): the embedded count aggregate re-evaluates
+    * Cost: the embedded count aggregate re-evaluates
     * for EVERY downstream reference of the guarded frame — a caller
     * that fans the result out k ways (mannKendall: a side, b side, and
     * its own n_pts agg — three) re-scans and re-counts the base up to
@@ -226,15 +300,9 @@ object Relational {
   def topFractionByValue(df: DataFrame, partCol: String, valCol: String,
                          tieCol: String, coverFrac: Double): DataFrame = {
     require(coverFrac > 0 && coverFrac <= 1, s"coverFrac in (0,1], got $coverFrac")
-    val hist = df.groupBy(partCol, valCol).agg(count(lit(1)).as("__cnt"))
-    val byVDesc = Window.partitionBy(partCol).orderBy(col(valCol).desc)
-    val thresholds = hist
-      .withColumn("__ccnt", sum("__cnt").over(byVDesc))
-      .withColumn("__n", sum("__cnt").over(Window.partitionBy(partCol)))
-      .withColumn("__need", floor(lit(coverFrac) * (col("__n") - 1)) + lit(1))
-      .groupBy(partCol)
-      .agg(max(when(col("__ccnt") >= col("__need"), col(valCol))).as("__vstar"),
-        max(col("__n")).as("__n"))
+    val thresholds = valueRanks(df, Seq(partCol), valCol, descending = true)
+      .filter(valueAtRank(floor(lit(coverFrac) * (col("n") - 1)) + lit(1)))
+      .select(col(partCol), col(valCol).as("__vstar"), col("n").as("__n"))
     val w = Window.partitionBy(partCol).orderBy(col(valCol).desc, col(tieCol).asc)
     df.join(broadcast(thresholds), Seq(partCol))
       .filter(col(valCol) >= col("__vstar"))
@@ -265,38 +333,26 @@ object Relational {
     * `percentile` collects every group's values into one in-memory
     * map per group; for a billion-row group that buffer is the scale
     * bottleneck. Here the only per-group state is the DISTINCT-value
-    * histogram: groupBy (value, group) with map-side partial counts,
-    * a cumulative-count window over the compact histogram (bounded by
-    * the value domain — cents, quantities — never by |rows|, the same
-    * bounded-series doctrine as [[trailingRangeSum]]), then one
-    * conditional-min aggregation per requested percentile: the value
-    * at 0-based index i is the least value whose cumulative count
-    * exceeds i. `ps` maps output column name -> fraction in [0,1];
-    * returns one row per group with a double column per percentile.
+    * [[valueRanks]] table (bounded by the value domain — cents,
+    * quantities — never by |rows|), then one aggregation picking the
+    * values at ranks floor(h)+1 and ceil(h)+1 per percentile. NULL
+    * values carry no rank. `ps` maps output column name -> fraction in
+    * [0,1]; returns one row per group with a double column per
+    * percentile.
     */
   def histogramPercentiles(df: DataFrame, grpCol: String, valCol: String,
                            ps: Seq[(String, Double)]): DataFrame = {
     require(ps.nonEmpty, "at least one percentile required")
-    val hist = df.groupBy(col(grpCol), col(valCol).as("__v"))
-      .agg(count(lit(1)).as("__cnt"))
-    val byV = Window.partitionBy(grpCol).orderBy("__v")
-    // group totals as an aggregate + broadcast join, NOT a second
-    // (unordered) window: the ordered cum-window streams its frame, but
-    // an unordered total window buffers each whole histogram partition
-    // per task — one less full-histogram pass
-    val totals = hist.groupBy(grpCol).agg(sum("__cnt").as("__n"))
-    val cum = hist
-      .withColumn("__ccnt", sum("__cnt").over(byV))
-      .join(broadcast(totals), Seq(grpCol))
     val aggCols = ps.flatMap { case (name, p) =>
-      val h = (col("__n") - lit(1)) * lit(p)
+      val h = (col("n") - lit(1)) * lit(p)
       Seq(
-        min(when(col("__ccnt") > floor(h), col("__v"))).as(s"__lo_$name"),
-        min(when(col("__ccnt") > ceil(h), col("__v"))).as(s"__hi_$name"),
-        // h (hence its fractional part) is group-constant; min picks it
-        min(h - floor(h)).as(s"__fr_$name"))
+        max(when(valueAtRank(floor(h) + 1), col(valCol))).as(s"__lo_$name"),
+        max(when(valueAtRank(ceil(h) + 1), col(valCol))).as(s"__hi_$name"),
+        // h (hence its fractional part) is group-constant; max picks it
+        max(h - floor(h)).as(s"__fr_$name"))
     }
-    val agged = cum.groupBy(grpCol).agg(aggCols.head, aggCols.tail: _*)
+    val agged = valueRanks(df, Seq(grpCol), valCol)
+      .groupBy(grpCol).agg(aggCols.head, aggCols.tail: _*)
     ps.foldLeft(agged) { case (acc, (name, _)) =>
       acc.withColumn(name,
           col(s"__lo_$name").cast("double") +
@@ -339,11 +395,12 @@ object Relational {
     * all in exact integer arithmetic over a cents-valued column.
     *
     * Same scale shape as [[histogramPercentiles]]/[[madByGroup]]: the
-    * corpus reduces to a (group, value) HISTOGRAM first, so the ordered
-    * window runs over rows bounded by the value DOMAIN, never |rows| —
-    * ties need no ordering decision because equal values contribute
-    * interchangeably to the trimmed sum (each histogram row contributes
-    * max(0, min(cum, hi) − max(cum_prev, lo)) copies). Returns
+    * corpus reduces to a (group, value) [[valueRanks]] table first, so
+    * the ordered window runs over rows bounded by the value DOMAIN,
+    * never |rows| — ties need no ordering decision because equal values
+    * contribute interchangeably to the trimmed sum (the rows of value v
+    * hold ranks [below+1, below+cnt], of which
+    * max(0, min(below+cnt, hi) − max(below, lo)) are kept). Returns
     * (group, n_rows, n_kept, sum_c, mean_milli_c); groups too small to
     * keep anything after trimming (hi == lo) are dropped rather than
     * dividing by zero.
@@ -352,24 +409,15 @@ object Relational {
                          trimPpm: Long = 100000L): DataFrame = {
     require(trimPpm >= 0 && trimPpm < 500000L,
       s"trimPpm must be in [0, 500000), got $trimPpm")
-    // null values carry no rank — they would otherwise sort first and
-    // shift every cum count (SQL aggregate-ignores-NULL semantics)
-    val hist = df.select(col(grpCol), valCents.as("__v"))
-      .filter(col("__v").isNotNull)
-      .groupBy(grpCol, "__v").agg(count(lit(1)).as("__cnt"))
-    val w = Window.partitionBy(grpCol).orderBy("__v")
-    val wAll = Window.partitionBy(grpCol)
-    hist
-      .withColumn("__cum", sum("__cnt").over(w))
-      .withColumn("__n", sum("__cnt").over(wAll))
-      .withColumn("__lo", expr(s"(__n * $trimPpm) div 1000000"))
-      .withColumn("__hi", col("__n") - col("__lo"))
+    valueRanks(df.withColumn("__v", valCents), Seq(grpCol), "__v")
+      .withColumn("__lo", expr(s"(n * $trimPpm) div 1000000"))
+      .withColumn("__hi", col("n") - col("__lo"))
       .filter(col("__hi") > col("__lo"))
       .withColumn("__keep", greatest(lit(0L),
-        least(col("__cum"), col("__hi"))
-          - greatest(col("__cum") - col("__cnt"), col("__lo"))))
+        least(col("below") + col("cnt"), col("__hi"))
+          - greatest(col("below"), col("__lo"))))
       .groupBy(grpCol)
-      .agg(max(col("__n")).as("n_rows"),
+      .agg(max(col("n")).as("n_rows"),
         sum(col("__keep")).as("n_kept"),
         sum(col("__keep") * col("__v")).as("sum_c"))
       .withColumn("mean_milli_c", expr("(sum_c * 1000) div n_kept"))
@@ -398,18 +446,17 @@ object Relational {
                             weightCol: Column,
                             bucketWidth: Long = 65536L): DataFrame = {
     require(bucketWidth >= 1, s"bucketWidth must be >= 1, got $bucketWidth")
-    // null values/weights carry no mass (they would otherwise sort
-    // first and shift the cum walk / poison the weight sums)
-    // materialized (r16, guide §5 cache-exactly-the-reused-frames):
-    // hist feeds BOTH the bucket-prefix/total aggregates and the
-    // window path, and column pruning SPECIALIZES each consumer's copy
-    // of its exchange (different projected columns → not canonically
-    // equal → no ReuseExchange), so the corpus scan + histogram agg
-    // executed twice — two identical 1.2 s 7 MB map jobs in the q150
-    // profile. The histogram is value-domain-bounded (never |rows|),
-    // so the checkpoint is small by contract.
-    val hist = df.select(col(grpCol), valCol.as("__v"), weightCol.as("__w"))
-      .filter(col("__v").isNotNull && col("__w").isNotNull)
+    // Not [[valueRanks]]: its per-group window sorts on #groups tasks,
+    // and this two-level prefix's sort parallelism is #buckets.
+    // Materialized because hist feeds both the bucket-prefix/total
+    // aggregates and the window path, and column pruning specializes
+    // each consumer's exchange (different projected columns, so no
+    // ReuseExchange): unmaterialized, the q150 profile ran the corpus
+    // scan + histogram agg twice (two identical 1.2 s 7 MB map jobs).
+    // The histogram is value-domain-bounded, so the checkpoint is small.
+    val hist = rankedRows(
+        df.select(col(grpCol), valCol.as("__v"), weightCol.as("__w")),
+        col("__v"), col("__w"))
       .groupBy(grpCol, "__v").agg(sum("__w").as("__wv"))
       .withColumn("__b", expr(s"__v div $bucketWidth"))
       .materialized
@@ -678,27 +725,25 @@ object Relational {
   /** Robust outlier flags on a bounded series (the q247 monitoring
     * alarm): a row is anomalous when |v − median| > kTimes × MAD, with
     * LOWER medians (rank ⌈n/2⌉) so every quantity is an exact integer
-    * and no interpolation crosses engines. Appends (med_c, mad_c,
-    * dev_c, is_anomaly) to the input. The two median selections each
-    * run as a bounded orderBy/limit (the series is expected
-    * date-domain bounded — one row per day/key at any corpus size).
+    * and no interpolation crosses engines. Appends (med_c, dev_c,
+    * mad_c, is_anomaly) to the input. Each median is a 1-row frame
+    * from an unkeyed [[valueRanks]] window, broadcast back, so
+    * building the plan runs no job; the series is expected date-domain
+    * bounded (one row per day/key at any corpus size). NULL values
+    * carry no rank and are never flagged.
     */
   def madOutlierFlags(df: DataFrame, vCol: String,
                       kTimes: Long = 3L): DataFrame = {
     require(kTimes >= 1, s"kTimes must be >= 1, got $kTimes")
-    def lowerMedian(d: DataFrame, c: String): Long = {
-      val n = d.count()
-      d.orderBy(col(c).asc).limit(((n + 1) / 2).toInt)
-        .orderBy(col(c).desc).limit(1).head().getLong(0)
-    }
-    val med = lowerMedian(df.select(col(vCol)), vCol)
-    val mad = lowerMedian(
-      df.select(abs(col(vCol) - med).as("dev_c")), "dev_c")
-    df.withColumn("dev_c", abs(col(vCol) - med))
-      .withColumn("med_c", lit(med))
-      .withColumn("mad_c", lit(mad))
+    def lowerMedian(d: DataFrame, c: String, out: String): DataFrame =
+      broadcast(valueRanks(d, Nil, c, guard = Some(RankGuard("madOutlierFlags",
+          "aggregate the series to a bounded domain (one row per day) first")))
+        .agg(max(when(valueAtRank(expr("(n + 1) div 2")), col(c))).as(out)))
+    val withDev = df.crossJoin(lowerMedian(df, vCol, "med_c"))
+      .withColumn("dev_c", abs(col(vCol) - col("med_c")))
+    withDev.crossJoin(lowerMedian(withDev, "dev_c", "mad_c"))
       .withColumn("is_anomaly",
-        when(col("dev_c") > lit(kTimes) * mad, 1L).otherwise(0L))
+        when(col("dev_c") > lit(kTimes) * col("mad_c"), 1L).otherwise(0L))
   }
 
   /** Time-weighted state accounting over [[scd2History]] validity
@@ -730,6 +775,23 @@ object Relational {
       .orderBy("state")
   }
 
+  /** The rank-sum step of [[mannWhitney]] and [[wilcoxonSignedRank]]:
+    * rank `v` across all rows by average (mid) rank, then sum per class.
+    * The rows of value v hold ranks [below+1, below+cnt], so their
+    * doubled average rank is the integer 2·below + cnt + 1. Returns
+    * (class, n, rank2_sum), rank2_sum = 2·ΣR.
+    */
+  private def midRankSums(df: DataFrame, classCol: String, v: String,
+                          guard: RankGuard): DataFrame = {
+    val rank2 = valueRanks(df, Nil, v, guard = Some(guard))
+      .select(col(v), (lit(2L) * col("below") + col("cnt") + 1L).as("__rank2"))
+    df.groupBy(classCol, v).agg(count(lit(1)).as("__n"))
+      .join(rank2, Seq(v))
+      .groupBy(classCol)
+      .agg(sum("__n").cast("long").as("n"),
+        sum(col("__n") * col("__rank2")).cast("long").as("rank2_sum"))
+  }
+
   /** Mann-Whitney U readout for a two-arm experiment — the
     * nonparametric effect test an A/B platform runs when the metric is
     * skewed (revenue, latency) and a means test misleads. Tie-corrected
@@ -741,31 +803,22 @@ object Relational {
     * division order u2 div ((n₁·n₂) div 10⁶) that both engines replay.
     *
     * Scale shape (the q92/q101 value-domain doctrine): ranks come from
-    * the VALUE HISTOGRAM, not a global row sort — one (value) agg
-    * bounds the window at |distinct values| rows, a second (arm,
-    * value) agg joins back; no per-row window. The histogram window is
-    * single-partition by construction, so the contract is a BOUNDED
-    * value domain (cents-quantized metrics cluster hard); for a metric
-    * whose distinct-value count grows with the corpus, pre-bucket
-    * (the q92 discipline) before ranking — U on bucketed values is U
-    * with ties, which the average-rank correction already handles.
+    * the VALUE HISTOGRAM ([[midRankSums]]), not a global row sort. The
+    * unkeyed rank window is single-partition by construction, so the
+    * contract is a BOUNDED value domain (cents-quantized metrics
+    * cluster hard), enforced at [[HistMaxDistinct]]; for a metric whose
+    * distinct-value count grows with the corpus, pre-bucket (the q92
+    * discipline) before ranking — U on bucketed values is U with ties,
+    * which the average-rank correction already handles. NULL values
+    * carry no rank and count in no arm.
     * Returns one row per arm: (arm, n_users, rank2_sum, u2, rb_ppm).
     */
   def mannWhitney(df: DataFrame, armCol: String, vCol: String): DataFrame = {
-    val byV = Window.orderBy(vCol) // histogram-bounded window
-    val hist = df.groupBy(vCol).agg(count(lit(1)).as("__cnt"))
-      .withColumn("__cum", sum("__cnt").over(byV) - col("__cnt"))
-      // 2×average rank of every row holding this value:
-      // ranks [cum+1, cum+cnt] -> 2·avg = 2·cum + cnt + 1
-      .withColumn("__rank2", lit(2L) * col("__cum") + col("__cnt") + 1L)
-      .select(col(vCol), col("__rank2"))
-    val armStats = df.groupBy(armCol, vCol).agg(count(lit(1)).as("__n"))
-      .join(hist, Seq(vCol))
-      .groupBy(armCol)
-      .agg(sum("__n").cast("long").as("n_users"),
-        sum(col("__n") * col("__rank2")).cast("long").as("rank2_sum"))
-    val arms = armStats.withColumn("u2",
-      col("rank2_sum") - col("n_users") * (col("n_users") + 1L))
+    val arms = midRankSums(df, armCol, vCol, RankGuard("mannWhitney",
+        "pre-bucket vCol to a bounded domain before ranking"))
+      .withColumnRenamed("n", "n_users")
+      .withColumn("u2",
+        col("rank2_sum") - col("n_users") * (col("n_users") + 1L))
     val other = arms.select(col(armCol).as("__o_arm"),
       col("n_users").as("__o_n"))
     arms.join(other, col(armCol) =!= col("__o_arm"))
@@ -1303,11 +1356,10 @@ object Relational {
     // sf0.1-sf1 for identical results. Equal-x pairs are excluded
     // (dx = 0), matching the strict a.x < b.x join this replaced.
     val tsUdf = udf { pts: Seq[org.apache.spark.sql.Row] =>
-      // primitive arrays throughout (r16, guide §1.2 per-task work):
-      // the previous ArrayBuffer[Long] boxed every appended slope —
-      // at |days| ≈ 2500 that is ~3M java.lang.Long allocations per
-      // group, and with only |groups| tasks the wall time IS one
-      // group's loop (measured q190 2.9 → 1.2 s at sf0.1)
+      // primitive arrays throughout: a boxed ArrayBuffer[Long] of
+      // slopes costs ~3M java.lang.Long allocations per group at
+      // |days| ≈ 2500, and with only |groups| tasks the wall time IS
+      // one group's loop (measured q190 2.9 → 1.2 s at sf0.1)
       val n = pts.length
       val xs = new Array[Long](n)
       val ys = new Array[Long](n)
@@ -1336,17 +1388,17 @@ object Relational {
       // marker stops Catalyst duplicating the O(|days|²) pair loop —
       // the n_pairs filter below otherwise becomes
       // Filter(UDF(pts)._1 > 0) UNDER Project(UDF(pts)), evaluating
-      // the whole loop twice per group (optimization guide §4.4;
-      // measured in the q190 plan: two identical 2.07 s jobs)
+      // the whole loop twice per group (measured in the q190 plan:
+      // two identical 2.07 s jobs)
     }.asNondeterministic()
     series
-      // user-origin group-keyed exchange that IS the agg's shuffle
-      // (r16, guide §2.5): AQE's byte-based coalescing merged the
-      // (tiny-bytes, huge-CPU) per-group rows into ONE task,
-      // serializing the O(|days|²) loops — a user-specified width is
-      // never coalesced, so each group's agg + pair loop gets its own
-      // core. (A repartition AFTER the agg is elided by Catalyst as
-      // same-key-same-width, so it must sit below the groupBy; the
+      // user-origin group-keyed exchange that IS the agg's shuffle:
+      // AQE's byte-based coalescing merges the (tiny-bytes, huge-CPU)
+      // per-group rows into ONE task, serializing the O(|days|²)
+      // loops — a user-specified width is never coalesced, so each
+      // group's agg + pair loop gets its own core. (A repartition AFTER
+      // the agg is elided by Catalyst as same-key-same-width, so it
+      // must sit below the groupBy; the
       // partial-agg split this forfeits carried the same bytes —
       // collect_list concatenation has no map-side reduction.)
       .repartition(Shape.width(series.sparkSession), col(groupCol))
@@ -1407,8 +1459,7 @@ object Relational {
       // posexplode + tail-slice emits exactly the C(n,2) ordered pairs
       // (items is sort_array'd ascending, so the slice past i+1 IS
       // i < i2) instead of explode²'s n² rows halved by a filter —
-      // half the generated rows, same pair multiset (the q282 shape,
-      // r16)
+      // half the generated rows, same pair multiset (the q282 shape)
       .select(posexplode(col("items")).as(Seq("pi", "i")), col("items"))
       .select(col("i"),
         explode(slice(col("items"), col("pi") + lit(2), size(col("items")))).as("i2"))
@@ -1681,37 +1732,28 @@ object Relational {
     * TakeOrdered(1) for the argmax — never a per-row sort. The window
     * is single-partition by construction, so the contract is a BOUNDED
     * value domain (quantize to domain-bounded units — dollars, buckets
-    * — before calling, as q279 does). The argmax tie breaks to the
-    * SMALLEST value attaining D, so the row is unique.
+    * — before calling, as q279 does), enforced past `maxDistinct`
+    * distinct values. NULL values carry no rank ([[rankedRows]]). The
+    * argmax tie breaks to the SMALLEST value attaining D, so the row
+    * is unique.
     *
     * Returns one row: (n_a, n_b, ks_ppm, at_v).
     */
   def ksTwoSample(df: DataFrame, armCol: String, vCol: String,
                   armA: String, armB: String,
                   maxDistinct: Long = HistMaxDistinct): DataFrame = {
-    val counts = df
-      .filter(col(armCol).isin(armA, armB))
+    val counts = rankedRows(df.filter(col(armCol).isin(armA, armB)), col(vCol))
       .groupBy(col(vCol).as("at_v"))
       .agg(sum(when(col(armCol) === armA, 1L).otherwise(0L)).as("__ca"),
         sum(when(col(armCol) === armB, 1L).otherwise(0L)).as("__cb"))
-    val byV = Window.orderBy("at_v") // value-domain-bounded window
+    // Not [[valueRanks]]: two cumulative arms share one sort; only its
+    // guard, woven into a kept column, bounds the unkeyed window.
+    val byV = Window.orderBy("at_v")
     val cum = counts
-      .withColumn("__cuma", sum("__ca").over(byV))
+      .withColumn("__cuma", histGuard(sum("__ca").over(byV), byV,
+        RankGuard("ksTwoSample",
+          "quantize vCol to a bounded domain (dollars/buckets) first", maxDistinct)))
       .withColumn("__cumb", sum("__cb").over(byV))
-      // bounded-domain contract ENFORCED (VERDICT r12): the distinct-
-      // value total rides the SAME window sort as the cumsums (a
-      // full-range frame adds no pass); a domain past the guard means
-      // the caller skipped the quantize step — raise with the remedy
-      // named instead of silently funneling a corpus-sized domain
-      // through one task on the next stage.
-      .withColumn("__nv", count(lit(1)).over(
-        byV.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .withColumn("__cuma",
-        when(col("__nv") > maxDistinct, raise_error(concat(
-          lit(s"ksTwoSample: > $maxDistinct distinct values — " +
-            "quantize vCol to a bounded domain (dollars/buckets) first, got "),
-          col("__nv").cast("string"))))
-        .otherwise(col("__cuma")))
     val totals = cum.agg(sum("__ca").as("n_a"), sum("__cb").as("n_b"))
     cum.crossJoin(broadcast(totals))
       // both cums and totals are nonnegative: floor div == trunc div,
@@ -1733,18 +1775,19 @@ object Relational {
     * exact, and 6·(n³/3)·10⁶ < 2⁶³ there), larger n scales the
     * DENOMINATOR (6Σd² div (n(n²−1) div 10⁶) — the overflow-safe
     * order, whose floor-to-zero failure mode only exists under
-    * n ≈ 100 and so never reaches this branch; ADVICE r12). This is
+    * n ≈ 100 and so never reaches this branch). This is
     * the tie-broken exact companion to [[kendallTauBands]] — reach for
     * the banded tau when ties should AVERAGE rather than split by id,
     * or when n exceeds the long bound below, which is now ENFORCED:
     * n > 1.6·10⁶ raises rather than silently overflowing 6Σd².
     *
     * Scale shape: ranks are built in two stages so no global
-    * single-partition row window ever forms — a value histogram gives
-    * each value its rank BASE (cumulative count of strictly smaller
-    * values; value-domain-bounded window), and a row_number
-    * partitioned BY VALUE (bounded by the largest tie group) splits
-    * ties by id. base + within == row_number over (value, id) exactly.
+    * single-partition row window ever forms — the [[valueRanks]] table
+    * gives each value its rank BASE (`below`; value-domain-bounded
+    * window, guarded past `maxDistinct`), and a row_number partitioned
+    * BY VALUE (bounded by the largest tie group) splits ties by id.
+    * base + within == row_number over (value, id) exactly. Only
+    * complete cases are ranked: a row with a NULL x or y is dropped.
     * Long bound: 6·Σd² < 2n³ needs n ≤ ~1.6·10⁶ rows; band first
     * (q271) beyond that.
     *
@@ -1754,29 +1797,18 @@ object Relational {
                   yCol: String,
                   maxDistinct: Long = HistMaxDistinct): DataFrame = {
     def rankBy(vCol: String, out: String)(in: DataFrame): DataFrame = {
-      val hist = in.groupBy(col(vCol)).agg(count(lit(1)).as("__cnt"))
-        .withColumn("__base",
-          coalesce(sum("__cnt").over(
-            Window.orderBy(vCol).rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)))
-        // bounded-domain contract ENFORCED (VERDICT r12): total rides
-        // the same window sort; past the guard, raise with the remedy
-        .withColumn("__nv", count(lit(1)).over(Window.orderBy(vCol)
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .withColumn("__base",
-          when(col("__nv") > maxDistinct, raise_error(concat(
-            lit(s"spearmanRho: > $maxDistinct distinct $vCol values — " +
-              "bucket the metric or band first (kendallTauBands), got "),
-            col("__nv").cast("string"))))
-          .otherwise(col("__base")))
-        .select(col(vCol), col("__base"))
-      in.join(hist, Seq(vCol))
+      val base = valueRanks(in, Nil, vCol, guard = Some(RankGuard(
+          s"spearmanRho($vCol)",
+          "bucket the metric or band first (kendallTauBands)", maxDistinct)))
+        .select(col(vCol), col("below").as("__base"))
+      in.join(base, Seq(vCol))
         .withColumn(out, col("__base") + row_number().over(
           Window.partitionBy(vCol).orderBy(idCol)))
         .drop("__base")
     }
-    val ranked = rankBy(yCol, "__ry")(rankBy(xCol, "__rx")(
-      df.select(col(idCol), col(xCol), col(yCol))))
+    // complete cases: a row with either value NULL has no rank difference
+    val ranked = rankBy(yCol, "__ry")(rankBy(xCol, "__rx")(rankedRows(
+      df.select(col(idCol), col(xCol), col(yCol)), col(xCol), col(yCol))))
     ranked
       .select((col("__rx") - col("__ry")).as("__d"))
       .agg(count(lit(1)).as("n"),
@@ -1844,8 +1876,8 @@ object Relational {
     * n·Σx² ≤ 9·10¹², and that moment bound is ENFORCED: a group past
     * it raises with the remedy named (coarsen the series — e.g. daily
     * → weekly — so per-point counts shrink) rather than silently
-    * wrapping (VERDICT r12 #3; the [[graft.operators.Sketches]]
-    * requirePositive doctrine).
+    * wrapping (the [[graft.operators.Sketches]] requirePositive
+    * contract).
     *
     * Input: one row per (group, series point) with xCol = the point's
     * count. Returns one row per group: (grp, n_pts, sum_x, fano_ppm).
@@ -1861,7 +1893,7 @@ object Relational {
         // try_* forms: overflow of x*x or of the moment sum yields
         // NULL — identically under ANSI (where the plain ops would
         // throw without the remedy) and legacy mode (where they would
-        // WRAP and silently bypass a product-form guard, ADVICE r13);
+        // WRAP and silently bypass a product-form guard);
         // the guard below turns that NULL into the remedy-bearing
         // raise. try_sum SKIPS per-row nulls (it only nulls on
         // sum-overflow), so per-row x*x overflow is detected by the
@@ -1876,7 +1908,7 @@ object Relational {
         // NULL __sxx means overflow only when non-null rows EXIST — a
         // group whose x values are all NULL has __nx = 0 and a
         // vacuously-NULL sum, and keeps the product-form guard's old
-        // contract (NULL fano_ppm, no raise; ADVICE r14)
+        // contract (NULL fano_ppm, no raise)
         when(col("__nx") =!= col("__nxx") ||
             (col("__sxx").isNull && col("__nx") > 0L) || col("__sxx") < 0L ||
             col("__sxx") > expr(s"$maxMoment div greatest(n_pts, 1)"),
@@ -2038,7 +2070,7 @@ object Relational {
     * bounded, the [[cusumAlerts]] contract), so the C(n,2) pair join
     * is a broadcast self-join over ≤ a few thousand rows at any
     * corpus size — the corpus-sized work built the series. That
-    * contract is ENFORCED (VERDICT r13): past `maxPts` points the
+    * contract is ENFORCED: past `maxPts` points the
     * query raises with the remedy named instead of silently costing
     * C(n,2) — 10⁵ un-coarsened days would be 10¹⁰ pairs.
     *
@@ -2138,17 +2170,18 @@ object Relational {
     * rank sums of the positive/negative sides. The effect readout is
     * W⁺'s share of the total rank mass in ppm — kept nonnegative so no
     * signed floor/trunc division ever crosses engines. The division
-    * picks its order by size (ADVICE r12's small-input convention):
-    * total mass ≤ 9·10¹² scales the NUMERATOR (w2_plus·10⁶ div mass —
+    * picks its order by size (the small-input convention of
+    * [[spearmanRho]]): total mass ≤ 9·10¹² scales the NUMERATOR (w2_plus·10⁶ div mass —
     * exact, no Long overflow since w2_plus ≤ mass), larger masses use
     * the overflow-safe w2_plus div (mass div 10⁶) order, where the
     * floor-to-zero failure mode (mass < 10⁶, i.e. n < 1000) cannot
     * occur.
     *
-    * Scale shape: ranks come from the |d| value histogram exactly as
-    * in [[mannWhitney]] — same bounded-value-domain contract, same
-    * pre-bucket discipline for metrics whose distinct-value count
-    * grows with the corpus (q283 buckets cents to whole dollars).
+    * Scale shape: the |d| ranks and per-sign sums are [[mannWhitney]]'s
+    * rank-sum step ([[midRankSums]], the sign as the class) — same
+    * bounded-value-domain contract, same pre-bucket discipline for
+    * metrics whose distinct-value count grows with the corpus (q283
+    * buckets cents to whole dollars).
     *
     * Returns one row: (n_pairs, w2_plus, w2_minus, wplus_share_ppm).
     */
@@ -2156,18 +2189,11 @@ object Relational {
     val nz = diffs.filter(col(dCol) =!= 0L)
       .select(abs(col(dCol)).cast("long").as("__a"),
         (col(dCol) > 0L).as("__pos"))
-    val byA = Window.orderBy("__a") // magnitude-histogram window
-    val hist = nz.groupBy("__a").agg(count(lit(1)).as("__cnt"))
-      .withColumn("__cum", sum("__cnt").over(byA) - col("__cnt"))
-      .withColumn("__rank2", lit(2L) * col("__cum") + col("__cnt") + 1L)
-      .select(col("__a"), col("__rank2"))
-    nz.groupBy("__a", "__pos").agg(count(lit(1)).as("__n"))
-      .join(hist, Seq("__a"))
-      .agg(sum("__n").cast("long").as("n_pairs"),
-        sum(when(col("__pos"), col("__n") * col("__rank2"))
-          .otherwise(0L)).cast("long").as("w2_plus"),
-        sum(when(!col("__pos"), col("__n") * col("__rank2"))
-          .otherwise(0L)).cast("long").as("w2_minus"))
+    midRankSums(nz, "__pos", "__a", RankGuard("wilcoxonSignedRank",
+        "pre-bucket dCol to a bounded domain (whole dollars) before ranking"))
+      .agg(sum("n").as("n_pairs"),
+        sum(when(col("__pos"), col("rank2_sum")).otherwise(0L)).as("w2_plus"),
+        sum(when(!col("__pos"), col("rank2_sum")).otherwise(0L)).as("w2_minus"))
       // degenerate inputs (all zeros dropped): total rank mass 0 →
       // greatest(…,1) keeps the division defined; both engines carry it
       .withColumn("wplus_share_ppm",

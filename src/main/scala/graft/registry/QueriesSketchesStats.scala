@@ -203,17 +203,18 @@ private[graft] object QueriesSketchesStats {
     "q169_equidepth_buckets" -> ((s, d) => {
       // Equi-depth (quartile) binning of order value — the feature
       // discretization step: boundaries from the bounded-state
-      // histogram percentiles (ONE collect of 3 doubles), assignment a
-      // map-only comparison against broadcast literals, stats one agg.
+      // histogram percentiles (a 1-row frame of 3 doubles, broadcast
+      // back, so building the plan runs no job), assignment a map-side
+      // comparison, stats one agg.
       val o = orders(s, d).select(cents(col("o_totalprice")).as("price_c"))
         .withColumn("__g", lit(1))
       val b = Relational.histogramPercentiles(o, "__g", "price_c",
-        Seq("b1" -> 0.25, "b2" -> 0.5, "b3" -> 0.75)).head()
-      val (b1, b2, b3) = (b.getDouble(1), b.getDouble(2), b.getDouble(3))
-      o.withColumn("bucket",
-          (lit(1L) + when(col("price_c") > b1, 1L).otherwise(0L)
-            + when(col("price_c") > b2, 1L).otherwise(0L)
-            + when(col("price_c") > b3, 1L).otherwise(0L)))
+        Seq("b1" -> 0.25, "b2" -> 0.5, "b3" -> 0.75))
+      o.crossJoin(broadcast(b.drop("__g")))
+        .withColumn("bucket",
+          (lit(1L) + when(col("price_c") > col("b1"), 1L).otherwise(0L)
+            + when(col("price_c") > col("b2"), 1L).otherwise(0L)
+            + when(col("price_c") > col("b3"), 1L).otherwise(0L)))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n"), min("price_c").as("min_c"),
           max("price_c").as("max_c"), sum("price_c").as("sum_c"))

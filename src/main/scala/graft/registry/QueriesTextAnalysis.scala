@@ -476,24 +476,18 @@ private[graft] object QueriesTextAnalysis {
       // feature transform that makes a skewed signal comparable
       // across sources before mixing/thresholding: each doc's length
       // maps to its within-source mid-rank percentile (the (rank−½)/n
-      // convention) in exact ppm via the 2× trick: pct = (2·cntLess +
-      // cntEq)·10⁶ div 2n. Ranks come from the per-source value
-      // HISTOGRAM (windows PARTITIONED by source, value-domain
-      // bounded — never a global row sort), joined back map-side; the
-      // checked projection is the doc_id ≡ 0 (mod 37) sample so the
-      // output stays a bounded slice of the corpus.
+      // convention) in exact ppm via the 2× trick: pct = (2·below +
+      // cnt)·10⁶ div 2n. Ranks come from the per-source
+      // Relational.valueRanks table (window PARTITIONED by source,
+      // value-domain bounded — never a global row sort), joined back
+      // map-side; the checked projection is the doc_id ≡ 0 (mod 37)
+      // sample so the output stays a bounded slice of the corpus.
       val docs = documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
-      val hist = docs.groupBy("source", "n_chars")
-        .agg(count(lit(1)).as("__cnt"))
-        .withColumn("__cum", sum("__cnt").over(
-          Window.partitionBy("source").orderBy("n_chars")) - col("__cnt"))
-      val ng = docs.groupBy("source").agg(count(lit(1)).as("__n_g"))
       docs.filter(pmod(col("doc_id"), lit(37L)) === 0L)
-        .join(hist, Seq("source", "n_chars"))
-        .join(broadcast(ng), Seq("source"))
-        .withColumn("pct_ppm",
-          expr("((2*__cum + __cnt) * 1000000) div (2*__n_g)"))
+        .join(Relational.valueRanks(docs, Seq("source"), "n_chars"),
+          Seq("source", "n_chars"))
+        .withColumn("pct_ppm", expr("((2*below + cnt) * 1000000) div (2*n)"))
         .select(col("doc_id"), col("source"), col("n_chars"),
           col("pct_ppm"))
         .orderBy("doc_id")

@@ -59,7 +59,11 @@ class InlineFoldPropertySpec extends AnyFunSuite {
         (if (rnd.nextInt(5) == 0) 500L else 0L))
       val df = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
         .toDF("k", "total_c")
-      val got = Relational.madOutlierFlags(df, "total_c", kTimes = 3L)
+      // both medians are broadcast 1-row frames: building runs no job
+      val (flags, jobs) = SparkTestSession.jobsDuring(
+        Relational.madOutlierFlags(df, "total_c", kTimes = 3L))
+      assert(jobs == 0, s"trial $trial: $jobs construction jobs")
+      val got = flags
         .select("k", "total_c", "med_c", "mad_c", "dev_c", "is_anomaly")
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),

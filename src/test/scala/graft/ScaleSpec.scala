@@ -225,6 +225,13 @@ class ScaleSpec extends AnyFunSuite {
     assert(!plan.toLowerCase.contains("percentile"), plan)
   }
 
+  test("q169 builds lazily: its quartile boundaries are a broadcast frame") {
+    val q169 = SparkEntry.queries("q169_equidepth_buckets")
+    q169(spark, SparkTestSession.sfDir) // table schemas resolved once
+    val (_, jobs) = SparkTestSession.jobsDuring(q169(spark, SparkTestSession.sfDir))
+    assert(jobs == 0, s"$jobs construction jobs")
+  }
+
   test("histogramPercentiles handles 1-row groups, duplicates, negatives") {
     import spark.implicits._
     val df = Seq(("a", 5L), ("b", -3L), ("b", -3L), ("b", 1L), ("b", 2L),

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.Shape.MaterializeOps
 import graft.operators.{Ann, Curation, Indexing}
 
 /** Round-7 data-selection + LM-scoring operators: DSIR importance
@@ -136,7 +137,15 @@ class SelectionLmSpec extends AnyFunSuite {
       (61L to 120L).map(i => (i, "alpha beta gamma delta epsilon zeta", "b")) ++
       (121L to 180L).map(i => (i, s"unique${i}a unique${i}b unique${i}c unique${i}d", "c"))
     ).toDF("doc_id", "text", "source")
-    val got = Curation.perplexityBuckets(docs, "doc_id", "text", "source").collect()
+    // the terciles are a broadcast 1-row frame: building the plan runs
+    // only the jobs of the `scored` checkpoint its two consumers share
+    val (_, checkpointJobs) = SparkTestSession.jobsDuring(
+      Curation.unigramSurprisal(docs, "doc_id", "text")
+        .select("id", "bits_per_1k").materialized)
+    val (buckets, jobs) = SparkTestSession.jobsDuring(
+      Curation.perplexityBuckets(docs, "doc_id", "text", "source"))
+    assert(jobs == checkpointJobs, s"$jobs construction jobs, checkpoint $checkpointJobs")
+    val got = buckets.collect()
     assert(got.map(_.getAs[Long]("n_docs")).sum == 180L)
     val byBucket = got.groupBy(_.getAs[String]("bucket")).view
       .mapValues(rs => rs.map(r => r.getAs[Long]("mean_bits_milli") * r.getAs[Long]("n_docs")).sum.toDouble /

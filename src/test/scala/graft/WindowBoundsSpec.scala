@@ -5,16 +5,16 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Debug-mode bounded-window lint (VERDICT r13 #6): every UNPARTITIONED
-  * window in the registered query surface must sit above a
-  * cardinality-bounded frame — an aggregate (value histogram, day
-  * spine, band table: the documented domain-bounded windows at
-  * Relational.scala:739/1638/1770/2076/2119), a limit, or local/literal
-  * data — never directly over a corpus scan. The bench log's
-  * `WindowExec: No Partition Defined` warnings are harmless for those
-  * documented frames, but the noise could mask a future ACCIDENTAL
-  * global window over a raw table; this walker turns that class of
-  * accident into a red test instead of a log line.
+/** Bounded-window lint: every UNPARTITIONED window in the registered
+  * query surface must sit above a cardinality-bounded frame — an
+  * aggregate (value histogram, day spine, band table: the documented
+  * domain-bounded windows of `Relational.valueRanks` with no keys,
+  * `Relational.ksTwoSample`, `Relational.cusumAlerts`,
+  * `Relational.isotonicFitPpm`), a limit, or local/literal data —
+  * never directly over a corpus scan. This walker is the guarantee
+  * that replaces Spark's `WindowExec: No Partition Defined` warning,
+  * which `Relational.histGuard` silences: an ACCIDENTAL global window
+  * over a raw table becomes a red test instead of a log line.
   */
 class WindowBoundsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
