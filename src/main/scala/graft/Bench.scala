@@ -156,12 +156,12 @@ object Bench {
       def min: Double = runs.min
       def spread: Double = runs.max - runs.min
     }
-    // Optional subset for local iteration (comma-separated name
-    // substrings, like Verify's third arg); the driver always runs all.
-    val only: Option[Seq[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSeq)
+    // Optional subset for local iteration (comma-separated names or
+    // qNN ids, as SparkEntry.selects reads them, like Verify's third
+    // arg); unset, every query runs.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
     val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(name.contains))
+      only.forall(SparkEntry.selects(_)(name))
     }
     // Interleaved control probes (round-9 methodology fix). The two
     // point probes could not judge the suite fairly: START controls on

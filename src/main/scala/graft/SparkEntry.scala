@@ -35,6 +35,17 @@ object SparkEntry {
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     QueriesRelational.queries ++ QueriesTextAnalysis.queries ++ QueriesDedupSim.queries ++ QueriesAnnVec.queries ++ QueriesMultimodal.queries ++ QueriesEventsStreams.queries ++ QueriesSketchesStats.queries ++ QueriesCurationPipeline.queries ++ QueriesGraphOps.queries
 
+  /** Whether a comma-separated query selection (`graft.Verify`'s third
+    * argument, `SPARK_GRAFT_BENCH_ONLY`) picks `name`: an exact name, or
+    * a bare `qNN` id, which picks the query numbered NN only — `q1` is
+    * `q01_…`, and `q70` is not `q170_…`.
+    */
+  def selects(selection: String)(name: String): Boolean = {
+    val id = name.takeWhile(_ != '_')
+    selection.split(",").exists(s => s == name ||
+      (s.matches("q\\d+") && id.matches("q\\d+") && BigInt(s.tail) == BigInt(id.tail)))
+  }
+
   val oracleSql: Map[String, String] =
     QueriesRelational.oracleSql ++ QueriesTextAnalysis.oracleSql ++ QueriesDedupSim.oracleSql ++ QueriesAnnVec.oracleSql ++ QueriesMultimodal.oracleSql ++ QueriesEventsStreams.oracleSql ++ QueriesSketchesStats.oracleSql ++ QueriesCurationPipeline.oracleSql ++ QueriesGraphOps.oracleSql
 }

@@ -30,12 +30,11 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional third arg: comma-separated name substrings for fast local
-    // iteration on a few queries (the driver always runs the full set)
-    val only: Option[Seq[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSeq) else None
+    // optional third arg: comma-separated names or qNN ids
+    // (SparkEntry.selects) for fast local iteration on a few queries;
+    // without it every query runs
     def selected(name: String): Boolean =
-      only.forall(_.exists(name.contains))
+      args.length <= 2 || SparkEntry.selects(args(2))(name)
     val spark = tools.LocalSession.builder()
       .config("spark.sql.session.timeZone", "UTC")
       .config(graft.engine.Tables.NanosConf, "true")

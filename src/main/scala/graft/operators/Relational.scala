@@ -375,9 +375,10 @@ object Relational {
     * doubles un-rounded (callers round for oracle compare).
     */
   def madByGroup(df: DataFrame, grpCol: String, valCol: String): DataFrame = {
-    val med = histogramPercentiles(df, grpCol, valCol, Seq("med" -> 0.5))
-      .materialized // read by the deviation join AND the output join
-    val dev = df.join(broadcast(med), Seq(grpCol))
+    // read by the deviation join AND the output join, both as a lazy
+    // broadcast: building the plan runs no job
+    val med = broadcast(histogramPercentiles(df, grpCol, valCol, Seq("med" -> 0.5)))
+    val dev = df.join(med, Seq(grpCol))
       .select(col(grpCol),
         abs(lit(2L) * col(valCol).cast("long")
           - round(lit(2.0) * col("med")).cast("long")).as("__dev2"))
@@ -536,7 +537,7 @@ object Relational {
   }
 
   /** Batch sessionization via the built-in `session_window` — the same
-    * API the streaming path (EventStreams.sessionizeStream) uses, so the
+    * API the streaming path (EventStreams.sessionCounts) uses, so the
     * batch/stream twins share semantics by construction. One hash
     * aggregation with session merging instead of [[sessionize]]'s
     * exchange + two window sorts. Per session_window semantics,

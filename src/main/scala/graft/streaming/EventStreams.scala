@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming surface over the `events` table shape
@@ -9,13 +10,14 @@ import org.apache.spark.sql.types._
   * no streaming (SURVEY.md §1.1); these extend its scan→agg shape to
   * unbounded input. Batch twins of these queries live in SparkEntry so
   * the DuckDB oracle can check the same semantics; the streaming
-  * variants here are exercised by StreamingSpec via the in-memory sink.
+  * variants here are exercised by StreamingSpec and, under induced
+  * kills, by `graft.tools.StreamSoak`.
   *
-  * Scale notes: every aggregation below carries a watermark, so state
-  * store size is bounded by (watermark horizon × key cardinality), not by
-  * stream length; `session_window` merges state per user key and evicts
-  * closed sessions at the watermark — the streaming twin of
-  * Relational.sessionize.
+  * Every keyed twin runs on one kernel, [[keyedFold]]: per-key state
+  * after any prefix of the stream equals the batch result over that
+  * prefix. The windowed aggregations carry a watermark, so their state
+  * is bounded by (watermark horizon × key cardinality), not by stream
+  * length; the keyed twins' state is one fixed-size record per key.
   */
 object EventStreams {
 
@@ -97,158 +99,146 @@ object EventStreams {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("event_id")
 
-  case class UserEvent(user_id: Long, value: Double)
-  case class UserState(n_events: Long, total_value: Double)
-  case class UserUpdate(user_id: Long, n_events: Long, total_value: Double)
+  /** The one keyed-state kernel: per key, the state after a micro-batch
+    * is `step` folded over the batch's rows, starting from the state the
+    * previous micro-batch left — the reference reduce worker's per-key
+    * buffer, carried across micro-batches. Where a batch Aggregator
+    * exists, `init` and `step` ARE its `zero` and `reduce`, so the
+    * streaming state after any prefix equals the batch buffer of that
+    * prefix and the two paths cannot drift.
+    *
+    * `step` may yield rows through its third argument (a transition, a
+    * completed trigram); `emit` yields the key's per-batch state row. A
+    * state equal to `init` is removed. Rows fold in arrival order unless
+    * `order` sorts the key's rows of one micro-batch. `init` is evaluated
+    * per key, so a mutable buffer (MgAgg's) is never shared.
+    */
+  def keyedFold[T, K: Encoder, S: Encoder, U: Encoder](
+      ds: Dataset[T], key: T => K, order: Option[Ordering[T]] = None,
+      mode: OutputMode = OutputMode.Update)(
+      init: => S, step: (S, T, U => Unit) => S,
+      emit: (K, S) => Option[U]): Dataset[U] =
+    ds.groupByKey(key).flatMapGroupsWithState(mode, GroupStateTimeout.NoTimeout)(
+      (k: K, rows: Iterator[T], state: GroupState[S]) => {
+        val out = scala.collection.mutable.ArrayBuffer.empty[U]
+        val put: U => Unit = u => { out += u; () }
+        val in = order.fold(rows)(o => rows.toVector.sorted(o).iterator)
+        val s = in.foldLeft(state.getOption.getOrElse(init))(step(_, _, put))
+        if (s == init) state.remove() else state.update(s)
+        out.iterator ++ emit(k, s)
+      })
 
-  case class FunnelState(depth: Int, lastTsUs: Long)
-  case class FunnelUpdate(user_id: Long, depth: Int)
+  /** The one linear cell sum, on [[keyedFold]]: `cells` holds one row per
+    * (record, cell) contribution — every column but `__delta` is the
+    * cell key — and per-cell state is (Σ delta, n rows). A linear sketch
+    * (CMS, log-bucket, the permutation ledger) is a sum of per-row
+    * contributions, so its streaming state after any prefix equals the
+    * batch sketch of that prefix. Returns the key columns + `__sum`,
+    * `__n`; each twin renames through a final `select`.
+    */
+  private def cellSums(cells: DataFrame): DataFrame = {
+    val keys = cells.columns.filter(_ != "__delta").toSeq
+    val keySchema = StructType(keys.map(cells.schema(_)))
+    keyedFold[Row, Row, (Long, Long), Row](
+        cells.select(struct(keys.map(col): _*), col("__delta").cast("long")),
+        _.getStruct(0))(
+      (0L, 0L), (s, r, _) => (s._1 + r.getLong(1), s._2 + 1L),
+      (k, s) => Some(Row.fromSeq(k.toSeq :+ s._1 :+ s._2)))(
+      Encoders.row(keySchema), Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong),
+      Encoders.row(keySchema.add("__sum", LongType).add("__n", LongType)))
+  }
+
+  /** The replay-idempotent foreachBatch sink: micro-batch n's `f(batch)`
+    * OVERWRITES `outDir/batch_id=n`, so a batch replayed after a failure
+    * lands content-identically — effectively-once output on top of
+    * foreachBatch's at-least-once contract. `mode` must match the
+    * stream's stateful operator (`append` for a stateless stream).
+    */
+  def batchIdSink(stream: DataFrame, outDir: String, checkpointDir: String,
+                  mode: String = "append")
+                 (f: DataFrame => DataFrame = identity): StreamingQuery =
+    stream.writeStream.outputMode(mode)
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        f(batch).write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+        ()
+      }
+      .start()
 
   case class TriPrefix(t1: String, t2: String)
   case class TriDelta(s1: String, s2: String, s3: String, n: Long)
 
   /** Streaming twin of q268's trigram path mining: per-user keyed
-    * state = the LAST TWO event types (two strings per user forever —
-    * the minimal sequence memory), so each micro-batch emits exactly
-    * the trigram occurrences its events complete, including the ones
-    * that straddle batch boundaries. Events are applied in
+    * state = the LAST TWO event types (two strings per user forever),
+    * so each micro-batch emits exactly the trigram occurrences its
+    * events complete, including the ones that straddle batch
+    * boundaries — one (s1, s2, s3, 1) delta each. Events fold in
     * (ts, event_id) order within each batch; for a ts-ordered stream
-    * (the same ingest contract [[streamingFunnel]] carries) the
-    * union of emitted deltas grouped by trigram equals the batch
-    * window's counts after any prefix — counts are additive, so no
-    * replay or reconciliation is ever needed downstream. Emits
-    * per-user per-batch (s1, s2, s3, n) deltas; the corpus rollup is
-    * a bounded |type|³ agg (StreamingSpec asserts multi-batch
-    * equivalence with the batch window).
+    * (the ingest contract [[streamingFunnel]] carries) the deltas
+    * grouped by trigram equal the batch window's counts after any
+    * prefix — counts are additive, so no replay or reconciliation is
+    * ever needed downstream.
     */
-  def streamingPathTrigrams(events: DataFrame)
-      : org.apache.spark.sql.Dataset[TriDelta] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  def streamingPathTrigrams(events: DataFrame): Dataset[TriDelta] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.selectExpr("user_id", "unix_micros(ts) AS ts_us", "event_id",
-        "event_type")
-      .as[(Long, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (_: Long, it: Iterator[(Long, Long, Long, String)],
-         state: GroupState[TriPrefix]) => {
-          var st = state.getOption.getOrElse(TriPrefix(null, null))
-          val out = scala.collection.mutable.HashMap
-            .empty[(String, String, String), Long]
-          it.toArray.sortBy(e => (e._2, e._3)).foreach { case (_, _, _, tp) =>
-            if (st.t1 != null && st.t2 != null) {
-              val k = (st.t1, st.t2, tp)
-              out(k) = out.getOrElse(k, 0L) + 1L
-            }
-            st = TriPrefix(st.t2, tp)
-          }
-          state.update(st)
-          out.iterator.map { case ((a, b, c), n) => TriDelta(a, b, c, n) }
-        })
+    keyedFold[(Long, Long, Long, String), Long, TriPrefix, TriDelta](
+        events.selectExpr("user_id", "unix_micros(ts)", "event_id", "event_type")
+          .as[(Long, Long, Long, String)],
+        _._1, order = Some(Ordering.by((e: (Long, Long, Long, String)) => (e._2, e._3))))(
+      TriPrefix(null, null),
+      (st, e, out) => {
+        if (st.t1 != null) out(TriDelta(st.t1, st.t2, e._4, 1L))
+        TriPrefix(st.t2, e._4)
+      },
+      (_, _) => None)
   }
+
+  case class FunnelState(depth: Int, lastTsUs: Long)
+  case class FunnelUpdate(user_id: Long, depth: Int)
 
   /** Streaming twin of [[graft.operators.Relational.funnelStages]]
     * (q241): per-user greedy funnel progress as keyed state — (stage
     * depth, chosen ts), TWO fixed-size fields per user forever. Events
-    * are applied in ts order within each micro-batch; across batches
-    * the greedy frontier is the state, so for a ts-ordered stream (the
-    * usual ingest contract; same one [[streamingUpsert]] carries) the
-    * state after any prefix equals the batch funnel of that prefix —
-    * greedy earliest-advance is exactly the min-per-stage recursion,
-    * applied incrementally. Emits the user's depth each micro-batch;
-    * the per-stage conversion rollup is a bounded agg over the final
-    * updates (StreamingSpec asserts equality with the batch operator
-    * after multi-batch replay).
+    * fold in ts order within each micro-batch; ties on ts cannot
+    * advance two stages (strictly-after contract), so the ts sort alone
+    * reproduces the batch greedy. For a ts-ordered stream (the usual
+    * ingest contract) the state after any prefix equals the batch
+    * funnel of that prefix — greedy earliest-advance is exactly the
+    * min-per-stage recursion, applied incrementally. Emits the user's
+    * depth each micro-batch; a user still at depth 0 holds no state.
     */
-  def streamingFunnel(events: DataFrame, stages: Seq[String])
-      : org.apache.spark.sql.Dataset[FunnelUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  def streamingFunnel(events: DataFrame, stages: Seq[String]): Dataset[FunnelUpdate] = {
     require(stages.nonEmpty, "streamingFunnel needs at least one stage")
     val spark = events.sparkSession
     import spark.implicits._
-    events.selectExpr("user_id", "unix_micros(ts) AS ts_us", "event_type")
-      .as[(Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (uid: Long, it: Iterator[(Long, Long, String)],
-         state: GroupState[FunnelState]) => {
-          var st = state.getOption.getOrElse(FunnelState(0, Long.MinValue))
-          // ties on ts cannot advance two stages (strictly-after
-          // contract), so sorting by ts alone reproduces the batch
-          // greedy exactly
-          it.toArray.sortBy(_._2).foreach { case (_, tsUs, tp) =>
-            if (st.depth < stages.size && tp == stages(st.depth) &&
-                (st.depth == 0 || tsUs > st.lastTsUs))
-              st = FunnelState(st.depth + 1, tsUs)
-          }
-          state.update(st)
-          Iterator(FunnelUpdate(uid, st.depth))
-        })
+    keyedFold[(Long, Long, String), Long, FunnelState, FunnelUpdate](
+        events.selectExpr("user_id", "unix_micros(ts)", "event_type").as[(Long, Long, String)],
+        _._1, order = Some(Ordering.by((e: (Long, Long, String)) => e._2)))(
+      FunnelState(0, Long.MinValue),
+      (st, e, _) =>
+        if (st.depth < stages.size && e._3 == stages(st.depth) &&
+            (st.depth == 0 || e._2 > st.lastTsUs)) FunnelState(st.depth + 1, e._2)
+        else st,
+      (uid, st) => Some(FunnelUpdate(uid, st.depth)))
   }
 
-  /** Custom keyed state via flatMapGroupsWithState (the engine's
-    * arbitrary-stateful-operator surface, SURVEY.md §2b "streaming"):
-    * per-user running event count + value total, emitted as an update per
-    * micro-batch. State is one fixed-size record per user — bounded by
-    * key cardinality, not stream length; for keys that must expire, pass
-    * a GroupStateTimeout and call state.setTimeoutDuration in the body.
+  case class UserEvent(user_id: Long, value: Double)
+  case class UserState(n_events: Long, total_value: Double)
+  case class UserUpdate(user_id: Long, n_events: Long, total_value: Double)
+
+  /** Per-user running event count + value total, emitted as an update
+    * per micro-batch. State is one fixed-size record per user — bounded
+    * by key cardinality, not stream length.
     */
-  def runningUserTotals(events: DataFrame)
-      : org.apache.spark.sql.Dataset[UserUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  def runningUserTotals(events: DataFrame): Dataset[UserUpdate] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.selectExpr("user_id", "value").as[UserEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (uid: Long, it: Iterator[UserEvent], state: GroupState[UserState]) => {
-          val prev = state.getOption.getOrElse(UserState(0L, 0.0))
-          var n = prev.n_events
-          var tot = prev.total_value
-          it.foreach { e => n += 1; tot += e.value }
-          state.update(UserState(n, tot))
-          Iterator(UserUpdate(uid, n, tot))
-        })
-  }
-
-  /** The same running totals on Spark 4's transformWithState — the
-    * arbitrary-state API succeeding [mapGroups|flatMapGroups]WithState:
-    * named typed state (ValueState/ListState/MapState) in the RocksDB
-    * state store, with TTL and timers available per state item. Kept as
-    * a twin of [[runningUserTotals]] so the two APIs are equivalence-
-    * tested against each other and the batch aggregate. Requires
-    * `spark.sql.streaming.stateStore.providerClass =
-    * ...state.RocksDBStateStoreProvider` (transformWithState rejects the
-    * default HDFS-backed store).
-    */
-  class RunningTotalsProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, UserEvent, UserUpdate] {
-    import org.apache.spark.sql.streaming.{OutputMode, TTLConfig, TimeMode, TimerValues, ValueState}
-    @transient private var totals: ValueState[UserState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      totals = getHandle.getValueState[UserState]("totals",
-        org.apache.spark.sql.Encoders.product[UserState], TTLConfig.NONE)
-    override def handleInputRows(uid: Long, rows: Iterator[UserEvent],
-                                 timers: TimerValues): Iterator[UserUpdate] = {
-      val prev = if (totals.exists()) totals.get() else UserState(0L, 0.0)
-      var n = prev.n_events
-      var tot = prev.total_value
-      rows.foreach { e => n += 1; tot += e.value }
-      totals.update(UserState(n, tot))
-      Iterator(UserUpdate(uid, n, tot))
-    }
-  }
-
-  def runningUserTotalsTws(events: DataFrame)
-      : org.apache.spark.sql.Dataset[UserUpdate] = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.selectExpr("user_id", "value").as[UserEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new RunningTotalsProcessor, TimeMode.None(),
-        OutputMode.Update())
+    keyedFold[UserEvent, Long, UserState, UserUpdate](
+        events.selectExpr("user_id", "value").as[UserEvent], _.user_id)(
+      UserState(0L, 0.0),
+      (s, e, _) => UserState(s.n_events + 1, s.total_value + e.value),
+      (uid, s) => Some(UserUpdate(uid, s.n_events, s.total_value)))
   }
 
   case class KmvUpdate(group: String, n_kept: Long, kth_min: Long,
@@ -256,81 +246,55 @@ object EventStreams {
 
   /** Streaming KMV distinct sketch per key — the ingest-time twin of
     * the batch [[graft.operators.Sketches.kmvDistinct]] (q137): state
-    * is the same sorted k-smallest-distinct-hash buffer (k longs per
-    * group, insertion via the batch Aggregator's own `reduce`, so the
-    * two paths CANNOT drift), emitting the updated estimate per
-    * micro-batch. Because the buffer is a pure function of the hash
-    * SET, the streaming state after any prefix equals the batch sketch
-    * of that prefix — equivalence-tested against q137's aggregator in
-    * StreamingSpec. State stays k longs per group forever: a distinct
-    * counter a stream can run for months without growing.
+    * is the batch Aggregator's own sorted k-smallest-distinct-hash
+    * buffer, emitting the updated estimate per micro-batch. Because the
+    * buffer is a pure function of the hash SET, the streaming state
+    * after any prefix equals the batch sketch of that prefix. State
+    * stays k longs per group forever: a distinct counter a stream can
+    * run for months without growing.
     */
   def streamingKmvDistinct(events: DataFrame, groupCol: String,
                            keyCol: String, k: Int, saltPrefix: String)
-      : org.apache.spark.sql.Dataset[KmvUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import org.apache.spark.sql.functions.{col, concat, lit}
+      : Dataset[KmvUpdate] = {
     import graft.operators.Sketches
     val agg = new Sketches.KmvAgg(k)
     val spark = events.sparkSession
     import spark.implicits._
-    events.select(col(groupCol).cast("string").as("g"),
-        graft.functions.TextFunctions.tokenHash64(
-          concat(lit(saltPrefix), col(keyCol).cast("string"))).as("h"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (g: String, it: Iterator[(String, Long)], state: GroupState[Array[Long]]) => {
-          var buf = state.getOption.getOrElse(Array.empty[Long])
-          it.foreach { case (_, h) => buf = agg.reduce(buf, h) }
-          state.update(buf)
-          val est =
-            if (buf.length < k) buf.length.toLong
-            else ((BigInt(k - 1) * BigInt(Sketches.HashDomain))
-              / BigInt(buf.last max 1L)).toLong
-          Iterator(KmvUpdate(g, buf.length.toLong,
-            if (buf.isEmpty) 0L else buf.last, est))
-        })
+    keyedFold[(String, Long), String, Array[Long], KmvUpdate](
+        events.select(col(groupCol).cast("string"),
+          graft.functions.TextFunctions.tokenHash64(
+            concat(lit(saltPrefix), col(keyCol).cast("string")))).as[(String, Long)],
+        _._1)(
+      agg.zero, (b, e, _) => agg.reduce(b, e._2),
+      (g, b) => Some(KmvUpdate(g, b.length.toLong, if (b.isEmpty) 0L else b.last,
+        if (b.length < k) b.length.toLong
+        else ((BigInt(k - 1) * BigInt(Sketches.HashDomain)) / BigInt(b.last max 1L)).toLong)))
   }
 
   case class MgUpdate(group: String, n_counters: Long, items: Map[String, Long])
 
   /** Streaming Misra-Gries heavy-hitter summary per key — the
     * ingest-time twin of the batch [[graft.operators.Sketches.MgAgg]]
-    * (q214): per-group state is the SAME ≤ capacity-counter map,
-    * folded with the batch Aggregator's own `reduce` (so the two paths
-    * cannot drift on the decrement rule), emitting the current summary
-    * per micro-batch. MG is NOT a linear sketch — the summary's
-    * contents depend on arrival order — but the q214 guarantees
-    * (every item with count > n/(capacity+1) retained, estimates only
-    * undercount, undercount ≤ n/(capacity+1)) hold for ANY order, and
-    * the streaming fold IS some order of the same multiset: the
-    * contract-over-prefix equivalence StreamingSpec asserts. State is
-    * ≤ capacity (string, long) counters per group FOREVER — a trending-
-    * items monitor that runs unbounded.
+    * (q214): per-group state is the batch Aggregator's own ≤ capacity
+    * counter map, emitting the current summary per micro-batch. MG is
+    * NOT a linear sketch — the summary's contents depend on arrival
+    * order — but the q214 guarantees (every item with count >
+    * n/(capacity+1) retained, estimates only undercount, undercount ≤
+    * n/(capacity+1)) hold for ANY order, and the streaming fold IS some
+    * order of the same multiset. State is ≤ capacity counters per group
+    * FOREVER — a trending-items monitor that runs unbounded.
     */
   def streamingMgSummary(records: DataFrame, groupCol: String,
-                         itemCol: String, capacity: Int)
-      : org.apache.spark.sql.Dataset[MgUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import org.apache.spark.sql.functions.col
+                         itemCol: String, capacity: Int): Dataset[MgUpdate] = {
     val agg = new graft.operators.Sketches.MgAgg(capacity)
     val spark = records.sparkSession
     import spark.implicits._
-    records.select(col(groupCol).cast("string").as("g"),
-        col(itemCol).cast("string").as("w"))
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (g: String, it: Iterator[(String, String)],
-         state: GroupState[Map[String, Long]]) => {
-          val buf = scala.collection.mutable.HashMap.empty[String, Long]
-          state.getOption.foreach(m => buf ++= m)
-          it.foreach { case (_, w) => agg.reduce(buf, w) }
-          val snap = buf.toMap
-          state.update(snap)
-          Iterator(MgUpdate(g, snap.size.toLong, snap))
-        })
+    keyedFold[(String, String), String,
+        scala.collection.mutable.HashMap[String, Long], MgUpdate](
+        records.select(col(groupCol).cast("string"), col(itemCol).cast("string"))
+          .as[(String, String)], _._1)(
+      agg.zero, (b, e, _) => agg.reduce(b, e._2),
+      (g, b) => Some(MgUpdate(g, b.size.toLong, b.toMap)))
   }
 
   case class UpsertOp(k: Long, v: Long, op: String)
@@ -343,179 +307,121 @@ object EventStreams {
     * change_type vocabulary snapshotDiff produces (insert / update /
     * delete; idempotent puts and deletes of absent keys emit nothing,
     * matching the diff of identical snapshots). After any prefix of the
-    * stream, the state IS the upserted table: equivalence with
-    * applyChangelog(v1, snapshotDiff(v1, v2)) is asserted in
-    * StreamingSpec by replaying v1 then v2 as puts/dels.
+    * stream, the state IS the upserted table.
     *
-    * Scale: state = one Long per live key (Spark partitions the state
-    * store by key); each micro-batch touches only its keys. Per-key
-    * multiple records in one batch fold in arrival order, emitting one
-    * change per transition — the same per-key linearization a
-    * changelog-compacting sink performs.
+    * Scale: state = one Long per live key (a delete removes it); each
+    * micro-batch touches only its keys. Per-key multiple records in one
+    * batch fold in arrival order, emitting one change per transition —
+    * the same per-key linearization a changelog-compacting sink
+    * performs. The changes are appended, never updated.
     */
-  def streamingUpsert(records: org.apache.spark.sql.Dataset[UpsertOp])
-      : org.apache.spark.sql.Dataset[ChangeRow] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+  def streamingUpsert(records: Dataset[UpsertOp]): Dataset[ChangeRow] = {
     val spark = records.sparkSession
     import spark.implicits._
-    records.groupByKey(_.k)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (k: Long, it: Iterator[UpsertOp], state: GroupState[Long]) => {
-          val out = scala.collection.mutable.ArrayBuffer.empty[ChangeRow]
-          var cur: Option[Long] = state.getOption
-          it.foreach { r =>
-            (r.op, cur) match {
-              case ("put", None) =>
-                out += ChangeRow(k, "insert", None, Some(r.v)); cur = Some(r.v)
-              case ("put", Some(old)) if old != r.v =>
-                out += ChangeRow(k, "update", Some(old), Some(r.v)); cur = Some(r.v)
-              case ("put", _) => // idempotent put: unchanged, no emission
-              case ("del", Some(old)) =>
-                out += ChangeRow(k, "delete", Some(old), None); cur = None
-              case ("del", None) => // deleting an absent key: no-op
-              case (other, _) =>
-                throw new IllegalArgumentException(s"unknown op '$other'")
-            }
-          }
-          cur match {
-            case Some(v) => state.update(v)
-            case None    => state.remove()
-          }
-          out.iterator
-        })
+    keyedFold[UpsertOp, Long, Option[Long], ChangeRow](records, _.k,
+        mode = OutputMode.Append)(
+      None,
+      (cur, r, out) => (r.op, cur) match {
+        case ("put", Some(old)) if old == r.v => cur // idempotent put
+        case ("put", _) =>
+          out(ChangeRow(r.k, if (cur.isEmpty) "insert" else "update", cur, Some(r.v)))
+          Some(r.v)
+        case ("del", Some(_)) => out(ChangeRow(r.k, "delete", cur, None)); None
+        case ("del", None) => cur // deleting an absent key: no-op
+        case (other, _) => throw new IllegalArgumentException(s"unknown op '$other'")
+      },
+      (_, _) => None)
   }
 
   /** Streaming LSH ingest — q206's standing-index near-dup check run
     * CONTINUOUSLY: each micro-batch of new documents is minhash-signed,
     * band-keyed, and equi-joined against the STATIC persisted
     * [[graft.operators.Dedup.minHashBandPostings]] index, writing
-    * (new_id, corpus_id, est_jaccard) under `outDir/batch_id=<n>`.
+    * (new_id, corpus_id, est_jaccard) through [[batchIdSink]].
     * Signatures are a pure per-doc function and the index is static,
     * so the computation is micro-batch DECOMPOSABLE: the union of all
-    * batch outputs equals the one-shot batch join (StreamingSpec
-    * asserts set equality over a multi-file replay) — no state store,
-    * no watermark. foreachBatch rather than a direct streaming plan
+    * batch outputs equals the one-shot batch join — no state store, no
+    * watermark. foreachBatch rather than a direct streaming plan
     * because signature building aggregates per doc, which the
     * streaming planner would treat as a cross-batch stateful
-    * aggregation; per micro-batch it is exactly q206's plan. Each
-    * batch OVERWRITES its own batch_id partition, so a replayed batch
-    * after failure lands idempotently — effectively-once output on
-    * top of foreachBatch's at-least-once contract.
+    * aggregation; per micro-batch it is exactly q206's plan.
     */
   def streamingLshIngest(docStream: DataFrame, postings: DataFrame,
                          outDir: String, checkpointDir: String,
                          idCol: String, textCol: String,
                          k: Int, bands: Int, rowsPerBand: Int,
-                         minEstJaccard: Double)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Dedup.minHashLshJoinPostings(batch, postings,
-            idCol, textCol, k, bands, rowsPerBand, minEstJaccard)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+                         minEstJaccard: Double): StreamingQuery =
+    batchIdSink(docStream, outDir, checkpointDir)(
+      graft.operators.Dedup.minHashLshJoinPostings(_, postings,
+        idCol, textCol, k, bands, rowsPerBand, minEstJaccard))
 
   case class CmsCellUpdate(r: Long, c: Long, cnt: Long)
 
   /** Streaming count-min sketch — the ingest twin of the batch
     * `Sketches.cmsBuildKeys` (q138/q178/q194 machinery): each record
-    * fans out to its d cells map-side, cells are the stream keys, and
-    * per-cell Long state accumulates counts. CMS is a LINEAR sketch,
-    * so streaming state after any prefix == the batch sketch of that
-    * prefix (the q178 merge property, realized incrementally) — the
-    * equivalence StreamingSpec asserts cell-for-cell. State is bounded
-    * at d·w Longs FOREVER, whatever the stream volume: the reason a
-    * frequency monitor can run on an unbounded ingest.
+    * fans out to its d cells map-side and [[cellSums]] counts them. CMS
+    * is LINEAR (the q178 merge property, realized incrementally). State
+    * is bounded at d·w cells FOREVER, whatever the stream volume: the
+    * reason a frequency monitor can run on an unbounded ingest.
     */
   def streamingCmsCells(records: DataFrame, keyCol: String, d: Int, w: Int,
-                        saltPrefix: String)
-      : org.apache.spark.sql.Dataset[CmsCellUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import org.apache.spark.sql.functions.{col, concat, lit, pmod, shiftright, posexplode, array}
+                        saltPrefix: String): Dataset[CmsCellUpdate] = {
     val spark = records.sparkSession
     import spark.implicits._
     val h = graft.functions.TextFunctions.tokenHash64(
       concat(lit(saltPrefix), col(keyCol).cast("string")))
     val rows = (0 until d).map(r => pmod(shiftright(h, 15 * r), lit(w.toLong)))
-    records
-      .select(posexplode(array(rows: _*)).as(Seq("r", "c")))
-      .select(col("r").cast("long"), col("c").cast("long"))
-      .as[(Long, Long)]
-      .groupByKey(identity)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (cell: (Long, Long), it: Iterator[(Long, Long)],
-         state: GroupState[Long]) => {
-          val cnt = state.getOption.getOrElse(0L) + it.size
-          state.update(cnt)
-          Iterator(CmsCellUpdate(cell._1, cell._2, cnt))
-        })
+    cellSums(records
+        .select(posexplode(array(rows: _*)).as(Seq("r", "c")))
+        .select(col("r").cast("long").as("r"), col("c").cast("long").as("c"),
+          lit(1L).as("__delta")))
+      .select(col("r"), col("c"), col("__n").as("cnt")).as[CmsCellUpdate]
   }
 
   case class PermCellUpdate(grp: String, r: Long, sumSd: Long, nRows: Long)
 
   /** STREAMING sign-flip permutation ledger — the ingest twin of
-    * [[graft.operators.Relational.permutationTestPpm]] (VERDICT r13
-    * #7, completing the batch↔stream doctrine for the resample stats
-    * layer): per pair row the R md5-derived ±1 signs are a PURE
-    * function of the resample key
-    * ([[graft.functions.TextFunctions.signFlips]] — the identical
-    * draws as the batch form), so the per-(group, r) partial sums
-    * Σ sᵣ·d are LINEAR in the rows and accumulate in keyed Long state
-    * exactly like CMS cells; the r = −1 cell carries the OBSERVED
-    * ledger (s ≡ +1), giving (n_pairs, sum_obs) from the same state.
-    * State is bounded at |groups|·(R+1) cells FOREVER, whatever the
-    * stream volume, and any moment's cells feed
-    * [[permutationFromCells]] — whose readout on a prefix equals the
-    * batch permutationTestPpm of that prefix, asserted cell-for-cell
-    * by StreamingSpec and under induced kills by the SOAK harness.
-    * Resample ids must be NON-NULL, and that precondition is ENFORCED
-    * (ADVICE r14): a null id has no sign draws, so before this guard
-    * the NULL sign array made posexplode drop the row from EVERY cell
-    * — including the r = −1 observed ledger — and n_pairs/sum_obs
-    * silently diverged from the batch permutationTestPpm, which counts
-    * the row. Now a null id raises with the remedy named, keeping the
-    * batch↔stream equality contract enforceable rather than
-    * documented.
+    * [[graft.operators.Relational.permutationTestPpm]]: per pair row the
+    * R md5-derived ±1 signs are a PURE function of the resample key
+    * ([[graft.functions.TextFunctions.signFlips]] — the identical draws
+    * as the batch form), so the per-(group, r) partial sums Σ sᵣ·d are
+    * LINEAR in the rows and accumulate through [[cellSums]] exactly like
+    * CMS cells; the r = −1 cell carries the OBSERVED ledger (s ≡ +1),
+    * giving (n_pairs, sum_obs) from the same state. State is bounded at
+    * |groups|·(R+1) cells FOREVER, and any moment's cells feed
+    * [[permutationFromCells]], whose readout on a prefix equals the
+    * batch permutationTestPpm of that prefix.
+    *
+    * Resample ids must be NON-NULL, and the precondition is enforced: a
+    * null id has no sign draws, so its NULL sign array would make
+    * posexplode drop the row from EVERY cell — the r = −1 observed
+    * ledger included — and n_pairs/sum_obs would silently diverge from
+    * the batch permutationTestPpm, which counts the row. A null id
+    * raises with the remedy named instead.
     */
   def streamingPermCells(pairs: DataFrame, grpCol: String, idCol: String,
                          dCol: String, r: Int = 199,
-                         prefix: String = "pt_")
-      : org.apache.spark.sql.Dataset[PermCellUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+                         prefix: String = "pt_"): Dataset[PermCellUpdate] = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    pairs
-      .select(col(grpCol).cast("string").as("grp"),
-        col(dCol).cast("long").as("__d"),
-        // the observed cell's +1 doubles as the null-id guard: it
-        // raises INSTEAD of letting a NULL sign array drop the row
-        posexplode(concat(array(
-          when(col(idCol).isNull,
-            raise_error(lit("streamingPermCells: resample id is NULL — " +
-              "the batch permutationTestPpm counts this row but no sign " +
-              "draws exist for it; assign a non-null resample key " +
-              "upstream (or filter null-keyed rows on BOTH forms)"))
-              .cast("long"))
-            .otherwise(lit(1L))),
-          graft.functions.TextFunctions.signFlips(
-            col(idCol).cast("long"), r, prefix))))
-      .select(col("grp"), (col("pos") - 1L).cast("long").as("__r"),
-        (col("col") * col("__d")).cast("long").as("__sd"))
-      .as[(String, Long, Long)]
-      .groupByKey(t => (t._1, t._2))
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (cell: (String, Long), it: Iterator[(String, Long, Long)],
-         state: GroupState[(Long, Long)]) => {
-          var sum = 0L; var n = 0L
-          it.foreach { t => sum += t._3; n += 1L }
-          val (s0, n0) = state.getOption.getOrElse((0L, 0L))
-          val next = (s0 + sum, n0 + n)
-          state.update(next)
-          Iterator(PermCellUpdate(cell._1, cell._2, next._1, next._2))
-        })
+    cellSums(pairs
+        .select(col(grpCol).cast("string").as("grp"),
+          col(dCol).cast("long").as("__d"),
+          // the observed cell's +1 doubles as the null-id guard
+          posexplode(concat(array(
+            when(col(idCol).isNull,
+              raise_error(lit("streamingPermCells: resample id is NULL — " +
+                "the batch permutationTestPpm counts this row but no sign " +
+                "draws exist for it; assign a non-null resample key " +
+                "upstream (or filter null-keyed rows on BOTH forms)"))
+                .cast("long"))
+              .otherwise(lit(1L))),
+            graft.functions.TextFunctions.signFlips(
+              col(idCol).cast("long"), r, prefix))))
+        .select(col("grp"), (col("pos") - 1L).cast("long").as("r"),
+          (col("col") * col("__d")).as("__delta")))
+      .select(col("grp"), col("r"), col("__sum").as("sumSd"), col("__n").as("nRows"))
+      .as[PermCellUpdate]
   }
 
   /** Batch readout over the latest [[streamingPermCells]] state:
@@ -548,38 +454,26 @@ object EventStreams {
   /** STREAMING log-bucket quantile sketch (the ingest twin of
     * q223/q224): each record maps map-side to its (group, bucket) cell
     * — the same bit arithmetic as the batch sketch
-    * ([[graft.operators.Sketches.logBucketIdxSql]]) — cells are the
-    * stream keys, and per-cell Long state accumulates. The sketch is
-    * LINEAR (q224's merge property realized incrementally), so
-    * streaming state after ANY prefix == the batch sketch of that
-    * prefix — StreamingSpec asserts it cell-for-cell across
-    * micro-batches. State is bounded at |groups|·64·2^subBits Longs
+    * ([[graft.operators.Sketches.logBucketIdxSql]]) — and [[cellSums]]
+    * counts them. The sketch is LINEAR (q224's merge property realized
+    * incrementally). State is bounded at |groups|·64·2^subBits cells
     * FOREVER: a latency/price quantile monitor runs on an unbounded
     * ingest, and any moment's cells feed
     * [[graft.operators.Sketches.logBucketQuantiles]] directly.
     */
   def streamingLogBucketCells(records: DataFrame, grpCol: String,
                               vCents: org.apache.spark.sql.Column,
-                              subBits: Int)
-      : org.apache.spark.sql.Dataset[LbCellUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+                              subBits: Int): Dataset[LbCellUpdate] = {
     val spark = records.sparkSession
     import spark.implicits._
-    records
-      .select(col(grpCol).cast("string").as("grp"),
-        graft.operators.Sketches.requirePositive(vCents.cast("long"),
-          "streamingLogBucketCells").as("__v"))
-      .withColumn("bucket",
-        expr(graft.operators.Sketches.logBucketIdxSql("__v", subBits)))
-      .select(col("grp"), col("bucket"))
-      .as[(String, Long)]
-      .groupByKey(identity)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (cell: (String, Long), it: Iterator[(String, Long)],
-         state: GroupState[Long]) => {
-          val cnt = state.getOption.getOrElse(0L) + it.size
-          state.update(cnt)
-          Iterator(LbCellUpdate(cell._1, cell._2, cnt))
-        })
+    cellSums(records
+        .select(col(grpCol).cast("string").as("grp"),
+          graft.operators.Sketches.requirePositive(vCents.cast("long"),
+            "streamingLogBucketCells").as("__v"))
+        .select(col("grp"),
+          expr(graft.operators.Sketches.logBucketIdxSql("__v", subBits))
+            .cast("long").as("bucket"),
+          lit(1L).as("__delta")))
+      .select(col("grp"), col("bucket"), col("__n").as("cnt")).as[LbCellUpdate]
   }
 }

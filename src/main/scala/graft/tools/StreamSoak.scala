@@ -1,844 +1,342 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.operators.{Dedup, Relational, Sketches}
 import graft.streaming.EventStreams
 
-/** Streaming SOAK: minutes-long runs of the streaming operators over a
-  * continuously-fed file source, with a restart induced every
-  * `SOAK_RESTART_SECONDS` (kill the query mid-flight, start a new one
-  * on the same checkpoint) while the feeder keeps writing — the
-  * failure pattern a production ingest actually sees. Three phases
-  * (VERDICT r07 #7 extended the original tumbling-window soak to the
-  * sketch twins):
+/** Streaming SOAK: each streaming twin runs over a continuously-fed file
+  * source with a restart induced every `restartSeconds` (the query is
+  * stopped mid-flight and a new one started on the same checkpoint)
+  * while the feeder keeps writing — the failure pattern a production
+  * ingest actually sees. The phases are one table; one loop runs every
+  * row:
   *
-  *  1. `tumbling` — windowed counts; at the end a sentinel event
-  *     pushes the watermark past every real window, the stream drains,
-  *     and the sink is compared ROW FOR ROW against the batch twin
-  *     over everything the feeder wrote (lost batch = at-most-once
-  *     bug; re-emitted window = at-least-once bug).
-  *  2. `kmv` — streamingKmvDistinct; after the soak a one-file probe
-  *     batch triggers exactly one emission per group, which must equal
-  *     the BATCH kmvDistinct sketch over everything written (state
-  *     survived every induced restart bit-for-bit).
-  *  3. `cms` — streamingCmsCells; same probe protocol, cell-for-cell
-  *     equality against the batch cmsBuildKeys sketch.
+  *  1. kill-restart the row's query for `seconds` on a live feed;
+  *  2. drain the backlog on the soak checkpoint, then, per the row, a
+  *     PROBE batch (one event for every user, so every key emits its
+  *     recovered state) or a SENTINEL event (pushes the watermark past
+  *     every real window and session so they all emit);
+  *  3. fold the sink's outputs (latest row per key, sum per key, or
+  *     union) and compare them, as multisets, with the batch twin over
+  *     everything written: a lost batch or lost state is a missing row,
+  *     a replayed batch counted twice is an extra row.
   *
-  * State size is sampled every progress tick and its maximum asserted
-  * against each operator's bound, so sustained state growth — the
-  * thing the semantic specs cannot see — is measured, not assumed.
+  * State rows are sampled from every progress report and their maximum
+  * checked against the row's bound, so sustained state growth — the
+  * thing the semantic specs cannot see — is measured, not assumed. Two
+  * sinks: the exactly-once parquet file sink (`tumbling`, `session`: its
+  * manifest hiding an aborted batch's files is what those phases test)
+  * and [[EventStreams.batchIdSink]] for the rest. Event time is
+  * SYNTHETIC (feeder batch i is minute i), so the run is deterministic
+  * in structure whatever the wall-clock scheduling; restarts land
+  * wherever they land, which is the point.
   *
-  * Event time is SYNTHETIC (each feeder batch advances one minute), so
-  * the run is deterministic in structure regardless of wall-clock
-  * scheduling; restarts land wherever they land, which is the point.
-  *
-  * Prints one JSON line:
-  * {"tumbling":{...},"kmv":{...},"cms":{...},"result":"PASS"|"FAIL"}.
-  * Env: SOAK_SECONDS (tumbling phase, default 180), SOAK_TWIN_SECONDS
-  * (each sketch phase, default 60), SOAK_RESTART_SECONDS (default 20),
-  * SOAK_BATCH_EVENTS (default 2000).
+  * Usage: `StreamSoak [rootDir]` (default: a fresh temp dir). Prints one
+  * JSON line {"tumbling":{...},...,"result":"PASS"|"FAIL"}. Env:
+  * SOAK_SECONDS (per phase, default 60), SOAK_RESTART_SECONDS (default
+  * 20).
   */
 object StreamSoak {
 
   case class PhaseResult(events: Long, windows: Long, restarts: Int,
                          maxStateRows: Long, pass: Boolean) {
-    def json(extra: String = ""): String =
+    def json: String =
       s"""{"events":$events,"windows":$windows,"restarts":$restarts,""" +
-        s""""max_state_rows":$maxStateRows$extra,"result":"${if (pass) "PASS" else "FAIL"}"}"""
+        s""""max_state_rows":$maxStateRows,"result":"${verdict(pass)}"}"""
   }
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rm); f.delete(): Unit
-  }
+  private def verdict(pass: Boolean) = if (pass) "PASS" else "FAIL"
 
+  /** Events per feeder batch. Upsert's fold model needs every user_id in
+    * a batch distinct, so this must not exceed the user domain. */
+  private val BatchEvents = 2000
+  private val Users = 50000L
+  private val ProbeFirstId = 1000000000000L // a multiple of Users
   private val base = java.sql.Timestamp.valueOf("2026-01-01 00:00:00").getTime
 
-  /** Feeder batch i: `n` events inside minute i — deterministic event
-    * time, 5 event types, user domain 50000 so new distinct users keep
-    * arriving (the KMV sketch keeps evolving across restarts).
-    */
-  private def writeBatch(spark: SparkSession, src: String, i: Int, n: Int): Unit = {
+  /** Events `firstId until firstId + n`, all inside minute `minute`. */
+  private def writeBatch(spark: SparkSession, src: String, minute: Int,
+                         firstId: Long, n: Int): Unit =
+    spark.range(firstId, firstId + n, 1, 1).select(
+        col("id").as("event_id"),
+        timestamp_millis(lit(base + minute * 60000L) +
+          (col("id") - firstId) % 60L * 1000L).as("ts"),
+        (col("id") % Users).as("user_id"),
+        concat(lit("t"), col("id") % 5L).as("event_type"),
+        (col("id") % 7L).cast("double").as("value"), lit("{}").as("props"))
+      .write.mode("append").parquet(src)
+
+  private sealed trait Drain
+  private case object Plain extends Drain
+  private case object Probe extends Drain
+  private case object Sentinel extends Drain
+
+  /** One soak phase. `start(src, out, ckpt)` starts the stream on the
+    * feed; `batch` is the twin over everything written; `fold` reduces
+    * the sink's outputs, and `readout(folded, everything)` maps them to
+    * `batch`'s columns. `replay` forces a replay of the last batch. */
+  private case class Phase(name: String,
+                           start: (String, String, String) => StreamingQuery,
+                           batch: DataFrame => DataFrame,
+                           fold: DataFrame => DataFrame, drain: Drain,
+                           stateBound: Long,
+                           readout: (DataFrame, DataFrame) => DataFrame = (got, _) => got,
+                           replay: Boolean = false)
+
+  private def latest(keys: String*)(out: DataFrame): DataFrame =
+    out.withColumn("__r", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(col("batch_id").desc)))
+      .filter(col("__r") === 1).drop("__r", "batch_id")
+
+  private def union(out: DataFrame): DataFrame = out.drop("batch_id")
+
+  private def phases(spark: SparkSession, root: String): Seq[Phase] = {
     import spark.implicits._
-    val rows = (0 until n).map { j =>
-      val id = i.toLong * n + j
-      (id, new java.sql.Timestamp(base + i * 60000L + (j % 60) * 1000L),
-        id % 50000, s"t${id % 5}", (id % 7).toDouble, "{}")
+    def feed(src: String, oneFilePerBatch: Boolean = false) = {
+      val r = spark.readStream.schema(EventStreams.eventSchema)
+      (if (oneFilePerBatch) r.option("maxFilesPerTrigger", 1) else r).parquet(src)
     }
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("append").parquet(src)
+    def toFiles(f: DataFrame => DataFrame)(src: String, out: String, ckpt: String) =
+      f(feed(src)).writeStream.outputMode("append").format("parquet")
+        .option("path", out).option("checkpointLocation", ckpt).start()
+    def perBatch(f: DataFrame => DataFrame, mode: String = "update",
+                 oneFilePerBatch: Boolean = false)(src: String, out: String, ckpt: String) =
+      EventStreams.batchIdSink(f(feed(src, oneFilePerBatch)), out, ckpt, mode)()
+
+    // mg: user_id % 3 == 0 collapses to one hot item per group (~33%
+    // share, heavy at k = 8); everything else stays a cold tail
+    val cap = 7
+    def skewed(df: DataFrame) = df.withColumn("item",
+      when(col("user_id") % 3L === 0L, lit("hot")).otherwise(concat(lit("u"), col("user_id"))))
+    def heavy(all: DataFrame) = skewed(all)
+      .groupBy(col("event_type").as("group"), col("item"))
+      .agg(count(lit(1)).as("cnt"))
+      .withColumn("n_g", sum("cnt").over(Window.partitionBy("group")))
+      .filter(col("cnt") * (cap + 1) > col("n_g"))
+    // lb: feed values include 0.0 and the sketch domain is v >= 1
+    def vCents = round(col("value") * 100) + 1
+    // funnel: event_type is constant per user, so the funnel type cycles
+    // f0..f3 every 7 event ids, which each user's stream traverses
+    val stages = Seq("f0", "f1", "f2", "f3")
+    def withFtype(df: DataFrame) = df.withColumn("event_type",
+      concat(lit("f"), pmod(expr("event_id div 7"), lit(4L))))
+    // lsh: doc text is a pure function of event_id % 500, so streamed
+    // docs repeatedly near-match a 300-doc static corpus
+    def textOf(id: Column) = concat_ws(" ", (0 until 12).map(i =>
+      concat(lit("w"), pmod(pmod(id, lit(500L)) * (31 + i) + i * i, lit(40)))): _*)
+    def withDoc(df: DataFrame) =
+      df.select(col("event_id").as("doc_id"), textOf(col("event_id")).as("text"))
+    lazy val idx = {
+      Dedup.minHashBandPostings(spark.range(300).select(col("id").as("doc_id"),
+          textOf(col("id")).as("text")), "doc_id", "text", k = 3, bands = 4, rowsPerBand = 4)
+        .write.parquet(s"$root/lsh/postings")
+      spark.read.parquet(s"$root/lsh/postings")
+    }
+    // upsert: k = user_id (distinct within a feeder file, and the source
+    // reads one file per micro-batch, so a key folds once per batch in
+    // the feeder's order); del on event_id % 5 == 0, else put of
+    // event_id; the probe puts -1 at every key, and its changes expose
+    // the recovered state
+    val isProbe = col("event_id") >= ProbeFirstId
+    def opsOf(df: DataFrame) = df.select(col("user_id").as("k"),
+        when(isProbe, lit(-1L)).otherwise(col("event_id")).as("v"),
+        when(!isProbe && col("event_id") % 5L === 0L, lit("del")).otherwise(lit("put")).as("op"))
+      .as[EventStreams.UpsertOp]
+    // tri: a feed user arrives once per 25 batches, so the phase folds
+    // users into 500 paths (4 events per path per batch) whose type
+    // cycles t0..t4 along the path, making the fold order visible
+    def paths(df: DataFrame) = df.select((col("user_id") % 500L).as("user_id"), col("ts"),
+      col("event_id"), concat(lit("t"), expr("event_id div 500") % 5L).as("event_type"))
+    val rN = 31
+    def pairsOf(df: DataFrame) = df.select(col("event_type").as("grp"), col("event_id"),
+      (expr("cast(round(value * 100) as bigint)") - 300L).as("d_c"))
+
+    Seq(
+      // state: <= (horizon/window + 2 open windows) x 5 types + provider rows
+      Phase("tumbling", toFiles(EventStreams.tumblingCounts(_, "10 minutes", "5 minutes")),
+        EventStreams.tumblingCounts(_, "10 minutes", "5 minutes"), union, Sentinel, 200L),
+      // state: one k-long buffer per group (5)
+      Phase("kmv", perBatch(EventStreams.streamingKmvDistinct(_, "event_type", "user_id",
+          k = 64, saltPrefix = "soakkmv_").toDF()),
+        Sketches.kmvDistinct(_, "event_type", col("user_id"), k = 64, saltPrefix = "soakkmv_")
+          .withColumnRenamed("event_type", "group"),
+        latest("group"), Probe, 64L),
+      // state: 5 keys x d = 4 cells
+      Phase("cms", perBatch(EventStreams.streamingCmsCells(_, "event_type", d = 4, w = 1024,
+          saltPrefix = "soakcms_").toDF()),
+        Sketches.cmsBuildKeys(_, "event_type", d = 4, w = 1024, saltPrefix = "soakcms_"),
+        latest("r", "c"), Probe, 100L),
+      // MG is order-dependent, so the twin is the q214 contract: every
+      // heavy item retained, never overcounted, undercounted by at most
+      // n_group/k, and at most `cap` counters per group
+      Phase("mg", perBatch(df => EventStreams.streamingMgSummary(skewed(df), "event_type",
+          "item", capacity = cap).toDF()),
+        heavy(_).select("group", "item"), latest("group"), Probe, 10L,
+        readout = (got, all) => got
+          .select(col("group"), col("n_counters"), explode(col("items")).as(Seq("item", "est")))
+          .join(heavy(all), Seq("group", "item"))
+          .filter(col("est") <= col("cnt") && col("n_counters") <= cap &&
+            (col("cnt") - col("est")) * (cap + 1) <= col("n_g"))
+          .select("group", "item")),
+      // state: 5 groups x 7 distinct feed values
+      Phase("lb", perBatch(EventStreams.streamingLogBucketCells(_, "event_type", vCents,
+          subBits = 5).toDF()),
+        Sketches.logBucketCells(_, "event_type", vCents, subBits = 5),
+        latest("grp", "bucket"), Probe, 64L),
+      // state: one record per user past depth 0 (user domain)
+      Phase("funnel", perBatch(df => EventStreams.streamingFunnel(withFtype(df), stages).toDF()),
+        all => Relational.funnelStages(withFtype(all), "user_id", "ts", "event_type", stages)
+          .filter(col("n_users") > 0).select("stage_idx", "n_users"),
+        latest("user_id"), Probe, Users,
+        readout = (got, _) => got.filter(col("depth") > 0)
+          .select(explode(sequence(lit(1), col("depth"))).as("stage_idx"))
+          .groupBy("stage_idx").agg(count(lit(1)).as("n_users"))),
+      // stateless; a replay of the last batch must rewrite it identically
+      Phase("lsh", (src, out, ckpt) => EventStreams.streamingLshIngest(withDoc(feed(src)),
+          idx, out, ckpt, "doc_id", "text", k = 3, bands = 4, rowsPerBand = 4,
+          minEstJaccard = 0.25),
+        all => Dedup.minHashLshJoinPostings(withDoc(all), idx, "doc_id", "text",
+          k = 3, bands = 4, rowsPerBand = 4, minEstJaccard = 0.25),
+        union, Plain, 0L, replay = true),
+      // additive deltas; state: two strings per path (500)
+      Phase("tri", perBatch(df => EventStreams.streamingPathTrigrams(paths(df)).toDF()),
+        all => {
+          val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
+          paths(all).select(col("event_type").as("s1"), lead(col("event_type"), 1).over(w).as("s2"),
+              lead(col("event_type"), 2).over(w).as("s3"))
+            .filter(col("s3").isNotNull).groupBy("s1", "s2", "s3").agg(count(lit(1)).as("n"))
+        },
+        _.groupBy("s1", "s2", "s3").agg(sum("n").as("n")), Probe, 500L),
+      // MERGING state: the 30-minute gap exceeds each user's ~25-minute
+      // re-arrival period, so every arrival extends an open session and
+      // nothing emits before the sentinel; state: one open session per
+      // user + the provider's in-merge scratch rows
+      Phase("session", toFiles(EventStreams.sessionCounts(_, "30 minutes", "5 minutes")),
+        Relational.sessionizeSW(_, "user_id", "ts", gapSeconds = 1800L), union, Sentinel,
+        3 * Users),
+      // expected probe changes: per key the max-event_id op decides (del
+      // or never seen: the probe inserts; put: it updates that value)
+      Phase("upsert", perBatch(df => EventStreams.streamingUpsert(opsOf(df)).toDF(), "append",
+          oneFilePerBatch = true),
+        all => spark.range(Users).select(col("id").as("k"))
+          .join(all.filter(!isProbe).groupBy(col("user_id").as("k"))
+            .agg(max("event_id").as("last")), Seq("k"), "left")
+          .select(col("k"), when(col("last") % 5L =!= 0L, lit("update"))
+            .otherwise(lit("insert")).as("change_type"),
+            when(col("last") % 5L =!= 0L, col("last")).as("old_v")),
+        union, Probe, 120000L,
+        readout = (got, _) => got.filter(col("new_v") === -1L)
+          .select("k", "change_type", "old_v")),
+      // state: 5 types x (R+1) = 32 cells
+      Phase("perm", perBatch(df => EventStreams.streamingPermCells(pairsOf(df), "grp",
+          "event_id", "d_c", r = rN, prefix = "soakpt_").toDF()),
+        all => Relational.permutationTestPpm(pairsOf(all), "grp", "event_id", "d_c",
+          r = rN, prefix = "soakpt_"),
+        latest("grp", "r"), Probe, 250L,
+        readout = (got, _) => EventStreams.permutationFromCells(got, r = rN)))
   }
 
-  /** Run `startQuery` against a live feeder for `seconds`, inducing a
-    * restart every `restartSeconds`; returns (restarts, maxStateRows,
-    * batchesWritten). The feeder stops before return; the caller owns
-    * the drain protocol.
-    */
-  private def soakLoop(spark: SparkSession, src: String, seconds: Int,
-                       restartSeconds: Int, batchEvents: Int)
-                      (startQuery: () => org.apache.spark.sql.streaming.StreamingQuery)
-      : (Int, Long, Int) = {
+  /** Kill-restart `p` for `seconds`, drain, compare with its batch twin. */
+  private def runPhase(spark: SparkSession, p: Phase, dir: String, seconds: Int,
+                       restartSeconds: Int): PhaseResult = {
+    require(!new java.io.File(dir).exists, s"StreamSoak: $dir already exists")
+    val (src, out, ckpt) = (s"$dir/src", s"$dir/out", s"$dir/ckpt")
+    new java.io.File(src).mkdirs()
+    var maxState = 0L
+    def sample(q: StreamingQuery): Unit =
+      Option(q.lastProgress).flatMap(_.stateOperators.headOption)
+        .foreach(s => maxState = math.max(maxState, s.numRowsTotal))
+    def finish(): Unit = {
+      val q = p.start(src, out, ckpt); q.processAllAvailable(); sample(q); q.stop()
+    }
+
     @volatile var feeding = true
     @volatile var batches = 0
-    val feeder = new Thread(() => {
-      var i = 0
-      while (feeding) {
-        writeBatch(spark, src, i, batchEvents); i += 1; batches = i
-        Thread.sleep(200)
-      }
+    val feeder = new Thread(() => while (feeding) {
+      writeBatch(spark, src, batches, batches.toLong * BatchEvents, BatchEvents)
+      batches += 1
+      Thread.sleep(200)
     })
     feeder.setDaemon(true)
-    var restarts = 0
-    var maxStateRows = 0L
-    def sampleState(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-      val p = q.lastProgress
-      if (p != null && p.stateOperators.nonEmpty)
-        maxStateRows = math.max(maxStateRows, p.stateOperators.head.numRowsTotal)
-    }
     feeder.start()
+    var restarts = 0
     val deadline = System.nanoTime() + seconds * 1000000000L
     while (System.nanoTime() < deadline) {
-      val q = startQuery()
-      val stop = math.min(deadline,
-        System.nanoTime() + restartSeconds * 1000000000L)
-      while (System.nanoTime() < stop && q.isActive) {
-        Thread.sleep(1000); sampleState(q)
-      }
-      sampleState(q)
+      val q = p.start(src, out, ckpt)
+      val stop = math.min(deadline, System.nanoTime() + restartSeconds * 1000000000L)
+      while (System.nanoTime() < stop && q.isActive) { Thread.sleep(250); sample(q) }
+      sample(q)
       q.stop() // induced failure: mid-flight, feeder still writing
       restarts += 1
     }
     feeding = false
-    feeder.join(5000)
-    (restarts, maxStateRows, batches)
-  }
+    feeder.join()
 
-  /** Phase 1: tumbling windowed counts vs the batch twin (unchanged
-    * from the original soak).
-    */
-  private def tumblingPhase(spark: SparkSession, root: String, seconds: Int,
-                            restartSeconds: Int, batchEvents: Int): PhaseResult = {
-    import spark.implicits._
-    val src = s"$root/src"; val sink = s"$root/sink"; val ckpt = s"$root/ckpt"
-    new java.io.File(src).mkdirs()
-    def startQuery() = EventStreams.tumblingCounts(
-        EventStreams.readEventStream(spark, src), "10 minutes", "5 minutes")
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", sink).option("checkpointLocation", ckpt).start()
-    val (restarts, maxStateRows0, batches) =
-      soakLoop(spark, src, seconds, restartSeconds, batchEvents)(startQuery _)
-    var maxStateRows = maxStateRows0
+    finish()
+    p.drain match {
+      case Probe => writeBatch(spark, src, batches, ProbeFirstId, Users.toInt); finish()
+      case Sentinel =>
+        spark.range(1).select(lit(Long.MaxValue).as("event_id"),
+            timestamp_millis(lit(base + (batches + 2000) * 60000L)).as("ts"),
+            lit(99999999L).as("user_id"), lit("sentinel").as("event_type"),
+            lit(0.0).as("value"), lit("{}").as("props"))
+          .write.mode("append").parquet(src)
+        finish()
+      case Plain =>
+    }
+    // forced replay: delete the last commit marker (and the local FS's
+    // CRC sidecar, whose leftover fails the replayed commit's rename)
+    // and restart — the offset log re-runs that batch into its slot
+    val replayed = !p.replay || {
+      val last = new java.io.File(s"$ckpt/commits").list()
+        .filter(_.forall(_.isDigit)).map(_.toLong).max
+      def slot() = spark.read.parquet(s"$out/batch_id=$last")
+        .select(count(lit(1)), sum(hash(col("*")).cast("long"))).head()
+      val before = slot()
+      new java.io.File(s"$ckpt/commits/.$last.crc").delete()
+      new java.io.File(s"$ckpt/commits/$last").delete() && {
+        finish(); before.getLong(0) > 0 && slot() == before
+      }
+    }
 
-    // sentinel pushes the watermark past every real window, then drain
-    Seq((Long.MaxValue, new java.sql.Timestamp(base + (batches + 120) * 60000L),
-        0L, "sentinel", 0.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("append").parquet(src)
-    val qf = startQuery()
-    qf.processAllAvailable()
-    val p = qf.lastProgress
-    if (p != null && p.stateOperators.nonEmpty)
-      maxStateRows = math.max(maxStateRows, p.stateOperators.head.numRowsTotal)
-    qf.stop()
-
-    // batch twin over EVERYTHING written (sentinel's own still-open
-    // window excluded): identical grouping expression, exact equality
     val all = spark.read.parquet(src).filter(col("event_type") =!= "sentinel")
-    val expect = all
-      .groupBy(window(col("ts"), "10 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("total_value"))
-      .collect().map(r => (r.get(0).toString, r.getString(1), r.getLong(2),
-        r.getDouble(3))).toSet
-    val got = spark.read.parquet(sink).filter(col("event_type") =!= "sentinel")
-      .select(col("window_start"), col("event_type"), col("n"), col("total_value"))
-      .collect().map(r => (r.get(0).toString, r.getString(1), r.getLong(2),
-        r.getDouble(3))).toSet
-    // state bound: <= (horizon/window + 2 open windows) x 5 types, with
-    // headroom for the provider's internal rows
-    val pass = got == expect && maxStateRows <= 200L
+    val expect = p.batch(all).persist()
+    val got = p.readout(p.fold(spark.read.parquet(out)), all)
+      .select(expect.columns.map(col): _*).persist()
+    val (missing, extra) = (expect.exceptAll(got), got.exceptAll(expect))
+    val nExpect = expect.count()
+    val pass = nExpect > 0 && missing.isEmpty && extra.isEmpty && replayed &&
+      maxState <= p.stateBound
     if (!pass)
-      System.err.println(s"SOAK tumbling missing=${(expect -- got).take(5)} " +
-        s"extra=${(got -- expect).take(5)} maxState=$maxStateRows")
-    PhaseResult(all.count(), expect.size.toLong, restarts, maxStateRows, pass)
+      System.err.println(s"SOAK ${p.name} rows=$nExpect missing=" +
+        s"${missing.take(5).mkString(" ")} extra=${extra.take(5).mkString(" ")} " +
+        s"replayed=$replayed maxState=$maxState (bound ${p.stateBound})")
+    expect.unpersist(); got.unpersist()
+    PhaseResult(all.count(), nExpect, restarts, maxState, pass)
   }
 
-  /** Probe protocol shared by the sketch twins: after the soak loop,
-    * drain the backlog on the soak checkpoint, write ONE more batch
-    * (touches every group/cell), and drain again — that final
-    * micro-batch emits exactly the CURRENT state into the upsert map,
-    * which must equal the batch sketch over everything written (probe
-    * included on both sides). Returns max observed state rows.
-    */
-  private def probeDrain(spark: SparkSession, src: String,
-                         batchEvents: Int, batches: Int)
-                        (startQuery: () => org.apache.spark.sql.streaming.StreamingQuery)
-      : Long = {
-    var maxStateRows = 0L
-    def sample(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-      val p = q.lastProgress
-      if (p != null && p.stateOperators.nonEmpty)
-        maxStateRows = math.max(maxStateRows, p.stateOperators.head.numRowsTotal)
-    }
-    val drain = startQuery()
-    drain.processAllAvailable(); sample(drain); drain.stop()
-    writeBatch(spark, src, batches, batchEvents) // the probe batch
-    val probe = startQuery()
-    probe.processAllAvailable(); sample(probe); probe.stop()
-    maxStateRows
-  }
-
-  /** Phase 2: streaming KMV distinct sketch — state must survive every
-    * restart and equal the batch sketch of the whole feed. Sink is a
-    * foreachBatch UPSERT into a driver map (latest row per group):
-    * foreachBatch supports checkpoint recovery where the memory sink
-    * REFUSES it ("does not support recovering from checkpoint
-    * location"), and upserts make the possible replay of the last
-    * uncommitted batch after a restart idempotent.
-    */
-  private def kmvPhase(spark: SparkSession, root: String, seconds: Int,
-                       restartSeconds: Int, batchEvents: Int): PhaseResult = {
-    val src = s"$root/src"; val ckpt = s"$root/ckpt"
-    new java.io.File(src).mkdirs()
-    val state = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Long)]()
-    def startQuery() = EventStreams.streamingKmvDistinct(
-        EventStreams.readEventStream(spark, src),
-        "event_type", "user_id", k = 64, saltPrefix = "soakkmv_").toDF()
-      .writeStream.outputMode("update")
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        // bounded collect: <= 5 groups' updated rows per micro-batch
-        df.collect().foreach(r => state.put(r.getAs[String]("group"),
-          (r.getAs[Long]("n_kept"), r.getAs[Long]("kth_min"),
-            r.getAs[Long]("est_distinct"))))
-      }
-      .option("checkpointLocation", ckpt).start()
-    val (restarts, maxSoak, batches) =
-      soakLoop(spark, src, seconds, restartSeconds, batchEvents)(startQuery _)
-    val maxProbe = probeDrain(spark, src, batchEvents, batches)(startQuery _)
-    val streamed = {
-      import scala.jdk.CollectionConverters._
-      state.asScala.toMap
-    }
-    val batch = graft.operators.Sketches.kmvDistinct(
-        spark.read.parquet(src), "event_type", col("user_id"),
-        k = 64, saltPrefix = "soakkmv_")
-      .collect().map(r => r.getString(0) ->
-        ((r.getAs[Long]("n_kept"), r.getAs[Long]("kth_min"),
-          r.getAs[Long]("est_distinct")))).toMap
-    val maxStateRows = math.max(maxSoak, maxProbe)
-    // 5 groups x (k longs inside ONE state row each) + provider slack
-    val pass = streamed == batch && streamed.size == 5 && maxStateRows <= 64L
-    if (!pass)
-      System.err.println(s"SOAK kmv streamed=$streamed batch=$batch " +
-        s"maxState=$maxStateRows")
-    PhaseResult((batches + 1).toLong * batchEvents, streamed.size.toLong,
-      restarts, maxStateRows, pass)
-  }
-
-  /** Phase 3: streaming CMS cells — cell-for-cell equality with the
-    * batch sketch of the whole feed.
-    */
-  private def cmsPhase(spark: SparkSession, root: String, seconds: Int,
-                       restartSeconds: Int, batchEvents: Int): PhaseResult = {
-    val src = s"$root/src"; val ckpt = s"$root/ckpt"
-    new java.io.File(src).mkdirs()
-    val state = new java.util.concurrent.ConcurrentHashMap[(Long, Long), Long]()
-    def startQuery() = EventStreams.streamingCmsCells(
-        EventStreams.readEventStream(spark, src),
-        "event_type", d = 4, w = 1024, saltPrefix = "soakcms_").toDF()
-      .writeStream.outputMode("update")
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        // bounded collect: <= d x |keys| updated cells per micro-batch
-        df.collect().foreach(r => state.put(
-          (r.getAs[Long]("r"), r.getAs[Long]("c")), r.getAs[Long]("cnt")))
-      }
-      .option("checkpointLocation", ckpt).start()
-    val (restarts, maxSoak, batches) =
-      soakLoop(spark, src, seconds, restartSeconds, batchEvents)(startQuery _)
-    val maxProbe = probeDrain(spark, src, batchEvents, batches)(startQuery _)
-    val streamed = {
-      import scala.jdk.CollectionConverters._
-      state.asScala.toMap
-    }
-    val batch = graft.operators.Sketches.cmsBuildKeys(
-        spark.read.parquet(src), "event_type", d = 4, w = 1024,
-        saltPrefix = "soakcms_")
-      .collect().map(r => (r.getAs[Long]("r"), r.getAs[Long]("c")) ->
-        r.getAs[Long]("cnt")).toMap
-    val maxStateRows = math.max(maxSoak, maxProbe)
-    // 5 keys x d=4 cells (some may collide) + provider slack
-    val pass = streamed == batch && maxStateRows <= 100L
-    if (!pass)
-      System.err.println(s"SOAK cms streamed=${streamed.size} cells " +
-        s"batch=${batch.size} maxState=$maxStateRows " +
-        s"diff=${(streamed.toSet -- batch.toSet).take(5)}")
-    PhaseResult((batches + 1).toLong * batchEvents, streamed.size.toLong,
-      restarts, maxStateRows, pass)
-  }
-
-  /** Phase 4: streaming Misra-Gries heavy hitters — MG state is
-    * order-dependent (unlike KMV/CMS there is no bit-equality twin), so
-    * the PASS criterion is the q214 CONTRACT over everything written,
-    * which holds for ANY arrival order INCLUDING replays across induced
-    * restarts: per group, every exact heavy hitter (count·k > n_group)
-    * is retained in the final summary, never overcounted, and
-    * undercounted by at most n_group/k. The item stream is skewed by
-    * construction (user_id%3==0 collapses to one hot item per group,
-    * ~33% share; everything else stays a cold tail) so the contract is
-    * non-vacuous. State = one map of ≤ k−1 counters per group, forever.
-    */
-  private def mgPhase(spark: SparkSession, root: String, seconds: Int,
-                      restartSeconds: Int, batchEvents: Int): PhaseResult = {
-    val src = s"$root/src"; val ckpt = s"$root/ckpt"
-    new java.io.File(src).mkdirs()
-    val cap = 7 // k = 8: hot (~33%) is heavy, the uniform tail is not
-    def skewed(df: DataFrame): DataFrame = df.withColumn("item",
-      when(col("user_id") % 3L === 0L, lit("hot"))
-        .otherwise(concat(lit("u"), col("user_id"))))
-    val state = new java.util.concurrent.ConcurrentHashMap[String, Map[String, Long]]()
-    def startQuery() = EventStreams.streamingMgSummary(
-        skewed(EventStreams.readEventStream(spark, src)),
-        "event_type", "item", capacity = cap).toDF()
-      .writeStream.outputMode("update")
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        // bounded collect: <= 5 groups' summaries per micro-batch
-        df.collect().foreach(r => state.put(r.getAs[String]("group"),
-          r.getAs[Map[String, Long]]("items")))
-      }
-      .option("checkpointLocation", ckpt).start()
-    val (restarts, maxSoak, batches) =
-      soakLoop(spark, src, seconds, restartSeconds, batchEvents)(startQuery _)
-    val maxProbe = probeDrain(spark, src, batchEvents, batches)(startQuery _)
-    val streamed = {
-      import scala.jdk.CollectionConverters._
-      state.asScala.toMap
-    }
-    val exact = skewed(spark.read.parquet(src))
-      .groupBy("event_type", "item").agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val nPerGroup = exact.groupBy(_._1._1).view.mapValues(_.values.sum).toMap
-    val heavy = exact.filter { case ((g, _), c) => c * (cap + 1) > nPerGroup(g) }
-    val contract = heavy.forall { case ((g, w), c) =>
-      val m = streamed.getOrElse(g, Map.empty)
-      m.contains(w) && m(w) <= c && (c - m(w)) * (cap + 1) <= nPerGroup(g)
-    }
-    val maxStateRows = math.max(maxSoak, maxProbe)
-    // contract must be non-vacuous (the hot item per group) and state
-    // must stay at one row per group
-    val pass = contract && heavy.size == 5 && streamed.size == 5 &&
-      streamed.values.forall(_.size <= cap) && maxStateRows <= 10L
-    if (!pass)
-      System.err.println(s"SOAK mg heavy=${heavy.size} contract=$contract " +
-        s"summaries=${streamed.view.mapValues(_.size).toMap} maxState=$maxStateRows")
-    PhaseResult((batches + 1).toLong * batchEvents, heavy.size.toLong,
-      restarts, maxStateRows, pass)
-  }
-
-  /** Phase 5: streaming log-bucket quantile cells — cell-for-cell
-    * equality with the batch sketch of the whole feed (the sketch is
-    * linear like CMS; the quantile decode stage is stateless
-    * downstream, so cells ARE the state contract). Feed values include
-    * 0.0 and the sketch domain is v ≥ 1, so the phase sketches
-    * cents + 1 on both sides.
-    */
-  private def lbPhase(spark: SparkSession, root: String, seconds: Int,
-                      restartSeconds: Int, batchEvents: Int): PhaseResult = {
-    val src = s"$root/src"; val ckpt = s"$root/ckpt"
-    new java.io.File(src).mkdirs()
-    def vExpr = round(col("value") * 100) + 1
-    val state = new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
-    def startQuery() = EventStreams.streamingLogBucketCells(
-        EventStreams.readEventStream(spark, src),
-        "event_type", vExpr, subBits = 5).toDF()
-      .writeStream.outputMode("update")
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        // bounded collect: <= |groups| x |distinct feed values| cells
-        df.collect().foreach(r => state.put(
-          (r.getAs[String]("grp"), r.getAs[Long]("bucket")),
-          r.getAs[Long]("cnt")))
-      }
-      .option("checkpointLocation", ckpt).start()
-    val (restarts, maxSoak, batches) =
-      soakLoop(spark, src, seconds, restartSeconds, batchEvents)(startQuery _)
-    val maxProbe = probeDrain(spark, src, batchEvents, batches)(startQuery _)
-    val streamed = {
-      import scala.jdk.CollectionConverters._
-      state.asScala.toMap
-    }
-    val batch = graft.operators.Sketches.logBucketCells(
-        spark.read.parquet(src), "event_type", vExpr, subBits = 5)
-      .collect().map(r => (r.getAs[String]("grp"), r.getAs[Long]("bucket")) ->
-        r.getAs[Long]("cnt")).toMap
-    val maxStateRows = math.max(maxSoak, maxProbe)
-    // 5 groups x 7 distinct feed values -> <= 35 cells + provider slack
-    val pass = streamed == batch && maxStateRows <= 64L
-    if (!pass)
-      System.err.println(s"SOAK lb streamed=${streamed.size} cells " +
-        s"batch=${batch.size} maxState=$maxStateRows " +
-        s"diff=${(streamed.toSet -- batch.toSet).take(5)}")
-    PhaseResult((batches + 1).toLong * batchEvents, streamed.size.toLong,
-      restarts, maxStateRows, pass)
-  }
-
-  /** Phase 6: streaming funnel — the greedy-frontier keyed state must
-    * survive every restart and reproduce the batch funnel of the whole
-    * feed. The feeder's event_type is constant per user (id % 5 with a
-    * user-aligned id stride), so the phase derives a funnel type from
-    * event_id (f0..f3 cycling every 7 ids) that each user's stream
-    * actually traverses; the batch twin derives the SAME column. The
-    * feed is ts-ordered across feeder batches (minute i), the contract
-    * streamingFunnel carries; same-ts ties are order-insensitive (the
-    * strictly-after rule admits one advance per instant).
-    */
-  private def funnelPhase(spark: SparkSession, root: String, seconds: Int,
-                          restartSeconds: Int, batchEvents: Int): PhaseResult = {
-    val src = s"$root/src"; val ckpt = s"$root/ckpt"
-    new java.io.File(src).mkdirs()
-    val stages = Seq("f0", "f1", "f2", "f3")
-    def withFtype(df: DataFrame) = df.withColumn("event_type",
-      concat(lit("f"), pmod(expr("event_id div 7"), lit(4L))))
-    val state = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
-    def startQuery() = EventStreams.streamingFunnel(
-        withFtype(EventStreams.readEventStream(spark, src)), stages).toDF()
-      .writeStream.outputMode("update")
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        // bounded collect: one (user, depth) row per user touched by
-        // the micro-batch, <= batchEvents rows
-        df.collect().foreach(r => state.put(r.getLong(0), r.getInt(1)))
-      }
-      .option("checkpointLocation", ckpt).start()
-    val (restarts, maxSoak, batches) =
-      soakLoop(spark, src, seconds, restartSeconds, batchEvents)(startQuery _)
-    val maxProbe = probeDrain(spark, src, batchEvents, batches)(startQuery _)
-    val streamedCounts = {
-      import scala.jdk.CollectionConverters._
-      val depths = state.asScala
-      stages.indices.map(k => depths.values.count(_ >= k + 1).toLong)
-    }
-    val batchCounts = graft.operators.Relational.funnelStages(
-        withFtype(spark.read.parquet(src)), "user_id", "ts", "event_type",
-        stages)
-      .orderBy("stage_idx").collect().map(_.getLong(2)).toSeq
-    val maxStateRows = math.max(maxSoak, maxProbe)
-    // state: one fixed-size record per user ever seen (user domain 50000)
-    val pass = streamedCounts == batchCounts && maxStateRows <= 50000L
-    if (!pass)
-      System.err.println(s"SOAK funnel streamed=$streamedCounts " +
-        s"batch=$batchCounts maxState=$maxStateRows")
-    PhaseResult((batches + 1).toLong * batchEvents, streamedCounts.head,
-      restarts, maxStateRows, pass)
-  }
-
-  /** Phase 7: streaming LSH ingest (q206's standing-index near-dup
-    * check as a continuous foreachBatch job) — the one streaming path
-    * the soak did not cover (VERDICT r11 #5). Stateless by design (the
-    * index is static, signatures are per-doc), so the properties under
-    * induced restarts are OUTPUT properties:
-    *  1. completeness — after the feed drains, the union of all
-    *     batch_id partitions equals the one-shot batch join over
-    *     everything the feeder wrote (no batch lost to a restart, no
-    *     duplicate rows from a re-run batch, because each batch
-    *     overwrites its own partition);
-    *  2. effectively-once replay — FORCE a replay by deleting the
-    *     checkpoint's last commit marker and restarting: Structured
-    *     Streaming re-executes that batch from the offset log, and the
-    *     re-written partition must be content-identical (sorted-row
-    *     equality; file names carry fresh UUIDs so byte-compare is the
-    *     wrong check) to the snapshot taken before the replay.
-    * Docs are derived from the event feed (doc_id = event_id, text a
-    * pure function of event_id % 500), so streamed docs repeatedly
-    * near-match a 300-doc static corpus and the join output is dense;
-    * the batch twin derives the SAME columns.
-    */
-  private def lshPhase(spark: SparkSession, root: String, seconds: Int,
-                       restartSeconds: Int, batchEvents: Int): PhaseResult = {
-    val src = s"$root/src"; val ckpt = s"$root/ckpt"; val out = s"$root/out"
-    new java.io.File(src).mkdirs()
-    def textOf(idCol: org.apache.spark.sql.Column) = {
-      val m = pmod(idCol, lit(500L))
-      concat_ws(" ", (0 until 12).map(i =>
-        concat(lit("w"), pmod(m * (31 + i) + i * i, lit(40)))): _*)
-    }
-    def withDoc(df: DataFrame) = df.select(
-      col("event_id").cast("long").as("doc_id"),
-      textOf(col("event_id")).as("text"))
-    val corpus = spark.range(300).select(col("id").as("doc_id"),
-      textOf(col("id")).as("text"))
-    val postings = graft.operators.Dedup.minHashBandPostings(
-      corpus, "doc_id", "text", k = 3, bands = 4, rowsPerBand = 4)
-    postings.write.mode("overwrite").parquet(s"$root/postings")
-    val idx = spark.read.parquet(s"$root/postings")
-    def startQuery() = EventStreams.streamingLshIngest(
-      withDoc(EventStreams.readEventStream(spark, src)), idx,
-      out, ckpt, "doc_id", "text",
-      k = 3, bands = 4, rowsPerBand = 4, minEstJaccard = 0.25)
-    val (restarts, maxSoak, batches) =
-      soakLoop(spark, src, seconds, restartSeconds, batchEvents)(startQuery _)
-    // drain: restart on the same checkpoint and process the tail the
-    // induced kills left unread
-    locally {
-      val q = startQuery(); q.processAllAvailable(); q.stop()
-    }
-    def readOut() = spark.read
-      .option("basePath", out).parquet(out)
-      .select("new_id", "corpus_id", "est_jaccard")
-    def rows(df: DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val streamed = rows(readOut()).toSet
-    val expected = rows(graft.operators.Dedup.minHashLshJoinPostings(
-      withDoc(spark.read.parquet(src)), idx, "doc_id", "text",
-      k = 3, bands = 4, rowsPerBand = 4, minEstJaccard = 0.25)).toSet
-    val complete = streamed == expected
-    // forced replay of the LAST committed batch
-    val commits = new java.io.File(s"$ckpt/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit)).map(_.getName.toLong)
-    val last = commits.max
-    val partDir = s"$out/batch_id=$last"
-    def partContent() = spark.read.parquet(partDir)
-      .select("new_id", "corpus_id", "est_jaccard")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sorted.toSeq
-    val before = partContent()
-    assert(new java.io.File(s"$ckpt/commits/$last").delete(),
-      s"could not delete commit marker $last")
-    // the local checkpoint FS writes a CRC sidecar next to every
-    // marker; leaving it behind makes the replayed commit's rename
-    // fail with FileAlreadyExistsException
-    new java.io.File(s"$ckpt/commits/.$last.crc").delete(): Unit
-    locally {
-      val q = startQuery(); q.processAllAvailable(); q.stop()
-    }
-    val after = partContent()
-    val replayIdentical = before == after && before.nonEmpty
-    val pass = complete && replayIdentical && maxSoak == 0L
-    if (!pass)
-      System.err.println(s"SOAK lsh complete=$complete (streamed=" +
-        s"${streamed.size} expected=${expected.size}) replay=" +
-        s"$replayIdentical (rows=${before.size}) maxState=$maxSoak")
-    PhaseResult((batches + 1).toLong * batchEvents, streamed.size.toLong,
-      restarts, maxSoak, pass)
-  }
-
-  /** Phase 8: streaming trigram deltas (q268's twin,
-    * [[EventStreams.streamingPathTrigrams]]) — ADDITIVE output under
-    * induced kills. A mid-flight stop() can abort a batch after
-    * foreachBatch ran but before the commit, so the replayed batch
-    * re-emits its deltas; a plain sum accumulator would double-count.
-    * The sink is therefore idempotent PER BATCH ID (the replay
-    * overwrites its own slot with content-identical deltas — state
-    * rolls back to the checkpoint, the offsets replay, the fold is
-    * deterministic), the exactly-once pattern every additive
-    * streaming sink needs. After the drain, the summed deltas must
-    * equal the batch window's trigram counts over everything the
-    * feeder wrote, and keyed state stays ≤ the 50 000-user domain
-    * (two strings per user).
-    */
-  private def triPhase(spark: SparkSession, root: String, seconds: Int,
-                       restartSeconds: Int, batchEvents: Int): PhaseResult = {
-    val src = s"$root/src"; val ckpt = s"$root/ckpt"
-    new java.io.File(src).mkdirs()
-    val perBatch = new java.util.concurrent.ConcurrentHashMap[
-      Long, Map[(String, String, String), Long]]()
-    def startQuery() = EventStreams.streamingPathTrigrams(
-        EventStreams.readEventStream(spark, src)).toDF()
-      .writeStream.outputMode("update")
-      .foreachBatch { (df: DataFrame, bid: Long) =>
-        // bounded collect: <= |type|^3 = 125 aggregated delta rows
-        // per user per batch, and users/batch <= batchEvents
-        perBatch.put(bid, df.collect()
-          .map(r => ((r.getString(0), r.getString(1), r.getString(2)),
-            r.getLong(3)))
-          .groupBy(_._1).map { case (k, g) => k -> g.map(_._2).sum })
-        ()
-      }
-      .option("checkpointLocation", ckpt).start()
-    val (restarts, maxSoak, batches) =
-      soakLoop(spark, src, seconds, restartSeconds, batchEvents)(startQuery _)
-    val maxProbe = probeDrain(spark, src, batchEvents, batches)(startQuery _)
-    val streamed = {
-      import scala.jdk.CollectionConverters._
-      perBatch.values.asScala.flatten
-        .groupBy(_._1).map { case (k, g) => k -> g.map(_._2).sum }
-    }
-    val batchCounts = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      spark.read.parquet(src)
-        .withColumn("t2", lead(col("event_type"), 1).over(w))
-        .withColumn("t3", lead(col("event_type"), 2).over(w))
-        .filter(col("t2").isNotNull && col("t3").isNotNull)
-        .groupBy("event_type", "t2", "t3").count()
-        .collect()
-        .map(r => ((r.getString(0), r.getString(1), r.getString(2)),
-          r.getLong(3))).toMap
-    }
-    val maxStateRows = math.max(maxSoak, maxProbe)
-    val pass = streamed == batchCounts && maxStateRows <= 50000L
-    if (!pass)
-      System.err.println(s"SOAK tri |streamed|=${streamed.size} " +
-        s"|batch|=${batchCounts.size} maxState=$maxStateRows " +
-        s"diff=${(streamed.toSet diff batchCounts.toSet).take(3)} " +
-        s"rdiff=${(batchCounts.toSet diff streamed.toSet).take(3)}")
-    PhaseResult((batches + 1).toLong * batchEvents,
-      streamed.values.sum, restarts, maxStateRows, pass)
-  }
-
-  /** Phase 9: session windows under induced kills — the one stateful
-    * shape the soak did not cover: MERGING state. The 30-minute gap
-    * exceeds each user's ~25-minute re-arrival period (user = id mod
-    * 50000 at 2000 events/batch-minute), so every arrival EXTENDS the
-    * user's open session — state is a growing per-user session row
-    * that must survive every restart and keep merging, and nothing
-    * emits until the final sentinel pushes the watermark past every
-    * real session's close. The sink is the exactly-once parquet file
-    * sink (its _spark_metadata manifest hides files from aborted
-    * batches — the property a kill lands on). After the flush, the
-    * emitted session set must equal the batch `sessionizeSW` twin —
-    * the SAME session_window expression — over everything the feeder
-    * wrote, EXACTLY (start, end, user, n_events): a lost batch breaks
-    * n_events, a replayed-but-manifest-committed duplicate breaks set
-    * cardinality, a state rollback that dropped a merge breaks the
-    * start/end bounds.
-    */
-  private def sessionPhase(spark: SparkSession, root: String, seconds: Int,
-                           restartSeconds: Int, batchEvents: Int): PhaseResult = {
-    import spark.implicits._
-    val src = s"$root/src"; val sink = s"$root/sink"; val ckpt = s"$root/ckpt"
-    new java.io.File(src).mkdirs()
-    def startQuery() = EventStreams.sessionCounts(
-        EventStreams.readEventStream(spark, src), "30 minutes", "5 minutes")
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", sink).option("checkpointLocation", ckpt).start()
-    val (restarts, maxStateRows0, batches) =
-      soakLoop(spark, src, seconds, restartSeconds, batchEvents)(startQuery _)
-    var maxStateRows = maxStateRows0
-
-    // sentinel: one far-future event (sentinel user) closes every real
-    // session; its own session stays open and is excluded below
-    Seq((Long.MaxValue, new java.sql.Timestamp(base + (batches + 2000) * 60000L),
-        99999999L, "sentinel", 0.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("append").parquet(src)
-    val qf = startQuery()
-    qf.processAllAvailable()
-    val p = qf.lastProgress
-    if (p != null && p.stateOperators.nonEmpty)
-      maxStateRows = math.max(maxStateRows, p.stateOperators.head.numRowsTotal)
-    qf.stop()
-
-    val all = spark.read.parquet(src).filter(col("user_id") =!= 99999999L)
-    def rows(df: DataFrame) = df
-      .select(col("user_id"), col("session_start").cast("string"),
-        col("session_end").cast("string"), col("n_events"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .toSet
-    val expect = rows(graft.operators.Relational.sessionizeSW(
-      all, "user_id", "ts", gapSeconds = 1800L))
-    val got = rows(spark.read.parquet(sink)
-      .filter(col("user_id") =!= 99999999L))
-    // state bound: one open merged session per live user + the
-    // provider's in-merge scratch rows — never past ~3x the 50k domain
-    val pass = got == expect && maxStateRows <= 150000L
-    if (!pass)
-      System.err.println(s"SOAK session missing=${(expect -- got).take(5)} " +
-        s"extra=${(got -- expect).take(5)} maxState=$maxStateRows")
-    PhaseResult(all.count(), expect.size.toLong, restarts, maxStateRows, pass)
-  }
-
-  /** Phase 10: streaming CDC upsert ([[EventStreams.streamingUpsert]],
-    * q123/q159's ingest twin) under induced kills — the one stateful
-    * twin SOAK had not covered (VERDICT r12 #8). Ops derive from the
-    * shared feeder rows (k = user_id — unique within a feeder file
-    * because ids are consecutive and a batch is ≤ the 50k user
-    * domain; op = del on event_id % 5 == 0, else put of event_id),
-    * and the source is pinned to ONE file per micro-batch so a key
-    * folds at most once per batch — the per-key linearization is then
-    * the feeder's file order, replayed identically from the offset
-    * WAL after every kill. After the soak a PROBE batch puts v = −1
-    * at EVERY key in the domain; its emissions expose the entire
-    * recovered state (update's old_v per live key; insert = key
-    * absent), which must equal the driver fold model — per key the
-    * max-event_id row decides: del ⇒ absent, put ⇒ its event_id.
-    * Fold-equivalence post-recovery, asserted exactly.
-    */
-  private def upsertPhase(spark: SparkSession, root: String, seconds: Int,
-                          restartSeconds: Int, batchEvents: Int): PhaseResult = {
-    import spark.implicits._
-    val src = s"$root/src"; val sink = s"$root/sink"; val ckpt = s"$root/ckpt"
-    val domain = 50000L
-    // the fold model below assumes user_id is UNIQUE within a feeder
-    // file (ids are consecutive mod the domain), so within-batch fold
-    // order is unambiguous; a larger SOAK_BATCH_EVENTS would break
-    // that silently and flake the phase (ADVICE r13) — enforce it
-    require(batchEvents <= domain,
-      s"upsertPhase: batchEvents=$batchEvents > user domain $domain — " +
-        "a key would fold twice within one micro-batch, making the " +
-        "fold model ambiguous")
-    new java.io.File(src).mkdirs()
-    def opsOf(df: DataFrame) = df.select(
-        col("user_id").cast("long").as("k"),
-        when(col("event_type") === "probe", lit(-1L))
-          .otherwise(col("event_id")).cast("long").as("v"),
-        when(col("event_type") === "probe", lit("put"))
-          .when(pmod(col("event_id"), lit(5L)) === 0L, lit("del"))
-          .otherwise(lit("put")).as("op"))
-      .as[EventStreams.UpsertOp]
-    def startQuery() = EventStreams.streamingUpsert(
-        opsOf(spark.readStream.schema(EventStreams.eventSchema)
-          .option("maxFilesPerTrigger", "1").parquet(src)))
-      .toDF().writeStream.outputMode("append").format("parquet")
-      .option("path", sink).option("checkpointLocation", ckpt).start()
-    val (restarts, maxSoak, batches) =
-      soakLoop(spark, src, seconds, restartSeconds, batchEvents)(startQuery _)
-    var maxStateRows = maxSoak
-    def sample(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-      val p = q.lastProgress
-      if (p != null && p.stateOperators.nonEmpty)
-        maxStateRows = math.max(maxStateRows, p.stateOperators.head.numRowsTotal)
-    }
-    // drain the backlog the kills left unread, then the probe batch
-    locally { val q = startQuery(); q.processAllAvailable(); sample(q); q.stop() }
-    spark.range(domain).select(
-        (col("id") + batches.toLong * batchEvents + 1000000L).as("event_id"),
-        lit(new java.sql.Timestamp(base + (batches + 1) * 60000L)).as("ts"),
-        col("id").as("user_id"), lit("probe").as("event_type"),
-        lit(0.0).as("value"), lit("{}").as("props"))
-      .coalesce(1).write.mode("append").parquet(src)
-    locally { val q = startQuery(); q.processAllAvailable(); sample(q); q.stop() }
-    // probe emissions expose the recovered state: new_v = -1 rows only
-    val probeRows = spark.read.parquet(sink).filter(col("new_v") === -1L)
-      .select(col("k"), col("change_type"), col("old_v"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
-    // driver fold model over everything the feeder wrote (per key the
-    // max-event_id op decides; keys whose last op is del are absent)
-    val model = spark.read.parquet(src)
-      .filter(col("event_type") =!= "probe")
-      .groupBy(col("user_id").cast("long").as("k"))
-      .agg(max(col("event_id")).cast("long").as("last_id"))
-      .collect().map { r =>
-        val (k, lastId) = (r.getLong(0), r.getLong(1))
-        if (lastId % 5 == 0) (k, "insert", None) // del last: probe inserts
-        else (k, "update", Some(lastId))
-      }.toSet
-    val neverSeen = (0L until domain).map(k => (k, "insert", None)).toSet --
-      model.map(t => (t._1, "insert", None: Option[Long]))
-    val expect = model.map {
-      case (k, "insert", _) => (k, "insert", None: Option[Long])
-      case (k, _, v)        => (k, "update", v)
-    } ++ neverSeen
-    val pass = probeRows == expect && maxStateRows <= 120000L
-    if (!pass)
-      System.err.println(s"SOAK upsert missing=${(expect -- probeRows).take(5)} " +
-        s"extra=${(probeRows -- expect).take(5)} maxState=$maxStateRows")
-    PhaseResult((batches.toLong * batchEvents) + domain,
-      probeRows.size.toLong, restarts, maxStateRows, pass)
-  }
-
-  /** Phase 11: streaming permutation ledger
-    * ([[EventStreams.streamingPermCells]], q296's ingest twin —
-    * VERDICT r13 #7, the resample-stats layer's stateful twin) under
-    * induced kills: the per-(group, r) partial-sum cells must survive
-    * every restart, and [[EventStreams.permutationFromCells]] over the
-    * final cells must equal the batch
-    * [[graft.operators.Relational.permutationTestPpm]] of everything
-    * written — same R, same salt, so the md5 sign draws are identical.
-    * State bound: |groups|·(R+1) cells FOREVER (5 types × 32 here).
-    */
-  private def permPhase(spark: SparkSession, root: String, seconds: Int,
-                        restartSeconds: Int, batchEvents: Int): PhaseResult = {
-    val src = s"$root/src"; val ckpt = s"$root/ckpt"
-    new java.io.File(src).mkdirs()
-    val rN = 31
-    def pairsOf(df: DataFrame) = df.select(
-      col("event_type").as("grp"), col("event_id"),
-      (expr("cast(round(value * 100) as bigint)") - 300L).as("d_c"))
-    val state = new java.util.concurrent.ConcurrentHashMap[(String, Long), (Long, Long)]()
-    def startQuery() = EventStreams.streamingPermCells(
-        pairsOf(EventStreams.readEventStream(spark, src)),
-        "grp", "event_id", "d_c", r = rN, prefix = "soakpt_").toDF()
-      .writeStream.outputMode("update")
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        // bounded collect: <= |groups|·(R+1) updated cells per batch;
-        // upserting the cumulative cell value is replay-idempotent
-        df.collect().foreach(r => state.put(
-          (r.getAs[String]("grp"), r.getAs[Long]("r")),
-          (r.getAs[Long]("sumSd"), r.getAs[Long]("nRows"))))
-      }
-      .option("checkpointLocation", ckpt).start()
-    val (restarts, maxSoak, batches) =
-      soakLoop(spark, src, seconds, restartSeconds, batchEvents)(startQuery _)
-    val maxProbe = probeDrain(spark, src, batchEvents, batches)(startQuery _)
-    import spark.implicits._
-    val cells = {
-      import scala.jdk.CollectionConverters._
-      state.asScala.toSeq.map { case ((g, rr), (sd, n)) => (g, rr, sd, n) }
-        .toDF("grp", "r", "sumSd", "nRows")
-    }
-    def rows(df: DataFrame) = df.collect().map(r => r.getString(0) ->
-      ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    val streamed = rows(EventStreams.permutationFromCells(cells, r = rN))
-    val batch = rows(graft.operators.Relational.permutationTestPpm(
-      pairsOf(spark.read.parquet(src)), "grp", "event_id", "d_c",
-      r = rN, prefix = "soakpt_"))
-    val maxStateRows = math.max(maxSoak, maxProbe)
-    // 5 types x (R+1)=32 cells = 160 + provider slack
-    val pass = streamed == batch && streamed.size == 5 && maxStateRows <= 250L
-    if (!pass)
-      System.err.println(s"SOAK perm streamed=$streamed batch=$batch " +
-        s"maxState=$maxStateRows")
-    PhaseResult((batches + 1).toLong * batchEvents, streamed.size.toLong,
-      restarts, maxStateRows, pass)
-  }
+  /** Runs every phase under `root/<phase>` (which must not exist). */
+  def run(spark: SparkSession, root: String, seconds: Int,
+          restartSeconds: Int): Seq[(String, PhaseResult)] =
+    phases(spark, root).map(p =>
+      p.name -> runPhase(spark, p, s"$root/${p.name}", seconds, restartSeconds))
 
   def main(args: Array[String]): Unit = {
-    val soakSeconds = sys.env.getOrElse("SOAK_SECONDS", "180").toInt
-    val twinSeconds = sys.env.getOrElse("SOAK_TWIN_SECONDS", "60").toInt
+    val root = args.headOption.getOrElse(
+      java.nio.file.Files.createTempDirectory("graft-soak").toString)
+    val seconds = sys.env.getOrElse("SOAK_SECONDS", "60").toInt
     val restartSeconds = sys.env.getOrElse("SOAK_RESTART_SECONDS", "20").toInt
-    val batchEvents = sys.env.getOrElse("SOAK_BATCH_EVENTS", "2000").toInt
-
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
+    val spark = LocalSession.builder()
       .config("spark.sql.streaming.fileSource.log.compactInterval", 10)
-      .config("spark.ui.enabled", "false").getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    rm(new java.io.File("/tmp/graft-soak"))
-    val tumbling = tumblingPhase(spark, "/tmp/graft-soak/tumbling",
-      soakSeconds, restartSeconds, batchEvents)
-    val kmv = kmvPhase(spark, "/tmp/graft-soak/kmv",
-      twinSeconds, restartSeconds, batchEvents)
-    val cms = cmsPhase(spark, "/tmp/graft-soak/cms",
-      twinSeconds, restartSeconds, batchEvents)
-    val mg = mgPhase(spark, "/tmp/graft-soak/mg",
-      twinSeconds, restartSeconds, batchEvents)
-    val lb = lbPhase(spark, "/tmp/graft-soak/lb",
-      twinSeconds, restartSeconds, batchEvents)
-    val funnel = funnelPhase(spark, "/tmp/graft-soak/funnel",
-      twinSeconds, restartSeconds, batchEvents)
-    val lsh = lshPhase(spark, "/tmp/graft-soak/lsh",
-      twinSeconds, restartSeconds, batchEvents)
-    val tri = triPhase(spark, "/tmp/graft-soak/tri",
-      twinSeconds, restartSeconds, batchEvents)
-    val session = sessionPhase(spark, "/tmp/graft-soak/session",
-      twinSeconds, restartSeconds, batchEvents)
-    val upsert = upsertPhase(spark, "/tmp/graft-soak/upsert",
-      twinSeconds, restartSeconds, batchEvents)
-    val perm = permPhase(spark, "/tmp/graft-soak/perm",
-      twinSeconds, restartSeconds, batchEvents)
-
-    val pass = tumbling.pass && kmv.pass && cms.pass && mg.pass &&
-      lb.pass && funnel.pass && lsh.pass && tri.pass && session.pass &&
-      upsert.pass && perm.pass
-    println(s"""{"tumbling":${tumbling.json()},"kmv":${kmv.json()},""" +
-      s""""cms":${cms.json()},"mg":${mg.json()},"lb":${lb.json()},""" +
-      s""""funnel":${funnel.json()},"lsh":${lsh.json()},""" +
-      s""""tri":${tri.json()},"session":${session.json()},""" +
-      s""""upsert":${upsert.json()},""" +
-      s""""perm":${perm.json()},""" +
-      s""""result":"${if (pass) "PASS" else "FAIL"}"}""")
+    val results = run(spark, root, seconds, restartSeconds)
+    val pass = results.forall(_._2.pass)
+    println(results.map { case (name, r) => s""""$name":${r.json}""" }
+      .mkString("{", ",", s""","result":"${verdict(pass)}"}"""))
     spark.stop()
     if (!pass) sys.exit(1)
   }

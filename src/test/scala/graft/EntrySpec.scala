@@ -22,6 +22,15 @@ class EntrySpec extends AnyFunSuite {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("query selection picks exact names and qNN ids, never a substring") {
+    def pick(sel: String) = SparkEntry.queries.keySet.filter(SparkEntry.selects(sel))
+    assert(pick("q70") == Set("q70_approx_percentile"))
+    assert(pick("q1") == Set("q01_agg_pricing") && pick("q01") == pick("q1"))
+    assert(pick("q170_benford_audit") == Set("q170_benford_audit"))
+    assert(pick("q1,q170_benford_audit") == Set("q01_agg_pricing", "q170_benford_audit"))
+    assert(pick("benford").isEmpty && pick("q").isEmpty)
+  }
+
   test("no query plans a cartesian product (global plan invariant)") {
     // crossJoin is only ever used against a broadcast side (centroids,
     // probes, 25-row nation) => BroadcastNestedLoopJoin; a true

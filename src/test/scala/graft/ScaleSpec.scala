@@ -252,8 +252,11 @@ class ScaleSpec extends AnyFunSuite {
     // c: single row -> mad 0
     val df = Seq(("a", 1L), ("a", 2L), ("a", 3L), ("a", 4L), ("a", 100L),
       ("b", 10L), ("b", 20L), ("c", 7L)).toDF("g", "v")
-    val got = operators.Relational.madByGroup(df, "g", "v")
-      .orderBy("g").collect()
+    // the per-group median table is a lazy broadcast: no construction job
+    val (mad, jobs) = SparkTestSession.jobsDuring(
+      operators.Relational.madByGroup(df, "g", "v"))
+    assert(jobs == 0, s"$jobs construction jobs")
+    val got = mad.orderBy("g").collect()
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
     assert(got.toSeq == Seq(("a", 3.0, 1.0), ("b", 15.0, 5.0), ("c", 7.0, 0.0)))
   }

@@ -340,11 +340,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed == batch, s"streamed $streamed != batch $batch")
   }
 
-  test("streaming permutation ledger raises on a NULL resample id (ADVICE r14)") {
-    // before the guard, a null id's NULL sign array made posexplode
-    // drop the row from every cell INCLUDING the observed ledger —
-    // silently diverging from batch permutationTestPpm, which counts
-    // the row; the contract is now enforced, not documented
+  test("streaming permutation ledger raises on a NULL resample id") {
+    // a null id's NULL sign array would make posexplode drop the row
+    // from every cell INCLUDING the observed ledger — silently
+    // diverging from batch permutationTestPpm, which counts the row
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -419,34 +418,6 @@ class StreamingSpec extends AnyFunSuite {
     }
     // state bound: never more than `cap` counters per group
     assert(finalSummaries.values.forall(_.size <= cap))
-  }
-
-  test("transformWithState (RocksDB) totals equal the fMGWS twin and the batch") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = scala.util.Try(spark.conf.get(key)).toOption.filter(_ != null)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val updates = runToMemory(
-        EventStreams.runningUserTotalsTws(
-          EventStreams.readEventStream(spark, eventsDir)).toDF(),
-        "t_running_tws", "update")
-      val streamed = updates.groupBy("user_id")
-        .agg(max("n_events").as("n"), max("total_value").as("tot"))
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-      val batch = engine.Tables.events(spark, SparkTestSession.sfDir)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n"), sum("value").as("tot"))
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-      assert(streamed.keySet == batch.keySet)
-      assert(batch.forall { case (u, (n, tot)) =>
-        val (sn, stot) = streamed(u)
-        sn == n && math.abs(stot - tot) < 1e-6
-      })
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
   }
 
   test("streamingUpsert changelog equals snapshotDiff; folded state equals the merge") {
